@@ -170,6 +170,8 @@ class GraftExtensionsSpec extends SparkTestBase {
     assert(gs.conf.get("spark.sql.adaptive.enabled") === "true")
     assert(gs.conf.get("spark.sql.adaptive.skewJoin.enabled") === "true")
     assert(gs.conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(gs.conf.get(GraftSession.CheckpointFileManagerConf) ===
+      classOf[graft.streaming.LocalCheckpointFileManager].getName)
     assert(gs.sql("SELECT graft_hash60('x') AS h").collect().head.getLong(0) > 0L)
   }
 }

@@ -16,6 +16,9 @@ object SparkTestBase {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the checkpoint manager every GraftSession runs its streams on
+      .config(GraftSession.CheckpointFileManagerConf,
+        classOf[graft.streaming.LocalCheckpointFileManager].getName)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()
