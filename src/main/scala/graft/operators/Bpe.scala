@@ -48,8 +48,10 @@ object Bpe {
     // one known count-and-argmax plan per merge rule over the cached
     // corpus state — the pure-dispatch iterative shape (PlanScope
     // rationale): static scope halves the per-rule driver jobs; the
-    // learned rules are conf-independent
-    graft.ops.PlanScope.staticBatch(spark) {
+    // learned rules are conf-independent, so the returned frame is built
+    // on the caller's session
+    val rules = graft.ops.PlanScope.isolatedStatic(spark) { scoped =>
+    val docsS = graft.ops.PlanScope.rebind(docs, scoped)
     // NARROW entry spread (r16): the corpus state of a small input is ONE
     // cached partition, so every round's pair-explode kernel ran a
     // ~100-150 ms single task (6 rounds = most of t45's wall). The r15
@@ -61,10 +63,10 @@ object Bpe {
     // 4 sits where kernel_ms/width crosses the per-task cache-read
     // floor. Estimate-gated like every spread site: no-op at scale,
     // where the scan fans out with its file splits.
-    val conf = docs.sparkSession.sessionState.conf
-    val small = scala.util.Try(docs.queryExecution.optimizedPlan.stats.sizeInBytes)
+    val conf = scoped.sessionState.conf
+    val small = scala.util.Try(docsS.queryExecution.optimizedPlan.stats.sizeInBytes)
       .toOption.exists(_ < BigInt(4L) * conf.filesMaxPartitionBytes)
-    val corpus0 = docs
+    val corpus0 = docsS
       .select(array_join(graft.functions.TextFunctions.tokens(col("text")), "  ").as("s"))
     var corpus = (if (small) corpus0.repartition(math.min(4, conf.numShufflePartitions))
       else corpus0)
@@ -120,9 +122,10 @@ object Bpe {
       prevGen.foreach(_.unpersist(blocking = false))
       corpus.unpersist(blocking = false)
     }
-    import spark.implicits._
-    learned.toSeq.toDF("step", "pair", "n_occurrences")
+    learned.toSeq
     }
+    import spark.implicits._
+    rules.toDF("step", "pair", "n_occurrences")
   }
 
   /** Apply learned merges to a corpus: the ENCODE side of [[trainMerges]]

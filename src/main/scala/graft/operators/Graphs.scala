@@ -265,12 +265,10 @@ object Graphs {
     // runs INSIDE the scope at the loop's own partitioning.
     val nPart = loopPartitions(sessionSp, nE, 2 * nE)
     PlanScope.isolated(caller, loopConfs(nPart): _*) { scoped =>
-      // RDD hop, not a view re-plan: the view route re-analyzes the
-      // derivation plan, which does NOT match the cache entry through the
-      // scope boundary — measured: the whole corpus multi-join re-executed
-      // serially inside the loop scope (1.8 s vs a 40 ms cache read on
-      // q60's board config). The LogicalRDD reads e0's cached blocks.
-      val e = PlanScope.rebindRows(e0, scoped)
+      // rebind carries e0's analyzed plan unchanged, so the shared
+      // CacheManager matches it and the loop reads e0's cached blocks
+      // (InMemoryTableScan) — the derivation never re-executes in scope.
+      val e = PlanScope.rebind(e0, scoped)
       // Out-weight rides with every edge so the per-iteration contribution
       // is a pure projection after the ranks join; partitioned by src once
       // so iterations shuffle only the |V|-sized ranks frame, never the
@@ -454,7 +452,7 @@ object Graphs {
       .distinct(), deriveAdaptive)
     val nPart = loopPartitions(sessionSp, nE, nE)
     PlanScope.isolated(caller, loopConfs(nPart): _*) { scoped =>
-      val undS = PlanScope.rebindRows(und, scoped) // cached-block hop
+      val undS = PlanScope.rebind(und, scoped) // cached read, see pageRankWeighted
       // handoff executes the (one-action) chain and lands the result
       // caller-bound + persisted; release und only after that run
       val bound = handoff(trianglesDegreeOrderedChain(undS), caller)
@@ -531,7 +529,7 @@ object Graphs {
       // repartition, EVERY round re-shuffles the whole |E| frame to reach
       // the frontier (rounds × |E| exchange bytes at corpus scale; the
       // frontier is the side that should move).
-      val e = PlanScope.rebindRows(e0, scoped) // cached-block hop, see pageRankWeighted
+      val e = PlanScope.rebind(e0, scoped) // cached read, see pageRankWeighted
         .repartition(nPart, col("src"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       // e's cache population RIDES the first counted round (round 2's
@@ -637,7 +635,7 @@ object Graphs {
       // frame arrives with arbitrary partitioning, so without this every
       // round's labels join re-shuffles the whole |E| frame instead of
       // moving only the |V|-sized label frame.
-      val e = PlanScope.rebindRows(e0, scoped) // cached-block hop, see pageRankWeighted
+      val e = PlanScope.rebind(e0, scoped) // cached read, see pageRankWeighted
         .repartition(nPart, col("src"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       e.count()
@@ -717,7 +715,7 @@ object Graphs {
       col("w").cast("long").as("w")), deriveAdaptive)
     val nPart = loopPartitions(sessionSp, nE, 2 * nE)
     PlanScope.isolated(caller, loopConfs(nPart): _*) { scoped =>
-      val e = PlanScope.rebindRows(e0, scoped) // cached-block hop, see pageRankWeighted
+      val e = PlanScope.rebind(e0, scoped) // cached read, see pageRankWeighted
         .repartition(nPart, col("src"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       e.count()
@@ -800,7 +798,7 @@ object Graphs {
     PlanScope.isolated(caller, loopConfs(nPart): _*) { scoped =>
       // both orientations, re-hung on the peel key (see bfsHops: without
       // this every round re-shuffles the whole edge frame)
-      val undS = PlanScope.rebindRows(und, scoped) // cached-block hop, see pageRankWeighted
+      val undS = PlanScope.rebind(und, scoped) // cached read, see pageRankWeighted
       val dir = undS.select(col("a").as("node"), col("b").as("other"))
         .unionByName(undS.select(col("b").as("node"), col("a").as("other")))
         .repartition(nPart, col("node"))

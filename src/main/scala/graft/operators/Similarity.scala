@@ -328,13 +328,14 @@ object Similarity {
     * fits separately (the grouping key gained `spec`; the values
     * didn't change — the s13/s14 oracles replay each fit independently
     * and hash-match), at 1/|specs| the driver round-trips. */
-  private def fitBooks(emb: DataFrame, specs: Seq[SubFit], iters: Int,
+  private def fitBooks(emb0: DataFrame, specs: Seq[SubFit], iters: Int,
       sampleMod: Int): Array[Array[(Int, Array[Long])]] = {
     require(iters >= 0 && sampleMod > 0,
       s"need iters >= 0, sampleMod > 0; got ($iters, $sampleMod)")
     // same static-scope rationale as kmeansCentroids: one known fused
     // aggregate per Lloyd round, values conf-independent
-    graft.ops.PlanScope.staticBatch(emb.sparkSession) {
+    graft.ops.PlanScope.isolatedStatic(emb0.sparkSession) { scoped =>
+    val emb = graft.ops.PlanScope.rebind(emb0, scoped)
     val maxCodes = specs.map(_.nCodes).max
     // init: first-k vectors micro-rounded, sliced on the driver
     // (slicing micro-longs == micro-rounding the slice)
@@ -779,18 +780,18 @@ object Similarity {
     * corpora, tiny corpora, empty corpora) is knowable for free here,
     * and [[buildIvf]] records it so downstream bound checks and the
     * unfitted-index guard ([[extendIvf]]) see the real capacity. */
-  private def kmeansFit(emb: DataFrame, nCells: Int, iters: Int,
+  private def kmeansFit(emb0: DataFrame, nCells: Int, iters: Int,
       sampleMod: Int): Seq[(Int, Array[Long])] = {
     require(nCells > 0 && iters >= 0 && sampleMod > 0,
       s"need nCells > 0, iters >= 0, sampleMod > 0; got ($nCells, $iters, $sampleMod)")
-    val spark = emb.sparkSession
     // Lloyd loop = iterative fit re-executing one known aggregate shape
     // per round over the cached sample (PlanScope rationale; the fit's
     // dispatch-normalized compute is ~0 on the board): static scope makes
     // each round ONE driver job instead of one per exchange. Centroid
     // VALUES are conf-independent — the s02-family oracles replay the
     // fit and stay hash-green.
-    graft.ops.PlanScope.staticBatch(spark) {
+    graft.ops.PlanScope.isolatedStatic(emb0.sparkSession) { scoped =>
+    val emb = graft.ops.PlanScope.rebind(emb0, scoped)
     val microArr = transform(col("embedding"),
       x => round(x.cast("double") * lit(1e6)).cast("long"))
     // init: first nCells vectors by id, micro-rounded. The interpreted HOF
@@ -804,7 +805,7 @@ object Similarity {
         .select(col("vec_id"), col("embedding")).persist()
       try {
         for (_ <- 1 to iters) {
-          val sums = assignToCells(sample, centroidFrame(spark, cents))
+          val sums = assignToCells(sample, centroidFrame(scoped, cents))
             .select(col("cell"), posexplode(col("embedding")).as(Seq("dim", "v")))
             .groupBy(col("cell"), col("dim"))
             .agg(count(lit(1)).as("n"),

@@ -22,17 +22,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * operator already pre-partitioned) and skew-split (LSH band / minhash
   * bucket keys are uniform by construction).
   *
-  * The primary entry point is [[isolated]]: the scope runs on a fresh
-  * `newSession()` CLONE — isolated SQLConf, shared SparkContext, cache
-  * manager and global-temp-view catalog — so a concurrent query on the
-  * caller's session NEVER observes the scope's confs (it plans under AQE
-  * as usual while the scope runs). Input frames cross into the clone via
-  * [[rebind]] (re-planned under the clone's conf) or [[rebindRows]]
-  * (keeping the caller-planned lineage); results cross back the same
-  * way. The legacy same-session [[withConf]]/[[staticBatch]] remain for
-  * driver-side fit loops whose bodies only collect, guarded by a loud
-  * cross-thread fail-fast (same-thread nesting allowed) so an
-  * interleaved restore can never silently pin a conf on the session. */
+  * There is one scope, [[isolated]] (and its static forms
+  * [[isolatedStatic]]/[[isolatedStaticFor]]): the body runs on a pooled
+  * `newSession()` CLONE — isolated SQLConf, shared SparkContext and cache
+  * manager — so a concurrent query on the caller's session NEVER observes
+  * the scope's confs (it plans under AQE as usual while the scope runs),
+  * and nothing is ever set on or restored to a caller's conf. Input
+  * frames enter the clone via [[rebind]]; results either cross back as
+  * values built on the caller's session (driver-side fits), are returned
+  * as-is (they keep planning under the clone's immutable conf), or are
+  * handed back through [[rebindRows]] when the caller's conf must plan
+  * downstream. */
 object PlanScope {
 
   /** One clone per (caller session, effective-conf fingerprint), never
@@ -53,7 +53,7 @@ object PlanScope {
       SparkSession, java.util.concurrent.ConcurrentHashMap[String, SparkSession]]())
 
   /** Run `f` against a conf-isolated clone of `spark`: same
-    * SparkContext, cache manager and global-temp views, but its own
+    * SparkContext and cache manager, but its own
     * SQLConf — the caller's current explicitly-set MODIFIABLE conf
     * values (so timezone / ANSI / shuffle-partition semantics match
     * exactly) with `confs` applied on top. No concurrent query on
@@ -61,7 +61,7 @@ object PlanScope {
     * the clone's conf is immutable (pooled by fingerprint; a body that
     * needs different confs mid-operator opens a second scope rather
     * than calling `clone.conf.set`). Frames bound to `spark` cross in
-    * via [[rebind]]/[[rebindRows]]; frames crossing back out may simply
+    * via [[rebind]]; frames crossing back out may simply
     * be returned — planning on them stays under the clone's (immortal,
     * immutable) conf — or re-bound via [[rebindRows]] when the caller
     * needs its own planning conf downstream. */
@@ -70,12 +70,9 @@ object PlanScope {
     // Scope reuse: when `spark` already holds every requested conf (an
     // operator composed inside another operator's scope — e.g. the IVF
     // fit inside a probe wrapper), it IS a suitable scope — run there.
-    // rebind() against the same session is the identity hop. Routed
-    // through withConf so the body registers as a no-op READER: a bare
-    // f(spark) here would let a concurrent mutating withConf flip the
-    // very confs this scope just verified, mid-body.
+    // rebind() against the same session is the identity hop.
     if (confs.forall { case (k, v) => spark.conf.get(k, null) == v })
-      return withConf(spark, confs: _*)(f(spark))
+      return f(spark)
     val seed = spark.conf.getAll.filter { case (k, _) => spark.conf.isModifiable(k) }
     val eff = seed ++ confs // overrides win
     val fp = eff.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString("\u0000")
@@ -196,179 +193,28 @@ object PlanScope {
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.shuffle.partitions" -> sizedPartitions(df).toString)(f)
 
-  private val rebindCounter = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Re-bind `df`'s LOGICAL PLAN onto `target` (a session sharing the
-    * same SparkContext), so downstream planning — AQE on/off, shuffle
-    * partitions, broadcast thresholds — happens under `target`'s conf.
-    * The hop is a global temp view (the one session-shared catalog
-    * surface): the view inlines at analysis, is dropped immediately, and
-    * costs no job. Use for INPUT frames entering an [[isolated]] scope
-    * whose whole derivation should plan under the scope's conf.
-    *
-    * A frame that is itself PERSISTED hops via [[rebindRows]] instead:
-    * view resolution wraps the stored plan in a `View` node, which
-    * defeats the CacheManager's canonicalized-plan match — measured on
-    * the board, a cached corpus derivation silently RE-EXECUTED inside
-    * the scope (1.8 s recompute vs a 40 ms cached read). The RDD hop
-    * reads the cached blocks directly. (Persisted SUBTREES under an
-    * uncached top are still at risk — cross such frames explicitly with
-    * [[rebindRows]], or materialize and pass the persisted frame
-    * itself.) */
-  def rebind(df: DataFrame, target: SparkSession): DataFrame = {
-    if (df.sparkSession eq target) return df
-    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-      return rebindRows(df, target)
-    val name = s"graft_planscope_${rebindCounter.incrementAndGet()}"
-    df.createOrReplaceGlobalTempView(name)
-    try {
-      val gdb = target.conf.get("spark.sql.globalTempDatabase", "global_temp")
-      target.table(s"`$gdb`.`$name`")
-    } finally {
-      df.sparkSession.catalog.dropGlobalTempView(name); ()
-    }
-  }
+  /** Re-bind `df`'s ANALYZED logical plan onto `target` (a session
+    * sharing the same SparkContext), so downstream optimization and
+    * physical planning — AQE on/off, shuffle partitions, broadcast
+    * thresholds — happen under `target`'s conf. Costs no job and no
+    * catalog entry. The plan is unchanged, so the shared CacheManager
+    * still matches it: a persisted frame, or a persisted subtree under an
+    * uncached projection, reads its cached blocks (`InMemoryTableScan`)
+    * inside the scope. Use for INPUT frames entering an [[isolated]]
+    * scope whose whole derivation should plan under the scope's conf. */
+  def rebind(df: DataFrame, target: SparkSession): DataFrame =
+    if (df.sparkSession eq target) df
+    else org.apache.spark.sql.GraftDatasetShim.ofRows(target, df.queryExecution.analyzed)
 
   /** Re-bind `df` onto `target` keeping its CURRENT plan as concrete
     * lineage: the frame `target` sees is an RDD scan whose recompute
     * replays the plan exactly as `df`'s own session would have run it.
-    * Use at the exit boundary of an [[isolated]] scope (the returned
-    * frame must not plan under the discarded clone's conf) or to feed a
-    * caller-planned derivation into a scope without re-planning it.
-    * Costs no job at bind time; the Row↔InternalRow hop it adds is paid
-    * by whatever materializes the result — size the call accordingly
-    * (|V|-sized loop results, per-batch serving outputs). */
+    * Use at the exit boundary of an [[isolated]] scope, when the
+    * returned frame must plan downstream under the caller's conf rather
+    * than the clone's. Costs no job at bind time; the Row↔InternalRow
+    * hop it adds is paid by whatever materializes the result — size the
+    * call accordingly (|V|-sized loop results, per-batch serving
+    * outputs). */
   def rebindRows(df: DataFrame, target: SparkSession): DataFrame =
     target.createDataFrame(df.rdd, df.schema)
-
-  // --- legacy same-session scope (driver-side fit loops) ---------------
-
-  /** Cross-thread guard for the mutating scope: one owner thread per
-    * session (nesting on the owner thread allowed). A second thread
-    * entering would interleave snapshot/restore and could permanently
-    * pin an override on the session — fail loudly instead. */
-  private val owners =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, (Thread, Int)]()
-
-  /** Concurrent no-op entrants per session (see the no-op short-circuit
-    * in [[withConf]]): registered BEFORE the owner check, so the pair of
-    * checks can never interleave silently — a mutating entry that races a
-    * no-op entry sees `noopReaders > 0` and fails loudly, and a no-op
-    * entry that races a mutating entry sees the owner slot taken and
-    * fails loudly. Either way the conf race the guard exists to prevent
-    * is impossible; the cost is a loud abort in a window that current
-    * call sites (no-op scopes on immutable pooled clones) never hit. */
-  private val noopReaders = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, Integer]()
-
-  /** This thread's own in-flight no-op registrations (per session) —
-    * subtracted in the mutating path's reader check so same-thread
-    * nesting (a no-op scope whose body opens a mutating scope) keeps
-    * working: the thread's own scopes are sequenced, only OTHER threads'
-    * no-op bodies can race a mutation. */
-  private val ownNoops = ThreadLocal.withInitial[
-    java.util.Map[SparkSession, Integer]](() => new java.util.HashMap)
-
-  /** Run `f` with the given SQL confs set ON THE SESSION, restoring the
-    * prior state after — including unsetting keys that had no explicit
-    * value, so a later default change or RESET still behaves as if the
-    * scope never ran. Session-global: concurrent queries on `spark`
-    * plan under these values while `f` runs, so entry is restricted to
-    * one thread at a time (re-entrant on that thread); a second thread
-    * gets an IllegalStateException instead of a silent conf race. For
-    * operator-internal scopes prefer [[isolated]]. */
-  def withConf[T](spark: SparkSession, confs: (String, String)*)(f: => T): T = {
-    // No-op short-circuit: when every requested conf already holds its
-    // target value (e.g. a fit loop running on an [[isolated]] clone that
-    // is already static), there is nothing to mutate — skip the set and
-    // the restore, so such scopes stay safely concurrent. The entrant
-    // registers in [[noopReaders]] BEFORE checking the owner slot
-    // (two-phase, see the field doc): a concurrent mutating entry —
-    // whose eventual restore would change the values mid-body — is
-    // guaranteed to collide loudly with this scope in one direction or
-    // the other, never to interleave silently. A same-thread owner skips
-    // registration: its own restore is sequenced after this body.
-    val me = Thread.currentThread()
-    val effective = confs.filter { case (k, v) => spark.conf.get(k, null) != v }
-    if (effective.isEmpty) {
-      val cur0 = owners.get(spark)
-      if (cur0 != null && (cur0._1 eq me)) return f
-      // merge/compute keep the count atomic per key AND remove the entry
-      // at zero — an AtomicInteger value could only be removed racily
-      // (another thread may still hold the orphaned counter), and a
-      // never-removed entry strongly pins dead sessions (plus their
-      // whole clone sub-pools) for the life of the process
-      noopReaders.merge(spark, 1, (a, b) => a + b)
-      ownNoops.get.merge(spark, 1, (a, b) => a + b)
-      try {
-        val cur = owners.get(spark)
-        if (cur != null && !(cur._1 eq me)) throw new IllegalStateException(
-          s"PlanScope.withConf: session already scoped by thread '${cur._1.getName}' — " +
-            "its restore could change these confs mid-body; serialize these " +
-            "operators or use PlanScope.isolated")
-        return f
-      } finally {
-        noopReaders.compute(spark,
-          (_, a) => if (a == null || a <= 1) null else a - 1)
-        ownNoops.get.merge(spark, -1, (a, b) =>
-          if (a + b <= 0) null else a + b)
-      }
-    }
-    owners.compute(spark, (_, cur) => cur match {
-      case null => (me, 1)
-      case (t, n) if t eq me => (t, n + 1)
-      case (t, _) => throw new IllegalStateException(
-        s"PlanScope.withConf: session already scoped by thread '${t.getName}' — " +
-          "the mutating scope is single-threaded per session; serialize these " +
-          "operators or use PlanScope.isolated")
-    })
-    // second phase of the two-phase guard: OTHER threads' no-op entrants
-    // registered before our compute() above must finish before any
-    // mutation — abort (and release the just-acquired slot) while any
-    // are in flight; this thread's own nested no-op scopes don't count
-    val inFlight = Option(noopReaders.get(spark)).map(_.intValue).getOrElse(0) -
-      Option(ownNoops.get.get(spark)).map(_.intValue).getOrElse(0)
-    if (inFlight > 0) {
-      owners.compute(spark, (_, cur) => cur match {
-        case (t, 1) => null
-        case (t, n) => (t, n - 1)
-      })
-      throw new IllegalStateException(
-        s"PlanScope.withConf: $inFlight concurrent no-op scope(s) hold this " +
-          "session's current conf values — mutating them mid-body would race; " +
-          "serialize these operators or use PlanScope.isolated")
-    }
-    try {
-      // None = key had no explicit value (session default) → restore by
-      // unset, not by pinning the resolved default. getAll lists the
-      // explicitly-set entries only. The SETS run inside the restoring
-      // try: a set() that throws mid-sequence (non-modifiable key, value
-      // validator) must not leave the keys already set pinned on the
-      // session forever.
-      val explicit = spark.conf.getAll
-      val prev = effective.map { case (k, _) =>
-        k -> (if (explicit.contains(k)) Some(spark.conf.get(k)) else None)
-      }
-      try {
-        effective.foreach { case (k, v) => spark.conf.set(k, v) }
-        f
-      } finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    } finally {
-      owners.compute(spark, (_, cur) => cur match {
-        case (t, 1) => null // removes the entry — no session leak
-        case (t, n) => (t, n - 1)
-      })
-      ()
-    }
-  }
-
-  /** Same-session static scope: AQE off for the duration of `f`. For
-    * driver-side fit loops (Lloyd rounds, BPE merge passes) whose bodies
-    * collect bounded aggregates; whole-operator scopes should use
-    * [[isolatedStatic]] instead. */
-  def staticBatch[T](spark: SparkSession)(f: => T): T =
-    withConf(spark, "spark.sql.adaptive.enabled" -> "false")(f)
 }

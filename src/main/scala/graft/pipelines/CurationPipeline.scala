@@ -74,8 +74,7 @@ object CurationPipeline {
       docEmb: Option[DataFrame] = None,
       evalEmb: Option[DataFrame] = None,
       semanticMinCosE6: Long = 400000L,
-      detachBound: Option[Int] = None,
-      staticPlan: Boolean = true): DataFrame = {
+      detachBound: Option[Int] = None): DataFrame = {
     require(minQualityBucket >= 0 && minQualityBucket <= qualityBreakpoints.size,
       s"minQualityBucket must be in [0, ${qualityBreakpoints.size}], got $minQualityBucket")
     require(urlCol.isDefined || (blockedDomains.isEmpty && maxPerDomain.isEmpty),
@@ -83,13 +82,12 @@ object CurationPipeline {
     require(docEmb.isDefined == evalEmb.isDefined,
       "semantic decontamination needs BOTH docEmb (train vectors keyed by doc_id) " +
         "and evalEmb (eval-release vectors) — or neither")
-    // The whole composed chain runs in ONE conf-isolated static scope by
-    // default (`staticPlan = false` restores per-exchange adaptive
-    // planning): the pipeline is a KNOWN 8-10 stage shape whose most
-    // expensive stages (the LSH pair pipeline + components fixpoint)
-    // already ran statically inside components' own scope — the
-    // remaining stages were paying one driver job per AQE-materialized
-    // exchange across the contamination/quality/split/packing chain.
+    // The whole composed chain runs in ONE conf-isolated static scope:
+    // the pipeline is a KNOWN 8-10 stage shape whose most expensive
+    // stages (the LSH pair pipeline + components fixpoint) already ran
+    // statically inside components' own scope — the remaining stages
+    // were paying one driver job per AQE-materialized exchange across
+    // the contamination/quality/split/packing chain.
     // Measured (same-process interleaved A/B, sf0.1 c02 shape, 5 reps):
     // static 17 driver jobs / 7.6 s median vs adaptive 47 jobs / 9.4 s,
     // identical output rows — at a measured 80-100 ms per-job dispatch
@@ -108,7 +106,7 @@ object CurationPipeline {
     // driver jobs re-reading ~1.6× the data before giving up on early
     // exit; starting at full width makes it ONE job over one pass.
     val caller = docs.sparkSession
-    if (staticPlan) graft.ops.PlanScope.isolated(caller,
+    graft.ops.PlanScope.isolated(caller,
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.limit.initialNumPartitions" -> "100000") { scoped =>
       curateChain(
@@ -120,11 +118,7 @@ object CurationPipeline {
         docEmb.map(graft.ops.PlanScope.rebind(_, scoped)),
         evalEmb.map(graft.ops.PlanScope.rebind(_, scoped)),
         semanticMinCosE6, detachBound, caller)
-    } else curateChain(docs, evalDocs,
-      contaminationPermille, maxTrainDf, qualityBreakpoints, minQualityBucket,
-      splits, salt, packBudget, redactPii, urlCol, blockedDomains, maxPerDomain,
-      maxLineOccurrences, intraDocDedup, spanScrubWindow, docEmb, evalEmb,
-      semanticMinCosE6, detachBound, caller)
+    }
   }
 
   private def curateChain(docs: DataFrame, evalDocs: DataFrame,
@@ -584,8 +578,7 @@ object CurationPipeline {
       evalEmb: Option[DataFrame] = None,
       semanticMinCosE6: Long = 400000L,
       shardBase: Option[DataFrame] = None,
-      detachBound: Option[Int] = None,
-      staticPlan: Boolean = true): DataFrame = {
+      detachBound: Option[Int] = None): DataFrame = {
     // Validate against the EFFECTIVE fit length: when a released fit is
     // supplied (qualityBreakValues — e.g. via curateDeltaWith), its size is
     // the bucket count and `qualityBreakpoints` is ignored entirely, so a
@@ -598,7 +591,9 @@ object CurationPipeline {
     require(docEmb.isDefined == evalEmb.isDefined,
       "semantic decontamination needs BOTH docEmb and evalEmb — or neither")
     val caller = newDocs.sparkSession
-    def chain(scoped: org.apache.spark.sql.SparkSession): DataFrame = {
+    val packed = graft.ops.PlanScope.isolated(caller,
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.limit.initialNumPartitions" -> "100000") { scoped =>
       def in(df: DataFrame) = graft.ops.PlanScope.rebind(df, scoped)
       // NO entry spread here, deliberately (unlike curateChain): an A/B
       // at matched floor read c03 4.5 → 9.5 s with a 15 s GC storm when
@@ -691,11 +686,6 @@ object CurationPipeline {
           .drop("__base")
       }
     }
-    val packed =
-      if (staticPlan) graft.ops.PlanScope.isolated(caller,
-        "spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.limit.initialNumPartitions" -> "100000")(chain)
-      else chain(caller)
     detachBound.fold(packed) { cap =>
       // nothing stays in the CacheManager: dedupDeltaWith already
       // released its candidate pin and its localCheckpoint blocks are

@@ -14,7 +14,6 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
   FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager, HDFSMetadataLog}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.ops.PlanScope
 import graft.pipelines.CallsPipeline
 import graft.streaming.{CallsStreamPipeline, LocalCheckpointFileManager}
 
@@ -191,7 +190,7 @@ class LocalCheckpointFileManagerSpec extends SparkTestBase {
     // In one JVM the second query never reaches the files: Spark refuses
     // it by query id (by default it would stop the first run instead). A
     // second process's query is refused by the log write above.
-    PlanScope.withConf(spark, "spark.sql.streaming.stopActiveRunOnRestart" -> "false") {
+    withSessionConf("spark.sql.streaming.stopActiveRunOnRestart" -> "false") {
       val q1 = start()
       try {
         val e = intercept[IllegalStateException](start())
@@ -236,7 +235,7 @@ class LocalCheckpointFileManagerSpec extends SparkTestBase {
     // next. The calls span 10 hours in random order, inside the 24-hour
     // watermark, so none is late and most (caller, hour) windows take rows
     // from every chunk: the second run must resume the first run's state.
-    def run(graft: Boolean, part: Seq[Array[RawCall]]): Unit = PlanScope.withConf(spark,
+    def run(graft: Boolean, part: Seq[Array[RawCall]]): Unit = withSessionConf(
         (stateConfs :+ (ManagerConf ->
           (if (graft) classOf[LocalCheckpointFileManager].getName else SparkDefaultManager))): _*) {
       val in = spark.readStream.schema(spark.emptyDataset[RawCall].schema).parquet(src)

@@ -1,134 +1,52 @@
 package graft
 
 import graft.ops.PlanScope
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 
 /** The plan scope is what makes wrapping operators in conf overrides safe
-  * for callers: the isolated form must never leak confs to the caller's
-  * session (a concurrent query plans under AQE as usual, mid-scope), and
-  * the legacy mutating form must restore exactly — on success, on
-  * exception, under nesting, for previously-UNSET keys — and fail loudly
-  * on cross-thread entry instead of racing the restore. */
+  * for callers: a scope must never leak confs to the caller's session (a
+  * concurrent query plans under AQE as usual, mid-scope, and scoped
+  * operators run concurrently on one session), and a frame entering a
+  * scope must keep reading its cached blocks without dispatching a job. */
 class PlanScopeSpec extends SparkTestBase {
 
   private val Key = "spark.sql.adaptive.enabled"
 
-  test("staticBatch disables AQE inside and restores the prior value after") {
-    val before = spark.conf.get(Key)
-    val inside = PlanScope.staticBatch(spark) { spark.conf.get(Key) }
-    assert(inside === "false")
-    assert(spark.conf.get(Key) === before)
-  }
-
-  test("confs restore even when the body throws") {
-    val before = spark.conf.get(Key)
-    intercept[RuntimeException] {
-      PlanScope.staticBatch(spark) { throw new RuntimeException("boom") }
+  /** Jobs dispatched by `f` on this thread: a job-group listener plus a
+    * closing marker job, whose start event proves every earlier event of
+    * the group has been delivered (the listener bus is ordered). */
+  private def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"planscope-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach { p =>
+            if (p.getProperty("graft.test.marker") != null) markerSeen.countDown()
+            else { jobs.incrementAndGet(); () }
+          }
     }
-    assert(spark.conf.get(Key) === before)
-  }
-
-  test("confs restore when a SET itself throws mid-sequence") {
-    // the second key is non-modifiable: its set() throws AFTER the first
-    // key was already applied — the first key must not stay pinned on
-    // the session forever (the restore has to cover the sets, not just
-    // the body)
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    intercept[Exception] {
-      PlanScope.withConf(spark,
-        "spark.sql.shuffle.partitions" -> (before.toInt + 1).toString,
-        "spark.sql.warehouse.dir" -> "/definitely/not/applied") { () }
-    }
-    assert(spark.conf.get("spark.sql.shuffle.partitions") === before,
-      "a failed set sequence left an earlier key pinned")
-  }
-
-  test("nested scopes unwind in order (fixpoints inside pipelines)") {
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    PlanScope.withConf(spark, "spark.sql.shuffle.partitions" -> "7") {
-      assert(spark.conf.get("spark.sql.shuffle.partitions") === "7")
-      PlanScope.withConf(spark, "spark.sql.shuffle.partitions" -> "3") {
-        assert(spark.conf.get("spark.sql.shuffle.partitions") === "3")
-      }
-      assert(spark.conf.get("spark.sql.shuffle.partitions") === "7")
-    }
-    assert(spark.conf.get("spark.sql.shuffle.partitions") === before)
-  }
-
-  test("a key with no explicit value is restored by UNSET, not pinned") {
-    // AQE is not set by the test session builder, so it reports as
-    // not-explicitly-set (conf.contains reads explicit settings only)
-    assume(!spark.conf.getAll.contains(Key), s"$Key unexpectedly pre-set")
-    PlanScope.staticBatch(spark) { assert(spark.conf.get(Key) === "false") }
-    assert(!spark.conf.getAll.contains(Key),
-      "restore must unset a previously-unset key, not pin its resolved default")
-    assert(spark.conf.get(Key) === "true")
-  }
-
-  test("cross-thread entry into the mutating scope fails loudly") {
-    val entered = new java.util.concurrent.CountDownLatch(1)
-    val release = new java.util.concurrent.CountDownLatch(1)
-    @volatile var fromOtherThread: Option[Throwable] = None
-    val holder = new Thread(() =>
-      PlanScope.staticBatch(spark) { entered.countDown(); release.await() })
-    holder.start()
-    entered.await()
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "PlanScopeSpec job count", false)
     try {
-      val e = intercept[IllegalStateException] {
-        PlanScope.staticBatch(spark) { fail("must not enter") }
-      }
-      assert(e.getMessage.contains("already scoped"))
-    } finally { release.countDown(); holder.join() }
-    // after the holder exits, entry works again (guard entry released)
-    PlanScope.staticBatch(spark) { assert(spark.conf.get(Key) === "false") }
-    assert(fromOtherThread.isEmpty)
-  }
-
-  test("a mutating entry fails loudly while another thread's NO-OP scope is in flight") {
-    // the two-phase reader guard: a no-op scope (values already hold)
-    // stays concurrent with other no-op scopes, but a MUTATING entry —
-    // whose restore would change the values mid-body — must collide
-    // loudly with it instead of interleaving silently. Dedicated key so
-    // suite ordering can't make the "mutating" arm a no-op.
-    val KeyB = "spark.sql.cbo.enabled"
-    // the no-op check compares EXPLICIT values (get(k, null)) — set one
-    // so the reader's entry is genuinely a no-op
-    val cur = spark.conf.get(KeyB)
-    spark.conf.set(KeyB, cur)
-    val flipped = if (cur == "true") "false" else "true"
-    val entered = new java.util.concurrent.CountDownLatch(1)
-    val release = new java.util.concurrent.CountDownLatch(1)
-    val reader = new Thread(() =>
-      PlanScope.withConf(spark, KeyB -> cur) { // values hold → no-op path
-        entered.countDown(); release.await()
-      })
-    reader.start()
-    entered.await()
-    try {
-      val e = intercept[IllegalStateException] {
-        PlanScope.withConf(spark, KeyB -> flipped) { fail("must not enter") }
-      }
-      assert(e.getMessage.contains("no-op scope"))
-    } finally { release.countDown(); reader.join() }
-    // reader gone → mutation enters fine, and restores
-    PlanScope.withConf(spark, KeyB -> flipped) {
-      assert(spark.conf.get(KeyB) === flipped)
+      val out = f
+      sc.setLocalProperty("graft.test.marker", "1")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus never delivered the marker job")
+      (out, jobs.get())
+    } finally {
+      sc.setLocalProperty("graft.test.marker", null)
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
     }
-    assert(spark.conf.get(KeyB) === cur)
-    spark.conf.unset(KeyB)
-  }
-
-  test("same-thread nesting: a mutating scope inside an own no-op scope still works") {
-    val KeyB = "spark.sql.cbo.enabled"
-    val cur = spark.conf.get(KeyB)
-    spark.conf.set(KeyB, cur) // explicit, so the outer is a true no-op
-    val flipped = if (cur == "true") "false" else "true"
-    try PlanScope.withConf(spark, KeyB -> cur) { // no-op outer
-      PlanScope.withConf(spark, KeyB -> flipped) { // mutating inner, same thread
-        assert(spark.conf.get(KeyB) === flipped)
-      }
-      assert(spark.conf.get(KeyB) === cur)
-    } finally spark.conf.unset(KeyB)
   }
 
   test("loopPartitions rounds up to a power of two below the session cap") {
@@ -175,8 +93,6 @@ class PlanScopeSpec extends SparkTestBase {
     val oracle = df.groupBy("k").agg(sum("x").as("s"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     assert(rows === oracle)
-    // the temp-view hop cleaned up after itself
-    assert(spark.catalog.listTables("global_temp").count() === 0)
   }
 
   test("isolated clones POOL by conf fingerprint and reuse in-scope") {
@@ -210,18 +126,84 @@ class PlanScopeSpec extends SparkTestBase {
     assert(mid >= 1 && mid <= sessionSp && Integer.bitCount(mid) === 1)
   }
 
-  test("rebind of a PERSISTED frame keeps the cache (rows hop, no re-plan)") {
-    val df = spark.range(200).toDF("x").persist()
-    df.count()
-    val re = PlanScope.isolatedStatic(spark) { clone =>
-      PlanScope.rebind(df, clone)
+  private def readsCacheStatically(plan: SparkPlan): Boolean =
+    plan.collectFirst { case s: InMemoryTableScanExec => s }.isDefined &&
+      plan.collectFirst { case a: AdaptiveSparkPlanExec => a }.isEmpty
+
+  /** Global temp views: `listTables(db)` also lists local temp views. */
+  private def globalTempViews(): Seq[String] =
+    spark.catalog.listTables("global_temp").collect().toSeq
+      .filter(_.database == "global_temp").map(_.name)
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("rebind of a PERSISTED frame reads its cache on the clone, 0 jobs at bind") {
+    val df = spark.range(200).toDF("x").withColumn("k", col("x") % 9).persist()
+    try {
+      df.count()
+      val oracle = sortedRows(df.groupBy("k").agg(sum("x").as("s")))
+      val (rows, planOk, bindJobs) = PlanScope.isolatedStatic(spark) { clone =>
+        val (re, jobs) = jobsDuring(PlanScope.rebind(df, clone))
+        // an exchange on top, so AQE would wrap the plan were it on
+        val agg = re.groupBy("k").agg(sum("x").as("s"))
+        (sortedRows(agg), readsCacheStatically(agg.queryExecution.executedPlan), jobs)
+      }
+      assert(bindJobs === 0, "rebind must not dispatch a job")
+      assert(planOk, "the rebound frame must read InMemoryTableScan with AQE off")
+      assert(rows === oracle)
+      assert(globalTempViews().isEmpty)
+    } finally df.unpersist()
+  }
+
+  test("rebind of a persisted SUBTREE under an uncached projection reads the cache") {
+    val base = spark.range(300).toDF("x").withColumn("k", col("x") % 7).persist()
+    try {
+      base.count()
+      // resolved through a caller-session temp view: the analyzed plan
+      // has it inlined, so the clone needs no catalog entry
+      base.createOrReplaceTempView("planscope_base")
+      val top = spark.table("planscope_base")
+        .filter(col("k") =!= 3).select(col("x"), (col("k") * 2).as("k2"))
+      val oracle = sortedRows(top.groupBy("k2").count())
+      val (rows, planOk, bindJobs) = PlanScope.isolatedStatic(spark) { clone =>
+        val (re, jobs) = jobsDuring(PlanScope.rebind(top, clone))
+        val agg = re.groupBy("k2").count()
+        (sortedRows(agg), readsCacheStatically(agg.queryExecution.executedPlan), jobs)
+      }
+      assert(bindJobs === 0, "rebind must not dispatch a job")
+      assert(planOk, "the cached subtree must read InMemoryTableScan with AQE off")
+      assert(rows === oracle)
+      assert(globalTempViews().isEmpty)
+    } finally {
+      spark.catalog.dropTempView("planscope_base")
+      base.unpersist()
     }
-    // the hop is the RDD route: a flat scan, not a re-analyzed view (the
-    // view wrapper would defeat the CacheManager's canonicalized match
-    // and silently recompute the plan inside the scope)
-    assert(re.queryExecution.analyzed.getClass.getSimpleName === "LogicalRDD")
-    assert(re.collect().length === 200)
-    df.unpersist()
+  }
+
+  test("concurrent fit loops on one session: sequential results, conf untouched") {
+    import spark.implicits._
+    val docs = (0 until 40).map(i => s"a b c ${"d e " * (i % 4)}a b f${i % 3}").toDF("text")
+    val emb = (0L until 120L).map { i =>
+      (i, Array.tabulate(6)(d => ((i * 7 + d * 13) % 11).toFloat - 5f))
+    }.toDF("vec_id", "embedding")
+    def bpe() = graft.operators.Bpe.trainMerges(spark, docs, k = 4).collect().toSeq
+    def kmeans() = sortedRows(
+      graft.operators.Similarity.kmeansCentroids(emb, nCells = 4, iters = 3, sampleMod = 2))
+    val confBefore = spark.conf.getAll
+    val (bpeSeq, kmeansSeq) = (bpe(), kmeans())
+    val start = new java.util.concurrent.CyclicBarrier(2)
+    def released[T](f: => T) = new java.util.concurrent.Callable[T] {
+      def call(): T = { start.await(); f }
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val bpeF = pool.submit(released(bpe()))
+      val kmeansF = pool.submit(released(kmeans()))
+      assert(bpeF.get() === bpeSeq)
+      assert(kmeansF.get() === kmeansSeq)
+    } finally pool.shutdown()
+    assert(spark.conf.getAll === confBefore)
   }
 
   test("rebindRows hands a clone-planned result back without the clone") {
