@@ -34,9 +34,10 @@ object PlanDump {
       "c03_curation_delta__chain" -> ((s, d) =>
         graft.queries.NorthStarQueries.c03Curation(s, d, detachBound = None)))
     names.foreach { n =>
-      val df = chainFaces.getOrElse(n, SparkEntry.queries(n))(spark, sfDir)
-      val txt = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val txt =
+        if (n == "calls_stream") callsStreamPlan(spark, sfDir)
+        else chainFaces.getOrElse(n, SparkEntry.queries(n))(spark, sfDir)
+          .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outDir, s"${n}_$suffix.txt"),
         txt.getBytes("UTF-8"))
@@ -45,5 +46,33 @@ object PlanDump {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     }
     spark.stop()
+  }
+
+  /** The streaming calls query has a physical plan only once a micro-batch
+    * ran: the `events` table goes through `CallsStreamPipeline.aggregate`
+    * and `enriched` (against `customer`) as one micro-batch, and the
+    * formatted plan of that batch's execution is returned. */
+  private def callsStreamPlan(spark: org.apache.spark.sql.SparkSession, sfDir: String): String = {
+    import spark.implicits._
+    import graft.streaming.{CallsStreamPipeline, StreamingOps}
+    val in = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(java.sql.Timestamp, Long, Double)](spark)
+    in.addData(Tables.events(spark, sfDir)
+      .select($"ts", $"user_id", $"value".cast("double"))
+      .as[(java.sql.Timestamp, Long, Double)].collect().toSeq)
+    val enriched = CallsStreamPipeline.enriched(
+      CallsStreamPipeline.aggregate(in.toDF().toDF("ts", "user_id", "value")),
+      Tables.customer(spark, sfDir),
+      "c_custkey", "c_name", "c_mktsegment", "c_nationkey", "c_acctbal")
+    val q = StreamingOps.foreachBatchSink(enriched,
+        java.nio.file.Files.createTempDirectory("plandump-ck").toString,
+        org.apache.spark.sql.streaming.OutputMode.Update()) { (b, _) => b.collect(); () }
+      .start()
+    try {
+      q.processAllAvailable()
+      q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode)
+    } finally q.stop()
   }
 }

@@ -136,17 +136,8 @@ object PlanScope {
     * Callers must not route the spread claim into both branches of a
     * union that later co-partition-joins (reproduced SMJ zip failure in
     * the curation domain stage — the spread there sits after the union). */
-  def spreadIfSmall(df: DataFrame, keyCol: String): DataFrame = {
-    val conf = df.sparkSession.sessionState.conf
-    val est = scala.util.Try(
-      df.queryExecution.optimizedPlan.stats.sizeInBytes).toOption
-    est match {
-      case Some(b) if b < BigInt(4L) * conf.filesMaxPartitionBytes =>
-        df.repartition(conf.numShufflePartitions,
-          org.apache.spark.sql.functions.col(keyCol))
-      case _ => df
-    }
-  }
+  def spreadIfSmall(df: DataFrame, keyCol: String): DataFrame =
+    spreadWidth(df).fold(df)(df.repartition(_, org.apache.spark.sql.functions.col(keyCol)))
 
   /** [[spreadIfSmall]] keyed on a MULTI-column key — for spreading
     * straight into a downstream `groupBy(cols…)`: the hash exchange this
@@ -158,31 +149,25 @@ object PlanScope {
     * the whole aggregate runs at session width and the plan's exchange
     * count is unchanged). Same estimate gate and determinism rationale
     * as the single-key overload; no-op at scale. */
-  def spreadIfSmall(df: DataFrame, keyCols: Seq[org.apache.spark.sql.Column]): DataFrame = {
-    val conf = df.sparkSession.sessionState.conf
-    val est = scala.util.Try(
-      df.queryExecution.optimizedPlan.stats.sizeInBytes).toOption
-    est match {
-      case Some(b) if b < BigInt(4L) * conf.filesMaxPartitionBytes =>
-        df.repartition(conf.numShufflePartitions, keyCols: _*)
-      case _ => df
-    }
-  }
+  def spreadIfSmall(df: DataFrame, keyCols: Seq[org.apache.spark.sql.Column]): DataFrame =
+    spreadWidth(df).fold(df)(df.repartition(_, keyCols: _*))
 
   /** [[spreadIfSmall]] for frames WITHOUT a usable row key (a bare text
     * projection): round-robin instead of hash-by-key. The pre-shuffle
     * local sort (SPARK-23207, on by default) keeps row placement
     * deterministic under task retry; the sort itself is bounded because
     * the spread only fires on provably small inputs. */
-  def spreadIfSmall(df: DataFrame): DataFrame = {
+  def spreadIfSmall(df: DataFrame): DataFrame =
+    spreadWidth(df).fold(df)(df.repartition(_))
+
+  /** The gate all three [[spreadIfSmall]] overloads share: the session's
+    * shuffle width when `df`'s optimizer size estimate is under 4 file
+    * splits, None when it is bigger or unknown. */
+  private def spreadWidth(df: DataFrame): Option[Int] = {
     val conf = df.sparkSession.sessionState.conf
-    val est = scala.util.Try(
-      df.queryExecution.optimizedPlan.stats.sizeInBytes).toOption
-    est match {
-      case Some(b) if b < BigInt(4L) * conf.filesMaxPartitionBytes =>
-        df.repartition(conf.numShufflePartitions)
-      case _ => df
-    }
+    scala.util.Try(df.queryExecution.optimizedPlan.stats.sizeInBytes).toOption
+      .filter(_ < BigInt(4L) * conf.filesMaxPartitionBytes)
+      .map(_ => conf.numShufflePartitions)
   }
 
   /** The static scope most operators want: AQE off AND shuffle

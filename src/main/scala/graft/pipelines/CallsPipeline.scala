@@ -40,25 +40,40 @@ object CallsPipeline {
     * (CallCustomerJoiner.java:24-28), window bounds formatted
     * "dd/MM/yyyy HH:mm" (CallCustomerJoiner.java:32-40).
     */
-  def callsEnriched(spark: SparkSession, sfDir: String): DataFrame = {
-    val agg = callsAggregation(spark, sfDir)
+  def callsEnriched(spark: SparkSession, sfDir: String): DataFrame =
     // builder.table's latest-per-key collapse (the general operator:
     // CoreOps.latestByKey, exercised by r04) is an identity on a
     // primary-keyed snapshot like this customer table — running it anyway
     // would cost a full shuffle+agg of the dimension before the broadcast
     // join. The scan feeds the join directly; a changelog-shaped dimension
     // (repeated keys) would reintroduce latestByKey here.
-    val cust = Tables.customer(spark, sfDir)
+    enrich(callsAggregation(spark, sfDir), Tables.customer(spark, sfDir),
+      "c_custkey", "c_name", "c_mktsegment", "c_nationkey", "c_acctbal")
 
+  /** The reference's enriched record (CallCustomerJoiner.apply): `agg` (a
+    * [[graft.ops.CoreOps.tumblingAgg]] output, batch or watermarked
+    * stream) left-joined to `customers` on `custKey`, the four customer
+    * fields named by `doc`/`operator`/`flag`/`days` null-defaulted, and
+    * the 11-column projection. The one definition both topology faces
+    * share: [[callsEnriched]] and
+    * [[graft.streaming.CallsStreamPipeline.enriched]]. */
+  def enrich(
+      agg: DataFrame,
+      customers: DataFrame,
+      custKey: String,
+      doc: String,
+      operator: String,
+      flag: String,
+      days: String): DataFrame =
     enrichLeftJoin(
       agg,
-      cust,
-      agg("id_telef_origen") === cust("c_custkey").cast("string"),
+      customers,
+      agg("id_telef_origen") === customers(custKey).cast("string"),
       defaults = Seq(
-        ("doc_cliente", cust("c_name"), lit("Unknown")),
-        ("operador_actual", cust("c_mktsegment"), lit("Unknown")),
-        ("cliente_orange", cust("c_nationkey"), lit(0)),
-        ("days_excliente", floor(cust("c_acctbal")).cast("long"), lit(0L))))
+        ("doc_cliente", customers(doc), lit("Unknown")),
+        ("operador_actual", customers(operator), lit("Unknown")),
+        ("cliente_orange", customers(flag), lit(0)),
+        ("days_excliente", floor(customers(days)).cast("long"), lit(0L))))
       .select(
         readableDate(col("window.start")).as("window_start_ts"),
         readableDatePlusOneHour(col("window.start")).as("window_end_ts"),
@@ -71,5 +86,4 @@ object CallsPipeline {
         col("operador_actual"),
         col("cliente_orange"),
         col("days_excliente"))
-  }
 }

@@ -395,8 +395,8 @@ object CurationPipeline {
     * corpus: the exact-dup digest frame, the LSH band frame, the quality
     * quantile fit, and the released layout's per-shard token totals.
     * Build once per release cut with [[releaseArtifacts]]; pass to every
-    * delta batch (and to
-    * [[graft.streaming.StreamingOps.curateDeltaSink]]). Call
+    * delta batch's [[curateDeltaWith]] (a stream calls it per micro-batch
+    * inside [[graft.streaming.StreamingOps.foreachBatchSink]]). Call
     * [[Release.unpersist]] when superseded by the next release. */
   final case class Release(
       digests: DataFrame,
@@ -547,9 +547,9 @@ object CurationPipeline {
     *      per-shard token totals) rebases offsets/chunk ids so the delta
     *      APPENDS to the released layout instead of restarting it.
     *
-    * Stream ≡ batch: drive per-micro-batch via
-    * [[graft.streaming.StreamingOps.curateDeltaSink]] — the body IS this
-    * method, so a one-batch stream equals the batch call exactly.
+    * Stream ≡ batch: call this method inside
+    * [[graft.streaming.StreamingOps.foreachBatchSink]], so a one-batch
+    * stream equals the batch call exactly.
     * Admission is conservative relative to a full recompute
     * (dedupDelta's set-based rule; a batch doc that near-dups a corpus
     * doc is rejected even where keep-longest would have preferred it) —

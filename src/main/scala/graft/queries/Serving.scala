@@ -234,8 +234,8 @@ object Serving {
     * corpus, each fit and saved with the [[ivfIndexTable]] layout. A
     * mining deployment maintains one index per language and amortizes
     * the fits across mining batches — `bitextMarginMineWith` is the
-    * probe face, and the streaming `bitextMineSink` already rides
-    * prebuilt indexes; s02 keeps the in-call IVF fit measured. The fits
+    * probe face, and its streaming face (the same call inside
+    * `StreamingOps.foreachBatchSink`) already rides prebuilt indexes; s02 keeps the in-call IVF fit measured. The fits
     * are deterministic, so probing the served tables is bit-identical
     * to the in-call `bitextMarginMine` and the fit-replaying oracle
     * stays exact. Returns (srcTable, tgtTable) for `loadIvf`. */

@@ -1,11 +1,13 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import graft.ops.CoreOps.{readableDate, readableDatePlusOneHour}
+import org.apache.spark.sql.functions.col
+import graft.ops.CoreOps.tumblingAgg
+import graft.pipelines.CallsPipeline
 
-/** The reference's end-to-end topology in streaming form: watermarked
-  * 1-hour tumbling call aggregation (CallsAggregationApp.createTopology)
+/** The reference's end-to-end topology in streaming form, built from the
+  * batch topology's own operators: watermarked 1-hour tumbling call
+  * aggregation (CallsAggregationApp.createTopology)
   * enriched against a customer snapshot (CallsEnrichedApp.buildTopology),
   * output-mode `update` for per-record changelog emission.
   *
@@ -17,15 +19,19 @@ import graft.ops.CoreOps.{readableDate, readableDatePlusOneHour}
   */
 object CallsStreamPipeline {
 
+  /** [[graft.ops.CoreOps.tumblingAgg]] over the watermarked stream: update
+    * mode emits the per-record KTable changelog, append mode only the
+    * windows the watermark has closed. */
   def aggregate(
       calls: DataFrame,
       tsCol: String = "ts",
       caller: String = "user_id",
       duration: String = "value",
       watermark: String = "24 hours"): DataFrame =
-    StreamingOps.tumblingAggStream(
-      calls, tsCol, col(caller), col(duration), "1 hour", watermark)
+    tumblingAgg(calls.withWatermark(tsCol, watermark), col(tsCol), col(caller), col(duration))
 
+  /** [[graft.pipelines.CallsPipeline.enrich]] on the aggregated stream; the
+    * static customer side is re-resolved per micro-batch. */
   def enriched(
       aggregated: DataFrame,
       customers: DataFrame,
@@ -34,25 +40,5 @@ object CallsStreamPipeline {
       operator: String,
       flag: String,
       days: String): DataFrame =
-    StreamingOps.enrichStreamStatic(
-      aggregated,
-      customers,
-      aggregated("id_telef_origen") === customers(custKey).cast("string"),
-      defaults = Seq(
-        ("doc_cliente", customers(doc), lit("Unknown")),
-        ("operador_actual", customers(operator), lit("Unknown")),
-        ("cliente_orange", customers(flag), lit(0)),
-        ("days_excliente", floor(customers(days)).cast("long"), lit(0L))))
-      .select(
-        readableDate(col("window.start")).as("window_start_ts"),
-        readableDatePlusOneHour(col("window.start")).as("window_end_ts"),
-        col("id_telef_origen"),
-        col("calls_count"),
-        col("max_duracion_origen"),
-        col("total_duracion_origen"),
-        col("avg_duracion_origen"),
-        col("doc_cliente"),
-        col("operador_actual"),
-        col("cliente_orange"),
-        col("days_excliente"))
+    CallsPipeline.enrich(aggregated, customers, custKey, doc, operator, flag, days)
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
 
 /** One (doc, LSH band) row of the streaming near-dup pipeline. `ts` is the
@@ -116,6 +116,11 @@ case class FunnelAdvance(key: Long, stage: Long, ts: java.sql.Timestamp)
   *     state row per key, emitting on change — a true changelog, unlike the
   *     stream-static join which only sees periodic snapshots.
   *
+  * A face that IS a batch operator is not written here a second time: it
+  * runs per record over a watermarked frame (`CallsStreamPipeline.aggregate`
+  * is `CoreOps.tumblingAgg` over `withWatermark`) or per batch inside
+  * [[foreachBatchSink]].
+  *
   * Scale: streaming state lives in the executor state stores partitioned by
   * the grouping key (`StateStoreSaveExec` / `FlatMapGroupsWithStateExec`),
   * so a 1000-executor cluster shards state horizontally; nothing here
@@ -132,32 +137,6 @@ object StreamingOps {
       org.apache.spark.unsafe.types.UTF8String.fromString(watermark))
     org.apache.spark.sql.catalyst.util.IntervalUtils.getDuration(
       iv, java.util.concurrent.TimeUnit.MILLISECONDS, 31)
-  }
-
-  /** Watermarked per-key tumbling-window aggregate — streaming form of
-    * CoreOps.tumblingAgg (reference: CallsAggregationApp.java:56-78).
-    *
-    * Update mode ⇒ per-record KTable-changelog emission like the reference;
-    * append mode + this watermark ⇒ finalized windows only.
-    */
-  def tumblingAggStream(
-      events: DataFrame,
-      tsCol: String,
-      key: Column,
-      value: Column,
-      width: String = "1 hour",
-      watermark: String = "24 hours"): DataFrame = {
-    val v = floor(value).cast("long")
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), width).as("window"), key.cast("string").as("id_telef_origen"))
-      .agg(
-        count(lit(1)).as("calls_count"),
-        max(v).as("max_duracion_origen"),
-        sum(v).as("total_duracion_origen"))
-      .withColumn(
-        "avg_duracion_origen",
-        floor(col("total_duracion_origen") / col("calls_count")).cast("long"))
   }
 
   /** Watermarked HOPPING-window aggregate — the streaming form of the
@@ -505,9 +484,11 @@ object StreamingOps {
     * emit the new latest on every change (reference: `builder.table(topic)`,
     * CallsEnrichedApp.java:58).
     *
-    * `ord` breaks ties between the buffered state and incoming records —
-    * larger wins; within a batch the last record at the max `ord` wins,
-    * matching Kafka's offset order for same-timestamp upserts.
+    * `ord` orders the buffered state and the incoming records — the
+    * largest wins, so give every upsert a unique `ord` (its Kafka offset).
+    * Equal-`ord` ties have no fixed winner: the last of them in
+    * group-iterator order is kept, and Spark sorts that iterator by key
+    * only, not by arrival.
     *
     * State is one row per key in the executor state store; use with
     * `outputMode("update")`.
@@ -573,62 +554,44 @@ object StreamingOps {
     events.withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(keys)
 
-  /** Update-mode changelog → idempotent upsert sink via foreachBatch
-    * (SURVEY.md §7.5: Kafka sinks give no append-only guarantee under
-    * update-mode aggregation; per-batch upserts with a batch id make
-    * replays idempotent).
+  /** Run `body(batch, batchId)` on every micro-batch of `stream`: the one
+    * way a batch operator serves a stream. A micro-batch is a deterministic
+    * batch computation (D-Streams), so calling the batch operator inside
+    * `body` IS its streaming face, and stream ≡ batch per micro-batch by
+    * construction. The batch faces run this way, against artifacts built
+    * once and persisted by the caller (re-deriving them per trigger would
+    * re-scan the corpus every batch): `Dedup.dedupDeltaWith` (survivors
+    * of a frozen release's digest + band frames),
+    * `CurationPipeline.curateDelta` / `curateDeltaWith` (the delta
+    * admission gauntlet against explicit artifacts or a frozen `Release`),
+    * `Similarity.bitextMarginMineWith` (prebuilt source/target IVF
+    * indexes); [[hybridSearchSink]] and [[linkGraphSink]] add per-batch
+    * logic of their own. Duplicates ACROSS batches are the release
+    * cadence's concern: fold accepted batches into the next release cut,
+    * or chain [[streamingLshNearDup]] upstream.
     *
-    * `upsert(batchDf, batchId)` receives each micro-batch's changelog rows;
-    * on restart a batch can be re-delivered with the same id, so sinks
-    * keyed on (your key, batchId) — or overwriting by key — are
-    * exactly-once from the reader's perspective.
-    */
-  def changelogUpsertSink(
-      changelog: DataFrame,
-      checkpointDir: String)(
-      upsert: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    changelog.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        upsert(batch.toDF(), batchId)
-      }
-
-  /** Streaming ingestion dedup against a FROZEN corpus release — the
-    * serving face of `Dedup.dedupDeltaWith`: each micro-batch of arriving
-    * docs is screened against the release's prebuilt digest + LSH band
-    * frames (exact and near dup), and the SURVIVING docs are handed to
-    * `sink(survivors, batchId)` — an idempotent per-batch upsert, same
-    * replay contract as [[changelogUpsertSink]]. Per batch this pays
-    * exactly the batch-mode `dedupDeltaWith` cost: candidate generation
-    * is an equi-join against the persisted band frame, never corpus².
+    * `outputMode`: `Append` for a stream of raw records, `Update` for an
+    * aggregated changelog (each batch carries the current value of every
+    * key it touched; SURVEY.md §7.5: Kafka sinks give no append-only
+    * guarantee under update-mode aggregation).
     *
-    * Within-batch duplicates collapse (lowest id wins), like the batch
-    * path. Duplicates ACROSS stream batches are the release cadence's
-    * concern — fold accepted batches into the corpus frames when cutting
-    * the next release, or chain [[streamingLshNearDup]] upstream for
-    * intra-stream collisions. `corpus`/`digests`/`bands` must be the
-    * matched build from `corpusDigests`/`corpusBands` (persist them — a
-    * re-derivation per batch would re-shingle the corpus every trigger).
-    */
-  def deltaDedupSink(
-      newDocs: DataFrame, // columns: doc_id (long), text (string), streaming
-      corpus: DataFrame,
-      digests: DataFrame,
-      bands: DataFrame,
+    * REPLAY CONTRACT: after a restart, the last batch whose commit marker
+    * did not land is re-delivered under the SAME batchId. A body that
+    * overwrites by key, or upserts keyed on (key, batchId), is therefore
+    * exactly-once from the reader's side. A body that is not idempotent
+    * (an additive fold) must apply its write AND record the batchId in one
+    * transaction, skipping any batchId at or below the recorded high-water
+    * mark — the recipe Spark prescribes for any non-idempotent
+    * foreachBatch body. */
+  def foreachBatchSink(
+      stream: DataFrame,
       checkpointDir: String,
-      shingleN: Int = 3,
-      numHashes: Int = 12,
-      rowsPerBand: Int = 3,
-      minJaccardPermille: Int = 800)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    newDocs.writeStream
-      .outputMode(OutputMode.Append())
+      outputMode: OutputMode)(
+      body: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    stream.writeStream
+      .outputMode(outputMode)
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        sink(graft.operators.Dedup.dedupDeltaWith(corpus, digests, bands,
-          batch.toDF(), shingleN, numHashes, rowsPerBand, minJaccardPermille), batchId)
-      }
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) => body(batch.toDF(), batchId) }
 
   /** Streaming link-graph artifact maintenance — the serving face of
     * [[graft.operators.Graphs.mergeEdgeCounts]]: each micro-batch of
@@ -642,120 +605,22 @@ object StreamingOps {
     * (spec-pinned). Per batch nothing corpus-sized moves — the batch
     * reduces before it ever meets the |pairs|-sized artifact.
     *
-    * REPLAY CONTRACT — additive, NOT idempotent: unlike
-    * [[changelogUpsertSink]]'s overwrite-by-key sinks, folding the same
-    * batch twice double-counts its edges. foreachBatch re-delivers the
-    * last uncommitted batchId after a restart, so `merge` MUST be a
-    * transactional "fold counts AND record batchId" (skip any batchId
-    * at-or-below the artifact's recorded high-water mark) — the same
-    * exactly-once recipe Spark's docs prescribe for any non-idempotent
-    * foreachBatch body; the spec models the guard. */
+    * The fold is additive, NOT idempotent: folding the same batch twice
+    * double-counts its edges, so `merge` must keep the batchId
+    * high-water mark of [[foreachBatchSink]]'s replay contract (the spec
+    * models the guard). */
   def linkGraphSink(
       edges: DataFrame, // columns: src (long), dst (long), streaming
       checkpointDir: String)(
-      merge: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    edges.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        merge(batch.toDF()
-          .select(col("src").cast("long").as("src"),
-            col("dst").cast("long").as("dst"))
-          .filter(col("src") =!= col("dst"))
-          .groupBy(col("src"), col("dst"))
-          .agg(count(lit(1)).as("n")), batchId)
-      }
-
-  /** Streaming INCREMENTAL CURATION against a frozen corpus release —
-    * the serving face of
-    * [[graft.pipelines.CurationPipeline.curateDelta]]: each micro-batch
-    * of arriving docs runs the full delta-admission gauntlet (delta
-    * dedup vs the release artifacts → n-gram + optional semantic
-    * decontamination → released quality fit → PII scrub → split → packed
-    * layout) and the train-ready survivors are handed to
-    * `sink(curated, batchId)` — an idempotent per-batch upsert, same
-    * replay contract as [[changelogUpsertSink]]. Stream ≡ batch by
-    * construction: the per-batch body IS `curateDelta`, so a one-batch
-    * stream equals the batch call exactly (spec-pinned).
-    *
-    * Pass the PERSISTED release artifacts (`digests`/`bands` from
-    * `Dedup.corpusDigests`/`corpusBands`, `qualityBreakValues` from
-    * `Sketches.quantileFit`, `shardBase` per-shard totals) — deriving
-    * them per trigger would re-shingle and re-scan the corpus every
-    * batch. Duplicates ACROSS stream batches are the release cadence's
-    * concern (fold accepted batches into the artifacts when cutting the
-    * next release), matching [[deltaDedupSink]]'s contract. */
-  def curateDeltaSink(
-      newDocs: DataFrame, // streaming: doc_id (long), text, source
-      corpus: DataFrame,
-      digests: DataFrame,
-      bands: DataFrame,
-      evalDocs: DataFrame,
-      qualityBreakValues: Seq[Long],
-      checkpointDir: String,
-      contaminationPermille: Int = 500,
-      minQualityBucket: Int = 1,
-      splits: Seq[(String, Int)] = Seq("train" -> 900, "val" -> 50, "test" -> 50),
-      salt: String = "",
-      packBudget: Long = 2048,
-      redactPii: Boolean = true,
-      shardBase: Option[DataFrame] = None)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    newDocs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        sink(graft.pipelines.CurationPipeline.curateDelta(
-          corpus, batch.toDF(), evalDocs,
-          corpusDigests = Some(digests), corpusBands = Some(bands),
-          qualityBreakValues = Some(qualityBreakValues),
-          contaminationPermille = contaminationPermille,
-          minQualityBucket = minQualityBucket,
-          splits = splits, salt = salt, packBudget = packBudget,
-          redactPii = redactPii, shardBase = shardBase), batchId)
-      }
-
-  /** The SERVED posture of [[curateDeltaSink]] — steady-state ingestion
-    * against one frozen
-    * [[graft.pipelines.CurationPipeline.Release]]: the release artifacts
-    * (digest/band frames, quality fit, shard totals) are built ONCE at
-    * release cut ([[graft.pipelines.CurationPipeline.releaseArtifacts]])
-    * and every micro-batch probes the same persisted frames — the c04
-    * shape under a stream. Each trigger's body IS
-    * [[graft.pipelines.CurationPipeline.curateDeltaWith]], so N
-    * micro-batches against one Release equal N batch calls exactly
-    * (spec-pinned: two triggers ≡ two `curateDeltaWith` calls,
-    * hash-identical). Persisted frames cost their materialization on the
-    * first trigger only; later triggers are pure admission probes.
-    *
-    * Same replay contract as [[curateDeltaSink]]: `sink(curated,
-    * batchId)` must be an idempotent per-batch upsert, and duplicates
-    * ACROSS batches are the release cadence's concern — fold accepted
-    * batches into the next release cut. */
-  def curateDeltaServedSink(
-      newDocs: DataFrame, // streaming: doc_id (long), text, source
-      release: graft.pipelines.CurationPipeline.Release,
-      corpus: DataFrame,
-      evalDocs: DataFrame,
-      checkpointDir: String,
-      contaminationPermille: Int = 500,
-      minQualityBucket: Int = 1,
-      splits: Seq[(String, Int)] = Seq("train" -> 900, "val" -> 50, "test" -> 50),
-      salt: String = "",
-      packBudget: Long = 2048,
-      redactPii: Boolean = true)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    newDocs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        sink(graft.pipelines.CurationPipeline.curateDeltaWith(
-          release, corpus, batch.toDF(), evalDocs,
-          contaminationPermille = contaminationPermille,
-          minQualityBucket = minQualityBucket,
-          splits = splits, salt = salt, packBudget = packBudget,
-          redactPii = redactPii), batchId)
-      }
+      merge: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    foreachBatchSink(edges, checkpointDir, OutputMode.Append()) { (batch, batchId) =>
+      merge(batch
+        .select(col("src").cast("long").as("src"),
+          col("dst").cast("long").as("dst"))
+        .filter(col("src") =!= col("dst"))
+        .groupBy(col("src"), col("dst"))
+        .agg(count(lit(1)).as("n")), batchId)
+    }
 
   /** Streaming hybrid retrieval — the serving face of the s16 shape: each
     * micro-batch of user queries `(query_id, text, embedding)` runs the
@@ -763,8 +628,8 @@ object StreamingOps {
     * and the dense leg against a prebuilt
     * [[graft.operators.Similarity.IvfIndex]], fuses them with
     * [[graft.operators.TextSearch.rrfFuse]], and hands the fused top-k to
-    * `sink(results, batchId)` (idempotent per-batch upsert — same replay
-    * contract as [[changelogUpsertSink]]). Batch ≡ stream by construction:
+    * `sink(results, batchId)` (idempotent per-batch upsert — the replay
+    * contract of [[foreachBatchSink]]). Batch ≡ stream by construction:
     * the per-batch body IS the batch operators.
     *
     * The batch's query TEXTS are collected to the driver — bounded state
@@ -780,54 +645,27 @@ object StreamingOps {
       nprobe: Int,
       rrfK: Int = 60,
       checkpointDir: String)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queries.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val b = batch.toDF().persist()
-        try {
-          val qText = b.select(col("query_id").cast("long"), col("text"))
-            .collect().map(r => r.getLong(0) -> r.getString(1)).toSeq
-          if (qText.nonEmpty) {
-            val lex = graft.operators.TextSearch.bm25TopKWith(textIndex, qText, k)
-              .select(col("query_id"), col("doc_id"), col("rank"))
-            // excludeSelf = false: query ids are USER query ids, not
-            // corpus vec_ids — an id collision is coincidence, and the
-            // default self-exclusion would silently drop that corpus doc
-            // from the dense leg (the bitextMarginMineWith rule)
-            val dense = graft.operators.Similarity.ivfKnnWith(ivf,
-                b.select(col("query_id").as("vec_id"), col("embedding")), k, nprobe,
-                excludeSelf = false)
-              .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
-            sink(graft.operators.TextSearch.rrfFuse(Seq(lex, dense), k, rrfK), batchId)
-          }
-        } finally { b.unpersist(blocking = false); () }
-      }
-
-  /** Streaming bitext mining — the serving face of the s17 shape: each
-    * micro-batch of source-side vectors `(vec_id, embedding)` is margin-
-    * mined against PREBUILT source/target IVF indexes
-    * ([[graft.operators.Similarity.bitextMarginMineWith]] — the corpus-
-    * sized index builds are paid once, per batch only the two probe
-    * passes run), and the mined `(src_id, tgt_id, cos_e6, margin_e6)`
-    * pairs go to `sink(results, batchId)` with the usual idempotent-
-    * upsert replay contract. Batch ≡ stream by construction. */
-  def bitextMineSink(
-      srcQueries: DataFrame, // streaming: vec_id (long), embedding (array<float>)
-      srcIndex: graft.operators.Similarity.IvfIndex,
-      tgtIndex: graft.operators.Similarity.IvfIndex,
-      k: Int,
-      nprobe: Int,
-      checkpointDir: String)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    srcQueries.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        sink(graft.operators.Similarity.bitextMarginMineWith(
-          srcIndex, tgtIndex, batch.toDF(), k, nprobe), batchId)
-      }
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    foreachBatchSink(queries, checkpointDir, OutputMode.Append()) { (batch, batchId) =>
+      val b = batch.persist()
+      try {
+        val qText = b.select(col("query_id").cast("long"), col("text"))
+          .collect().map(r => r.getLong(0) -> r.getString(1)).toSeq
+        if (qText.nonEmpty) {
+          val lex = graft.operators.TextSearch.bm25TopKWith(textIndex, qText, k)
+            .select(col("query_id"), col("doc_id"), col("rank"))
+          // excludeSelf = false: query ids are USER query ids, not
+          // corpus vec_ids — an id collision is coincidence, and the
+          // default self-exclusion would silently drop that corpus doc
+          // from the dense leg (the bitextMarginMineWith rule)
+          val dense = graft.operators.Similarity.ivfKnnWith(ivf,
+              b.select(col("query_id").as("vec_id"), col("embedding")), k, nprobe,
+              excludeSelf = false)
+            .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
+          sink(graft.operators.TextSearch.rrfFuse(Seq(lex, dense), k, rrfK), batchId)
+        }
+      } finally { b.unpersist(blocking = false); () }
+    }
 
   /** Streaming MinHash-LSH near-duplicate detection: the streaming
     * counterpart of Dedup.minhashLshPairs (same signature scheme, same
@@ -845,7 +683,7 @@ object StreamingOps {
     *
     * Exactly like the batch operator, hits are LSH *candidates* — the
     * downstream verify (exact Jaccard on the pair) runs in the sink
-    * (foreachBatch upsert, see changelogUpsertSink), where the doc bodies
+    * (see foreachBatchSink), where the doc bodies
     * can be fetched; a doc with no verified hit is kept.
     *
     * State is watermark-bounded: every bucket arms an event-time timeout at
@@ -1328,23 +1166,5 @@ object StreamingOps {
       .filter(col("containment_permille") >= minPermille)
       .select(col("window.start").as("window_start"), col("doc_id"), col("eval_id"),
         col("inter_cnt"), col("containment_permille"))
-  }
-
-  /** Stream⋈static left enrichment join — streaming form of
-    * CoreOps.enrichLeftJoin (reference: CallsEnrichedApp.java:63 +
-    * CallCustomerJoiner null-defaults). The static side is re-resolved per
-    * micro-batch, so a periodically rewritten snapshot table approximates
-    * the reference's read-latest KTable lookup; Catalyst broadcasts it when
-    * small.
-    */
-  def enrichStreamStatic(
-      stream: DataFrame,
-      dim: DataFrame,
-      joinCond: Column,
-      defaults: Seq[(String, Column, Column)]): DataFrame = {
-    val joined = stream.join(dim, joinCond, "left_outer")
-    defaults.foldLeft(joined) { case (d, (name, c, default)) =>
-      d.withColumn(name, coalesce(c, default))
-    }
   }
 }

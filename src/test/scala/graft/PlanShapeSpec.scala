@@ -1,7 +1,18 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.catalyst.plans.LeftOuter
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreSaveExec
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+import org.apache.spark.sql.streaming.OutputMode
+import graft.streaming.{CallsStreamPipeline, StreamingOps}
 
 /** Physical-plan assertions — the properties that decide whether a query
   * survives a 100× scale-up, checked against the actual executed plan:
@@ -48,6 +59,41 @@ class PlanShapeSpec extends SparkTestBase {
     // the primary-keyed snapshot feeds the join straight from the scan: no
     // latest-per-key argmax (and its shuffle) on the dimension side
     assert(!p.contains("max_by"), s"identity latestByKey back in the flagship plan:\n$p")
+  }
+
+  test("streaming calls query: one StateStoreSave, customer side a broadcast build, no exchange above the aggregate") {
+    // the perfbench shape: MemoryStream -> aggregate -> enriched, one
+    // micro-batch, then the plan that batch executed
+    import spark.implicits._
+    val in = MemoryStream[RawCall](spark)
+    val enriched = CallsStreamPipeline.enriched(
+      CallsStreamPipeline.aggregate(in.toDF(), tsCol = "ts", caller = "user_id", duration = "value"),
+      Tables.customer(spark, sf), "c_custkey", "c_name", "c_mktsegment", "c_nationkey", "c_acctbal")
+    val q = StreamingOps.foreachBatchSink(enriched,
+      Files.createTempDirectory("ck-planshape").toString, OutputMode.Update()) { (b, _) =>
+        b.collect(); ()
+      }.start()
+    val p = try {
+      in.addData(Tables.events(spark, sf).select($"ts", $"user_id", $"value")
+        .as[RawCall].collect().toIndexedSeq)
+      q.processAllAvailable()
+      q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+    } finally q.stop()
+    val saves = p.collect { case s: StateStoreSaveExec => s }
+    assert(saves.length === 1, s"expected one StateStoreSave:\n$p")
+    val joins = p.collect { case j: BroadcastHashJoinExec => j }
+    assert(joins.length === 1 && joins.head.joinType == LeftOuter &&
+      joins.head.buildSide == BuildRight, s"customer side not a broadcast build:\n$p")
+    // the build side is the customer scan; the stateful aggregate streams
+    assert(joins.head.right.collect { case s: StateStoreSaveExec => s }.isEmpty)
+    assert(joins.head.left.collect { case s: StateStoreSaveExec => s }.length === 1)
+    // the one hash exchange is the one the stateful aggregate requires,
+    // below its StateStoreSave: nothing re-partitions the aggregate's output
+    val shuffles = p.collect { case e: ShuffleExchangeExec => e }
+    assert(shuffles.length === 1 &&
+      shuffles.head.outputPartitioning.isInstanceOf[HashPartitioning], s"unexpected exchanges:\n$p")
+    assert(saves.head.collect { case e: ShuffleExchangeExec => e }.length === 1,
+      s"hash exchange above the aggregate:\n$p")
   }
 
   test("text kernels run inside WholeStageCodegen (no CodegenFallback rows)") {

@@ -6,6 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.{CallsStreamPipeline, KafkaIO, RetentionInput, StreamingOps}
 import org.apache.spark.sql.types._
 
@@ -294,8 +295,8 @@ class StreamingSpec extends SparkTestBase {
 
     // toy upsert store keyed by caller — what a JDBC/Kafka-compacted sink does
     val store = scala.collection.concurrent.TrieMap[String, (Long, Long)]()
-    val q = StreamingOps.changelogUpsertSink(
-      agg, Files.createTempDirectory("ck-ub").toString) { (batch, _) =>
+    val q = StreamingOps.foreachBatchSink(
+      agg, Files.createTempDirectory("ck-ub").toString, OutputMode.Update()) { (batch, _) =>
         batch.collect().foreach(r =>
           store(r.getString(0)) = (r.getLong(1), r.getLong(2)))
       }.start()
@@ -323,7 +324,7 @@ class StreamingSpec extends SparkTestBase {
     def startSink(in: MemoryStream[CallEvent]) = {
       val agg = CallsStreamPipeline.aggregate(in.toDF())
         .select($"id_telef_origen".as("key"), $"calls_count", $"total_duracion_origen")
-      StreamingOps.changelogUpsertSink(agg, ckDir.toString) { (batch, id) =>
+      StreamingOps.foreachBatchSink(agg, ckDir.toString, OutputMode.Update()) { (batch, id) =>
         delivered.add(id)
         batch.collect().foreach(r =>
           store(r.getString(0)) = (r.getLong(1), r.getLong(2)))
@@ -496,10 +497,10 @@ class StreamingSpec extends SparkTestBase {
     val batchB = Seq((20L, long + " extra"), (21L, "fresh thing"), (22L, "fresh thing"))
     val in = MemoryStream[(Long, String)](spark)
     val got = scala.collection.concurrent.TrieMap[Long, Set[Long]]()
-    val q = StreamingOps.deltaDedupSink(
-      in.toDF().toDF("doc_id", "text"), corpus, digests, bands,
-      Files.createTempDirectory("ck-ddd").toString) { (survivors, id) =>
-        got(id) = survivors.select("doc_id").collect().map(_.getLong(0)).toSet
+    val q = StreamingOps.foreachBatchSink(in.toDF().toDF("doc_id", "text"),
+      Files.createTempDirectory("ck-ddd").toString, OutputMode.Append()) { (batch, id) =>
+        got(id) = Dedup.dedupDeltaWith(corpus, digests, bands, batch)
+          .select("doc_id").collect().map(_.getLong(0)).toSet
       }.start()
     try {
       in.addData(batchA); q.processAllAvailable()
@@ -534,11 +535,12 @@ class StreamingSpec extends SparkTestBase {
       (14L, "novel " + (1 to 20).map(i => s"nw$i").mkString(" "), "crawl"))
     val in = MemoryStream[(Long, String, String)](spark)
     val got = scala.collection.concurrent.TrieMap[Long, Set[(Long, String, Long)]]()
-    val q = StreamingOps.curateDeltaSink(
-      in.toDF().toDF("doc_id", "text", "source"), corpus, digests, bands,
-      ev, fit, Files.createTempDirectory("ck-cdelta").toString,
-      redactPii = false) { (curated, id) =>
-        got(id) = curated.select("doc_id", "shard", "token_offset")
+    val q = StreamingOps.foreachBatchSink(in.toDF().toDF("doc_id", "text", "source"),
+      Files.createTempDirectory("ck-cdelta").toString, OutputMode.Append()) { (batch, id) =>
+        got(id) = CurationPipeline.curateDelta(corpus, batch, ev,
+            corpusDigests = Some(digests), corpusBands = Some(bands),
+            qualityBreakValues = Some(fit), redactPii = false)
+          .select("doc_id", "shard", "token_offset")
           .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
       }.start()
     try { in.addData(batchA: _*); q.processAllAvailable() } finally q.stop()
@@ -580,11 +582,10 @@ class StreamingSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     val got = scala.collection.concurrent.TrieMap[Long, Set[(Long, String, Long)]]()
     val in = MemoryStream[(Long, String, String)](spark)
-    val q = StreamingOps.curateDeltaServedSink(
-      in.toDF().toDF("doc_id", "text", "source"), rel, corpus, ev,
-      Files.createTempDirectory("ck-cdserved").toString,
-      minQualityBucket = 0, redactPii = false) { (curated, id) =>
-        got(id) = key(curated)
+    val q = StreamingOps.foreachBatchSink(in.toDF().toDF("doc_id", "text", "source"),
+      Files.createTempDirectory("ck-cdserved").toString, OutputMode.Append()) { (batch, id) =>
+        got(id) = key(CurationPipeline.curateDeltaWith(rel, corpus, batch, ev,
+          minQualityBucket = 0, redactPii = false))
       }.start()
     try {
       in.addData(batchA: _*); q.processAllAvailable()
@@ -761,6 +762,59 @@ class StreamingSpec extends SparkTestBase {
         case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     }
+  }
+
+  /** The KTable face restarted on its checkpoint: three micro-batches of
+    * upserts, stop, restart the same topology on the same checkpoint, two
+    * more. Every upsert has a unique `ord` and they arrive shuffled, so
+    * after the restart many upserts must lose to an offset only the
+    * restored state remembers. */
+  private def latestPerKeyRestart(stateConfs: (String, String)*): Unit = {
+    import scala.jdk.CollectionConverters._
+    val rnd = new scala.util.Random(17)
+    val all = rnd.shuffle((0 until 600).map(i =>
+      CustUpsert(rnd.nextInt(40).toLong, s"doc-$i", i.toLong)))
+    val (first, second) = all.grouped(120).toSeq.splitAt(3)
+    val firstMax = first.flatten.groupMapReduce(_.phone)(_.offset)(math.max)
+    assert(second.flatten.count(u => firstMax.get(u.phone).exists(_ > u.offset)) > 50,
+      "too few post-restart upserts lose to a pre-restart offset")
+    val src = Files.createTempDirectory("ck-kt-restart-src").toString
+    val ck = Files.createTempDirectory("ck-kt-restart").toString
+    val table = scala.collection.concurrent.TrieMap[Long, CustUpsert]()
+    // each chunk lands as one parquet file and is drained before the next
+    def run(part: Seq[Seq[CustUpsert]]): Seq[Long] = withSessionConf(stateConfs: _*) {
+      val ids = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+      val in = spark.readStream.schema(spark.emptyDataset[CustUpsert].schema).parquet(src)
+      val latest = StreamingOps.latestPerKey[CustUpsert, Long](
+        in.as[CustUpsert], _.phone, _.offset)
+      val q = StreamingOps.foreachBatchSink(latest.toDF(), ck, OutputMode.Update()) { (batch, id) =>
+        ids.add(id)
+        batch.as[CustUpsert].collect().foreach(u => table(u.phone) = u)
+      }.start()
+      try part.foreach { c =>
+        c.toDS().coalesce(1).write.mode("append").parquet(src)
+        q.processAllAvailable()
+      } finally q.stop()
+      ids.asScala.toSeq
+    }
+    val before = run(first)
+    val after = run(second)
+    // the second run resumed the checkpoint instead of starting over
+    assert(before.nonEmpty && after.nonEmpty && after.min > before.max)
+    val batch = graft.ops.CoreOps.latestByKey(all.toDF(), Seq($"phone"), Seq($"offset"))
+      .as[CustUpsert].collect().map(u => u.phone -> u).toMap
+    assert(table.toMap === batch)
+  }
+
+  test("latestPerKey restarts on its checkpoint (HDFS-backed state) ≡ batch latestByKey") {
+    latestPerKeyRestart()
+  }
+
+  test("latestPerKey restarts on its checkpoint (RocksDB, changelog checkpointing) ≡ batch latestByKey") {
+    latestPerKeyRestart(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
   }
 
   test("corrupt payloads decode to null and are skipped, not fatal (S8 policy)") {
@@ -1610,7 +1664,7 @@ class StreamingSpec extends SparkTestBase {
       .head().getLong(2) === 3L)
   }
 
-  test("bitextMineSink: per-batch mined pairs ≡ bitextMarginMineWith on the same indexes") {
+  test("streaming bitext mining: per-batch mined pairs ≡ bitextMarginMineWith on the same indexes") {
     import graft.operators.Similarity
     // overlapping id spaces on purpose — the excludeSelf=false contract
     // must hold through the streaming face too
@@ -1625,10 +1679,10 @@ class StreamingSpec extends SparkTestBase {
       BitextQueryFix(2L, Seq(0f, 0f, 1f)))
     val in = MemoryStream[BitextQueryFix](spark)
     val got = scala.collection.concurrent.TrieMap[Long, Set[Seq[Any]]]()
-    val q = StreamingOps.bitextMineSink(
-      in.toDF(), sIdx, tIdx, k = 2, nprobe = 2,
-      checkpointDir = Files.createTempDirectory("ck-bitext").toString) { (mined, id) =>
-        got(id) = mined.collect().map(_.toSeq).toSet
+    val q = StreamingOps.foreachBatchSink(in.toDF(),
+      Files.createTempDirectory("ck-bitext").toString, OutputMode.Append()) { (batch, id) =>
+        got(id) = Similarity.bitextMarginMineWith(sIdx, tIdx, batch, k = 2, nprobe = 2)
+          .collect().map(_.toSeq).toSet
       }.start()
     try {
       in.addData(batchA); q.processAllAvailable()
