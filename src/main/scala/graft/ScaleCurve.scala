@@ -357,16 +357,14 @@ object ScaleCurve {
       // |V|-sized result exceeds its bounded-collect contract and the
       // harness clears caches after each rep anyway.
       "d18_pagerank" -> (() =>
-        graft.operators.Graphs.pageRank(copurchaseEdges(li), iters = 3,
-          deriveAdaptive = false)),
+        graft.operators.Graphs.pageRank(copurchaseEdges(li), iters = 3)),
       "q60_bfs" -> (() => {
         val edges = copurchaseEdges(li)
         // seed stripe present in EVERY replica: Shift is a multiple of
         // 1000, so (partkey + i*Shift) % 1000 == partkey % 1000
         val seeds = edges.select(col("src").as("node"))
           .filter(pmod(col("node"), lit(1000)) === 0).distinct()
-        graft.operators.Graphs.bfsHops(edges, seeds, maxRounds = 3,
-          deriveAdaptive = false)
+        graft.operators.Graphs.bfsHops(edges, seeds, maxRounds = 3)
       }))
 
     // per-op driver-job count (per-rep average): the c-tier decade pins

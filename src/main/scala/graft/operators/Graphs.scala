@@ -20,29 +20,26 @@ import graft.ops.PlanScope
   * order, no convergence epsilon.
   *
   * == Plan scoping ==
-  * Every iterative operator runs on conf-ISOLATED session clones
-  * ([[graft.ops.PlanScope.isolated]], pooled by conf fingerprint): a
-  * concurrent query on the caller's session NEVER observes the loop's
-  * confs — it plans under AQE as usual while a fixpoint runs. Two scopes
-  * per operator:
+  * Every loop operator runs one protocol ([[iterate]]) on conf-ISOLATED
+  * session clones ([[graft.ops.PlanScope.isolated]], pooled by conf
+  * fingerprint): a concurrent query on the caller's session NEVER
+  * observes the loop's confs — it plans under AQE as usual while a
+  * fixpoint runs. Two scopes per operator:
   *
-  *  - the edge DERIVATION — a caller-arbitrary, corpus-scale plan (a
-  *    multi-join over fact tables) — runs under the caller's own
-  *    ADAPTIVE conf by default (`deriveAdaptive = true`): it is exactly
-  *    the plan class AQE's skew-split and partition coalescing exist
-  *    for, and a skewed join key in a 100 TB derivation must re-plan at
-  *    runtime or one straggler partition owns the job. The price is one
-  *    driver job per exchange during the one materializing count —
-  *    priced honestly by an interleaved 5-rep A/B at sf0.1 (uniform AND
-  *    an 80%-hot-key skewed derivation): adaptive pays +3 dispatch jobs
-  *    and ~1.2-1.6 s vs the static scope on this dispatch-floor-bound
-  *    host, with identical results — at this data size every partition
-  *    fits and skew-split has nothing to save, so the local measurement
-  *    is pure dispatch cost. The default is a SCALE stance: the
-  *    straggler blowup AQE prevents is unbounded at cluster scale while
-  *    the dispatch cost is bounded and small; `deriveAdaptive = false`
-  *    is the escape hatch for latency-critical small, known-uniform
-  *    derivations.
+  *  - the edge DERIVATION runs in the static scope
+  *    ([[graft.ops.PlanScope.isolatedStatic]], AQE off) and is
+  *    materialized by one count, which also sizes the loop. Static
+  *    planning pays one driver job per action instead of one per
+  *    exchange — priced by an interleaved 5-rep A/B at sf0.1 (uniform
+  *    AND an 80%-hot-key skewed derivation): the adaptive derivation
+  *    paid +3 dispatch jobs and ~1.2-1.6 s on a dispatch-floor-bound
+  *    host, with identical results. A derivation that does need AQE (a
+  *    skewed join key in a 100 TB multi-join, where skew-split keeps one
+  *    straggler partition from owning the job) is materialized by the
+  *    caller under its own conf first: `persist()` the edge frame and
+  *    `count()` it before the call. The derivation scope then reads
+  *    those cached blocks (`InMemoryTableScan`, nothing recomputes) —
+  *    the rebind-reads-the-cache property `PlanScopeSpec` pins.
   *  - a LOOP scope (AQE off, partitions pinned to the measured edge
   *    count, broadcasts off): every round re-executes the same known
   *    shape (|V|-sized frame shuffled to the pre-partitioned edge cache,
@@ -58,15 +55,17 @@ import graft.ops.PlanScope
   *    side's one-exchange shuffle — while charging a broadcast-build
   *    driver job per round.
   *
-  * Results are persisted, materialized |V|-sized frames handed back
-  * BOUND TO THE CALLER'S SESSION: the loop's final cut is re-rooted
-  * through [[graft.ops.PlanScope.rebindRows]] and re-persisted under the
-  * caller before the scope's own pin is released, so any downstream
-  * query composed on the result (e.g. `pageRank(e).join(bigFact)`)
-  * plans under the caller's own conf — AQE, broadcasts, corpus-sized
-  * partitions — not the loop clone's static conf. The handoff costs one
-  * |V|-sized cache-to-cache copy per call; `result.unpersist()` (or
-  * [[detachSmall]]) releases every block the call left registered.
+  * Results leave the way inputs enter, through
+  * [[graft.ops.PlanScope.rebind]] ([[handoff]]): the loop's result is
+  * persisted and materialized INSIDE the loop scope (one driver job), the
+  * loop's scaffolding pins are released, and the frame is re-bound onto
+  * the caller's session. Spark's cache manager is shared across sessions,
+  * so the caller-bound frame reads the scope's cached blocks
+  * (`InMemoryTableScan`) while any query composed on it (e.g.
+  * `pageRank(e).join(bigFact)`) plans under the caller's own conf — AQE,
+  * broadcasts, corpus-sized partitions — not the loop clone's static
+  * conf. `result.unpersist()` (or [[detachSmall]]) releases the one cache
+  * entry the call leaves registered.
   */
 object Graphs {
 
@@ -88,21 +87,20 @@ object Graphs {
     * shuffled to the edge partitioning (join on src) and contributions
     * aggregated by dst (map-side partial sums). Ranks are |V|-sized,
     * edges |E|-sized; nothing corpus-sized is ever collected. Lineage is
-    * cut (persist + |V|-sized count + flat re-root, previous cut dropped)
-    * every few rounds and at the last — the components fixpoint
+    * cut ([[Cuts]]) every few rounds — the components fixpoint
     * discipline (Dedup.scala) at the CutEvery cadence — so every action
     * plans at bounded depth, executor loss replays at most CutEvery
     * rounds, and deep iteration counts stay linear-cost while shallow
-    * runs pay a single materialization.
+    * runs pay a single materialization: the exit's. The returned frame is
+    * persisted and bound to the caller's session (see the object doc).
     *
     * @param edges (src: long-castable, dst: long-castable) directed edges
     * @return (node: long, rank_e6: long)
     */
-  def pageRank(edges: DataFrame, iters: Int, dampE2: Int = 85,
-      deriveAdaptive: Boolean = true): DataFrame =
+  def pageRank(edges: DataFrame, iters: Int, dampE2: Int = 85): DataFrame =
     pageRankWeighted(
       edges.select(col("src"), col("dst")).distinct().withColumn("w", lit(1L)),
-      iters, dampE2, deriveAdaptive)
+      iters, dampE2)
 
   /** Re-root a persisted, already-materialized frame as a flat scan over
     * its cached blocks. The logical plan downstream rounds see is one
@@ -117,40 +115,61 @@ object Graphs {
   private def flatView(df: DataFrame): DataFrame =
     df.sparkSession.createDataFrame(df.rdd, df.schema)
 
-  /** Exit-boundary handoff for the loop results (see the object doc):
-    * re-root the scope's persisted, materialized result onto the
-    * caller's session, persist + materialize the caller-bound copy
-    * (reads the scope-side cached blocks — one |V|-sized copy, one
-    * driver job), then release the scope-side pin. The returned frame
-    * both PLANS under the caller's conf downstream and satisfies the
-    * `result.unpersist()` release contract. */
+  /** A loop's lineage cuts: persist + one count + release the previous
+    * cut + [[flatView]] re-root — the Dedup.components fixpoint
+    * discipline. [[held]] is the cut still pinned, for the exit's
+    * release list. */
+  private final class Cuts {
+    private var last: Option[DataFrame] = None
+
+    /** Cut `next` now: (flat re-root over its cached blocks, row count). */
+    def apply(next: DataFrame): (DataFrame, Long) = {
+      val cut = next.persist(StorageLevel.MEMORY_AND_DISK)
+      val n = cut.count()
+      last.foreach(_.unpersist(blocking = false))
+      last = Some(cut)
+      (flatView(cut), n)
+    }
+
+    /** Cut at round `r` of `rounds` on the CutEvery cadence, else pass
+      * `next` through lazily. The last round never cuts: the exit's
+      * count is its materialization (≤ CutEvery rounds over the last cut
+      * — an iteration count that is a multiple of CutEvery leaves the
+      * full-cadence suffix lazy, still far below the AQE-nesting onset,
+      * and loops run AQE-off). */
+    def atCadence(r: Int, rounds: Int, next: DataFrame): DataFrame =
+      if (r % CutEvery == 0 && r != rounds) apply(next)._1 else next
+
+    def held: Seq[DataFrame] = last.toSeq
+  }
+
+  /** Exit boundary of every loop operator (see the object doc): persist
+    * `out` and materialize it inside the loop scope through the
+    * InternalRow RDD — ONE driver job, vs `count()` whose SQL aggregate
+    * adds a shuffle for a number nobody reads. Safe because nothing has
+    * forced `out`'s query execution yet, so its lazy planning sees the
+    * persist() entry. `out` usually arrives LAZY (the final rounds, see
+    * [[Cuts.atCadence]]), making this count the loop's last
+    * materialization too. `releaseAfter` holds the scaffolding pins (edge
+    * cache, node cache, last cut): they feed this count, so they release
+    * only after it — and since `out` is loaded by then, releasing them
+    * never re-plans it. An `out` that is already persisted and
+    * materialized (kCore's converged cut) passes through without a
+    * second count. The caller-bound frame is [[graft.ops.PlanScope.rebind]]
+    * of `out`: it reads the same cache entry, so `result.unpersist()`
+    * releases it. */
   private def handoff(out: DataFrame, caller: SparkSession,
-      releaseAfter: Seq[DataFrame] = Nil): DataFrame = {
-    val bound = PlanScope.rebindRows(out, caller)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // materialize through the InternalRow RDD: ONE driver job that fills
-    // the cache, vs `count()` whose SQL agg pays 2-3 AQE stage jobs
-    // under the caller's adaptive conf (the cache-population count has
-    // no result anybody reads, so the agg plan was pure dispatch).
-    // Safe because nothing has forced this frame's query execution yet —
-    // the lazy planning sees the persist() entry.
-    //
-    // FUSED EXIT: `out` may arrive LAZY (at most CutEvery rounds of
-    // plan over the last lineage cut — the cut skips at r == iters, so an
-    // iters that is a multiple of CutEvery leaves the full-cadence
-    // suffix lazy) — this count is then the loop's
-    // final materialization too, one driver job instead of the former
-    // count-then-copy pair. `releaseAfter` takes the loop's scaffolding
-    // pins (edge cache, node cache, last cut): they feed this count's
-    // execution, so they release only after it.
-    bound.queryExecution.toRdd.count()
-    out.unpersist(blocking = false)
+      releaseAfter: Seq[DataFrame]): DataFrame = {
+    if (out.storageLevel == StorageLevel.NONE) {
+      out.persist(StorageLevel.MEMORY_AND_DISK)
+      out.queryExecution.toRdd.count()
+    }
     releaseAfter.foreach(_.unpersist(blocking = false))
-    bound
+    PlanScope.rebind(out, caller)
   }
 
   /** Lineage-cut cadence for the iterative loops: materialize + re-root
-    * every CutEvery rounds (and at the last). Shallow runs — the 2-5
+    * every CutEvery rounds (never at the last). Shallow runs — the 2-5
     * iteration shapes a board query uses — pay exactly ONE materialization
     * (identical action count to a cut-at-the-end-only loop), while deep
     * runs keep every action's plan at depth ≤ CutEvery, far below the
@@ -181,35 +200,68 @@ object Graphs {
     math.min(math.max(sessionSp, 1).toLong, pow2.toLong).toInt
   }
 
-  private def sessionShufflePartitions(df: DataFrame): Int =
-    scala.util.Try(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt).getOrElse(200)
-
-  /** Materialize the operator's projected edge frame into cache and hand
-    * back (cached frame, |rows|): the caller's whole edge-building plan
-    * executes inside this one count. Runs in the static derivation scope
-    * by default (see the object doc), or under the caller's adaptive
-    * conf with `deriveAdaptive = true`. */
-  private def deriveEdges(edges: DataFrame, projected: DataFrame => DataFrame,
-      deriveAdaptive: Boolean): (DataFrame, Long) =
-    if (deriveAdaptive) {
-      val e = projected(edges).persist(StorageLevel.MEMORY_AND_DISK)
-      (e, e.count())
-    } else PlanScope.isolatedStatic(edges.sparkSession) { derive =>
-      val e = projected(PlanScope.rebind(edges, derive))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      (e, e.count())
-    }
-
   /** The loop scope's conf fingerprint (see the object doc). */
   private def loopConfs(nPart: Int): Seq[(String, String)] = Seq(
     "spark.sql.adaptive.enabled" -> "false",
     "spark.sql.shuffle.partitions" -> nPart.toString,
     "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
+  /** The protocol every loop operator shares (see the object doc):
+    *
+    *  1. derive the `projected` edge frame in the static derivation
+    *     scope, persist it and count it — the caller's whole
+    *     edge-building plan executes inside this one count;
+    *  1. size the loop's partitions from the operator's
+    *     `(nEdges, nNodes)` rule over that count ([[loopPartitions]]).
+    *     The default rule sizes by |E| alone: |V| ≤ 2|E| whenever every
+    *     node has an incident edge (seed-only nodes add |seeds|, and a
+    *     seed set larger than the edge list is not a graph problem);
+    *  1. open the loop scope and rebind the edge cache into it (the
+    *     analyzed plan is unchanged, so the shared cache manager matches
+    *     it and the loop reads its cached blocks — the derivation never
+    *     re-executes in scope);
+    *  1. run `body(scope, edges, nPart)`, which returns the lazy (or
+    *     persisted-and-materialized) result and the scaffolding pins to
+    *     release after it;
+    *  1. [[handoff]] the result to the caller; the body's pins and the
+    *     edge cache release after the exit count. A body that re-hangs
+    *     the edges into its own cache may release the raw one early
+    *     (`edges.unpersist`), so the edge bytes are not cached twice;
+    *     unpersist is a no-op the second time. */
+  private def iterate(edges: DataFrame, projected: DataFrame => DataFrame,
+      sizes: Long => (Long, Long) = nE => (nE, 2 * nE))(
+      body: (SparkSession, DataFrame, Int) => (DataFrame, Seq[DataFrame])): DataFrame = {
+    val caller = edges.sparkSession
+    val (derived, nE) = PlanScope.isolatedStatic(caller) { derive =>
+      val e = projected(PlanScope.rebind(edges, derive))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      (e, e.count())
+    }
+    val (nEdges, nNodes) = sizes(nE)
+    val nPart = loopPartitions(caller.sessionState.conf.numShufflePartitions, nEdges, nNodes)
+    PlanScope.isolated(caller, loopConfs(nPart): _*) { scoped =>
+      val e = PlanScope.rebind(derived, scoped)
+      val (out, releaseAfter) = body(scoped, e, nPart)
+      handoff(out, caller, releaseAfter :+ e)
+    }
+  }
+
+  /** (src, dst, w) cast to longs — the weighted loops' projection. */
+  private def weighted(edges: DataFrame): DataFrame = edges.select(
+    col("src").cast("long").as("src"), col("dst").cast("long").as("dst"),
+    col("w").cast("long").as("w"))
+
+  /** The undirected simple graph: direction dropped, self-loops removed,
+    * multi-edges collapsed, each edge once as `(a, b)` with `a < b`. */
+  private def undirected(edges: DataFrame): DataFrame = edges
+    .select(col("src").cast("long").as("s"), col("dst").cast("long").as("d"))
+    .filter(col("s") =!= col("d"))
+    .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
+    .distinct()
+
   /** Cache-release contract for the iterative operators
-    * ([[pageRank]]/[[pageRankWeighted]]/[[labelPropagate]]/[[bfsHops]]/
-    * [[ssspBounded]]/[[kCore]]): each RETURNS the persisted,
+    * ([[pageRank]]/[[pageRankWeighted]]/[[triangles]]/[[labelPropagate]]/
+    * [[bfsHops]]/[[ssspBounded]]/[[kCore]]): each RETURNS the persisted,
     * already-materialized |V|-sized result frame — the pin is on the
     * returned frame itself, so `result.unpersist()` releases every block
     * the call left registered (edge/node/intermediate cuts are released
@@ -245,30 +297,16 @@ object Graphs {
     * @param edges (src, dst, w: long-castable positive weights); duplicate
     *              (src,dst) rows are NOT collapsed — pre-aggregate weights
     */
-  def pageRankWeighted(edges: DataFrame, iters: Int, dampE2: Int = 85,
-      deriveAdaptive: Boolean = true): DataFrame = {
+  def pageRankWeighted(edges: DataFrame, iters: Int, dampE2: Int = 85): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(dampE2 >= 0 && dampE2 <= 100, s"dampE2 must be in [0,100], got $dampE2")
     val teleport = 1000000L * (100 - dampE2) / 100
-    val caller = edges.sparkSession
-    val sessionSp = sessionShufflePartitions(edges)
-    // Cache the projected edge frame FIRST: it feeds the eod join's probe
-    // side and the eod join's out-weight aggregate — uncached, each would
-    // re-execute the caller's whole edge-building plan (a multi-join at
-    // corpus scale). The count both materializes the cache and hands us
-    // |E| for loop sizing.
-    val (e0, nE) = deriveEdges(edges, _.select(
-      col("src").cast("long").as("src"), col("dst").cast("long").as("dst"),
-      col("w").cast("long").as("w")), deriveAdaptive)
-    // |V| <= 2|E| always (every node has an incident edge here), so the
-    // edge count alone sizes the loop — the node-universe distinct then
+    // The projected edge frame is cached FIRST (by iterate): it feeds the
+    // eod join's probe side and the eod join's out-weight aggregate —
+    // uncached, each would re-execute the caller's whole edge-building
+    // plan (a multi-join at corpus scale). The node-universe distinct
     // runs INSIDE the scope at the loop's own partitioning.
-    val nPart = loopPartitions(sessionSp, nE, 2 * nE)
-    PlanScope.isolated(caller, loopConfs(nPart): _*) { scoped =>
-      // rebind carries e0's analyzed plan unchanged, so the shared
-      // CacheManager matches it and the loop reads e0's cached blocks
-      // (InMemoryTableScan) — the derivation never re-executes in scope.
-      val e = PlanScope.rebind(e0, scoped)
+    iterate(edges, weighted) { (_, e, nPart) =>
       // Out-weight rides with every edge so the per-iteration contribution
       // is a pure projection after the ranks join; partitioned by src once
       // so iterations shuffle only the |V|-sized ranks frame, never the
@@ -279,22 +317,18 @@ object Graphs {
         .repartition(nPart, col("src"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       eod.count()
-      e0.unpersist(blocking = false)
+      e.unpersist(blocking = false)
       // Node universe from the CACHED eod (the inner out-weight join keeps
       // every edge row, so src∪dst over eod ≡ over the raw edges). Lazily
-      // persisted — the first round's cut materializes it; no standalone
-      // driver job.
+      // persisted — the first round's cut (or the exit) materializes it;
+      // no standalone driver job.
       val nodes = eod.select(col("src").as("node"))
         .union(eod.select(col("dst").as("node")))
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
 
       var ranks = nodes.select(col("node"), lit(1000000L).as("rank_e6"))
-      // Lineage cut every CutEvery rounds and at the last (see CutEvery):
-      // persist + one |V|-sized count + unpersist-previous-cut + flat
-      // re-root, the Dedup.components fixpoint discipline at a cadence
-      // that leaves shallow runs a single materialization.
-      var prevCut: Option[DataFrame] = None
+      val cuts = new Cuts
       for (r <- 1 to iters) {
         val contrib = eod
           .join(ranks, eod("src") === ranks("node"))
@@ -306,22 +340,9 @@ object Graphs {
             (lit(teleport) +
               expr(s"($dampE2 * coalesce(in_c, CAST(0 AS BIGINT))) div 100"))
               .as("rank_e6"))
-        ranks = if (r % CutEvery == 0 && r != iters) {
-          val cut = next.persist(StorageLevel.MEMORY_AND_DISK)
-          cut.count()
-          prevCut.foreach(_.unpersist(blocking = false))
-          prevCut = Some(cut)
-          flatView(cut)
-        } else next
+        ranks = cuts.atCadence(r, iters, next)
       }
-      // the final rounds stay LAZY (≤ CutEvery deep over the last cut —
-      // an iters that is itself a multiple of CutEvery skips the cut at
-      // r == iters, leaving the full CutEvery-round suffix lazy; still
-      // far below the AQE-nesting onset, and loops run AQE-off);
-      // handoff's caller-bound count is the single exit materialization —
-      // the former cut-then-copy pair was two driver jobs for one result
-      handoff(ranks, caller,
-        releaseAfter = Seq(eod, nodes) ++ prevCut.toSeq)
+      (ranks, Seq(eod, nodes) ++ cuts.held)
     }
   }
 
@@ -345,8 +366,7 @@ object Graphs {
     * @param edges (src, dst) long-castable; orientation ignored
     * @return (node: long, n_triangles: long)
     */
-  def triangles(edges: DataFrame, deriveAdaptive: Boolean = true): DataFrame =
-    trianglesDegreeOrdered(edges, deriveAdaptive)
+  def triangles(edges: DataFrame): DataFrame = trianglesDegreeOrdered(edges)
 
   /** Extend an additive edge-weight artifact with a delta batch's pair
     * counts: union + one re-aggregate on the pair key. EXACT because the
@@ -400,11 +420,7 @@ object Graphs {
     * @return (node: long, n_triangles: long)
     */
   def trianglesRawOriented(edges: DataFrame): DataFrame = {
-    val und = edges
-      .select(col("src").cast("long").as("s"), col("dst").cast("long").as("d"))
-      .filter(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
-      .distinct()
+    val und = undirected(edges)
     val tri = und.as("e1")
       .join(und.as("e2"), col("e1.b") === col("e2.a"))
       .select(col("e1.a").as("x"), col("e1.b").as("y"), col("e2.b").as("z"))
@@ -428,38 +444,23 @@ object Graphs {
     * extra degree aggregate + two joins hanging the degrees on the edge
     * list — the price of hub safety, paid once before the wedge join.
     *
+    * Runs the loop protocol ([[iterate]]) although it is one action: the
+    * wedge chain is a FIXED shape whose skew is already bounded by the
+    * orientation itself — max out-degree O(√|E|) by construction — so
+    * AQE's skew-split insurance buys nothing there and its per-exchange
+    * stage jobs were the only thing the chain dispatched (board census:
+    * 14 of q69's 15 jobs). Static scope, partitions sized from the
+    * measured |E|, broadcasts off (the closing-edge probe joins two
+    * |E|-sized sides; degree frames shuffle-join against the same
+    * partitioning); the exit's count runs the chain.
+    *
     * @param edges (src, dst) long-castable; orientation ignored
     * @return (node: long, n_triangles: long)
     */
-  def trianglesDegreeOrdered(edges: DataFrame,
-      deriveAdaptive: Boolean = true): DataFrame = {
-    val caller = edges.sparkSession
-    val sessionSp = sessionShufflePartitions(edges)
-    // two-phase like the iterative loops: the edge DERIVE is corpus-scale
-    // ad-hoc (keep the caller's adaptive conf on it), while the wedge
-    // chain is a FIXED shape whose skew is already bounded by the
-    // orientation itself — max out-degree O(√|E|) by construction — so
-    // AQE's skew-split insurance buys nothing there and its per-exchange
-    // stage jobs were the only thing the chain dispatched (board census:
-    // 14 of q69's 15 jobs). Static scope, partitions sized from the
-    // measured |E|, broadcasts off (the closing-edge probe joins two
-    // |E|-sized sides; degree frames shuffle-join against the same
-    // partitioning).
-    val (und, nE) = deriveEdges(edges, _.select(
-        col("src").cast("long").as("s"), col("dst").cast("long").as("d"))
-      .filter(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
-      .distinct(), deriveAdaptive)
-    val nPart = loopPartitions(sessionSp, nE, nE)
-    PlanScope.isolated(caller, loopConfs(nPart): _*) { scoped =>
-      val undS = PlanScope.rebind(und, scoped) // cached read, see pageRankWeighted
-      // handoff executes the (one-action) chain and lands the result
-      // caller-bound + persisted; release und only after that run
-      val bound = handoff(trianglesDegreeOrderedChain(undS), caller)
-      und.unpersist(blocking = false)
-      bound
+  def trianglesDegreeOrdered(edges: DataFrame): DataFrame =
+    iterate(edges, undirected, nE => (nE, nE)) { (_, und, _) =>
+      (trianglesDegreeOrderedChain(und), Nil)
     }
-  }
 
   /** The wedge chain on an already-derived canonical edge frame —
     * see [[trianglesDegreeOrdered]] for the plan rationale. */
@@ -511,26 +512,18 @@ object Graphs {
     *
     * @return (node, dist: int nullable)
     */
-  def bfsHops(edges: DataFrame, seeds: DataFrame, maxRounds: Int,
-      deriveAdaptive: Boolean = true): DataFrame = {
+  def bfsHops(edges: DataFrame, seeds: DataFrame, maxRounds: Int): DataFrame = {
     require(maxRounds >= 0, s"maxRounds must be >= 0, got $maxRounds")
-    val caller = edges.sparkSession
-    val sessionSp = sessionShufflePartitions(edges)
-    val (e0, nE) = deriveEdges(edges, _.select(
-      col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .distinct(), deriveAdaptive)
-    // sized by |E| alone: |V| <= 2|E| + |seeds|, and a seed set larger
-    // than the edge list is not a graph problem
-    val nPart = loopPartitions(sessionSp, nE, 2 * nE)
-    PlanScope.isolated(caller, loopConfs(nPart): _*) { scoped =>
+    iterate(edges, _.select(
+        col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+      .distinct()) { (scoped, e0, nPart) =>
       // Re-hang the edge cache on the JOIN key: distinct() leaves the
       // frame hash-partitioned on (src, dst), which does NOT satisfy the
       // per-round join's src-distribution — without this one-time
       // repartition, EVERY round re-shuffles the whole |E| frame to reach
       // the frontier (rounds × |E| exchange bytes at corpus scale; the
       // frontier is the side that should move).
-      val e = PlanScope.rebind(e0, scoped) // cached read, see pageRankWeighted
-        .repartition(nPart, col("src"))
+      val e = e0.repartition(nPart, col("src"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       // e's cache population RIDES the first counted round (round 2's
       // drain count is the loop's first action and fills it) instead of
@@ -589,8 +582,8 @@ object Graphs {
         round += 1
       }
       // node universe from the loop-cached edge frame + seeds — the whole
-      // exit stays LAZY over the cached frontiers; handoff's caller-bound
-      // count is the single exit materialization
+      // exit stays LAZY over the cached frontiers; handoff's count is the
+      // single exit materialization
       val nodes = e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node")))
         .union(seedNodes)
@@ -599,8 +592,7 @@ object Graphs {
         .join(settled.select(col("node").as("__n"), col("dist")),
           nodes("node") === col("__n"), "left")
         .select(col("node"), col("dist"))
-      handoff(out, caller,
-        releaseAfter = (spent :+ e) ++ (if (e0Released) Nil else Seq(e0)))
+      (out, spent :+ e)
     }
   }
 
@@ -621,22 +613,14 @@ object Graphs {
     * @param seeds (node, label: long) — clamped
     * @return (node, label: long nullable)
     */
-  def labelPropagate(edges: DataFrame, seeds: DataFrame, rounds: Int,
-      deriveAdaptive: Boolean = true): DataFrame = {
+  def labelPropagate(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val caller = edges.sparkSession
-    val sessionSp = sessionShufflePartitions(edges)
-    val (e0, nE) = deriveEdges(edges, _.select(
-      col("src").cast("long").as("src"), col("dst").cast("long").as("dst"),
-      col("w").cast("long").as("w")), deriveAdaptive)
-    val nPart = loopPartitions(sessionSp, nE, 2 * nE)
-    PlanScope.isolated(caller, loopConfs(nPart): _*) { scoped =>
+    iterate(edges, weighted) { (scoped, e0, nPart) =>
       // One-time re-hang on the join key (see bfsHops): the caller's edge
       // frame arrives with arbitrary partitioning, so without this every
       // round's labels join re-shuffles the whole |E| frame instead of
       // moving only the |V|-sized label frame.
-      val e = PlanScope.rebind(e0, scoped) // cached read, see pageRankWeighted
-        .repartition(nPart, col("src"))
+      val e = e0.repartition(nPart, col("src"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       e.count()
       e0.unpersist(blocking = false)
@@ -655,8 +639,7 @@ object Graphs {
         .persist(StorageLevel.MEMORY_AND_DISK)
       var lab = nodes.join(seed, Seq("node"), "left")
         .select(col("node"), col("__seed").as("label"))
-      // Same CutEvery lineage-cut cadence as the pageRank loop.
-      var prevCut: Option[DataFrame] = None
+      val cuts = new Cuts
       for (r <- 1 to rounds) {
         val win = e
           .join(lab.filter(col("label").isNotNull), e("src") === col("node"))
@@ -666,17 +649,9 @@ object Graphs {
         val next = nodes.join(seed, Seq("node"), "left")
           .join(win, nodes("node") === win("dst"), "left")
           .select(col("node"), coalesce(col("__seed"), col("__win")).as("label"))
-        lab = if (r % CutEvery == 0 && r != rounds) {
-          val cut = next.persist(StorageLevel.MEMORY_AND_DISK)
-          cut.count()
-          prevCut.foreach(_.unpersist(blocking = false))
-          prevCut = Some(cut)
-          flatView(cut)
-        } else next
+        lab = cuts.atCadence(r, rounds, next)
       }
-      // fused exit — see handoff: the final rounds stay lazy, one job
-      handoff(lab, caller,
-        releaseAfter = Seq(e, nodes, seed) ++ prevCut.toSeq)
+      (lab, Seq(e, nodes, seed) ++ cuts.held)
     }
   }
 
@@ -705,18 +680,10 @@ object Graphs {
     * @param seeds (node)
     * @return (node: long, dist: long nullable)
     */
-  def ssspBounded(edges: DataFrame, seeds: DataFrame, rounds: Int,
-      deriveAdaptive: Boolean = true): DataFrame = {
+  def ssspBounded(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val caller = edges.sparkSession
-    val sessionSp = sessionShufflePartitions(edges)
-    val (e0, nE) = deriveEdges(edges, _.select(
-      col("src").cast("long").as("src"), col("dst").cast("long").as("dst"),
-      col("w").cast("long").as("w")), deriveAdaptive)
-    val nPart = loopPartitions(sessionSp, nE, 2 * nE)
-    PlanScope.isolated(caller, loopConfs(nPart): _*) { scoped =>
-      val e = PlanScope.rebind(e0, scoped) // cached read, see pageRankWeighted
-        .repartition(nPart, col("src"))
+    iterate(edges, weighted) { (scoped, e0, nPart) =>
+      val e = e0.repartition(nPart, col("src"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       e.count()
       e0.unpersist(blocking = false)
@@ -724,24 +691,16 @@ object Graphs {
         .select(col("node").cast("long").as("node"))
       var dist = seedNodes.select(col("node"), lit(0L).as("dist"))
         .distinct()
-      var prevCut: Option[DataFrame] = None
+      val cuts = new Cuts
       for (r <- 1 to rounds) {
         val relaxed = e.join(dist, e("src") === dist("node"))
           .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
         val next = dist.unionByName(relaxed)
           .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        dist = if (r % CutEvery == 0 && r != rounds) {
-          val cut = next.persist(StorageLevel.MEMORY_AND_DISK)
-          cut.count()
-          prevCut.foreach(_.unpersist(blocking = false))
-          prevCut = Some(cut)
-          flatView(cut)
-        } else next
+        dist = cuts.atCadence(r, rounds, next)
       }
       // node universe from the loop-cached edge frame + seeds — the exit
-      // stays lazy (≤ CutEvery relax rounds over the last cut — see the
-      // handoff note on the rounds-multiple-of-CutEvery case); handoff's
-      // caller-bound count is the single exit materialization
+      // stays lazy; handoff's count is the single exit materialization
       val nodes = e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node")))
         .union(seedNodes)
@@ -750,7 +709,7 @@ object Graphs {
         .join(dist.select(col("node").as("__n"), col("dist")),
           nodes("node") === col("__n"), "left")
         .select(col("node"), col("dist"))
-      handoff(out, caller, releaseAfter = Seq(e) ++ prevCut.toSeq)
+      (out, e +: cuts.held)
     }
   }
 
@@ -783,24 +742,14 @@ object Graphs {
     * @param edges (src: long-castable, dst: long-castable), read undirected
     * @return (node: long, deg: long) — survivors with their core degree
     */
-  def kCore(edges: DataFrame, k: Int, maxRounds: Int,
-      deriveAdaptive: Boolean = true): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 0, s"maxRounds must be >= 0, got $maxRounds")
-    val caller = edges.sparkSession
-    val sessionSp = sessionShufflePartitions(edges)
-    val (und, nE) = deriveEdges(edges, _.select(
-        col("src").cast("long").as("s"), col("dst").cast("long").as("d"))
-      .filter(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
-      .distinct(), deriveAdaptive)
-    val nPart = loopPartitions(sessionSp, 2 * nE, 2 * nE)
-    PlanScope.isolated(caller, loopConfs(nPart): _*) { scoped =>
+    iterate(edges, undirected, nE => (2 * nE, 2 * nE)) { (_, und, nPart) =>
       // both orientations, re-hung on the peel key (see bfsHops: without
       // this every round re-shuffles the whole edge frame)
-      val undS = PlanScope.rebind(und, scoped) // cached read, see pageRankWeighted
-      val dir = undS.select(col("a").as("node"), col("b").as("other"))
-        .unionByName(undS.select(col("b").as("node"), col("a").as("other")))
+      val dir = und.select(col("a").as("node"), col("b").as("other"))
+        .unionByName(und.select(col("b").as("node"), col("a").as("other")))
         .repartition(nPart, col("node"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       // dir stays EAGERLY populated (unlike bfsHops' ride-the-first-count
@@ -812,8 +761,12 @@ object Graphs {
       // trade exactly when the loop body fans out over the cache.
       dir.count()
       und.unpersist(blocking = false)
+      def peel(alive: DataFrame): DataFrame = dir
+        .join(alive, Seq("node"), "left_semi")
+        .join(alive.select(col("node").as("other")), Seq("other"), "left_semi")
+        .groupBy(col("node")).agg(count(lit(1)).as("deg"))
       var deg = dir.groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      var prevCut: Option[DataFrame] = None
+      val cuts = new Cuts
       var prevAlive = -1L
       var round = 0
       var converged = false
@@ -827,44 +780,29 @@ object Graphs {
         // frame, while deep peels halve their driver count jobs. The
         // bound round always checks so maxRounds semantics (and the
         // bounded-round oracle) are untouched.
-        val checkNow = round % 2 == 0 || round == maxRounds
-        if (checkNow) {
-          val cut = deg.filter(col("deg") >= k).persist(StorageLevel.MEMORY_AND_DISK)
-          val nAlive = cut.count()
-          prevCut.foreach(_.unpersist(blocking = false))
-          prevCut = Some(cut)
-          if (nAlive == prevAlive) {
-            // the filter removed nothing and deg was computed over exactly
-            // this survivor set — cut is the k-core with its core degrees
-            converged = true
-          } else {
+        if (round % 2 == 0 || round == maxRounds) {
+          val (alive, nAlive) = cuts(deg.filter(col("deg") >= k))
+          // equal counts: the filter removed nothing and deg was computed
+          // over exactly this survivor set — the cut is the k-core with
+          // its core degrees
+          converged = nAlive == prevAlive
+          if (!converged) {
             prevAlive = nAlive
-            val alive = flatView(cut).select(col("node"))
-            deg = dir
-              .join(alive, Seq("node"), "left_semi")
-              .join(alive.select(col("node").as("other")), Seq("other"), "left_semi")
-              .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+            deg = peel(alive.select(col("node")))
           }
-        } else {
+        } else
           // un-counted stride round: peel lazily — the filter chains into
           // the next counted round's job (plan depth ≤ 2 between
           // materializations; the duplicated alive subtree's exchange is
           // deduped by ReuseExchange)
-          val alive = deg.filter(col("deg") >= k).select(col("node"))
-          deg = dir
-            .join(alive, Seq("node"), "left_semi")
-            .join(alive.select(col("node").as("other")), Seq("other"), "left_semi")
-            .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-        }
+          deg = peel(deg.filter(col("deg") >= k).select(col("node")))
       }
-      if (converged)
-        handoff(prevCut.get, caller, releaseAfter = Seq(dir))
-      else
-        // maxRounds exhausted: one more LAZY filter over the last
-        // recompute, matching the oracle's final ≥ k cut — handoff's
-        // caller-bound count materializes it (fused exit, one job)
-        handoff(deg.filter(col("deg") >= k), caller,
-          releaseAfter = Seq(dir) ++ prevCut.toSeq)
+      // converged: the last cut, already persisted and counted, IS the
+      // result (handoff passes it through). maxRounds exhausted: one more
+      // LAZY filter over the last recompute, matching the oracle's final
+      // ≥ k cut — the exit count materializes it.
+      if (converged) (cuts.held.head, Seq(dir))
+      else (deg.filter(col("deg") >= k), dir +: cuts.held)
     }
   }
 }

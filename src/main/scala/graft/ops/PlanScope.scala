@@ -27,12 +27,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `newSession()` CLONE — isolated SQLConf, shared SparkContext and cache
   * manager — so a concurrent query on the caller's session NEVER observes
   * the scope's confs (it plans under AQE as usual while the scope runs),
-  * and nothing is ever set on or restored to a caller's conf. Input
-  * frames enter the clone via [[rebind]]; results either cross back as
-  * values built on the caller's session (driver-side fits), are returned
-  * as-is (they keep planning under the clone's immutable conf), or are
-  * handed back through [[rebindRows]] when the caller's conf must plan
-  * downstream. */
+  * and nothing is ever set on or restored to a caller's conf. A frame
+  * crosses a scope boundary, in either direction, only through
+  * [[rebind]]: inputs enter the clone that way, and results either cross
+  * back as values built on the caller's session (driver-side fits), are
+  * returned as-is (they keep planning under the clone's immutable conf),
+  * or — when the caller's conf must plan downstream — are persisted and
+  * materialized inside the scope and re-bound onto the caller, whose
+  * plans then read the shared cache entry (`InMemoryTableScan`). */
 object PlanScope {
 
   /** One clone per (caller session, effective-conf fingerprint), never
@@ -61,10 +63,12 @@ object PlanScope {
     * the clone's conf is immutable (pooled by fingerprint; a body that
     * needs different confs mid-operator opens a second scope rather
     * than calling `clone.conf.set`). Frames bound to `spark` cross in
-    * via [[rebind]]; frames crossing back out may simply
-    * be returned — planning on them stays under the clone's (immortal,
-    * immutable) conf — or re-bound via [[rebindRows]] when the caller
-    * needs its own planning conf downstream. */
+    * via [[rebind]]; frames crossing back out may simply be returned —
+    * planning on them stays under the clone's (immortal, immutable) conf
+    * — or, when the caller needs its own planning conf downstream, be
+    * persisted and materialized in the scope and re-bound onto `spark`
+    * via [[rebind]] (`graft.operators.Graphs` hands every loop result
+    * back this way). */
   def isolated[T](spark: SparkSession, confs: (String, String)*)(
       f: SparkSession => T): T = {
     // Scope reuse: when `spark` already holds every requested conf (an
@@ -185,21 +189,13 @@ object PlanScope {
     * catalog entry. The plan is unchanged, so the shared CacheManager
     * still matches it: a persisted frame, or a persisted subtree under an
     * uncached projection, reads its cached blocks (`InMemoryTableScan`)
-    * inside the scope. Use for INPUT frames entering an [[isolated]]
-    * scope whose whole derivation should plan under the scope's conf. */
+    * on `target`. Use for INPUT frames entering an [[isolated]]
+    * scope whose whole derivation should plan under the scope's conf, and
+    * for results leaving one: persist and materialize the result inside
+    * the scope, then rebind it onto the caller — its downstream plans read
+    * that cache entry under the caller's conf, and `unpersist()` on the
+    * returned frame releases it. */
   def rebind(df: DataFrame, target: SparkSession): DataFrame =
     if (df.sparkSession eq target) df
     else org.apache.spark.sql.GraftDatasetShim.ofRows(target, df.queryExecution.analyzed)
-
-  /** Re-bind `df` onto `target` keeping its CURRENT plan as concrete
-    * lineage: the frame `target` sees is an RDD scan whose recompute
-    * replays the plan exactly as `df`'s own session would have run it.
-    * Use at the exit boundary of an [[isolated]] scope, when the
-    * returned frame must plan downstream under the caller's conf rather
-    * than the clone's. Costs no job at bind time; the Row↔InternalRow
-    * hop it adds is paid by whatever materializes the result — size the
-    * call accordingly (|V|-sized loop results, per-batch serving
-    * outputs). */
-  def rebindRows(df: DataFrame, target: SparkSession): DataFrame =
-    target.createDataFrame(df.rdd, df.schema)
 }

@@ -952,8 +952,7 @@ object NorthStarQueries {
       // caller-AQE stage jobs were its only dispatch
       graft.ops.PlanScope.isolatedStaticFor(Tables.nation(s, d)) { scoped =>
         graft.ops.PlanScope.rebind(graft.operators.Graphs.detachSmall(
-            graft.operators.Graphs.labelPropagate(edges, seeds, rounds = 2,
-              deriveAdaptive = false)), scoped)
+            graft.operators.Graphs.labelPropagate(edges, seeds, rounds = 2)), scoped)
           .join(Tables.nation(scoped, d), col("node") === col("n_nationkey"))
           .select(col("n_name"), col("label"))
       }
@@ -971,8 +970,7 @@ object NorthStarQueries {
       // the tiny tail join runs static (see d20)
       graft.ops.PlanScope.isolatedStaticFor(Tables.nation(s, d)) { scoped =>
         graft.ops.PlanScope.rebind(graft.operators.Graphs.detachSmall(
-            graft.operators.Graphs.pageRankWeighted(edges, iters = 3,
-              deriveAdaptive = false)), scoped)
+            graft.operators.Graphs.pageRankWeighted(edges, iters = 3)), scoped)
           .join(Tables.nation(scoped, d), col("node") === col("n_nationkey"))
           .select(col("n_name"), col("rank_e6"))
       }
@@ -1026,8 +1024,7 @@ object NorthStarQueries {
       // the tiny tail join runs static (see d20)
       graft.ops.PlanScope.isolatedStaticFor(Tables.nation(s, d)) { scoped =>
         graft.ops.PlanScope.rebind(graft.operators.Graphs.detachSmall(
-            graft.operators.Graphs.pageRank(edges, iters = 3,
-              deriveAdaptive = false)), scoped)
+            graft.operators.Graphs.pageRank(edges, iters = 3)), scoped)
           .join(Tables.nation(scoped, d), col("node") === col("n_nationkey"))
           .select(col("n_name"), col("rank_e6"))
       }

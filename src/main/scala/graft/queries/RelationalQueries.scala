@@ -503,8 +503,7 @@ object RelationalQueries {
       // only dispatch)
       graft.ops.PlanScope.isolatedStaticFor(Tables.nation(s, d)) { scoped =>
         graft.ops.PlanScope.rebind(graft.operators.Graphs.detachSmall(
-            graft.operators.Graphs.bfsHops(edges, seeds, maxRounds = 3,
-              deriveAdaptive = false)), scoped)
+            graft.operators.Graphs.bfsHops(edges, seeds, maxRounds = 3)), scoped)
           .join(Tables.nation(scoped, d), col("node") === col("n_nationkey"))
           .select(col("n_name"), col("dist"))
       }
@@ -526,7 +525,7 @@ object RelationalQueries {
       // the tiny tail join runs static (see q60)
       graft.ops.PlanScope.isolatedStaticFor(Tables.nation(s, d)) { scoped =>
         graft.ops.PlanScope.rebind(graft.operators.Graphs.detachSmall(
-            graft.operators.Graphs.triangles(edges, deriveAdaptive = false)), scoped)
+            graft.operators.Graphs.triangles(edges)), scoped)
           .join(Tables.nation(scoped, d), col("node") === col("n_nationkey"))
           .select(col("n_name"), col("n_triangles"))
       }
@@ -981,8 +980,7 @@ object RelationalQueries {
       // the tiny tail join runs static (see q60)
       graft.ops.PlanScope.isolatedStaticFor(Tables.nation(s, d)) { scoped =>
         graft.ops.PlanScope.rebind(graft.operators.Graphs.detachSmall(
-            graft.operators.Graphs.ssspBounded(edges, seeds, rounds = 3,
-              deriveAdaptive = false)), scoped)
+            graft.operators.Graphs.ssspBounded(edges, seeds, rounds = 3)), scoped)
           .join(Tables.nation(scoped, d), col("node") === col("n_nationkey"))
           .select(col("n_name"), col("dist"))
       }
@@ -1004,8 +1002,7 @@ object RelationalQueries {
         .select(col("src"), col("dst"))
       // core is a bounded slice of the part universe → detachSmall
       graft.operators.Graphs.detachSmall(
-          graft.operators.Graphs.kCore(edges, k = 2, maxRounds = 8,
-            deriveAdaptive = false))
+          graft.operators.Graphs.kCore(edges, k = 2, maxRounds = 8))
         .select(col("node").as("part_key"), col("deg").as("core_deg"))
     }),
   )

@@ -216,6 +216,38 @@ class GraphsSpec extends SparkTestBase {
     big.unpersist(blocking = true)
   }
 
+  test("loop contract: each entry point returns one caller-bound, cached, releasable frame") {
+    def registered() = spark.sparkContext.getPersistentRDDs.size
+    val w = triangle.withColumn("w", lit(1L))
+    val seeds = Seq(Tuple1(1L)).toDF("node")
+    val labels = Seq((1L, 7L)).toDF("node", "label")
+    // (entry point, call, driver jobs per call before the loops shared one
+    // protocol, with the edge derivation in the static scope)
+    val entryPoints = Seq[(String, () => org.apache.spark.sql.DataFrame, Int)](
+      ("pageRank", () => Graphs.pageRank(triangle, iters = 3), 3),
+      ("pageRankWeighted", () => Graphs.pageRankWeighted(w, iters = 3), 3),
+      ("triangles", () => Graphs.triangles(triangle), 2),
+      ("bfsHops", () => Graphs.bfsHops(triangle, seeds, maxRounds = 3), 3),
+      ("labelPropagate", () => Graphs.labelPropagate(w, labels, rounds = 3), 3),
+      ("ssspBounded", () => Graphs.ssspBounded(w, seeds, rounds = 3), 3),
+      // converged peel: the last cut is the result and leaves as is
+      ("kCore", () => Graphs.kCore(triangle, k = 2, maxRounds = 8), 5),
+      // round bound hit: the lazy final filter is counted at the exit
+      ("kCore round-bound", () => Graphs.kCore(triangle, k = 2, maxRounds = 1), 4))
+    for ((name, call, maxJobs) <- entryPoints) {
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      val (result, jobs) = jobsDuring(call())
+      assert(result.sparkSession eq spark, s"$name: result not bound to the caller")
+      assert(readsCacheAdaptively(result.groupBy().count()),
+        s"$name: downstream plan is not AdaptiveSparkPlan over InMemoryTableScan")
+      assert(registered() === 1, s"$name: exactly the result stays cached")
+      assert(jobs <= maxJobs, s"$name: $jobs driver jobs, was $maxJobs")
+      result.unpersist(blocking = true)
+      assert(registered() === 0, s"$name: unpersist() must release every block")
+    }
+  }
+
   private def cores(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.PlanScope
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -16,38 +15,6 @@ import org.apache.spark.sql.functions._
 class PlanScopeSpec extends SparkTestBase {
 
   private val Key = "spark.sql.adaptive.enabled"
-
-  /** Jobs dispatched by `f` on this thread: a job-group listener plus a
-    * closing marker job, whose start event proves every earlier event of
-    * the group has been delivered (the listener bus is ordered). */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"planscope-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).filter(_.getProperty("spark.jobGroup.id") == group)
-          .foreach { p =>
-            if (p.getProperty("graft.test.marker") != null) markerSeen.countDown()
-            else { jobs.incrementAndGet(); () }
-          }
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "PlanScopeSpec job count", false)
-    try {
-      val out = f
-      sc.setLocalProperty("graft.test.marker", "1")
-      sc.parallelize(Seq(1), 1).count()
-      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS),
-        "listener bus never delivered the marker job")
-      (out, jobs.get())
-    } finally {
-      sc.setLocalProperty("graft.test.marker", null)
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
-  }
 
   test("loopPartitions rounds up to a power of two below the session cap") {
     import graft.operators.Graphs.loopPartitions
@@ -206,16 +173,26 @@ class PlanScopeSpec extends SparkTestBase {
     assert(spark.conf.getAll === confBefore)
   }
 
-  test("rebindRows hands a clone-planned result back without the clone") {
-    val out = PlanScope.isolatedStatic(spark) { clone =>
-      val re = PlanScope.rebind(spark.range(50).toDF("x"), clone)
-        .groupBy((col("x") % 5).as("k")).agg(count(lit(1)).as("n"))
-      PlanScope.rebindRows(re, spark)
+  test("a result persisted in the scope leaves through rebind, read from its cache") {
+    def registered() = spark.sparkContext.getPersistentRDDs.size
+    val before = registered()
+    def agg(df: DataFrame) = df.groupBy((col("x") % 5).as("k")).agg(count(lit(1)).as("n"))
+    val oracle = sortedRows(agg(spark.range(50).toDF("x")))
+    // persisted and materialized INSIDE the static scope, then re-bound
+    // onto the caller: the way a loop result leaves Graphs
+    val (out, bindJobs) = PlanScope.isolatedStatic(spark) { clone =>
+      val inScope = agg(PlanScope.rebind(spark.range(50).toDF("x"), clone)).persist()
+      inScope.queryExecution.toRdd.count()
+      jobsDuring(PlanScope.rebind(inScope, spark))
     }
-    // materializes AFTER the scope ended, under the caller's session,
-    // replaying the clone-planned lineage
     assert(out.sparkSession eq spark)
-    assert(out.schema.fieldNames.toSeq === Seq("k", "n"))
-    assert(out.collect().map(_.getLong(1)).sum === 50L)
+    assert(bindJobs === 0, "rebind must not dispatch a job")
+    assert(readsCacheAdaptively(out.groupBy().count()),
+      "the caller-bound result must read InMemoryTableScan under the caller's AQE")
+    assert(sortedRows(out) === oracle)
+    assert(registered() === before + 1)
+    // the caller-bound frame names the scope's cache entry: one release
+    out.unpersist(blocking = true)
+    assert(registered() === before)
   }
 }

@@ -188,13 +188,15 @@ class PlanShapeSpec extends SparkTestBase {
     val r = graft.operators.Graphs.pageRank(edges, iters = 2)
     val p = plan(r)
     // rounds are persisted, counted, and re-rooted INSIDE the loop
-    // (Graphs.flatView), and the returned frame is the final persisted
-    // cut — the caller-releasable handle (unpersist() works; see the
-    // release contract). What a consumer PLANS over is the single cached
-    // scan: no join/exchange may appear above it. The iteration lineage
-    // printed UNDER InMemoryRelation is the recompute-on-block-loss
-    // fallback, not planner-visible work, so only the plan prefix above
-    // the relation is asserted scaffold-free.
+    // (Graphs.flatView); the result is persisted and materialized in the
+    // loop scope and re-bound onto the caller (PlanScope.rebind), so the
+    // returned frame names that cache entry — the caller-releasable
+    // handle (unpersist() works; see the release contract). What a
+    // consumer PLANS over is the single cached scan: no join/exchange may
+    // appear above it. The iteration lineage printed UNDER
+    // InMemoryRelation is the recompute-on-block-loss fallback, not
+    // planner-visible work, so only the plan prefix above the relation is
+    // asserted scaffold-free.
     assert(p.contains("ExistingRDD") || p.contains("InMemoryTableScan"),
       s"rank output is not a materialized scan:\n$p")
     val consumerVisible = p.indexOf("InMemoryRelation") match {

@@ -21,6 +21,49 @@ trait SparkTestBase extends AnyFunSuite {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** Jobs dispatched by `f` on this thread: a job-group listener plus a
+    * closing marker job, whose start event proves every earlier event of
+    * the group has been delivered (the listener bus is ordered). */
+  def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"test-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach { p =>
+            if (p.getProperty("graft.test.marker") != null) markerSeen.countDown()
+            else { jobs.incrementAndGet(); () }
+          }
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "test job count", false)
+    try {
+      val out = f
+      sc.setLocalProperty("graft.test.marker", "1")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus never delivered the marker job")
+      (out, jobs.get())
+    } finally {
+      sc.setLocalProperty("graft.test.marker", null)
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
+
+  /** `df` plans under the session's AQE and reads a cached frame: the
+    * physical plan is an `AdaptiveSparkPlan` over `InMemoryTableScan`. */
+  def readsCacheAdaptively(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.inputPlan.collectFirst {
+          case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
+        }.isDefined
+      case _ => false
+    }
 }
 
 object SparkTestBase {
