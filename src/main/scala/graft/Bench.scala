@@ -292,8 +292,8 @@ object Bench {
           when(col("id") >= 2, col("id") / 2).cast("long").as("parent"),
           lit(1L).as("value"))).count()
       // C2 ramp for the isolated-scope planning paths (session-clone
-      // analysis, view rebind, static planning): the scope machinery
-      // reaches steady state after a handful of invocations, not one —
+      // analysis, analyzed-plan rebind, static planning): the scope
+      // machinery reaches steady state after a handful of invocations, not one —
       // without this ramp the FIRST measured scoped family's median-of-3
       // runs ~1.5-2x its steady latency (measured: q54 1.4-1.7 s as a
       // 3-rep median vs 0.95 s from rep ~4 on). Three extra passes over

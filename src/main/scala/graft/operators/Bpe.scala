@@ -43,6 +43,10 @@ object Bpe {
     * oracle's chr(1) produces the identical byte). */
   private val Sep = "\u0001"
 
+  /** Widest entry spread of the corpus state; the width sweep in
+    * [[trainMerges]] measured it. */
+  private val SpreadCap = 4
+
   def trainMerges(spark: SparkSession, docs: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     // one known count-and-argmax plan per merge rule over the cached
@@ -61,15 +65,12 @@ object Bpe {
     // width. Width sweep (10-rep medians, t45 at the ~9 ms floor):
     // 1 -> 1.01 s, 2 -> 0.96, 4 -> 0.79/0.88, 8 -> 0.87, 32 -> 1.95 —
     // 4 sits where kernel_ms/width crosses the per-task cache-read
-    // floor. Estimate-gated like every spread site: no-op at scale,
+    // floor. Smallness is PlanScope's one spread gate: no-op at scale,
     // where the scan fans out with its file splits.
-    val conf = scoped.sessionState.conf
-    val small = scala.util.Try(docsS.queryExecution.optimizedPlan.stats.sizeInBytes)
-      .toOption.exists(_ < BigInt(4L) * conf.filesMaxPartitionBytes)
     val corpus0 = docsS
       .select(array_join(graft.functions.TextFunctions.tokens(col("text")), "  ").as("s"))
-    var corpus = (if (small) corpus0.repartition(math.min(4, conf.numShufflePartitions))
-      else corpus0)
+    var corpus = graft.ops.PlanScope.spreadWidth(docsS)
+      .fold(corpus0)(w => corpus0.repartition(math.min(SpreadCap, w)))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // cache discipline: at most TWO generations pinned at once — the one
     // being counted and its parent (released as soon as this round's

@@ -160,7 +160,6 @@ object Dedup {
   private def bandFrame(docs: DataFrame, shingleN: Int,
       numHashes: Int, rowsPerBand: Int): DataFrame = {
     require(numHashes % rowsPerBand == 0, "numHashes must be divisible by rowsPerBand")
-    val numBands = numHashes / rowsPerBand
     // ONE kernel call per row (MinhashBandsExpr): signature minima AND
     // per-band md5s — same values as the former exploded
     // groupBy(doc_id) min-agg + bandStructs (BandRuleSpec pins the
@@ -173,26 +172,11 @@ object Dedup {
     // Parallelism note: at scale the kernel fans out with the file
     // splits; a SMALL corpus arriving as one split would serialize the
     // hashing in one task, so only then is the input round-robined
-    // first (the Similarity.spread rationale — never an unconditional
-    // exchange of the full text at 100 TB). The smallness test reads the
-    // optimizer's SIZE ESTIMATE, never `.rdd`: materializing the RDD of
-    // an ADAPTIVE plan executes every upstream stage just to read a
-    // partition count, silently running an unscoped caller's subtree
-    // twice (AQE is on by default outside PlanScope).
-    // The threshold is a FEW file splits, not shufflePartitions × split
-    // (≈25 GB at defaults): only an input small enough to arrive in ~4
-    // splits is genuinely under-split for a 32-core kernel stage; a
-    // mid-size corpus already fans out with its file splits and must not
-    // pay a full-text exchange just to round-robin. Unknown-stats plans
-    // (huge default estimate) skip the spread — acceptable: they are
-    // mid-pipeline frames whose upstream shuffle already spread them.
-    val conf = docs.sparkSession.sessionState.conf
-    val estBytes = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-    val src =
-      if (estBytes < BigInt(4L) * conf.filesMaxPartitionBytes)
-        docs.repartition(conf.numShufflePartitions)
-      else docs
-    src
+    // first (PlanScope.spreadIfSmall — never an unconditional exchange
+    // of the full text at 100 TB). Unknown-stats plans (huge default
+    // estimate) skip the spread — acceptable: they are mid-pipeline
+    // frames whose upstream shuffle already spread them.
+    graft.ops.PlanScope.spreadIfSmall(docs)
       .select(col("doc_id"), posexplode(
           TextExpressions.minhashBands(col("text"), shingleN, numHashes, rowsPerBand))
         .as(Seq("band", "bh")))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.expressions.{TopKByScore, VectorExpressions}
+import graft.ops.PlanScope.spreadIfSmall
 
 /** Similarity search over an embedding column (`array<float>`):
   * brute-force cosine top-k as the exactness baseline, and an IVF
@@ -64,14 +65,6 @@ object Similarity {
       round(dot(a, b) / (na * nb) * 1e6).cast("long"))
   }
 
-  /** Spread a pair-generating (non-equi/cross) join's stream side across
-    * the session's shuffle parallelism. A small parquet corpus arrives as
-    * one input split, and a nested-loop join inherits the stream side's
-    * partitioning — without this, every pair is scored by a single task no
-    * matter how many cores exist. Round-robin keeps partitions balanced. */
-  private def spread(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions)
-
   /** Two-phase top-k over scored candidates: bounded per-partition heaps,
     * merged map-side, then one exchange of ≤k rows per query. Ordering
     * (cos_e6 desc, neighbor_id asc) matches the former window-rank form;
@@ -97,7 +90,7 @@ object Similarity {
     val queries = graft.ops.PlanScope.rebind(queries0, scoped)
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"),
       norm(col("embedding")).as("qn"))
-    val c = spread(emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("nv"),
+    val c = spreadIfSmall(emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("nv"),
       norm(col("embedding")).as("nn")))
     val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .withColumn("cos_e6", cosE6From(col("qv"), col("nv"), col("qn"), col("nn")))
@@ -128,7 +121,7 @@ object Similarity {
     val queries = graft.ops.PlanScope.rebind(queries0, scoped)
     val q = queries.select(col("vec_id").as("query_id"), col("label").as("q_label"),
       col("embedding").as("qv"), norm(col("embedding")).as("qn"))
-    val c = spread(emb.select(col("vec_id").as("neighbor_id"), col("label").as("n_label"),
+    val c = spreadIfSmall(emb.select(col("vec_id").as("neighbor_id"), col("label").as("n_label"),
       col("embedding").as("nv"), norm(col("embedding")).as("nn")))
     val scored = c.join(broadcast(q),
         col("query_id") =!= col("neighbor_id") && col("q_label") =!= col("n_label"))
@@ -239,14 +232,14 @@ object Similarity {
     * coarse-rank inversions beyond `coarseK` (default 4k); `coarseK` =
     * corpus size degenerates to exact brute force (spec-asserted). */
   def quantizedKnn(emb0: DataFrame, queries0: DataFrame, k: Int,
-      coarseK: Int = 0, scalesIn: Option[Array[Double]] = None): DataFrame = {
+      coarseK: Int = 0): DataFrame = {
     val ck = if (coarseK > 0) coarseK else 4 * k
     require(ck >= k, s"coarseK ($ck) must be >= k ($k)")
     // fit + coarse scan + rescore on one conf-isolated static scope (see ivfKnn)
     graft.ops.PlanScope.isolatedStaticFor(emb0) { scoped =>
     val emb = graft.ops.PlanScope.rebind(emb0, scoped)
     val queries = graft.ops.PlanScope.rebind(queries0, scoped)
-    scalesIn.orElse(quantizationScalesOpt(emb)) match {
+    quantizationScalesOpt(emb) match {
       case None => // empty corpus: no scales to fit, no neighbors
         topKNeighbors(emb.limit(0).select(col("vec_id").as("query_id"),
           lit(0L).as("cos_e6"), col("vec_id").as("neighbor_id")), k)
@@ -259,7 +252,7 @@ object Similarity {
     // per call instead of two, same rows, same cosine
     val q = queries.select(col("vec_id").as("query_id"), qz.as("q8"),
       col("embedding").as("qv"), norm(col("embedding")).as("qn"))
-    val c = spread(emb.select(col("vec_id").as("neighbor_id"), qz.as("n8")))
+    val c = spreadIfSmall(emb.select(col("vec_id").as("neighbor_id"), qz.as("n8")))
     val coarse = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .withColumn("qd", VectorExpressions.dotI8(col("q8"), col("n8")))
     val cand = coarse.groupBy(col("query_id"))
@@ -469,7 +462,7 @@ object Similarity {
       topKNeighbors(emb.limit(0).select(col("vec_id").as("query_id"),
         lit(0L).as("cos_e6"), col("vec_id").as("neighbor_id")), k)
     else {
-    val codes = spread(encodePq(emb, model))
+    val codes = spreadIfSmall(encodePq(emb, model))
     val tabCols = (0 until model.nSub).map { j =>
       VectorExpressions.pqAdcTable(col("embedding"),
         model.books(j).map(_._2), off = j * sd).as(s"t$j")
@@ -532,7 +525,7 @@ object Similarity {
       val index = buildIvfPq(emb, nCells, dims, nSub, nCodes, iters, sampleMod)
       // spread: the in-call codes frame derives from one parquet split —
       // the served path's bucketed table scan must NOT be re-spread
-      ivfPqProbe(spread(index.codes), emb, index.cent, index.model,
+      ivfPqProbe(spreadIfSmall(index.codes), emb, index.cent, index.model,
         queries, k, nprobe, ck)
     }
   }
@@ -1405,7 +1398,7 @@ object Similarity {
     val bSide = cells
       .select(col("vec_id").as("id_b"), col("embedding").as("vb"), col("nrm").as("nb"),
         col("c0").as("b0"), col("c1").as("b1"))
-    spread(aSide).join(bSide,
+    spreadIfSmall(aSide).join(bSide,
         col("p0") === col("b0") && col("p1") === col("b1") && col("id_a") < col("id_b"))
       .withColumn("cos_e6", cosE6From(col("va"), col("vb"), col("na"), col("nb")))
       .filter(col("cos_e6") >= minCosE6)
@@ -1488,7 +1481,7 @@ object Similarity {
       .withColumn("c0", cellCol(0)).withColumn("c1", cellCol(1))
       .select(col("vec_id").as("train_id"), col("embedding").as("vt"), col("nrm").as("nt"),
         col("c0").as("b0"), col("c1").as("b1"))
-    spread(trainSide).join(broadcast(evalSide),
+    spreadIfSmall(trainSide).join(broadcast(evalSide),
         col("p0") === col("b0") && col("p1") === col("b1"))
       .withColumn("cos_e6", cosE6From(col("vt"), col("ve"), col("nt"), col("ne")))
       .filter(col("cos_e6") >= minCosE6)

@@ -109,9 +109,7 @@ object PlanScope {
   def sizedPartitions(df: DataFrame, bytesPerPartition: Long = 64L << 20): Int = {
     val sessionSp = scala.util.Try(
       df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt).getOrElse(200)
-    val est = scala.util.Try(
-      df.queryExecution.optimizedPlan.stats.sizeInBytes).toOption
-    est match {
+    sizeEstimate(df) match {
       case Some(bytes) if bytes >= 0 && bytes < BigInt(Long.MaxValue) =>
         val raw = ((bytes + bytesPerPartition - 1) / bytesPerPartition).max(1)
         val pow2 = if (raw < (1 << 30)) Integer.highestOneBit(raw.toInt * 2 - 1)
@@ -121,22 +119,34 @@ object PlanScope {
     }
   }
 
+  /** `df`'s optimizer size estimate: the plan statistic, read without a
+    * job. None when the plan cannot be optimized. */
+  private def sizeEstimate(df: DataFrame): Option[BigInt] =
+    scala.util.Try(df.queryExecution.optimizedPlan.stats.sizeInBytes).toOption
+
   /** Spread a provably SMALL input across the session's cores before a
     * kernel-heavy chain. The driver's tables are single-row-group parquet
     * files, so a scan is ONE task no matter the split config — every
     * narrow kernel stage over it (minhash banding, shingling, quality
-    * scoring, heavy partial aggregation) serializes on one core while 31
-    * idle. One deterministic hash exchange on the row key spreads it; a
-    * big or unknown-size input returns untouched — this must never become
-    * an unconditional full-text exchange at 100 TB, where the scan
-    * already fans out with its file splits. The smallness test is the
-    * optimizer SIZE ESTIMATE (the Dedup.bandFrame rule: under ~4 file
-    * splits is genuinely under-split for a 32-core kernel stage), never
+    * scoring, heavy partial aggregation, a pair-generating join that
+    * inherits its stream side's partitioning) serializes on one core
+    * while the rest idle.
+    *
+    * This is the one place that decides whether to spread, with one
+    * gate ([[spreadWidth]]): spread to the session's shuffle width `w`
+    * only when the optimizer SIZE ESTIMATE is under 4 file splits AND
+    * `w > 1`. Anything bigger already fans out with its file splits and
+    * must never pay an unconditional full-text exchange (at 100 TB the
+    * frame returns untouched); an unknown estimate skips the spread; and
+    * a 1-wide spread (a static scope sized to one partition) would be an
+    * extra stage with no parallelism. The estimate is read, never
     * `.rdd` — materializing an adaptive plan's RDD executes upstream
-    * stages just to read a partition count. Hash-partitioning on the
-    * unique row key (not round-robin): deterministic row placement under
-    * task retry (SPARK-38388), no round-robin pre-shuffle local sort,
-    * and downstream equi-joins on the same key can REUSE the exchange.
+    * stages just to read a partition count.
+    *
+    * This overload hash-partitions on the unique row key (not
+    * round-robin): deterministic row placement under task retry
+    * (SPARK-38388), no round-robin pre-shuffle local sort, and
+    * downstream equi-joins on the same key can REUSE the exchange.
     * Callers must not route the spread claim into both branches of a
     * union that later co-partition-joins (reproduced SMJ zip failure in
     * the curation domain stage — the spread there sits after the union). */
@@ -151,27 +161,26 @@ object PlanScope {
     * (the r16 q28 case: a (group, value) histogram whose partial agg
     * barely reduces ran on the scan's 3 row-group tasks; spread first,
     * the whole aggregate runs at session width and the plan's exchange
-    * count is unchanged). Same estimate gate and determinism rationale
-    * as the single-key overload; no-op at scale. */
+    * count is unchanged). Same gate and determinism rationale as the
+    * single-key overload. */
   def spreadIfSmall(df: DataFrame, keyCols: Seq[org.apache.spark.sql.Column]): DataFrame =
     spreadWidth(df).fold(df)(df.repartition(_, keyCols: _*))
 
   /** [[spreadIfSmall]] for frames WITHOUT a usable row key (a bare text
-    * projection): round-robin instead of hash-by-key. The pre-shuffle
-    * local sort (SPARK-23207, on by default) keeps row placement
-    * deterministic under task retry; the sort itself is bounded because
-    * the spread only fires on provably small inputs. */
+    * projection, a nested-loop join's stream side): round-robin instead
+    * of hash-by-key. The pre-shuffle local sort (SPARK-23207, on by
+    * default) keeps row placement deterministic under task retry; the
+    * sort itself is bounded because the spread only fires on provably
+    * small inputs. */
   def spreadIfSmall(df: DataFrame): DataFrame =
     spreadWidth(df).fold(df)(df.repartition(_))
 
-  /** The gate all three [[spreadIfSmall]] overloads share: the session's
-    * shuffle width when `df`'s optimizer size estimate is under 4 file
-    * splits, None when it is bigger or unknown. */
-  private def spreadWidth(df: DataFrame): Option[Int] = {
+  /** The gate of [[spreadIfSmall]]: the width to spread `df` to, None
+    * when it must not be spread. `Bpe.trainMerges` caps the width. */
+  private[graft] def spreadWidth(df: DataFrame): Option[Int] = {
     val conf = df.sparkSession.sessionState.conf
-    scala.util.Try(df.queryExecution.optimizedPlan.stats.sizeInBytes).toOption
-      .filter(_ < BigInt(4L) * conf.filesMaxPartitionBytes)
-      .map(_ => conf.numShufflePartitions)
+    Some(conf.numShufflePartitions).filter(w => w > 1 &&
+      sizeEstimate(df).exists(_ < BigInt(4L) * conf.filesMaxPartitionBytes))
   }
 
   /** The static scope most operators want: AQE off AND shuffle

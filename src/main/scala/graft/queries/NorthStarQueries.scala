@@ -127,15 +127,6 @@ object NorthStarQueries {
   private def cosE6Sql(a: String, b: String): String =
     s"CAST(ROUND(1e6 * ${cosSql(a, b)}) AS BIGINT)"
 
-  /** See [[Serving.ensureServedTable]] — moved there so the graph family
-    * serves its link-graph artifacts through the same machinery. */
-  private def ensureServedTable(s: SparkSession, table: String,
-      sideTables: Seq[String])(build: => Unit): Unit =
-    Serving.ensureServedTable(s, table, sideTables)(build)
-
-  private def servedTableName(prefix: String, d: String): String =
-    Serving.servedTableName(prefix, d)
-
   /** s07's ad-hoc query workload — ONE definition feeding both the Spark
     * query and the oracle's VALUES list, so the two sides cannot drift. */
   private val Bm25Queries: Seq[(Long, String)] = Seq(
@@ -798,7 +789,7 @@ object NorthStarQueries {
       // The SERVING shape of c03: the same small batch is admitted
       // against a PERSISTED release — digest + band tables and the
       // frozen quality fit (CurationPipeline.releaseArtifacts' frames
-      // saved once per session via ensureServedTable) — instead of
+      // saved once per session via Serving.ensureServedTable) — instead of
       // re-deriving the artifacts from the big corpus per call. Bench
       // reps 2+ measure the pure per-batch admission cost a
       // steady-state ingestion loop pays (the corpus is touched only
@@ -813,8 +804,8 @@ object NorthStarQueries {
         .select((col("doc_id") + 10000000L).as("doc_id"), col("text"), col("source"))
       val evalDocs = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
         .select((col("doc_id") + 2000000L).as("doc_id"), col("text"))
-      val t = servedTableName("graft_crel_c04_", d)
-      ensureServedTable(s, t, Seq(s"${t}_bands", s"${t}_fit")) {
+      val t = Serving.servedTableName("graft_crel_c04_", d)
+      Serving.ensureServedTable(s, t, Seq(s"${t}_bands", s"${t}_fit")) {
         Dedup.corpusDigests(corpus).write.saveAsTable(t)
         Dedup.corpusBands(corpus).write.saveAsTable(s"${t}_bands")
         locally {

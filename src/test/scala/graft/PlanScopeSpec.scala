@@ -2,9 +2,13 @@ package graft
 
 import graft.ops.PlanScope
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning,
+  RoundRobinPartitioning}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 
 /** The plan scope is what makes wrapping operators in conf overrides safe
@@ -91,6 +95,65 @@ class PlanScopeSpec extends SparkTestBase {
     // clone pool stays bounded as data grows
     val mid = PlanScope.sizedPartitions(big, bytesPerPartition = 40000)
     assert(mid >= 1 && mid <= sessionSp && Integer.bitCount(mid) === 1)
+  }
+
+  /** The output partitionings of the spread exchanges (`repartition(n…)`)
+    * `df` plans, read from its physical plan without running it. */
+  private def spreads(df: DataFrame): Seq[Partitioning] = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    plan.collect {
+      case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM => e.outputPartitioning
+    }
+  }
+
+  private def hashedOn(names: String*): Partitioning => Boolean = {
+    case HashPartitioning(es, 4) => es.collect { case a: Attribute => a.name } == names
+    case _ => false
+  }
+
+  test("spreadIfSmall: one gate for all three overloads") {
+    def frame(rows: Long) = spark.range(rows).toDF("x").withColumn("y", col("x") % 3)
+    val tiny = frame(100)
+    val huge = frame(1L << 40)
+    assert(huge.queryExecution.optimizedPlan.stats.sizeInBytes > (BigInt(1) << 40))
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
+    val overloads: Seq[(String, DataFrame => DataFrame, Partitioning => Boolean)] = Seq(
+      ("key", PlanScope.spreadIfSmall(_, "x"), hashedOn("x")),
+      ("keys", PlanScope.spreadIfSmall(_, Seq(col("x"), col("y"))), hashedOn("x", "y")),
+      ("keyless", PlanScope.spreadIfSmall(_), {
+        case RoundRobinPartitioning(4) => true
+        case _ => false
+      }))
+    overloads.foreach { case (name, spread, expected) =>
+      val got = spreads(spread(tiny))
+      assert(got.size === 1 && expected(got.head), s"$name: $got")
+      assert(spread(huge) eq huge, s"$name: a terabyte estimate must not be spread")
+      PlanScope.isolated(spark, "spark.sql.shuffle.partitions" -> "1") { scoped =>
+        val in = PlanScope.rebind(tiny, scoped)
+        assert(spread(in) eq in, s"$name: a 1-wide spread is an idle stage")
+      }
+    }
+  }
+
+  test("brute-force kNN and hard negatives plan no repartition exchange") {
+    val sfEmb = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    // a terabyte size estimate: a spread of it would shuffle the corpus
+    val hugeEmb = spark.range(1L << 40).select(col("id").as("vec_id"),
+      (col("id") % 2).as("label"), array(lit(1f), lit(0f)).as("embedding"))
+    Seq("sf fixture" -> sfEmb, "terabyte estimate" -> hugeEmb).foreach {
+      case (name, emb) =>
+        val queries = emb.filter(col("vec_id") < 3)
+        val knn = graft.operators.Similarity.bruteForceKnn(emb, queries, k = 2)
+        val neg = graft.operators.Similarity.hardNegatives(emb, queries, k = 2,
+          loE6 = -1000000L, hiE6 = 1000000L)
+        // the static scope sizes the sf fixture to one partition (a
+        // 1-wide spread); the terabyte frame is too big to spread
+        assert(spreads(knn).isEmpty, s"bruteForceKnn over the $name")
+        assert(spreads(neg).isEmpty, s"hardNegatives over the $name")
+    }
   }
 
   private def readsCacheStatically(plan: SparkPlan): Boolean =
