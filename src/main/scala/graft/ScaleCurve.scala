@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling-curve probe (not part of the driver contract): measures the
@@ -21,8 +21,11 @@ import org.apache.spark.sql.functions._
   * inputs are materialized to parquet first so generation cost and
   * single-split input skew are excluded from the timings.
   *
-  * Usage: ScaleCurve [sfDir] — prints one JSON line per (op, factor) and
-  * a fitted-exponent summary table.
+  * Usage: ScaleCurve [sfDir] — times each op through the [[Bench]] core
+  * (`SPARK_GRAFT_CPUS`, `SPARK_GRAFT_BENCH_REPS`; `SPARK_GRAFT_BENCH_ONLY=a,b`
+  * re-measures a subset against the already-materialized blowups), prints
+  * one JSON line per (op, factor) and a fitted-exponent summary table. A
+  * failing (op, factor) is reported on stderr and left out of the curve.
   */
 object ScaleCurve {
   /** THE co-purchase pair rule, in one place: distinct (order, part)
@@ -46,15 +49,7 @@ object ScaleCurve {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-curve")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session("graft-scale-curve")
     val factors = Seq(1, 3, 10, 30)
     // the 30x decade exists for the SELF-JOIN candidate generators (the
     // queries whose marginal exponent was the open scale risk) — the rest
@@ -133,7 +128,7 @@ object ScaleCurve {
     def materialize(name: String, f: Int, df: DataFrame): DataFrame = {
       val path = s"${base.getAbsolutePath}/${name}_x$f"
       if (!new java.io.File(path, "_SUCCESS").exists())
-        df.repartition(cpus.toInt).write.mode("overwrite").parquet(path)
+        df.repartition(Bench.cpus).write.mode("overwrite").parquet(path)
       spark.read.parquet(path)
     }
 
@@ -367,67 +362,58 @@ object ScaleCurve {
         graft.operators.Graphs.bfsHops(edges, seeds, maxRounds = 3)
       }))
 
+    val opNames = ops(null, null, null, null, null, null, 1).map(_._1)
+    val only = Bench.only(opNames)
+    val timer = new Bench.Timer(spark, Bench.reps, census = only.isDefined)
+    val results = scala.collection.mutable.Map[(String, Int), Double]()
     // per-op driver-job count (per-rep average): the c-tier decade pins
     // BOTH normalized seconds and dispatch count per factor — a flat jobs
     // row is the evidence that admission cost doesn't grow dispatches
     // with corpus size
-    val jobCounter = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobCounter.incrementAndGet(); ()
-      }
-    })
-    val results = scala.collection.mutable.Map[(String, Int), Double]()
     val jobsAt = scala.collection.mutable.Map[(String, Int), Long]()
     factors.foreach { f =>
       val deepOnly = f > 10
-      // the 30x decade touches only the deep ops' tables — the emb blowup
-      // would dominate the probe's own runtime for nothing. Docs now ride
-      // to 30x too: d21_source_dup (a deep op since r15) consumes them
-      val docs = materialize("documents", f, blowDocs(f))
-      val emb = if (deepOnly) null else materialize("embeddings", f, blowEmb(f))
-      val cust = materialize("customer", f, blowCust(f))
-      val custSkew = materialize("customer_skew", f, blowCustSkew(f))
-      val li = materialize("lineitem", f, blowLineitem(f))
-      // fixed query set (shard-0 vectors): corpus side scales, probe
-      // side constant — the serving shape whose scaling matters
-      val queries = if (deepOnly) null else emb.filter(col("vec_id") < 100)
-      // SPARK_GRAFT_SCALE_ONLY=a,b re-measures a subset against the
-      // already-materialized blowups (iterating on one op's curve)
-      val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
-        .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-      ops(docs, emb, cust, queries, li, custSkew, f)
-        .filter { case (name, _) => !deepOnly || deepOps(name) }
-        .filter { case (name, _) => only.forall(_(name)) }
-        .foreach { case (name, thunk) =>
-        val jobs0 = jobCounter.get()
-        val times = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          thunk().write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }.sorted
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        val med = times(1)
-        val jobs = (jobCounter.get() - jobs0) / 3
-        results((name, f)) = med
-        jobsAt((name, f)) = jobs
-        println(f"""{"op":"$name","factor":$f,"median_sec":$med%.3f,"jobs":$jobs}""")
+      val measured = opNames.filter(n => (!deepOnly || deepOps(n)) && only.forall(_(n))).toSet
+      // a factor none of the selected ops runs at builds no blowup
+      if (measured.nonEmpty) try {
+        // the 30x decade touches only the deep ops' tables — the emb blowup
+        // would dominate the probe's own runtime for nothing. Docs now ride
+        // to 30x too: d21_source_dup (a deep op since r15) consumes them
+        val docs = materialize("documents", f, blowDocs(f))
+        val emb = if (deepOnly) null else materialize("embeddings", f, blowEmb(f))
+        val cust = materialize("customer", f, blowCust(f))
+        val custSkew = materialize("customer_skew", f, blowCustSkew(f))
+        val li = materialize("lineitem", f, blowLineitem(f))
+        // fixed query set (shard-0 vectors): corpus side scales, probe
+        // side constant — the serving shape whose scaling matters
+        val queries = if (deepOnly) null else emb.filter(col("vec_id") < 100)
+        ops(docs, emb, cust, queries, li, custSkew, f)
+          .filter { case (name, _) => measured(name) }
+          .foreach { case (name, thunk) =>
+            val t = timer.measure(name, thunk, s"x$f")
+            if (t.failed > 0) System.err.println(
+              s"[scale] $name x$f: ${t.failed} rep(s) failed, left out of the curve")
+            else {
+              results((name, f)) = t.median
+              jobsAt((name, f)) = t.jobs
+              println(f"""{"op":"$name","factor":$f,"median_sec":${t.median}%.3f,"jobs":${t.jobs}}""")
+            }
+          }
+      } catch { case e: Throwable =>
+        System.err.println(s"[scale] x$f blowup failed, factor skipped: ${e.getMessage}")
       }
     }
     println("op, t1, t3, t10, t30, alpha_10 (ln(t10/t1)/ln10), " +
       "alpha_m10 (marginal ln(t10/t3)/ln(10/3)), alpha_m30 (marginal ln(t30/t10)/ln3)")
-    ops(null, null, null, null, null, null, 1).map(_._1)
-      .filter(name => results.contains((name, 1))).foreach { name =>
-      val t1 = results((name, 1)); val t3 = results((name, 3)); val t10 = results((name, 10))
-      val a10 = math.log(t10 / t1) / math.log(10.0)
-      val am10 = math.log(t10 / t3) / math.log(10.0 / 3.0)
-      val (t30s, am30s) = results.get((name, 30)).fold(("      -", "    -")) { t30 =>
-        (f"$t30%7.2f", f"${math.log(t30 / t10) / math.log(3.0)}%5.2f")
-      }
-      val jobsRow = Seq(1, 3, 10, 30).flatMap(f => jobsAt.get((name, f)))
-        .mkString("/")
-      println(f"$name%-20s $t1%7.2f $t3%7.2f $t10%7.2f $t30s   $a10%5.2f   $am10%5.2f   $am30s   jobs=$jobsRow")
+    opNames.filter(name => factors.exists(f => results.contains((name, f)))).foreach { name =>
+      val t = factors.map(f => f -> results.get((name, f))).toMap
+      def sec(f: Int) = t(f).fold("      -")(v => f"$v%7.2f")
+      // the cost exponent between two factors, `-` when either is missing
+      def alpha(lo: Int, hi: Int) = (for (a <- t(lo); b <- t(hi))
+        yield f"${math.log(b / a) / math.log(hi.toDouble / lo)}%5.2f").getOrElse("    -")
+      val jobsRow = factors.flatMap(f => jobsAt.get((name, f))).mkString("/")
+      println(f"$name%-20s ${sec(1)} ${sec(3)} ${sec(10)} ${sec(30)}   " +
+        f"${alpha(1, 10)}   ${alpha(3, 10)}   ${alpha(10, 30)}   jobs=$jobsRow")
     }
     spark.stop()
   }

@@ -22,36 +22,11 @@ trait SparkTestBase extends AnyFunSuite {
     }
   }
 
-  /** Jobs dispatched by `f` on this thread: a job-group listener plus a
-    * closing marker job, whose start event proves every earlier event of
-    * the group has been delivered (the listener bus is ordered). */
+  /** Jobs dispatched by `f` on this thread, counted by the timing
+    * harness's job-group mechanism ([[Bench.jobsDuring]]). */
   def jobsDuring[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"test-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(j.properties).filter(_.getProperty("spark.jobGroup.id") == group)
-          .foreach { p =>
-            if (p.getProperty("graft.test.marker") != null) markerSeen.countDown()
-            else { jobs.incrementAndGet(); () }
-          }
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "test job count", false)
-    try {
-      val out = f
-      sc.setLocalProperty("graft.test.marker", "1")
-      sc.parallelize(Seq(1), 1).count()
-      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS),
-        "listener bus never delivered the marker job")
-      (out, jobs.get())
-    } finally {
-      sc.setLocalProperty("graft.test.marker", null)
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
+    val (out, census) = Bench.jobsDuring(spark.sparkContext)(f)
+    (out, census.jobs.size)
   }
 
   /** `df` plans under the session's AQE and reads a cached frame: the
