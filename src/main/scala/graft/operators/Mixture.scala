@@ -242,26 +242,12 @@ object Mixture {
     val boundary: Option[(Long, Long)] =
       if (fetched.length <= fetchCap) {
         // in-contract path (bounded score domain): one fetch, driver walk
-        val totals = fetched
-          .map { r => (r.getLong(0), r.getLong(1), r.getLong(2)) }
-          // reverse ordering, not negation: -Long.MinValue overflows to
-          // itself and would walk the WORST class first
-          .sortBy(_._1)(Ordering[Long].reverse)
-        val budget = budgetOf(totals.map(_._2).sum)
+        val totals = fetched.map { r => (r.getLong(0), r.getLong(1), r.getLong(2)) }
         totals.foreach { case (s, _, cmin) =>
           require(cmin >= 0, s"budgetSelect: negative $costCol in score class $s")
         }
-        // walk classes best-first: find the first class whose inclusive
-        // cumulative total overflows the budget (= the boundary class)
-        var cum = 0L
-        var b: Option[(Long, Long)] = None
-        totals.foreach { case (s, c, _) =>
-          if (b.isEmpty) {
-            if (cum + c > budget) b = Some((s, budget - cum))
-            else cum += c
-          }
-        }
-        b
+        boundaryClass(totals.toSeq.map { case (s, c, _) => (s, c) },
+          budgetOf(totals.map(_._2).sum))
       } else
         // continuous / unbounded score domain: AUTO-LOCALIZE instead of
         // rejecting (the former 2^20-class cliff) — recursive range
@@ -281,6 +267,21 @@ object Mixture {
           .drop("__cum")
         whole.unionByName(partial)
     }
+  }
+
+  /** The budget walk over `(score, cost)` classes: best class first, the
+    * first class whose cost overflows what is left of `budget` is the
+    * boundary class, returned with the budget left at its start (None =
+    * everything fits). */
+  private def boundaryClass(classes: Seq[(Long, Long)], budget: Long): Option[(Long, Long)] = {
+    // reverse ordering, not negation: -Long.MinValue overflows to itself
+    // and would walk the WORST class first
+    var remaining = budget
+    classes.sortBy(_._1)(Ordering[Long].reverse).find { case (_, c) =>
+      val overflows = c > remaining
+      if (!overflows) remaining -= c
+      overflows
+    }.map { case (s, _) => (s, remaining) }
   }
 
   /** Boundary-class search for score domains wider than the driver fetch
@@ -323,18 +324,8 @@ object Mixture {
       while (result.isEmpty) {
         if (liveClasses <= fetchCap) {
           // base: exact per-class walk over the localized sliver
-          val cls = t.filter(col("__s") >= lo && col("__s") <= hi)
-            .collect()
-            .map(r => (r.getLong(0), r.getLong(1)))
-            .sortBy(_._1)(Ordering[Long].reverse) // not -s: Long.MinValue
-          var b: Option[(Long, Long)] = None
-          cls.foreach { case (s, c) =>
-            if (b.isEmpty) {
-              if (c > remaining) b = Some((s, remaining))
-              else remaining -= c
-            }
-          }
-          result = Some(b)
+          result = Some(boundaryClass(t.filter(col("__s") >= lo && col("__s") <= hi)
+            .collect().toSeq.map(r => (r.getLong(0), r.getLong(1))), remaining))
         } else {
           val w = math.max(1L, (hi - lo) / LocalizeBuckets + 1)
           val bks = t.filter(col("__s") >= lo && col("__s") <= hi)

@@ -58,12 +58,7 @@ object Similarity {
 
   /** cosine scaled to exact micro-units for hash-stable output; NULL on
     * a zero-norm side (see [[cosE6From]]). */
-  def cosineE6(a: Column, b: Column): Column = {
-    val na = norm(a)
-    val nb = norm(b)
-    when(na > lit(0.0) && nb > lit(0.0),
-      round(dot(a, b) / (na * nb) * 1e6).cast("long"))
-  }
+  def cosineE6(a: Column, b: Column): Column = cosE6From(a, b, norm(a), norm(b))
 
   /** Two-phase top-k over scored candidates: bounded per-partition heaps,
     * merged map-side, then one exchange of ≤k rows per query. Ordering
@@ -78,6 +73,44 @@ object Similarity {
         (col("pos") + 1).cast("int").as("rank"),
         col("nb.id").as("neighbor_id"),
         col("nb.score").cast("long").as("cos_e6"))
+
+  /** The empty [[topKNeighbors]] result over `emb`'s schema: what a
+    * two-stage kNN returns when its fit found no vectors (the
+    * EmptyInputSpec contract). */
+  private def noNeighbors(emb: DataFrame, k: Int): DataFrame =
+    topKNeighbors(emb.limit(0).select(col("vec_id").as("query_id"),
+      lit(0L).as("cos_e6"), col("vec_id").as("neighbor_id")), k)
+
+  /** The coarse candidate count of a two-stage kNN: `coarseK`, or 4k
+    * when unset. */
+  private def coarseWidth(coarseK: Int, k: Int): Int = {
+    val ck = if (coarseK > 0) coarseK else 4 * k
+    require(ck >= k, s"coarseK ($ck) must be >= k ($k)")
+    ck
+  }
+
+  /** The exact-rescore tail of the two-stage kNNs ([[quantizedKnn]],
+    * [[pqKnn]], [[ivfPqKnn]]): a bounded heap keeps each query's `ck`
+    * best `coarse` candidates (`idCol`) by the approximate `scoreCol`,
+    * then only those candidates join back to `vectors` for the exact
+    * cosine top-k. The query vector and norm (`qv`, `qn`) ride the
+    * coarse frame and come back out of the heap aggregate via first()
+    * (identical across the group), so the rescore needs no second
+    * query-side join: one broadcast build per call, same rows, same
+    * cosine. */
+  private def rescoreTopK(coarse: DataFrame, scoreCol: String, idCol: String,
+      vectors: DataFrame, k: Int, ck: Int): DataFrame = {
+    val cand = coarse.groupBy(col("query_id"))
+      .agg(TopKByScore.topK(col(scoreCol).cast("double"), col(idCol), ck).as("top"),
+        first(col("qv")).as("qv"), first(col("qn")).as("qn"))
+      .select(col("query_id"), col("qv"), col("qn"), explode(col("top")).as("nb"))
+      .select(col("query_id"), col("qv"), col("qn"), col("nb.id").as("neighbor_id"))
+    val scored = broadcast(cand)
+      .join(vectors.select(col("vec_id").as("neighbor_id"),
+        col("embedding").as("nv"), norm(col("embedding")).as("nn")), "neighbor_id")
+      .withColumn("cos_e6", cosE6From(col("qv"), col("nv"), col("qn"), col("nn")))
+    topKNeighbors(scored, k)
+  }
 
   /** Brute-force cosine top-k: each query vector (small set, broadcast)
     * ranked against all others by (cosine desc, vec_id asc). */
@@ -233,38 +266,21 @@ object Similarity {
     * corpus size degenerates to exact brute force (spec-asserted). */
   def quantizedKnn(emb0: DataFrame, queries0: DataFrame, k: Int,
       coarseK: Int = 0): DataFrame = {
-    val ck = if (coarseK > 0) coarseK else 4 * k
-    require(ck >= k, s"coarseK ($ck) must be >= k ($k)")
+    val ck = coarseWidth(coarseK, k)
     // fit + coarse scan + rescore on one conf-isolated static scope (see ivfKnn)
     graft.ops.PlanScope.isolatedStaticFor(emb0) { scoped =>
     val emb = graft.ops.PlanScope.rebind(emb0, scoped)
     val queries = graft.ops.PlanScope.rebind(queries0, scoped)
     quantizationScalesOpt(emb) match {
-      case None => // empty corpus: no scales to fit, no neighbors
-        topKNeighbors(emb.limit(0).select(col("vec_id").as("query_id"),
-          lit(0L).as("cos_e6"), col("vec_id").as("neighbor_id")), k)
+      case None => noNeighbors(emb, k) // empty corpus: no scales to fit
       case Some(scales) =>
     def qz = VectorExpressions.quantizeI8(col("embedding"), scales)
-    // the query frame carries its float vector + norm alongside the
-    // quantized probe, and first() re-emits them from the top-k aggregate
-    // (identical across the group — they ride in keyed by query_id), so
-    // the rescore needs NO second query-side join: one broadcast build
-    // per call instead of two, same rows, same cosine
     val q = queries.select(col("vec_id").as("query_id"), qz.as("q8"),
       col("embedding").as("qv"), norm(col("embedding")).as("qn"))
     val c = spreadIfSmall(emb.select(col("vec_id").as("neighbor_id"), qz.as("n8")))
     val coarse = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .withColumn("qd", VectorExpressions.dotI8(col("q8"), col("n8")))
-    val cand = coarse.groupBy(col("query_id"))
-      .agg(TopKByScore.topK(col("qd").cast("double"), col("neighbor_id"), ck).as("top"),
-        first(col("qv")).as("qv"), first(col("qn")).as("qn"))
-      .select(col("query_id"), col("qv"), col("qn"), explode(col("top")).as("nb"))
-      .select(col("query_id"), col("qv"), col("qn"), col("nb.id").as("neighbor_id"))
-    val scored = broadcast(cand)
-      .join(emb.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("nv"), norm(col("embedding")).as("nn")), "neighbor_id")
-      .withColumn("cos_e6", cosE6From(col("qv"), col("nv"), col("qn"), col("nn")))
-    topKNeighbors(scored, k)
+    rescoreTopK(coarse, "qd", "neighbor_id", emb, k, ck)
     }
     }
   }
@@ -299,20 +315,28 @@ object Similarity {
     require(nSub > 0 && dims % nSub == 0,
       s"dims ($dims) must split evenly into nSub ($nSub) subspaces")
     val sd = dims / nSub
-    val books = fitBooks(emb,
-      (0 until nSub).map(j => SubFit(j * sd, sd, nCodes)), iters, sampleMod)
-    PqModel(dims, nSub, nCodes,
-      books.map(_.map { case (cid, m) => cid -> m.map(_.toDouble / 1e6) }.toSeq).toSeq)
+    PqModel(dims, nSub, nCodes, fitBooks(emb,
+      (0 until nSub).map(j => SubFit(j * sd, sd, nCodes)), iters, sampleMod).toSeq)
   }
 
   /** One independent k-means problem inside a fused [[fitBooks]] run:
-    * the slice `[off, off+sd)` fit to `nCodes` codewords. */
+    * the slice `[off, off+sd)` fit to `nCodes` codewords. `sd <= 0`
+    * slices to the end of the vector. */
   private final case class SubFit(off: Int, sd: Int, nCodes: Int)
 
-  /** The fused deterministic fit engine behind [[fitPq]] and
-    * [[ivfPqKnn]]: every spec (a subspace codebook, or the FULL-space
-    * IVF centroids as the `(0, dims, nCells)` spec) runs the
-    * [[kmeansCentroids]] rule — first-`nCodes` micro-rounded init,
+  private object SubFit {
+    /** The full-space IVF spec: `nCells` centroids over the whole vector,
+      * its width read from the init rows. */
+    def cells(nCells: Int): SubFit = {
+      require(nCells > 0, s"need nCells > 0; got $nCells")
+      SubFit(0, 0, nCells)
+    }
+  }
+
+  /** THE deterministic fit engine, behind [[kmeansCentroids]],
+    * [[buildIvf]], [[fitPq]] and [[buildIvfPq]]: every spec (a subspace
+    * codebook, or the FULL-space IVF centroids as [[SubFit.cells]]) runs
+    * the [[kmeansCentroids]] rule — first-`nCodes` micro-rounded init,
     * Lloyd rounds over the shared `vec_id % sampleMod` sample with
     * argmax-cosine assignment, exact micro-unit floor means, empty
     * cells keeping their previous codeword — but ALL specs share one
@@ -321,15 +345,18 @@ object Similarity {
     * fits separately (the grouping key gained `spec`; the values
     * didn't change — the s13/s14 oracles replay each fit independently
     * and hash-match), at 1/|specs| the driver round-trips. */
-  private def fitBooks(emb0: DataFrame, specs: Seq[SubFit], iters: Int,
-      sampleMod: Int): Array[Array[(Int, Array[Long])]] = {
+  private def fitBooks(emb0: DataFrame, specs0: Seq[SubFit], iters: Int,
+      sampleMod: Int): Array[Seq[(Int, Array[Double])]] = {
     require(iters >= 0 && sampleMod > 0,
       s"need iters >= 0, sampleMod > 0; got ($iters, $sampleMod)")
-    // same static-scope rationale as kmeansCentroids: one known fused
-    // aggregate per Lloyd round, values conf-independent
+    // Lloyd loop = iterative fit re-executing one known aggregate shape
+    // per round over the cached sample (PlanScope rationale; the fit's
+    // dispatch-normalized compute is ~0 on the board): static scope makes
+    // each round ONE driver job instead of one per exchange. Codeword
+    // VALUES are conf-independent — the fit-replaying oracles stay green.
     graft.ops.PlanScope.isolatedStatic(emb0.sparkSession) { scoped =>
     val emb = graft.ops.PlanScope.rebind(emb0, scoped)
-    val maxCodes = specs.map(_.nCodes).max
+    val maxCodes = specs0.map(_.nCodes).max
     // init: first-k vectors micro-rounded, sliced on the driver
     // (slicing micro-longs == micro-rounding the slice)
     val initRows = emb.filter(col("vec_id") < maxCodes)
@@ -338,6 +365,8 @@ object Similarity {
           x => round(x.cast("double") * lit(1e6)).cast("long")).as("m"))
       .collect().map(r => r.getInt(0) -> r.getSeq[Long](1).toArray)
       .sortBy(_._1)
+    val width = initRows.headOption.fold(0)(_._2.length)
+    val specs = specs0.map(sp => if (sp.sd > 0) sp else sp.copy(sd = width - sp.off))
     var books: Array[Array[(Int, Array[Long])]] = specs.toArray.map { sp =>
       initRows.filter(_._1 < sp.nCodes)
         .map { case (cid, m) => cid -> m.slice(sp.off, sp.off + sp.sd) }
@@ -382,7 +411,9 @@ object Similarity {
         }
       } finally sample.unpersist(blocking = false)
     }
-    books
+    // micro-longs ÷ 1e6 — BIGINT-to-double division, the same IEEE op the
+    // oracle's `m/1000000.0` performs
+    books.map(_.toSeq.map { case (cid, m) => cid -> m.map(_.toDouble / 1e6) })
     }
   }
 
@@ -407,6 +438,35 @@ object Similarity {
     else element_at(
       typedLit(ids.zipWithIndex.map { case (c, i) => (c, i + 1) }.toMap), id)
 
+  /** The cid of the codeword in `book` nearest the embedding slice at
+    * `off` (pqAssign's argmax-cosine rule, ties → lowest cid) — the one
+    * cell/code encode behind every IVF cell and PQ code column. */
+  private def nearestCid(book: Seq[(Int, Array[Double])], off: Int): Column =
+    posToId(VectorExpressions.pqAssign(col("embedding"), book.map(_._2), off = off),
+      book.map(_._1))
+
+  /** `code0..code{nSub-1}`: per subspace the nearest codeword's cid, null
+    * for an empty codebook. */
+  private def codeCols(model: PqModel): Seq[Column] =
+    (0 until model.nSub).map { j =>
+      (if (model.books(j).isEmpty) lit(null).cast("int")
+       else nearestCid(model.books(j), j * model.subDim)).as(s"code$j")
+    }
+
+  /** The per-query ADC lookup tables `t0..t{nSub-1}`. */
+  private def adcTables(model: PqModel): Seq[Column] =
+    (0 until model.nSub).map { j =>
+      VectorExpressions.pqAdcTable(col("embedding"),
+        model.books(j).map(_._2), off = j * model.subDim).as(s"t$j")
+    }
+
+  /** A coded row's ADC score against the [[adcTables]]: Σ_j t_j[code_j]. */
+  private def adcScore(model: PqModel): Column =
+    (0 until model.nSub)
+      .map(j => element_at(col(s"t$j"),
+        idToAdcPos(col(s"code$j"), model.books(j).map(_._1))))
+      .reduce(_ + _)
+
   /** Encode the corpus against a [[PqModel]]: per subspace the vector's
     * nearest codeword by the assignment rule of the IVF index (cosine,
     * ties → lowest code id), computed as a PURE PER-ROW map — the
@@ -419,16 +479,8 @@ object Similarity {
     *         compression that lets a 100 TB corpus's candidate scan read
     *         codes, not vectors
     */
-  def encodePq(emb: DataFrame, model: PqModel): DataFrame = {
-    val sd = model.subDim
-    val codeCols = (0 until model.nSub).map { j =>
-      if (model.books(j).isEmpty) lit(null).cast("int").as(s"code$j")
-      else posToId(VectorExpressions.pqAssign(col("embedding"),
-        model.books(j).map(_._2), off = j * sd),
-        model.books(j).map(_._1)).as(s"code$j")
-    }
-    emb.select(col("vec_id") +: codeCols: _*)
-  }
+  def encodePq(emb: DataFrame, model: PqModel): DataFrame =
+    emb.select(col("vec_id") +: codeCols(model): _*)
 
   /** Product-quantization two-stage ANN (Jégou et al., PAMI'11 —
     * asymmetric distance computation): coarse-rank the corpus by the
@@ -450,46 +502,21 @@ object Similarity {
   def pqKnn(emb0: DataFrame, queries0: DataFrame, k: Int, dims: Int = 64,
       nSub: Int = 4, nCodes: Int = 16, coarseK: Int = 0,
       iters: Int = 2, sampleMod: Int = 7): DataFrame = {
-    val ck = if (coarseK > 0) coarseK else 4 * k
-    require(ck >= k, s"coarseK ($ck) must be >= k ($k)")
+    val ck = coarseWidth(coarseK, k)
     // fused fit + ADC scan + rescore on one conf-isolated static scope (see ivfKnn)
     graft.ops.PlanScope.isolatedStaticFor(emb0) { scoped =>
     val emb = graft.ops.PlanScope.rebind(emb0, scoped)
     val queries = graft.ops.PlanScope.rebind(queries0, scoped)
     val model = fitPq(emb, dims, nSub, nCodes, iters, sampleMod)
-    val sd = model.subDim
-    if (model.books.head.isEmpty) // empty corpus: no codebooks, no neighbors
-      topKNeighbors(emb.limit(0).select(col("vec_id").as("query_id"),
-        lit(0L).as("cos_e6"), col("vec_id").as("neighbor_id")), k)
+    if (model.books.head.isEmpty) noNeighbors(emb, k) // empty corpus: no codebooks
     else {
     val codes = spreadIfSmall(encodePq(emb, model))
-    val tabCols = (0 until model.nSub).map { j =>
-      VectorExpressions.pqAdcTable(col("embedding"),
-        model.books(j).map(_._2), off = j * sd).as(s"t$j")
-    }
-    // query vector + norm ride the ADC-table broadcast and come back out
-    // of the top-k aggregate via first() (identical across the group), so
-    // the exact rescore skips the second query-side broadcast join — one
-    // broadcast build per call instead of two, same rows, same cosine
-    val qtab = queries.select(col("vec_id").as("query_id") +: tabCols :+
+    val qtab = queries.select(col("vec_id").as("query_id") +: adcTables(model) :+
       col("embedding").as("qv") :+ norm(col("embedding")).as("qn"): _*)
-    val adc = (0 until model.nSub)
-      .map(j => element_at(col(s"t$j"),
-        idToAdcPos(col(s"code$j"), model.books(j).map(_._1))))
-      .reduce(_ + _)
-    val cand = codes
+    val coarse = codes
       .join(broadcast(qtab), col("query_id") =!= col("vec_id"))
-      .withColumn("adc", adc)
-      .groupBy(col("query_id"))
-      .agg(TopKByScore.topK(col("adc").cast("double"), col("vec_id"), ck).as("top"),
-        first(col("qv")).as("qv"), first(col("qn")).as("qn"))
-      .select(col("query_id"), col("qv"), col("qn"), explode(col("top")).as("nb"))
-      .select(col("query_id"), col("qv"), col("qn"), col("nb.id").as("neighbor_id"))
-    val scored = broadcast(cand)
-      .join(emb.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("nv"), norm(col("embedding")).as("nn")), "neighbor_id")
-      .withColumn("cos_e6", cosE6From(col("qv"), col("nv"), col("qn"), col("nn")))
-    topKNeighbors(scored, k)
+      .withColumn("adc", adcScore(model))
+    rescoreTopK(coarse, "adc", "vec_id", emb, k, ck)
     }
     }
   }
@@ -514,8 +541,7 @@ object Similarity {
   def ivfPqKnn(emb0: DataFrame, queries0: DataFrame, k: Int, nCells: Int = 16,
       nprobe: Int = 2, dims: Int = 64, nSub: Int = 4, nCodes: Int = 16,
       coarseK: Int = 0, iters: Int = 2, sampleMod: Int = 7): DataFrame = {
-    val ck = if (coarseK > 0) coarseK else 4 * k
-    require(ck >= k, s"coarseK ($ck) must be >= k ($k)")
+    val ck = coarseWidth(coarseK, k)
     require(nprobe >= 1 && nprobe <= nCells, s"need 1 <= nprobe <= nCells, got $nprobe/$nCells")
     // fused fit + probed ADC scan + rescore on one conf-isolated static
     // scope (see ivfKnn)
@@ -554,8 +580,7 @@ object Similarity {
     val all = fitBooks(emb,
       SubFit(0, dims, nCells) +: (0 until nSub).map(j => SubFit(j * sd, sd, nCodes)),
       iters, sampleMod)
-    val cent = all.head.toSeq
-      .map { case (cid, m) => cid -> m.map(_.toDouble / 1e6) }
+    val cent = all.head
     // same silent-drop hazard as buildIvf: an empty fit over a NON-empty
     // corpus would code nothing and every vector would vanish from the
     // served index (the empty-schema branch below is for genuinely empty
@@ -564,8 +589,7 @@ object Similarity {
       s"buildIvfPq fitted 0 of $nCells cells over a non-empty corpus — " +
         "k-means init takes vectors with vec_id < nCells and found " +
         "none; remap vec_ids to a dense 0-based range or raise nCells")
-    val model = PqModel(dims, nSub, nCodes,
-      all.tail.map(_.map { case (cid, m) => cid -> m.map(_.toDouble / 1e6) }.toSeq).toSeq)
+    val model = PqModel(dims, nSub, nCodes, all.tail.toSeq)
     // the per-subspace twin: a coarse fit can succeed (ids < nCells
     // exist) while a CODEBOOK fits nothing (no id < nCodes) — the inline
     // encode below would then die in pqAssign's bare non-empty-codebook
@@ -580,16 +604,10 @@ object Similarity {
         emb.limit(0).select(
           col("vec_id") +: lit(0).as("cell") +:
             (0 until nSub).map(j => lit(0).as(s"code$j")): _*)
-      else emb.select(
-        col("vec_id") +:
-          // non-nullable cell key — same isnotnull-inference rationale
-          // as assignToCells (the ADC probe equi-joins on cell)
-          coalesce(posToId(
-              VectorExpressions.pqAssign(col("embedding"), cent.map(_._2), off = 0),
-              cent.map(_._1)), lit(-1)).as("cell") +:
-          (0 until nSub).map(j => posToId(VectorExpressions.pqAssign(col("embedding"),
-            model.books(j).map(_._2), off = j * sd),
-            model.books(j).map(_._1)).as(s"code$j")): _*)
+      // non-nullable cell key — same isnotnull-inference rationale as
+      // assignToCells (the ADC probe equi-joins on cell)
+      else emb.select(col("vec_id") +:
+        coalesce(nearestCid(cent, 0), lit(-1)).as("cell") +: codeCols(model): _*)
     IvfPqIndex(codes, cent, model)
   }
 
@@ -599,12 +617,7 @@ object Similarity {
   private def ivfPqProbe(codes: DataFrame, vectors: DataFrame,
       cent: Seq[(Int, Array[Double])], model: PqModel, queries: DataFrame,
       k: Int, nprobe: Int, ck: Int): DataFrame = {
-    if (cent.isEmpty)
-      return topKNeighbors(
-        vectors.limit(0).select(col("vec_id").as("query_id"), lit(0L).as("cos_e6"),
-          col("vec_id").as("neighbor_id")), k)
-    val nSub = model.nSub
-    val sd = model.subDim
+    if (cent.isEmpty) return noNeighbors(vectors, k)
     // Probe-side cell choice + ADC tables in ONE projection over the
     // query frame: the coarse centroids are driver-held fit artifacts,
     // so the top-nprobe pick rides in as a literal-codebook expression
@@ -614,40 +627,20 @@ object Similarity {
     // jobs per probe batch plus a window exchange on the query side;
     // the kernel's selection is the row_number rule verbatim, so the
     // candidate set — and with it every downstream hash — is unchanged).
-    val tabCols = (0 until nSub).map { j =>
-      VectorExpressions.pqAdcTable(col("embedding"),
-        model.books(j).map(_._2), off = j * sd).as(s"t$j")
-    }
-    // query vector + norm ride the probe broadcast (one copy per probed
-    // cell — nprobe small by contract) and come back out of the top-k
-    // aggregate via first() (identical across the group), so the exact
-    // rescore skips the second query-side broadcast join — one broadcast
-    // build per probe batch instead of two, same rows, same cosine
+    // The query vector + norm ride the probe broadcast once per probed
+    // cell (nprobe small by contract) into [[rescoreTopK]].
     val probeTabs = queries.select(
-      ((col("vec_id").as("query_id") +: tabCols) :+
+      ((col("vec_id").as("query_id") +: adcTables(model)) :+
         col("embedding").as("qv") :+ norm(col("embedding")).as("qn")) :+
         explode(VectorExpressions.topCells(col("embedding"),
           cent.map(_._2), nprobe)).as("__pos"): _*)
       .withColumn("cell", posToId(col("__pos"), cent.map(_._1)))
       .drop("__pos")
-    val adc = (0 until nSub)
-      .map(j => element_at(col(s"t$j"),
-        idToAdcPos(col(s"code$j"), model.books(j).map(_._1))))
-      .reduce(_ + _)
-    val cand = codes
+    val coarse = codes
       .join(broadcast(probeTabs), Seq("cell"))
       .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("adc", adc)
-      .groupBy(col("query_id"))
-      .agg(TopKByScore.topK(col("adc").cast("double"), col("vec_id"), ck).as("top"),
-        first(col("qv")).as("qv"), first(col("qn")).as("qn"))
-      .select(col("query_id"), col("qv"), col("qn"), explode(col("top")).as("nb"))
-      .select(col("query_id"), col("qv"), col("qn"), col("nb.id").as("neighbor_id"))
-    val scored = broadcast(cand)
-      .join(vectors.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("nv"), norm(col("embedding")).as("nn")), "neighbor_id")
-      .withColumn("cos_e6", cosE6From(col("qv"), col("nv"), col("qn"), col("nn")))
-    topKNeighbors(scored, k)
+      .withColumn("adc", adcScore(model))
+    rescoreTopK(coarse, "adc", "vec_id", vectors, k, ck)
   }
 
   /** Persist an [[IvfPqIndex]] as its serving layout: the coded corpus
@@ -714,15 +707,8 @@ object Similarity {
     require(index.model.books.forall(_.nonEmpty),
       "extendIvfPq: index has an empty subspace codebook — the delta " +
         "cannot be encoded; rebuild with buildIvfPq over the union instead")
-    val sd = index.model.subDim
-    val codes =
-      index.codes.unionByName(newEmb.select(
-        col("vec_id") +:
-          posToId(VectorExpressions.pqAssign(col("embedding"), index.cent.map(_._2), off = 0),
-            index.cent.map(_._1)).as("cell") +:
-          (0 until index.model.nSub).map(j => posToId(VectorExpressions.pqAssign(col("embedding"),
-            index.model.books(j).map(_._2), off = j * sd),
-            index.model.books(j).map(_._1)).as(s"code$j")): _*))
+    val codes = index.codes.unionByName(newEmb.select(col("vec_id") +:
+      nearestCid(index.cent, 0).as("cell") +: codeCols(index.model): _*))
     IvfPqIndex(codes, index.cent, index.model)
   }
 
@@ -735,8 +721,7 @@ object Similarity {
     * like [[ivfKnnWith]]: the caller owns the planning conf. */
   def ivfPqKnnWith(index: IvfPqIndex, vectors: DataFrame, queries: DataFrame,
       k: Int, nprobe: Int, coarseK: Int = 0): DataFrame = {
-    val ck = if (coarseK > 0) coarseK else 4 * k
-    require(ck >= k, s"coarseK ($ck) must be >= k ($k)")
+    val ck = coarseWidth(coarseK, k)
     require(index.cent.isEmpty || (nprobe >= 1 && nprobe <= index.cent.size),
       s"nprobe must be in [1, nCells=${index.cent.size}], got $nprobe")
     ivfPqProbe(index.codes, vectors, index.cent, index.model, queries, k, nprobe, ck)
@@ -756,8 +741,8 @@ object Similarity {
     * fit replays bit-identically on any IEEE-double engine (the s02 DuckDB
     * oracle re-runs it as unrolled SQL CTEs).
     *
-    * Scale shape: each Lloyd round is one broadcast-argmax over the SAMPLE
-    * (not the corpus) plus a (cell, dim) grouped sum with map-side
+    * Scale shape: each Lloyd round is one per-row kernel argmax over the
+    * SAMPLE (not the corpus) plus a (cell, dim) grouped sum with map-side
     * partials; between rounds the driver holds only nCells×d longs — the
     * k-means-init pattern, same class as d05's anchor fetch, not a data
     * collect. Empty cells keep their previous centroid, so the cell count
@@ -765,106 +750,26 @@ object Similarity {
     */
   def kmeansCentroids(emb: DataFrame, nCells: Int, iters: Int = 2,
       sampleMod: Int = 7): DataFrame =
-    centroidFrame(emb.sparkSession, kmeansFit(emb, nCells, iters, sampleMod))
+    centroidFrame(emb.sparkSession,
+      fitBooks(emb, Seq(SubFit.cells(nCells)), iters, sampleMod).head)
 
-  /** [[kmeansCentroids]]'s fit with the driver-held micro-long centroids
-    * exposed: the FITTED cell count (≤ the requested `nCells` whenever
-    * the init scan finds fewer distinct `vec_id < nCells` rows — filtered
-    * corpora, tiny corpora, empty corpora) is knowable for free here,
-    * and [[buildIvf]] records it so downstream bound checks and the
-    * unfitted-index guard ([[extendIvf]]) see the real capacity. */
-  private def kmeansFit(emb0: DataFrame, nCells: Int, iters: Int,
-      sampleMod: Int): Seq[(Int, Array[Long])] = {
-    require(nCells > 0 && iters >= 0 && sampleMod > 0,
-      s"need nCells > 0, iters >= 0, sampleMod > 0; got ($nCells, $iters, $sampleMod)")
-    // Lloyd loop = iterative fit re-executing one known aggregate shape
-    // per round over the cached sample (PlanScope rationale; the fit's
-    // dispatch-normalized compute is ~0 on the board): static scope makes
-    // each round ONE driver job instead of one per exchange. Centroid
-    // VALUES are conf-independent — the s02-family oracles replay the
-    // fit and stay hash-green.
-    graft.ops.PlanScope.isolatedStatic(emb0.sparkSession) { scoped =>
-    val emb = graft.ops.PlanScope.rebind(emb0, scoped)
-    val microArr = transform(col("embedding"),
-      x => round(x.cast("double") * lit(1e6)).cast("long"))
-    // init: first nCells vectors by id, micro-rounded. The interpreted HOF
-    // runs nCells times total (tiny), never per corpus row.
-    var cents: Seq[(Int, Array[Long])] = emb.filter(col("vec_id") < nCells)
-      .select(col("vec_id").cast("int").as("cid"), microArr.as("m"))
-      .collect().map(r => r.getInt(0) -> r.getSeq[Long](1).toArray)
-      .sortBy(_._1).toSeq
-    if (cents.nonEmpty && iters > 0) {
-      val sample = emb.filter(col("vec_id") % sampleMod === 0)
-        .select(col("vec_id"), col("embedding")).persist()
-      try {
-        for (_ <- 1 to iters) {
-          val sums = assignToCells(sample, centroidFrame(scoped, cents))
-            .select(col("cell"), posexplode(col("embedding")).as(Seq("dim", "v")))
-            .groupBy(col("cell"), col("dim"))
-            .agg(count(lit(1)).as("n"),
-              sum(round(col("v").cast("double") * lit(1e6)).cast("long")).as("sum_e6"))
-            .select(col("cell"), col("dim"),
-              floor(col("sum_e6") / col("n")).cast("long").as("mean_e6"))
-            .collect()
-          val byCell = sums.groupBy(_.getInt(0))
-          cents = cents.map { case (cid, prev) =>
-            cid -> byCell.get(cid).fold(prev) { rows =>
-              val arr = prev.clone()
-              rows.foreach(r => arr(r.getInt(1)) = r.getLong(2))
-              arr
-            }
-          }
-        }
-      } finally sample.unpersist(blocking = false)
-    }
-    cents
-    }
-  }
-
-  /** Literal `(cid, cv array<double>)` frame from driver-held micro-long
-    * centroids (`m/1e6` — BIGINT-to-double division, same IEEE op the
-    * oracle's `m/1000000.0` performs). */
+  /** Literal `(cid, cv array<double>)` frame of driver-held centroids. */
   private def centroidFrame(spark: org.apache.spark.sql.SparkSession,
-      cents: Seq[(Int, Array[Long])]): DataFrame = {
+      cents: Seq[(Int, Array[Double])]): DataFrame = {
     import spark.implicits._
-    cents.map { case (cid, m) => (cid, m.map(_.toDouble / 1e6)) }.toDF("cid", "cv")
+    cents.toDF("cid", "cv")
   }
 
   /** Deterministic IVF cell assignment: every vector lands in the cell of
-    * its nearest k-means centroid (ties → lowest centroid id), via an
-    * argmax aggregate — map-side partials collapse the N×k scored rows to
-    * N before the exchange. */
+    * its nearest k-means centroid (ties → lowest centroid id) — a pure
+    * per-row map, no exchange. */
   def ivfAssign(emb: DataFrame, nCells: Int, iters: Int = 2,
       sampleMod: Int = 7): DataFrame =
-    assignToCells(emb, kmeansCentroids(emb, nCells, iters, sampleMod))
+    assignToCells(emb, fitBooks(emb, Seq(SubFit.cells(nCells)), iters, sampleMod).head)
 
-  /** cosine(float vector, double centroid) via the widening codegen'd dot;
-    * centroid norm precomputed per centroid row (same IEEE value). */
-  private def cosToCent(v: Column, cv: Column, cn: Column): Column =
-    VectorExpressions.dotWiden(v, cv) / (norm(v) * cn)
-
-  private def withCentNorm(cent: DataFrame): DataFrame =
-    cent.select(col("cid"), col("cv"),
-      sqrt(VectorExpressions.dotWiden(col("cv"), col("cv"))).as("cn"))
-
-  private def assignToCells(emb: DataFrame, cent: DataFrame): DataFrame = {
-    // Per-row kernel argmax (the PqAssign expression — same cosine rule,
-    // ties → lowest cid) instead of the former
-    // crossJoin(centroids) + groupBy(vec_id) max_by: assignment is a pure
-    // map now, so the CORPUS-sized exchange every index build and Lloyd
-    // round used to pay is gone. Centroids collect to the driver first —
-    // nCells rows, index-build state, the same class as the literal
-    // centroid frames they come from.
-    val book = cent.select(col("cid"), col("cv")).collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).sortBy(_._1)
+  private def assignToCells(emb: DataFrame, book: Seq[(Int, Array[Double])]): DataFrame =
     if (book.isEmpty)
-      return emb.select(col("vec_id"), col("embedding"), lit(null).cast("int").as("cell"))
-    val assign = VectorExpressions.pqAssign(col("embedding"), book.toSeq.map(_._2), off = 0)
-    // kernel cells are book POSITIONS; map back to cids when they are
-    // not the dense 0-based identity
-    val cellCol =
-      if (book.map(_._1).zipWithIndex.forall { case (c, i) => c == i }) assign
-      else element_at(typedLit(book.map(_._1).toSeq), assign + 1)
+      emb.select(col("vec_id"), col("embedding"), lit(null).cast("int").as("cell"))
     // coalesce(-1) makes `cell` NON-NULLABLE (r16, guide §4): probes
     // equi-join on cell, and a nullable key makes Catalyst infer
     // `isnotnull(cell)` — which substitutes the WHOLE pqAssign kernel
@@ -873,9 +778,8 @@ object Similarity {
     // Value-identical: cell is null iff embedding is null, and both the
     // old null and the new -1 match no real cid (cids are >= 0) — the
     // row drops at the probe join either way.
-    emb.select(col("vec_id"), col("embedding"),
-      coalesce(cellCol, lit(-1)).as("cell"))
-  }
+    else emb.select(col("vec_id"), col("embedding"),
+      coalesce(nearestCid(book, 0), lit(-1)).as("cell"))
 
   /** A built IVF index: cell-assigned vectors (with precomputed norms) and
     * the centroid table. Build once, probe many — the deployment shape for
@@ -895,12 +799,13 @@ object Similarity {
   def buildIvf(emb: DataFrame, nCells: Int, iters: Int = 2,
       sampleMod: Int = 7): IvfIndex = {
     // record the FITTED cell count, not the requested one — a filtered or
-    // tiny corpus inits fewer centroids than asked for ([[kmeansFit]]),
-    // and an empty corpus fits none at all. loadIvf already counts the
-    // real centroid rows, so this keeps the two constructors' nCells
-    // semantics identical and makes extendIvf's unfitted-index guard
-    // actually fire (requested-count semantics read 8 on an empty fit).
-    val cents = kmeansFit(emb, nCells, iters, sampleMod)
+    // tiny corpus inits fewer centroids than asked for (init takes the
+    // rows with vec_id < nCells), and an empty corpus fits none at all.
+    // loadIvf already counts the real centroid rows, so this keeps the two
+    // constructors' nCells semantics identical and makes extendIvf's
+    // unfitted-index guard actually fire (requested-count semantics read 8
+    // on an empty fit).
+    val cents = fitBooks(emb, Seq(SubFit.cells(nCells)), iters, sampleMod).head
     // 0 fitted cells over a NON-empty corpus is silent data loss — the
     // assignment join below would drop every vector (init takes vectors
     // with vec_id < nCells and found none). The existence probe is one
@@ -910,8 +815,8 @@ object Similarity {
       s"buildIvf fitted 0 of $nCells cells over a non-empty corpus — " +
         "k-means init takes vectors with vec_id < nCells and found " +
         "none; remap vec_ids to a dense 0-based range or raise nCells")
-    val cent = centroidFrame(emb.sparkSession, cents)
-    IvfIndex(assignToCells(emb, cent).withColumn("nn", norm(col("embedding"))), cent, cents.size)
+    IvfIndex(assignToCells(emb, cents).withColumn("nn", norm(col("embedding"))),
+      centroidFrame(emb.sparkSession, cents), cents.size)
   }
 
   /** Bounded 1-row existence probe — used only on degenerate paths
@@ -989,10 +894,11 @@ object Similarity {
       "extendIvf: index has no fitted centroids (built over an empty " +
         "corpus) — the delta cannot be assigned and would be silently " +
         "dropped; rebuild with buildIvf over the union instead")
+    val book = index.centroids.select(col("cid"), col("cv")).collect()
+      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).sortBy(_._1).toSeq
     IvfIndex(
       index.assigned.unionByName(
-        assignToCells(newEmb, index.centroids)
-          .withColumn("nn", norm(col("embedding")))),
+        assignToCells(newEmb, book).withColumn("nn", norm(col("embedding")))),
       index.centroids, index.nCells)
   }
 
@@ -1078,24 +984,36 @@ object Similarity {
     // nprobe off the REQUESTED cell count, which may legitimately exceed
     // the fit.
     require(nprobe > 0, s"nprobe must be >= 1, got $nprobe")
-    val assigned = index.assigned
-    val cent = index.centroids
-    val probes = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      .crossJoin(broadcast(withCentNorm(cent)))
-      .withColumn("cell_cos", cosToCent(col("qv"), col("cv"), col("cn")))
-      .groupBy(col("query_id"))
-      .agg(
-        first(col("qv")).as("qv"),
-        TopKByScore.topK(col("cell_cos"), col("cid"), nprobe).as("cells"))
+    val probes = probeCells(index, queries, nprobe)
       .select(col("query_id"), col("qv"), norm(col("qv")).as("qn"),
         explode(col("cells.id")).as("cell"))
-    val joined = probes.join(assigned, Seq("cell"))
+    val joined = probes.join(index.assigned, Seq("cell"))
     val scored = (if (excludeSelf) joined.filter(col("query_id") =!= col("vec_id")) else joined)
       .withColumn("neighbor_id", col("vec_id"))
       .withColumn("cos_e6", cosE6From(col("qv"), col("embedding"), col("qn"), col("nn")))
     topKNeighbors(scored, k)
   }
+
+  /** Per query its vector `qv` and its `nprobe` nearest cells (`cells`,
+    * best first): cosine to every centroid of the broadcast centroid
+    * table, collapsed by a bounded top-`nprobe` heap. */
+  private def probeCells(index: IvfIndex, queries: DataFrame, nprobe: Int): DataFrame =
+    queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+      .crossJoin(broadcast(withCentNorm(index.centroids)))
+      .withColumn("cell_cos", cosToCent(col("qv"), col("cv"), col("cn")))
+      .groupBy(col("query_id"))
+      .agg(
+        first(col("qv")).as("qv"),
+        TopKByScore.topK(col("cell_cos"), col("cid"), nprobe).as("cells"))
+
+  /** cosine(float vector, double centroid) via the widening codegen'd dot;
+    * centroid norm precomputed per centroid row (same IEEE value). */
+  private def cosToCent(v: Column, cv: Column, cn: Column): Column =
+    VectorExpressions.dotWiden(v, cv) / (norm(v) * cn)
+
+  private def withCentNorm(cent: DataFrame): DataFrame =
+    cent.select(col("cid"), col("cv"),
+      sqrt(VectorExpressions.dotWiden(col("cv"), col("cv"))).as("cn"))
 
   /** Pick the smallest `nprobe` whose recall@k against brute force, on a
     * SAMPLE of queries, reaches `targetRecallPermille` — the standard IVF
@@ -1176,14 +1094,7 @@ object Similarity {
     require(nprobes.forall(_ > 0), s"every nprobe must be >= 1, got $nprobes")
     val nCells = index.nCells
     val maxNp = nprobes.max
-    val probes = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      .crossJoin(broadcast(withCentNorm(index.centroids)))
-      .withColumn("cell_cos", cosToCent(col("qv"), col("cv"), col("cn")))
-      .groupBy(col("query_id"))
-      .agg(
-        first(col("qv")).as("qv"),
-        TopKByScore.topK(col("cell_cos"), col("cid"), maxNp).as("cells"))
+    val probes = probeCells(index, queries, maxNp)
       .select(col("query_id"), col("qv"), norm(col("qv")).as("qn"),
         posexplode(col("cells.id")).as(Seq("cell_rank", "cell")))
     val scored = probes.join(index.assigned, Seq("cell"))
@@ -1316,19 +1227,89 @@ object Similarity {
         col("cos_e6"), col("margin_e6"))
   }
 
-  /** Embedding near-duplicate pairs: all pairs with cosine ≥ threshold,
-    * with EXACT recall, via grid-bucketed candidate generation instead of
-    * an all-pairs nested-loop join.
+  /** The anchor grid of the exact-recall threshold joins
+    * ([[embeddingNearDupPairs]], [[semanticContamination]]).
     *
     * Geometry: for unit vectors, cos(a,b) ≥ t ⟺ ‖û_a−û_b‖ ≤ √(2−2t) = ε,
     * and any 1-Lipschitz projection p satisfies |p(û_a)−p(û_b)| ≤ ε. Each
-    * vector is bucketed by ⌊p_j/ε⌋ over two deterministic anchor
-    * projections (p_j(v) = cos(v, anchor_j)); a qualifying pair's cells
-    * then differ by at most 1 per axis, so probing the 3×3 cell
-    * neighborhood of one side captures every qualifying pair — recall is
-    * exact by construction, and each pair meets in exactly one probe
-    * offset, so no dedup pass is needed. Candidates are verified with the
-    * exact cosine before output.
+    * vector is bucketed by ⌊p_j/ε⌋ over two anchor projections
+    * (p_j(v) = cos(v, anchor_j)); a qualifying pair's cells then differ
+    * by at most 1 per axis, so probing the 3×3 cell neighborhood of one
+    * side captures every qualifying pair — recall is exact by
+    * construction, and each pair meets in exactly one probe offset, so no
+    * dedup pass is needed. Any fixed unit anchors keep that guarantee and
+    * every candidate is verified with the exact cosine, so the anchors
+    * shape cell occupancy, never the output. */
+  private final class AnchorGrid(anchors: Seq[Array[Double]], eps: Double) {
+    private val offs: Seq[(Int, Int)] = for { i <- -1 to 1; j <- -1 to 1 } yield (i, j)
+
+    private def cellCol(i: Int): Column =
+      if (i < anchors.length)
+        floor(dot(col("embedding"), typedLit(anchors(i).map(_.toFloat))) / col("nrm") / lit(eps))
+          .cast("long")
+      else lit(0L)
+
+    /** `df` (carrying `embedding` and its norm `nrm`) plus its cell `(c0, c1)`. */
+    def cells(df: DataFrame): DataFrame =
+      df.withColumn("c0", cellCol(0)).withColumn("c1", cellCol(1))
+
+    /** One row per 3×3 neighbor cell `(p0, p1)` of each row's cell
+      * `(c0, c1)`, keeping the columns `keep`. */
+    def neighbors(df: DataFrame, keep: String*): DataFrame =
+      df.withColumn("off", explode(typedLit(offs)))
+        .select(keep.map(col) :+ (col("c0") + col("off._1")).as("p0") :+
+          (col("c1") + col("off._2")).as("p1"): _*)
+  }
+
+  private object AnchorGrid {
+    /** `(vec_id, embedding, nrm)` of the rows with a nonzero norm: a
+      * zero-norm vector has no defined cosine to anything (it can never
+      * satisfy the threshold), and the projection divides by nrm — under
+      * ANSI the degenerate row would kill the whole run with
+      * DIVIDE_BY_ZERO. */
+    def nonZero(df: DataFrame): DataFrame =
+      df.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
+        .filter(col("nrm") > 0)
+
+    private def unit(a: Array[Double]): Option[Array[Double]] = {
+      val n = math.sqrt(a.map(x => x * x).sum)
+      if (n > 1e-12) Some(a.map(_ / n)) else None
+    }
+
+    /** The grid for cosine threshold `minCosE6`, its anchors a tiny fitted
+      * model (like k-means centroids) over the [[nonZero]] rows `fitRows`:
+      * ONE bounded fetch brings the first 256 vectors by id; u0 is the
+      * first, u1 the most orthogonal of the rest (ties → lowest id, stable
+      * sort over the id-ordered pool), Gram-Schmidt orthogonalized
+      * driver-side (O(d) floats — the index-build pattern, not a data
+      * collect). */
+    def fit(fitRows: DataFrame, minCosE6: Long): AnchorGrid = {
+      // round(cos*1e6) ≥ minCosE6 admits cos down to (minCosE6 - 0.5)/1e6;
+      // take a hair more slack so float noise can never cost recall.
+      val t = (minCosE6.toDouble - 1.0) / 1e6
+      val pool = fitRows.orderBy(col("vec_id"))
+        .select(col("embedding")).limit(256).collect()
+        .map(_.getSeq[Float](0).toArray.map(_.toDouble))
+      val anchors: Seq[Array[Double]] = pool.headOption.flatMap(unit) match {
+        case None => Nil // no usable vectors: single bucket, join output empty anyway
+        case Some(u0) =>
+          val a1 = pool.drop(1).flatMap(unit)
+            .sortBy(v => math.abs(v.zip(u0).map { case (x, y) => x * y }.sum))
+            .headOption
+          val u1 = a1.flatMap { v =>
+            val proj = v.zip(u0).map { case (x, y) => x * y }.sum
+            unit(v.zip(u0).map { case (x, y) => x - proj * y })
+          }
+          Seq(Some(u0), u1).flatten
+      }
+      new AnchorGrid(anchors, math.sqrt(math.max(2.0 - 2.0 * t, 1e-9)))
+    }
+  }
+
+  /** Embedding near-duplicate pairs: all pairs with cosine ≥ threshold,
+    * with EXACT recall, via the [[AnchorGrid]]'s bucketed candidate
+    * generation instead of an all-pairs nested-loop join; candidates are
+    * verified with the exact cosine before output.
     *
     * The candidate join is an equi-join on (cell0, cell1) — shuffled hash
     * partitioned, AQE-skew-safe, never a broadcast nested loop. Pruning
@@ -1337,64 +1318,19 @@ object Similarity {
     * are never generated; at looser thresholds the cells widen (the exact
     * all-pairs semantics genuinely approaches quadratic work there — that
     * is inherent to the query, not the plan).
-    *
-    * Anchors are a tiny fitted model, like k-means centroids: the lowest
-    * vec_id vector, plus the vector most orthogonal to it, Gram-Schmidt
-    * orthogonalized driver-side (O(d) floats collected — the standard
-    * index-build pattern, not a data collect).
     */
-  def embeddingNearDupPairs(emb0: DataFrame, minCosE6: Long): DataFrame = {
-    // round(cos*1e6) ≥ minCosE6 admits cos down to (minCosE6 - 0.5)/1e6;
-    // take a hair more slack so float noise can never cost recall.
-    val t = (minCosE6.toDouble - 1.0) / 1e6
-    val eps = math.sqrt(math.max(2.0 - 2.0 * t, 1e-9))
+  def embeddingNearDupPairs(emb: DataFrame, minCosE6: Long): DataFrame = {
     // NOT static-scoped (measured 6.5× slower under a scan-sized static
     // scope): the 9-offset candidate join explodes far past the scan
     // estimate, so AQE's runtime re-sizing is load-bearing here — the
     // one Similarity shape where the scope rule's "corpus-scale ad-hoc
     // keeps AQE" branch applies
-    val emb = emb0
-
-    def unit(a: Array[Double]): Option[Array[Double]] = {
-      val n = math.sqrt(a.map(x => x * x).sum)
-      if (n > 1e-12) Some(a.map(_ / n)) else None
-    }
-    val base = emb.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
-    val nonZero = base.filter(col("nrm") > 0)
-    val a0 = nonZero.orderBy(col("vec_id")).select(col("embedding")).head(1)
-      .headOption.map(_.getSeq[Float](0).toArray.map(_.toDouble)).flatMap(unit)
-    val anchors: Seq[Array[Double]] = a0 match {
-      case None => Nil // no usable vectors: single bucket, join output empty anyway
-      case Some(u0) =>
-        val u0Lit = typedLit(u0.map(_.toFloat))
-        val a1 = nonZero
-          .withColumn("ac", abs(dot(col("embedding"), u0Lit) / col("nrm")))
-          .orderBy(col("ac"), col("vec_id")).select(col("embedding")).head(1)
-          .headOption.map(_.getSeq[Float](0).toArray.map(_.toDouble)).flatMap(unit)
-        val u1 = a1.flatMap { v =>
-          val proj = v.zip(u0).map { case (x, y) => x * y }.sum
-          unit(v.zip(u0).map { case (x, y) => x - proj * y })
-        }
-        Seq(Some(u0), u1).flatten
-    }
-    def cellCol(i: Int): Column =
-      if (i < anchors.length)
-        floor(dot(col("embedding"), typedLit(anchors(i).map(_.toFloat))) / col("nrm") / lit(eps))
-          .cast("long")
-      else lit(0L)
-    // bucket the NON-zero rows only: a zero-norm vector has no defined
-    // cosine to anything (it can never satisfy the threshold), and the
-    // projection divides by nrm — under ANSI the degenerate row would
-    // kill the whole run with DIVIDE_BY_ZERO
-    val cells = nonZero.withColumn("c0", cellCol(0)).withColumn("c1", cellCol(1))
-
-    val offs: Seq[(Int, Int)] = for { i <- -1 to 1; j <- -1 to 1 } yield (i, j)
-    val aSide = cells
+    val nonZero = AnchorGrid.nonZero(emb)
+    val grid = AnchorGrid.fit(nonZero, minCosE6)
+    val cells = grid.cells(nonZero)
+    val aSide = grid.neighbors(cells
       .select(col("vec_id").as("id_a"), col("embedding").as("va"), col("nrm").as("na"),
-        col("c0"), col("c1"))
-      .withColumn("off", explode(typedLit(offs)))
-      .select(col("id_a"), col("va"), col("na"),
-        (col("c0") + col("off._1")).as("p0"), (col("c1") + col("off._2")).as("p1"))
+        col("c0"), col("c1")), "id_a", "va", "na")
     val bSide = cells
       .select(col("vec_id").as("id_b"), col("embedding").as("vb"), col("nrm").as("nb"),
         col("c0").as("b0"), col("c1").as("b1"))
@@ -1409,10 +1345,9 @@ object Similarity {
     * `minCosE6/1e6` of ANY eval vector — the decontamination pass that
     * catches PARAPHRASED eval leakage the n-gram containment check
     * (d08's `contaminationPairs`) cannot see. Exact recall, like
-    * [[embeddingNearDupPairs]]: both sides land on the same anchor grid
-    * (anchors fit from the EVAL side — any fixed anchors preserve the
-    * adjacent-cell guarantee), candidates are cell-equi-joined, and
-    * every candidate is exactly verified.
+    * [[embeddingNearDupPairs]]: both sides land on the same
+    * [[AnchorGrid]] (anchors fit from the EVAL side), candidates are
+    * cell-equi-joined, and every candidate is exactly verified.
     *
     * Scale shape: the eval side is release-sized (thousands), so IT
     * carries the 9 neighbor-cell offsets and broadcasts; the training
@@ -1426,59 +1361,12 @@ object Similarity {
     */
   def semanticContamination(train: DataFrame, eval: DataFrame,
       minCosE6: Long): DataFrame = {
-    val t = (minCosE6.toDouble - 1.0) / 1e6
-    val eps = math.sqrt(math.max(2.0 - 2.0 * t, 1e-9))
-    def unit(a: Array[Double]): Option[Array[Double]] = {
-      val n = math.sqrt(a.map(x => x * x).sum)
-      if (n > 1e-12) Some(a.map(_ / n)) else None
-    }
-    val evBase = eval.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
-    val nonZero = evBase.filter(col("nrm") > 0)
-    // ONE bounded anchor fetch instead of the former two sequential
-    // head() driver jobs (u0, then a full-eval argmin-|cos| scan for
-    // u1): the first 256 nonzero vectors by id arrive in one job; u0 is
-    // the first, u1 the most-orthogonal of the rest (ties -> lowest id,
-    // stable sort over the id-ordered pool), Gram-Schmidt'd. Anchor
-    // choice NEVER affects the output — any fixed anchors keep the
-    // adjacent-cell guarantee and every candidate is exactly verified
-    // (the d17 oracle is a pure threshold join) — it only shapes cell
-    // occupancy, for which the pool argmin spreads as well as the full
-    // scan did.
-    val pool = nonZero.orderBy(col("vec_id"))
-      .select(col("embedding")).limit(256).collect()
-      .map(_.getSeq[Float](0).toArray.map(_.toDouble))
-    val anchors: Seq[Array[Double]] = pool.headOption.flatMap(unit) match {
-      case None => Nil
-      case Some(u0) =>
-        val a1 = pool.drop(1).flatMap(unit)
-          .sortBy(v => math.abs(v.zip(u0).map { case (x, y) => x * y }.sum))
-          .headOption
-        val u1 = a1.flatMap { v =>
-          val proj = v.zip(u0).map { case (x, y) => x * y }.sum
-          unit(v.zip(u0).map { case (x, y) => x - proj * y })
-        }
-        Seq(Some(u0), u1).flatten
-    }
-    def cellCol(i: Int): Column =
-      if (i < anchors.length)
-        floor(dot(col("embedding"), typedLit(anchors(i).map(_.toFloat))) / col("nrm") / lit(eps))
-          .cast("long")
-      else lit(0L)
-    val offs: Seq[(Int, Int)] = for { i <- -1 to 1; j <- -1 to 1 } yield (i, j)
-    // zero-norm rows are excluded on BOTH sides: their cosine to anything
-    // is undefined (they can never breach the fence), and the projection
-    // divides by nrm — ANSI would kill the run on one degenerate row
-    val evalSide = nonZero
-      .withColumn("c0", cellCol(0)).withColumn("c1", cellCol(1))
+    val nonZero = AnchorGrid.nonZero(eval)
+    val grid = AnchorGrid.fit(nonZero, minCosE6)
+    val evalSide = grid.neighbors(grid.cells(nonZero)
       .select(col("vec_id").as("eval_id"), col("embedding").as("ve"), col("nrm").as("ne"),
-        col("c0"), col("c1"))
-      .withColumn("off", explode(typedLit(offs)))
-      .select(col("eval_id"), col("ve"), col("ne"),
-        (col("c0") + col("off._1")).as("p0"), (col("c1") + col("off._2")).as("p1"))
-    val trainSide = train
-      .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
-      .filter(col("nrm") > 0)
-      .withColumn("c0", cellCol(0)).withColumn("c1", cellCol(1))
+        col("c0"), col("c1")), "eval_id", "ve", "ne")
+    val trainSide = grid.cells(AnchorGrid.nonZero(train))
       .select(col("vec_id").as("train_id"), col("embedding").as("vt"), col("nrm").as("nt"),
         col("c0").as("b0"), col("c1").as("b1"))
     spreadIfSmall(trainSide).join(broadcast(evalSide),
@@ -1488,21 +1376,6 @@ object Similarity {
       .select(col("train_id"), col("eval_id"), col("cos_e6"))
   }
 
-  /** SemDeDup-style semantic near-dup pairs (Abbas et al. 2023,
-    * arXiv:2303.09540): assign every vector to a k-means cell with the
-    * same deterministic sampled fit the IVF index uses ([[buildIvf]]),
-    * then compare pairs ONLY within a cell — cost is Σ|cell|², i.e.
-    * ~n²/k for balanced cells, never the n² all-pairs space. Recall is
-    * intentionally cluster-local (the SemDeDup trade): near-dups split
-    * across a cell boundary are missed, which the paper accepts in
-    * exchange for scalability; [[embeddingNearDupPairs]] is the
-    * exact-recall alternative when that guarantee matters.
-    *
-    * 100 TB shape: the fit touches a bounded sample (driver holds
-    * nCells×d longs), assignment is one broadcast-join scan, and the
-    * within-cell self-join is an equi-join on `cell` — size the cell
-    * count so n/nCells vectors fit a task. Output is exact micro-unit
-    * cosine pairs, reproducible across engines. */
   /** Cluster-balanced diversity sampling — the coverage-preserving
     * downsample (the SSL-prototype / cluster-balanced selection move:
     * sample evenly across embedding-space regions instead of uniformly,
@@ -1511,8 +1384,8 @@ object Similarity {
     * cell ([[Mixture.stratifiedSample]] — ONE bounded-heap aggregate, no
     * RNG, no window over the corpus).
     *
-    * Scale shape: the cell assignment is the IVF build's own broadcast
-    * pass; the per-cell pick exchanges O(partitions × nCells × k) rows.
+    * Scale shape: the cell assignment is the IVF build's own per-row map;
+    * the per-cell pick exchanges O(partitions × nCells × k) rows.
     * Output: `(cell, rank 1-based, vec_id)`. */
   def diversitySample(emb0: DataFrame, kPerCell: Int, nCells: Int,
       iters: Int = 2, sampleMod: Int = 7, salt: String = ""): DataFrame =
@@ -1561,6 +1434,21 @@ object Similarity {
       VectorExpressions.signedProject(col(vecCol), signs, outDims).as("proj"))
   }
 
+  /** SemDeDup-style semantic near-dup pairs (Abbas et al. 2023,
+    * arXiv:2303.09540): assign every vector to a k-means cell with the
+    * same deterministic sampled fit the IVF index uses ([[buildIvf]]),
+    * then compare pairs ONLY within a cell — cost is Σ|cell|², i.e.
+    * ~n²/k for balanced cells, never the n² all-pairs space. Recall is
+    * intentionally cluster-local (the SemDeDup trade): near-dups split
+    * across a cell boundary are missed, which the paper accepts in
+    * exchange for scalability; [[embeddingNearDupPairs]] is the
+    * exact-recall alternative when that guarantee matters.
+    *
+    * 100 TB shape: the fit touches a bounded sample (driver holds
+    * nCells×d longs), assignment is one per-row map over the corpus, and the
+    * within-cell self-join is an equi-join on `cell` — size the cell
+    * count so n/nCells vectors fit a task. Output is exact micro-unit
+    * cosine pairs, reproducible across engines. */
   def semanticNearDupPairs(emb0: DataFrame, nCells: Int, minCosE6: Long,
       iters: Int = 2, sampleMod: Int = 7): DataFrame = {
     // fit + within-cell pair scan on one static scope, see bruteForceKnn

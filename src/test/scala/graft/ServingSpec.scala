@@ -86,6 +86,33 @@ class ServingSpec extends SparkTestBase {
     assert(served.nonEmpty && served.toSeq === adhoc.toSeq)
   }
 
+  test("IVF, PQ and IVF-PQ share one k-means fit: same centroids, same cells") {
+    import graft.operators.Similarity
+    val emb = Tables.embeddings(spark, dir)
+    // the s20 base drops vec_id 9, so its init ids are not contiguous and
+    // cells must map back from book positions to cids
+    val filtered = emb.filter(pmod(col("vec_id"), lit(10)) =!= 9)
+    val (nCells, iters, sampleMod) = (16, 2, 7)
+    def frameRows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(col("cid")).collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toSeq
+    for (corpus <- Seq(emb, filtered)) {
+      val km = frameRows(Similarity.kmeansCentroids(corpus, nCells, iters, sampleMod))
+      val ivf = Similarity.buildIvf(corpus, nCells, iters, sampleMod)
+      val pq = Similarity.buildIvfPq(corpus, nCells = nCells, iters = iters,
+        sampleMod = sampleMod)
+      val pqCent = pq.cent.map { case (cid, v) => cid -> v.toSeq }
+      assert(pqCent.nonEmpty)
+      assert(km === pqCent)
+      assert(frameRows(ivf.centroids) === pqCent)
+      val cells = ivf.assigned.select(col("vec_id"), col("cell"))
+      val codeCells = pq.codes.select(col("vec_id"), col("cell"))
+      assert(cells.count() === corpus.count())
+      assert(cells.exceptAll(codeCells).isEmpty && codeCells.exceptAll(cells).isEmpty)
+    }
+    assert(frameRows(Similarity.kmeansCentroids(filtered, nCells, iters, sampleMod))
+      .map(_._1) === (0 until nCells).filter(_ != 9))
+  }
+
   test("extendIvfPq equals encoding the union under the frozen artifacts") {
     import graft.operators.Similarity
     val emb = Tables.embeddings(spark, dir)
