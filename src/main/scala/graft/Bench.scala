@@ -2,14 +2,17 @@ package graft
 
 import scala.jdk.CollectionConverters._
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** The timing harness: the board (`main`), the per-job census that a
   * `SPARK_GRAFT_BENCH_ONLY` run prints, and the core that [[ScaleCurve]]
   * times through. One session builder ([[session]]), one job count
   * ([[jobsDuring]]: a per-rep job group closed by a marker job) and one
-  * measure loop ([[Timer]]: reps, median, cal probe, leak sweep, GC).
+  * measure loop ([[Timer]]: reps, median, cal probe, per-rep leak sweep,
+  * codegen compiles, GC).
   */
 object Bench {
 
@@ -82,6 +85,10 @@ object Bench {
     s
   }
 
+  /** Generated classes this JVM has compiled so far: Janino runs once per
+    * codegen cache miss, on the driver and on local executors alike. */
+  def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Run a frame to the noop sink: every output column is materialized (a
     * bare count() would let Catalyst prune the projections). */
   def noopWrite(df: DataFrame): Unit = df.write.mode("overwrite").format("noop").save()
@@ -92,8 +99,9 @@ object Bench {
   final case class Census(jobs: Seq[String], stages: Seq[String])
 
   /** Marks a job line whose result stage names no `graft.` frame: a
-    * broadcast build runs on the exchange thread pool, so the line lists
-    * the `graft.` frames of the job's other stages instead. */
+    * broadcast build runs on the exchange thread pool, so the line names
+    * the first `graft.` frame of the SQL execution that planned it, or
+    * else the `graft.` frames of the job's other stages. */
   val AnyStageFrames = "[any stage]"
 
   private val MarkerKey = "graft.bench.marker"
@@ -107,14 +115,23 @@ object Bench {
     val jobs = new java.util.concurrent.ConcurrentSkipListMap[Int, String]()
     val stages = new java.util.concurrent.ConcurrentSkipListMap[Int, String]()
     val groupStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    // SQL execution id -> first `graft.` frame of its call site; the
+    // execution-start event precedes its jobs on the (ordered) bus
+    val execFrames = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val markerSeen = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          graftFrame(x.details).foreach(execFrames.put(x.executionId.toString, _))
+        case _ =>
+      }
       override def onJobStart(j: SparkListenerJobStart): Unit =
         Option(j.properties).filter(_.getProperty("spark.jobGroup.id") == group).foreach { p =>
           if (p.getProperty(MarkerKey) != null) markerSeen.countDown()
           else {
             j.stageInfos.foreach(s => groupStages.add(s.stageId))
-            jobs.put(j.jobId, jobLine(j))
+            val exec = Option(p.getProperty("spark.sql.execution.id")).flatMap(id => Option(execFrames.get(id)))
+            jobs.put(j.jobId, jobLine(j, exec))
           }
         }
       // a stage belongs to the group when one of the group's jobs listed it
@@ -138,16 +155,22 @@ object Bench {
     }
   }
 
-  private def graftFrame(s: StageInfo): Option[String] =
-    Option(s.details).flatMap(_.linesIterator.find(_.contains("graft.")).map(_.trim))
+  /** The first `graft.` frame of a call site's long form. */
+  private def graftFrame(callSite: String): Option[String] =
+    Option(callSite).flatMap(_.linesIterator.find(_.contains("graft.")).map(_.trim))
 
   // total on any input: a listener exception is swallowed by the bus and
   // would drop the job from the count
-  private def jobLine(j: SparkListenerJobStart): String = {
+  private def jobLine(j: SparkListenerJobStart, execFrame: Option[String]): String = {
     val stages = j.stageInfos.sortBy(_.stageId)
-    // the result stage (last) carries the action's call site
-    val frame = stages.lastOption.flatMap(graftFrame).getOrElse(
-      stages.flatMap(graftFrame).distinct.take(2).mkString(s"$AnyStageFrames ", " | ", ""))
+    // the result stage (last) carries the action's call site; a broadcast
+    // build's does not, so name the execution that planned it, or else the
+    // job's other stages
+    val frame = stages.lastOption.flatMap(s => graftFrame(s.details)).getOrElse {
+      val planners = execFrame.map(Seq(_))
+        .getOrElse(stages.flatMap(s => graftFrame(s.details)).distinct.take(2))
+      planners.mkString(s"$AnyStageFrames ", " | ", "")
+    }
     f"  job ${j.jobId}%4d stages=${stages.size}%2d  ${stages.lastOption.fold("")(_.name)}%-40s $frame"
   }
 
@@ -156,16 +179,26 @@ object Bench {
     // taskMetrics is null for a stage that never ran a task
     val runMs = Option(s.taskMetrics).map(_.executorRunTime).getOrElse(-1L)
     f"  stage ${s.stageId}%4d wall=$wallMs%5d ms run=$runMs%6d ms tasks=${s.numTasks}%3d  " +
-      f"${s.name.take(70)}%-70s ${graftFrame(s).getOrElse("")}"
+      f"${s.name.take(70)}%-70s ${graftFrame(s.details).getOrElse("")}"
   }
 
-  /** One query's timed reps: median wall seconds, driver jobs per rep (the
-    * floor of the mean), the median cal probe, how many reps threw, and the
-    * last rep's census. */
-  final case class Timing(median: Double, jobs: Long, cal: Double, failed: Int, census: Census)
+  /** One query's timed reps: median wall seconds, driver jobs of each rep,
+    * the median cal probe, how many reps threw, the most classes one rep
+    * compiled, and the last rep's census. */
+  final case class Timing(median: Double, repJobs: Seq[Long], cal: Double, failed: Int,
+      compiles: Long, census: Census) {
+    /** Driver jobs per rep: the floor of the mean. */
+    def jobs: Long = repJobs.sum / repJobs.size
+  }
+
+  /** One timed rep: wall seconds, cal probe, success, census, classes
+    * compiled, and the leak sweep's lines. */
+  private final case class Rep(sec: Double, cal: Double, ok: Boolean, census: Census,
+      compiles: Long, leaked: Seq[String])
 
   /** The measure loop over one session. `census` prints each measured
-    * query's last-rep census and leaked RDDs under its stderr line. */
+    * query's last-rep census and the RDDs its leakiest rep left persisted
+    * under its stderr line. */
   final class Timer(spark: SparkSession, reps: Int, census: Boolean) {
     private val sc = spark.sparkContext
     // one job exactly under any SQL posture: an RDD count over one
@@ -215,25 +248,32 @@ object Bench {
         .asScala.map(_.getCollectionTime).sum
 
     /** The untimed warm pass: each query once, each call in its own `try`,
-      * so one failure skips nothing after it. It pays the one-time JIT,
-      * codegen, scope-clone and served-artifact costs that would otherwise
-      * land in a query's first rep. True when every call succeeded. */
+      * so one failure skips nothing after it, and each followed by the leak
+      * sweep, as a timed rep is. It pays the one-time JIT, codegen,
+      * scope-clone and served-artifact costs that would otherwise land in
+      * a query's first rep, and prints how many classes it compiled. True
+      * when every call succeeded. */
     def warm(queries: Seq[(String, () => DataFrame)]): Boolean = {
+      val compiled0 = compiles
       val ok = queries.map { case (name, q) =>
-        try { noopWrite(q()); true }
+        val ok = try { noopWrite(q()); true }
         catch { case e: Throwable =>
           System.err.println(s"[bench] warmup $name failed: ${e.getMessage}"); false }
+        sweepLeaks()
+        ok
       }.forall(identity)
-      sweepLeaks()
+      System.err.println(s"[bench] warmup queries=${queries.size} compiles=${compiles - compiled0}")
       ok
     }
 
     /** `reps` back-to-back timed runs of `q` to the noop sink, each under
-      * its own job group, then the leak sweep; prints one stderr line. */
+      * its own job group and each followed by the leak sweep, so no rep
+      * reads blocks an earlier rep left cached; prints one stderr line. */
     def measure(name: String, q: () => DataFrame, tag: String): Timing = {
       val gc0 = gcMillis()
       val runs = (1 to reps).map { _ =>
         val cal = calProbe()
+        val compiled0 = compiles
         val ((sec, ok), c) = jobsDuring(sc) {
           val t0 = System.nanoTime()
           val ok = try { noopWrite(q()); true }
@@ -241,13 +281,14 @@ object Bench {
             System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
           ((System.nanoTime() - t0) / 1e9, ok)
         }
-        (sec, cal, ok, c)
+        Rep(sec, cal, ok, c, compiles - compiled0, sweepLeaks())
       }
-      val leaked = sweepLeaks()
-      val t = Timing(median(runs.map(_._1)), runs.map(_._4.jobs.size.toLong).sum / reps,
-        median(runs.map(_._2)), runs.count(!_._3), runs.last._4)
+      val leaked = runs.map(_.leaked).maxBy(_.size)
+      val t = Timing(median(runs.map(_.sec)), runs.map(_.census.jobs.size.toLong),
+        median(runs.map(_.cal)), runs.count(!_.ok), runs.map(_.compiles).max, runs.last.census)
       System.err.println(f"[bench] $tag%-5s $name%-28s median=${t.median}%7.3f " +
-        f"jobs=${t.jobs}%3d cal=${t.cal}%6.1f leaked_rdds=${leaked.size}%3d gc_ms=${gcMillis() - gc0}%5d")
+        f"jobs=${t.jobs}%3d compiles=${t.compiles}%4d cal=${t.cal}%6.1f " +
+        f"leaked_rdds=${leaked.size}%3d gc_ms=${gcMillis() - gc0}%5d")
       if (census) (t.census.jobs ++ t.census.stages ++ leaked).foreach(System.err.println)
       t
     }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.slf4j.LoggerFactory
 import graft.streaming.LocalCheckpointFileManager
 
 /** Opinionated session builder for the engine — the configuration a
@@ -24,6 +25,23 @@ import graft.streaming.LocalCheckpointFileManager
   *     state store files, state checksums and file-sink logs. It leaves
   *     every non-`file:` scheme (HDFS, S3, ABFS) to the manager Spark
   *     itself would choose.
+  *   - a codegen cache that holds graft's whole query surface
+  *     (`spark.sql.codegen.cache.maxEntries` = [[CodegenCacheEntries]]):
+  *     Spark keeps compiled whole-stage classes, projections and predicates
+  *     in an LRU cache of 100 entries by default, and one pass over the 14
+  *     queries of the benchmark board alone generates about 260 classes. At
+  *     100 the cache thrashes and every call recompiles its code in Janino;
+  *     at this size each generated class compiles once per JVM. The size
+  *     rule: the distinct classes one pass over all 173 queries compiles
+  *     (2,652 at sf0.01, 2,664 at sf0.1; the larger counts), with at least
+  *     1.5× headroom, rounded up to a power of two. The cache is bounded by
+  *     entry count, so its memory is bounded too: about 9 KB of metaspace
+  *     per entry, 181 → 205 MB committed over the full surface at sf0.01.
+  *     A stream that compiles a new class on every trigger fills the cache
+  *     and then evicts; it cannot grow past the bound. The key is a static
+  *     conf that Spark reads once per JVM, when it first compiles anything,
+  *     so `create` warns when it gets back a session built without this
+  *     value.
   *
   * `spark.sql.files.maxPartitionBytes` (default 128 MB) is deliberately
   * untouched: with codegen'd per-row kernels the scan is CPU-balanced at
@@ -36,6 +54,16 @@ object GraftSession {
     * class from; `builder` sets it to `LocalCheckpointFileManager`. */
   val CheckpointFileManagerConf = "spark.sql.streaming.checkpointFileManagerClass"
 
+  /** The static conf that sizes Spark's generated-class cache; `builder`
+    * sets it to [[CodegenCacheEntries]]. */
+  val CodegenCacheConf = "spark.sql.codegen.cache.maxEntries"
+
+  /** Distinct generated classes of one pass over every query, with at least
+    * 1.5× headroom, rounded up to a power of two (see the object doc). */
+  val CodegenCacheEntries = 4096
+
+  private val log = LoggerFactory.getLogger(getClass)
+
   def builder(appName: String = "graft", master: Option[String] = None,
       shufflePartitions: Option[Int] = None,
       rocksDbState: Boolean = false): SparkSession.Builder = {
@@ -46,6 +74,7 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config(CheckpointFileManagerConf, classOf[LocalCheckpointFileManager].getName)
+      .config(CodegenCacheConf, CodegenCacheEntries.toString)
     // Streaming state at scale: the default HDFSBackedStateStoreProvider
     // keeps every key in executor heap — fine for the test-sized topologies
     // here, an OOM source once latestPerKey/streamingLshNearDup state grows
@@ -66,6 +95,10 @@ object GraftSession {
   def create(appName: String = "graft", master: Option[String] = None,
       shufflePartitions: Option[Int] = None): SparkSession = {
     val s = builder(appName, master, shufflePartitions).getOrCreate()
+    // an existing session keeps the static confs it was built with
+    if (s.conf.get(CodegenCacheConf) != CodegenCacheEntries.toString)
+      log.warn(s"$CodegenCacheConf is ${s.conf.get(CodegenCacheConf)} on the existing session, " +
+        s"not graft's $CodegenCacheEntries: generated classes recompile once the cache fills")
     GraftExtensions.register(s)
     s
   }

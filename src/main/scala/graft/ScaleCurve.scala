@@ -245,16 +245,26 @@ object ScaleCurve {
       // the batch touches the release only through digest/band equi-joins
       // and the candidate-hit text sliver
       "c04_curate_delta_served" -> {
-        // ONE Release per factor, shared by all three reps (a per-rep
-        // releaseArtifacts call would rebuild the lazily-persisted frames
-        // every rep and measure the release cut three times over)
+        // ONE Release per factor, shared by all three reps and saved as
+        // served tables, as c04 on the board does: the harness drops every
+        // cached block after each rep, so lazily-persisted release frames
+        // would be re-derived, and the release cut measured, every rep
         lazy val servedRel = {
           val ev = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
             .select((col("doc_id") + lit(2000L * Shift)).as("doc_id"), col("text"))
           val corpus = docs.withColumn("source", lit("web"))
-          graft.pipelines.CurationPipeline.releaseArtifacts(
+          val rel = graft.pipelines.CurationPipeline.releaseArtifacts(
             corpus, graft.pipelines.CurationPipeline.curate(corpus, ev,
               redactPii = false, detachBound = Some(1 << 24)))
+          val t = s"graft_sc_crel_x$f"
+          graft.queries.Serving.ensureServedTable(spark, t, Seq(s"${t}_bands", s"${t}_base")) {
+            rel.digests.write.saveAsTable(t)
+            rel.bands.write.saveAsTable(s"${t}_bands")
+            rel.shardBase.write.saveAsTable(s"${t}_base")
+          }
+          rel.unpersist()
+          rel.copy(digests = spark.table(t), bands = spark.table(s"${t}_bands"),
+            shardBase = spark.table(s"${t}_base"))
         }
         () => {
           val batch = docs.filter(col("doc_id") < 250)

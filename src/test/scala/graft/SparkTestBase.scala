@@ -49,9 +49,10 @@ object SparkTestBase {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // the checkpoint manager every GraftSession runs its streams on
+      // the checkpoint manager and codegen cache every GraftSession runs on
       .config(GraftSession.CheckpointFileManagerConf,
         classOf[graft.streaming.LocalCheckpointFileManager].getName)
+      .config(GraftSession.CodegenCacheConf, GraftSession.CodegenCacheEntries.toString)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()
