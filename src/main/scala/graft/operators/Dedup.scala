@@ -346,10 +346,12 @@ object Dedup {
     * singleton anti-join) bound to the fixpoint's static scope clone —
     * its own consumption plans statically, which is right for the
     * |pairs|-sized label frame. A caller composing it into a further
-    * corpus-scale adaptive plan should persist + re-root it on its own
-    * session first (`spark.createDataFrame(df.rdd, df.schema)` — what
-    * [[graft.pipelines.CurationPipeline]] effectively does by persisting
-    * and consuming it inside its own scope).
+    * corpus-scale adaptive plan should re-root it on its own session
+    * first: `PlanScope.cut(PlanScope.rebind(df, spark))` (both in
+    * [[graft.ops.PlanScope]]), plan from the cut's `flat` and call its
+    * `release()` after the consuming action
+    * ([[graft.pipelines.CurationPipeline]] cuts it the same way, inside
+    * its own scope).
     */
   def components(
       docs0: DataFrame,
@@ -383,16 +385,21 @@ object Dedup {
     graft.ops.PlanScope.isolatedStatic(docs0.sparkSession) { scoped =>
     val docs = graft.ops.PlanScope.rebind(docs0, scoped)
     val pairs = graft.ops.PlanScope.rebind(pairs0, scoped)
-    // Local lineage cuts are lazy persists, not eager checkpoints: the
-    // per-round convergence count is then the ONLY driver-blocking action
-    // each round (it populates the cache as it runs), instead of a
-    // checkpoint job + a probe job. The cached InMemoryRelation bounds plan
-    // growth exactly like a checkpoint; on block loss Spark recomputes from
-    // the previous cached round. The reliable path keeps eager durable
-    // checkpoints — there, surviving executor loss is the point.
-    def cut(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint(true)
-      else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // One stage boundary per round: the local path takes a PlanScope.cut
+    // (a lazy persist plus a flat one-leaf face), not an eager
+    // checkpoint, so the per-round convergence count is the ONLY
+    // driver-blocking action each round (it fills the blocks as it runs)
+    // instead of a checkpoint job + a probe job. The flat face keeps every
+    // round's analyzed plan one leaf deep (cached adaptive plans nested
+    // round-in-round send AQE's plan-update walk exponential past ~11
+    // levels, measured in the Graphs loops), keeps the round's
+    // partitioning on doc_id, and keeps RDD lineage: on block loss Spark
+    // recomputes from the previous round. The reliable path keeps eager
+    // durable checkpoints — there, surviving executor loss is the point.
+    // Each boundary is (frame the next stage reads, release hook).
+    def cut(df: DataFrame): (DataFrame, () => Unit) =
+      if (reliableCheckpoint) (df.checkpoint(true), () => ())
+      else { val c = graft.ops.PlanScope.cut(df); (c.flat, c.release) }
     // hash edges by dst (the per-round join key) before checkpointing, at the session's shuffle
     // partitioning — the caller sized that for the corpus; a small pair
     // graph just runs light tasks per round (cheaper than the per-round
@@ -406,17 +413,15 @@ object Dedup {
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .repartition(col("dst")) // the per-round join key
-    val edgesChk = cut(edges)
+    val (edgesChk, releaseEdges) = cut(edges)
     // propagate only over the pair graph's vertices — in a dedup corpus the
     // vast majority of docs are singletons and never need a round trip.
     // Initial labels fuse round 1: each vertex starts at min(self, direct
     // neighbors), one groupBy instead of a vertices-distinct plus a full
     // propagation round.
-    val labels0 = cut(edgesChk
+    var (labels, releasePrev) = cut(edgesChk
       .groupBy(col("src").as("doc_id"))
       .agg(least(min(col("dst")), col("src")).as("component")))
-    var labels = labels0
-    var prevRound: Option[DataFrame] = Some(labels0)
     var round = 0
     var converged = false
     while (!converged && round < maxRounds) {
@@ -426,7 +431,7 @@ object Dedup {
         .agg(min(col("component")).as("nbr_min"))
       // fold the convergence test into the same pass: a row changed iff a
       // neighbor offered a smaller label
-      val next = cut(labels.as("l")
+      val (next, releaseNext) = cut(labels.as("l")
         .join(propagated.as("p"), Seq("doc_id"), "left_outer")
         .select(col("doc_id"),
           least(col("component"), coalesce(col("nbr_min"), col("component"))).as("component"),
@@ -435,19 +440,10 @@ object Dedup {
       // whole round into the cache/checkpoint and decides convergence
       converged = next.filter(col("__changed")).count() == 0L
       // the previous round's cache is dead once this round is materialized
-      prevRound.foreach(df => if (!reliableCheckpoint) df.unpersist(blocking = false))
-      prevRound = Some(next)
+      releasePrev()
+      releasePrev = releaseNext
       labels = next.drop("__changed")
       round += 1
-      // Every 4th round on the cached-persist path, re-root labels as a
-      // flat scan over the round's cached blocks (RDD lineage intact for
-      // recovery). Cached ADAPTIVE plans nested round-in-round send AQE's
-      // plan-update walk exponential past ~11 levels (measured in the
-      // Graphs loops — 80 s/round by depth 12, OOM by 15); deep label
-      // graphs hit the same wall without this. The reliable-checkpoint
-      // path already truncates to a LogicalRDD per round.
-      if (round % 4 == 0 && !reliableCheckpoint)
-        labels = labels.sparkSession.createDataFrame(labels.rdd, labels.schema)
     }
     // truncated fixpoint = WRONG labels = silently under-deduped corpus
     // (a chain of diameter > maxRounds keeps several "canonical" docs in
@@ -458,10 +454,8 @@ object Dedup {
       // session recovering from this throw must not keep the dead edge
       // cache and final-round labels resident (reliable checkpoints are
       // managed by the checkpoint dir, nothing to unpersist)
-      if (!reliableCheckpoint) {
-        edgesChk.unpersist(blocking = false)
-        prevRound.foreach(_.unpersist(blocking = false))
-      }
+      releaseEdges()
+      releasePrev()
       throw new IllegalArgumentException(
         s"requirement failed: components did not converge within maxRounds=$maxRounds — " +
           "the pair graph has a min-label chain longer than the round budget; raise " +
@@ -471,16 +465,13 @@ object Dedup {
     // materialized); only the FINAL round's cache stays pinned for the
     // caller's consuming action — losing it recomputes from the pair
     // pipeline, which is correct, just slower
-    if (!reliableCheckpoint) edgesChk.unpersist(blocking = false)
+    releaseEdges()
     // the final labels carry exactly the pair-graph vertex set (each round
     // preserves all label rows), so singletons anti-join against it
     val singletons = docs.select(col("doc_id"))
       .join(labels.select(col("doc_id")), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("doc_id").as("component"))
-    val finalCut = prevRound
-    (labels.union(singletons),
-      () => if (!reliableCheckpoint)
-        finalCut.foreach(_.unpersist(blocking = false)))
+    (labels.union(singletons), releasePrev)
     }
   }
 
@@ -707,11 +698,28 @@ object Dedup {
     * params: a missing digest or band row silently admits a duplicate
     * (the same build-over-the-exact-set contract as a persisted Bloom
     * blob). `corpus` itself is only consulted for the text of
-    * candidate-hit docs. */
+    * candidate-hit docs. The batch's rejected ids are collected to the
+    * driver inside the call (at most [[MaxRejectedIds]], else the call
+    * fails loudly), so nothing of the call stays cached. */
   def dedupDeltaWith(corpus0: DataFrame, digests0: DataFrame, bands0: DataFrame,
       newDocs0: DataFrame, shingleN: Int = 3,
       numHashes: Int = 12, rowsPerBand: Int = 3,
       minJaccardPermille: Int = 800): DataFrame =
+    dedupDeltaWithImpl(corpus0, digests0, bands0, newDocs0, shingleN, numHashes,
+      rowsPerBand, minJaccardPermille, MaxRejectedIds)
+
+  /** Most ids one [[dedupDeltaWith]] batch may reject. The rejected set is
+    * O(batch) and is detached to the driver as a LocalRelation (one `long`
+    * or id per row, ~100 bytes of driver heap each): 2^20 ids is about
+    * 100 MB. A batch that rejects more is a bulk load, not a serving
+    * batch; split it. */
+  private[graft] val MaxRejectedIds = 1 << 20
+
+  /** The cap rides as a parameter so the spec can drive the overflow on a
+    * tiny fixture; [[dedupDeltaWith]] always passes [[MaxRejectedIds]]. */
+  private[graft] def dedupDeltaWithImpl(corpus0: DataFrame, digests0: DataFrame,
+      bands0: DataFrame, newDocs0: DataFrame, shingleN: Int, numHashes: Int,
+      rowsPerBand: Int, minJaccardPermille: Int, rejectCap: Int): DataFrame =
     // Serving-shaped batch: the same known plan re-executes per ingestion
     // call, so AQE re-planning buys nothing and charges a driver job per
     // exchange per batch (measured: 45 → 4 driver jobs on the board
@@ -724,8 +732,13 @@ object Dedup {
     // parallel, and a concurrent ad-hoc query on the caller's session
     // plans under AQE as usual. Persisted corpus-side frames (the
     // steady-state digests/bands) cross in as cached-block scans; derived
-    // ones re-plan statically in the scope.
-    graft.ops.PlanScope.isolatedStatic(newDocs0.sparkSession) { scoped =>
+    // ones re-plan statically in the scope. initialNumPartitions: the
+    // rejected-id detach below is a `limit(cap+1)` collect, which starts
+    // at full width so it is ONE job (same conf as curateDelta's scope,
+    // so a curateDelta call runs this in its own clone).
+    graft.ops.PlanScope.isolated(newDocs0.sparkSession,
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.limit.initialNumPartitions" -> "100000") { scoped =>
     val corpus = graft.ops.PlanScope.rebind(corpus0, scoped)
     val digests = graft.ops.PlanScope.rebind(digests0, scoped)
     val bands = graft.ops.PlanScope.rebind(bands0, scoped)
@@ -821,18 +834,17 @@ object Dedup {
         .join(involved, Seq("doc_id"), "left_semi"), shingleN)
     val rejectedNear = verifyJaccard(cand, sets, minJaccardPermille)
       .select(col("doc_b").as("doc_id"))
-    // Materialize the O(batch)-sized rejected-id frame eagerly and truncate
-    // its lineage, then drop the pinned pair cache: the LSH band joins run
-    // exactly once per batch, and nothing stays registered in the
-    // CacheManager across repeated ingestion calls (the checkpoint blocks
-    // are RDD-level, reclaimed by the ContextCleaner once the returned
-    // frame is unreferenced). localCheckpoint trades executor-loss
-    // recovery for that cleanup — the right trade for a per-batch serving
-    // call whose whole lineage is one batch anyway. The id-contract
-    // guard is a 0-row-or-raise union branch on this same action
-    // (assert_true returns null on pass → the row filters away; raises
-    // on violation), so the whole serving pass is ONE job and the guard
-    // fires even when no duplicate was rejected.
+    // Detach the O(batch)-sized rejected-id frame to the driver in ONE
+    // job, then drop the pinned pair cache: the LSH band joins run
+    // exactly once per batch, and nothing stays registered across
+    // repeated ingestion calls — neither in the CacheManager nor as
+    // RDD blocks (the rows rebuild as a plan-free LocalRelation). The
+    // pair cache is released on every exit, a failed or overflowing
+    // collect included. The id-contract guard is a 0-row-or-raise union
+    // branch on this same action (assert_true returns null on pass →
+    // the row filters away; raises on violation), so the whole serving
+    // pass is ONE job and the guard fires even when no duplicate was
+    // rejected.
     // Spark-version assumption, pinned here and by NorthStarSpec's
     // "id contract fires with zero rejected docs" regression test: this
     // relies on Catalyst NOT constant-folding IsNotNull over assert_true's
@@ -843,17 +855,21 @@ object Dedup {
     // idGuard.head() at that point rather than weakening the contract.
     val guardBranch = idGuard.filter(col("__guard").isNotNull)
       .select(lit(0L).as("doc_id"))
-    val rejected = exactVsCorpus.unionByName(exactWithin)
-      .unionByName(rejectedNear).unionByName(guardBranch).distinct()
-      .localCheckpoint()
-    cand.unpersist()
-    // NOT broadcast(rejected): measured r16 — hinting the O(batch)
-    // checkpointed frame into a BroadcastHashJoin anti added a broadcast-
-    // build job per batch and read WORSE at the healthy floor (10-rep
-    // BENCH_ONLY: d12 1.72 -> 2.08 s, d09/d11 +1 job each). The SMJ's
-    // sort over two batch-sized localCheckpoint scans is cheaper than the
-    // extra dispatch; at scale AQE converts it when the stats justify it.
-    newDocs.join(rejected, Seq("doc_id"), "left_anti")
+    val rejected =
+      try graft.ops.Detach.toLocal(
+          exactVsCorpus.unionByName(exactWithin)
+            .unionByName(rejectedNear).unionByName(guardBranch).distinct(),
+          rejectCap, scoped,
+          s"dedupDelta: the batch rejects more than $rejectCap ids — split it " +
+            "into smaller ingestion batches")(())
+      finally cand.unpersist()
+    // NOT a broadcast: measured r16 — hinting the O(batch) rejected frame
+    // into a BroadcastHashJoin anti added a broadcast-build job per batch
+    // and read WORSE at the healthy floor (10-rep BENCH_ONLY: d12 1.72 ->
+    // 2.08 s, d09/d11 +1 job each). A LocalRelation's exact size estimate
+    // would pick that broadcast on its own, so the sort-merge join is
+    // pinned by hint.
+    newDocs.join(rejected.hint("merge"), Seq("doc_id"), "left_anti")
   }
 
   /** Line-level (paragraph-level) dedup, the CCNet/RefinedWeb boilerplate

@@ -87,11 +87,11 @@ object Graphs {
     * shuffled to the edge partitioning (join on src) and contributions
     * aggregated by dst (map-side partial sums). Ranks are |V|-sized,
     * edges |E|-sized; nothing corpus-sized is ever collected. Lineage is
-    * cut ([[Cuts]]) every few rounds — the components fixpoint
-    * discipline (Dedup.scala) at the CutEvery cadence — so every action
-    * plans at bounded depth, executor loss replays at most CutEvery
-    * rounds, and deep iteration counts stay linear-cost while shallow
-    * runs pay a single materialization: the exit's. The returned frame is
+    * cut ([[Cuts]], the [[graft.ops.PlanScope.cut]] boundary
+    * `Dedup.components` takes every round) at the CutEvery cadence, so
+    * every action plans at bounded depth, executor loss replays at most
+    * CutEvery rounds, and deep iteration counts stay linear-cost while
+    * shallow runs pay a single materialization: the exit's. The returned frame is
     * persisted and bound to the caller's session (see the object doc).
     *
     * @param edges (src: long-castable, dst: long-castable) directed edges
@@ -102,33 +102,20 @@ object Graphs {
       edges.select(col("src"), col("dst")).distinct().withColumn("w", lit(1L)),
       iters, dampE2)
 
-  /** Re-root a persisted, already-materialized frame as a flat scan over
-    * its cached blocks. The logical plan downstream rounds see is one
-    * node, while the RDD keeps its full lineage (a lost cached block
-    * recomputes through the chain, unlike a localCheckpoint truncation).
-    * Without this, iterative loops nest each round's cached ADAPTIVE plan
-    * inside the next, and AQE's per-execution plan-update walk
-    * over that nesting goes exponential — measured: rounds 1-10 at
-    * 0.3-0.7 s each, round 12 at 80 s, OOM by round 15, on a SIX-node
-    * graph. The Row↔InternalRow hop this adds touches |V|-sized frames
-    * only. */
-  private def flatView(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(df.rdd, df.schema)
-
-  /** A loop's lineage cuts: persist + one count + release the previous
-    * cut + [[flatView]] re-root — the Dedup.components fixpoint
-    * discipline. [[held]] is the cut still pinned, for the exit's
-    * release list. */
+  /** A loop's lineage cuts through [[graft.ops.PlanScope.cut]]: cut,
+    * count the pinned frame (which fills its blocks), release the previous
+    * cut, and hand downstream rounds the flat face. [[held]] is the pinned
+    * frame of the cut still held, for the exit's release list. */
   private final class Cuts {
-    private var last: Option[DataFrame] = None
+    private var last: Option[PlanScope.Cut] = None
 
-    /** Cut `next` now: (flat re-root over its cached blocks, row count). */
-    def apply(next: DataFrame): (DataFrame, Long) = {
-      val cut = next.persist(StorageLevel.MEMORY_AND_DISK)
-      val n = cut.count()
-      last.foreach(_.unpersist(blocking = false))
+    /** Cut `next` now: (the cut, row count). */
+    def apply(next: DataFrame): (PlanScope.Cut, Long) = {
+      val cut = PlanScope.cut(next)
+      val n = cut.pinned.count()
+      last.foreach(_.release())
       last = Some(cut)
-      (flatView(cut), n)
+      (cut, n)
     }
 
     /** Cut at round `r` of `rounds` on the CutEvery cadence, else pass
@@ -138,9 +125,9 @@ object Graphs {
       * full-cadence suffix lazy, still far below the AQE-nesting onset,
       * and loops run AQE-off). */
     def atCadence(r: Int, rounds: Int, next: DataFrame): DataFrame =
-      if (r % CutEvery == 0 && r != rounds) apply(next)._1 else next
+      if (r % CutEvery == 0 && r != rounds) apply(next)._1.flat else next
 
-    def held: Seq[DataFrame] = last.toSeq
+    def held: Seq[DataFrame] = last.map(_.pinned).toSeq
   }
 
   /** Exit boundary of every loop operator (see the object doc): persist
@@ -174,8 +161,8 @@ object Graphs {
     * (identical action count to a cut-at-the-end-only loop), while deep
     * runs keep every action's plan at depth ≤ CutEvery, far below the
     * measured AQE-nesting blowup onset (~11 nested rounds; see
-    * [[flatView]]). Executor loss replays at most CutEvery rounds from
-    * the previous cut's cached blocks. */
+    * [[graft.ops.PlanScope.cut]]). Executor loss replays at most
+    * CutEvery rounds from the previous cut's cached blocks. */
   private val CutEvery = 4
 
   /** Shuffle-partition count for an iterative loop whose per-round frames
@@ -271,9 +258,10 @@ object Graphs {
     * top-k report) — [[detachSmall]], which copies the rows into a
     * plan-free LocalRelation and releases immediately, leaving zero
     * registered blocks. Callers that feed the result into a further
-    * iterative loop should re-root it themselves
-    * (`createDataFrame(df.rdd, df.schema)`) to keep AQE plan nesting at
-    * depth 1. */
+    * iterative loop should re-root it with
+    * `graft.ops.PlanScope.cut(result).flat` to keep AQE plan nesting at
+    * depth 1: the result is already persisted, so the cut adds no cache
+    * entry and `result.unpersist()` still releases it. */
   def detachSmall(df: DataFrame, maxRows: Int = 1 << 20): DataFrame =
     graft.ops.Detach.toLocal(df, maxRows, df.sparkSession,
       s"detachSmall: result exceeds $maxRows rows — keep the persisted frame " +
@@ -574,9 +562,9 @@ object Graphs {
         // flat re-root at the CutEvery cadence: settled stays a union of
         // bounded-depth scans over the cached frontiers instead of nesting
         // every round's adaptive plan inside the next (the exponential AQE
-        // walk — see flatView); shallow searches skip the Row↔InternalRow
-        // hop entirely
-        val freshFlat = if (round % CutEvery == 0) flatView(fresh) else fresh
+        // walk — see PlanScope.cut). `fresh` is already persisted, so the
+        // cut adds no cache entry; `spent` releases it at the exit.
+        val freshFlat = if (round % CutEvery == 0) PlanScope.cut(fresh).flat else fresh
         settled = settled.unionByName(freshFlat)
         frontier = freshFlat
         round += 1
@@ -788,7 +776,7 @@ object Graphs {
           converged = nAlive == prevAlive
           if (!converged) {
             prevAlive = nAlive
-            deg = peel(alive.select(col("node")))
+            deg = peel(alive.flat.select(col("node")))
           }
         } else
           // un-counted stride round: peel lazily — the filter chains into
@@ -797,10 +785,12 @@ object Graphs {
           // deduped by ReuseExchange)
           deg = peel(deg.filter(col("deg") >= k).select(col("node")))
       }
-      // converged: the last cut, already persisted and counted, IS the
-      // result (handoff passes it through). maxRounds exhausted: one more
-      // LAZY filter over the last recompute, matching the oracle's final
-      // ≥ k cut — the exit count materializes it.
+      // converged: the last cut's PINNED frame, already persisted and
+      // counted, IS the result (handoff skips its count only for a
+      // persisted frame; the flat face would cost one more job).
+      // maxRounds exhausted: one more LAZY filter over the last
+      // recompute, matching the oracle's final ≥ k cut — the exit count
+      // materializes it.
       if (converged) (cuts.held.head, Seq(dir))
       else (deg.filter(col("deg") >= k), dir +: cuts.held)
     }

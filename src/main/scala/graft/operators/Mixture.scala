@@ -209,22 +209,23 @@ object Mixture {
       fetchCap: Int): DataFrame = {
     val score = col(scoreCol).cast("long")
     val cost = col(costCol).cast("long")
-    // Materialize the narrow (id, score, cost) projection ONCE (r16,
-    // guide §1.2/§5): the selection consumes `df` three times — the fit
-    // aggregate plus the `whole`/`partial` legs below — and each leg's
-    // pushed-down score filter substitutes the caller's score expression
-    // into the SCAN filter, so an expensive score (t32: qualityScore +
-    // tokenCount) re-evaluated per row per leg, serialized in the
-    // under-split scan stage (census: two 330 ms single-task stages).
-    // localCheckpoint, not persist: this operator is already EAGER (the
-    // fit collects at call time), the checkpoint is what the fit pass
-    // would compute anyway, blocks are RDD-level (reclaimed by the
-    // ContextCleaner once the returned frame is unreferenced, nothing
-    // left in the CacheManager), and the scope hop below needs no
-    // cache-match care on a LogicalRDD face. Same executor-loss trade
-    // as dedupDelta's rejected-id checkpoint; at 100 TB this is the
-    // ~2%-of-corpus fit input every budget cut materializes rather than
-    // paying three full-text scans.
+    // Materialize the filtered input ONCE (r16, guide §1.2/§5): the
+    // selection consumes it three times — the fit aggregate plus the
+    // `whole`/`partial` legs below — and each leg's pushed-down score
+    // filter substitutes the caller's score expression into the SCAN
+    // filter, so an expensive score (t32: qualityScore + tokenCount)
+    // re-evaluated per row per leg, serialized in the under-split scan
+    // stage (census: two 330 ms single-task stages).
+    // The checkpoint is FULL width — every column of `df`, text included —
+    // because the legs below filter it and the call returns them. It is
+    // an eager localCheckpoint: one job at the call, blocks outside the
+    // CacheManager, and a LogicalRDD face the scope hop below needs no
+    // cache-match care for. Its blocks outlive the call: the
+    // ContextCleaner reclaims them only once the returned frame is
+    // garbage-collected, and a lost block fails the read instead of
+    // recomputing (the lineage is truncated). A narrow (id, score, cost)
+    // cut re-joined on `idCol` would need `idCol` to be unique, which
+    // nothing here checks.
     val rows = df.filter(score.isNotNull && cost.isNotNull).localCheckpoint()
     val totalsDf = rows
       .groupBy(score.as("__s"))

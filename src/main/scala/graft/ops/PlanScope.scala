@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Plan-scope control for operators whose plan shape is known ahead of
   * time. Spark's AQE charges one driver job per materialized exchange
@@ -207,4 +208,54 @@ object PlanScope {
   def rebind(df: DataFrame, target: SparkSession): DataFrame =
     if (df.sparkSession eq target) df
     else org.apache.spark.sql.GraftDatasetShim.ofRows(target, df.queryExecution.analyzed)
+
+  /** A stage boundary made by [[cut]]: `flat` is the frame downstream
+    * stages plan from, `pinned` the persisted frame whose blocks it reads,
+    * and `release()` drops the cache entry the cut added (idempotent; a
+    * no-op when the input was already persisted, since its pin is the
+    * caller's). */
+  final case class Cut(flat: DataFrame, pinned: DataFrame, release: () => Unit)
+
+  /** The one "materialise here, plan downstream from a flat node"
+    * boundary, for iterative loops and multi-consumer stages. `df` is
+    * persisted at MEMORY_AND_DISK (an input that is already persisted gets
+    * no second entry), and `flat` re-roots it as one `LogicalRDD` leaf over
+    * the persisted frame's executed RDD — the face `Dataset.checkpoint`
+    * builds. So downstream plans:
+    *
+    *  - analyze and optimize one leaf instead of the whole upstream tree.
+    *    Cached adaptive plans nested round-in-round send AQE's plan-update
+    *    walk exponential (measured in the graph loops: 80 s per round by
+    *    depth 12, OOM by depth 15, on a six-node graph);
+    *  - keep the persisted frame's output partitioning, ordering and
+    *    statistics, so a join on the key the frame is hashed on plans no
+    *    exchange on that side, and the size estimate still drives join
+    *    choice;
+    *  - keep RDD lineage: a lost block is recomputed through the chain,
+    *    where a local checkpoint would have truncated it.
+    *
+    * Costs no job of its own: the blocks fill on the first full action
+    * over `flat` (or `pinned`; both read the same cached RDD). Building
+    * the face prepares the persisted plan inside one SQL execution, as
+    * `Dataset.checkpoint` does, so a broadcast build in that plan runs
+    * there, once, under the session's job context; under AQE its shuffle
+    * stages run there too (every site cuts inside a static scope). `flat`
+    * is bound afresh from the persisted analyzed plan, so it reads the
+    * cache even when `df`'s own plan was compiled before the persist.
+    *
+    * `flat` carries its statistics as they were at the cut — the plan
+    * estimate, not the cached size — and downstream frames should read
+    * `flat` rather than persist over it: Spark compares a `LogicalRDD`'s
+    * partitioning by raw expression id, so a plain persist over `flat`
+    * misses its cache entry in any query that re-instances the leaf (the
+    * analyzer's self-join dedup). */
+  def cut(df: DataFrame): Cut = {
+    val owned = df.storageLevel == StorageLevel.NONE
+    val pinned = if (owned) df.persist(StorageLevel.MEMORY_AND_DISK) else df
+    val face = org.apache.spark.sql.GraftDatasetShim.ofRows(
+      pinned.sparkSession, pinned.queryExecution.analyzed)
+    val released = new java.util.concurrent.atomic.AtomicBoolean(!owned)
+    Cut(org.apache.spark.sql.GraftDatasetShim.logicalRdd(face), pinned,
+      () => if (released.compareAndSet(false, true)) pinned.unpersist(blocking = false))
+  }
 }

@@ -226,39 +226,42 @@ object CurationPipeline {
     // rationale as the line-dedup stage, one granularity finer.
     // The scrub output feeds MANY consumers (LSH pairs, the components
     // fixpoint, keep-longest, the kept re-join, quality, packing). It is
-    // pinned, materialized eagerly, and FLAT RE-ROOTED (the Graphs
-    // lineage-cut discipline): left lazy, every consumer's analyzed plan
-    // carries the whole window-hash subtree and the composed query pays
-    // seconds of repeated Catalyst walks plus re-executions (measured:
-    // ~4x its honest cost). The scrubbed corpus is the stage boundary a
-    // 100 TB run would checkpoint at anyway. Released in the detachBound
-    // handover; otherwise the pin rides the returned plan under the
-    // caller's cache contract.
-    val docsSPin = spanScrubWindow.map { w =>
-      val pinned = docsL.drop("text").join(
+    // a stage boundary (PlanScope.cut), materialized eagerly: left lazy,
+    // every consumer's analyzed plan carries the whole window-hash
+    // subtree and the composed query pays seconds of repeated Catalyst
+    // walks plus re-executions (measured: ~4x its honest cost). The
+    // scrubbed corpus is the stage boundary a 100 TB run would checkpoint
+    // at anyway. Released in the detachBound handover; otherwise the pin
+    // rides the returned plan under the caller's cache contract.
+    val docsSCut = spanScrubWindow.map { w =>
+      val c = graft.ops.PlanScope.cut(docsL.drop("text").join(
         Dedup.scrubDuplicatedSpans(docsL, windowTokens = w)
           .filter(col("n_kept") > 0)
           .select(col("doc_id"), col("clean_text").as("text")),
-        Seq("doc_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pinned.count()
-      pinned
+        Seq("doc_id")))
+      c.pinned.count()
+      c
     }
-    val docsS = docsSPin.fold(docsL)(p =>
-      p.sparkSession.createDataFrame(p.rdd, p.schema))
+    val docsS = docsSCut.fold(docsL)(_.flat)
 
     // 1. dedup: keep the longest doc of every near-dup component.
     // components() is EAGER (its convergence counts run the fixpoint at
     // call time) and is the single most expensive stage at corpus scale —
-    // so it runs exactly ONCE here, and the labels are persisted and
-    // shared by both consumers (the dedup argmax and the split in step 4).
-    // The cache stays pinned for the caller's consuming action, same
-    // policy as components' own final-round cache; on block loss Spark
-    // recomputes from the pair pipeline (correct, just slower).
+    // so it runs exactly ONCE here, and the labels are a stage boundary
+    // (PlanScope.cut) shared by both consumers (the dedup argmax and the
+    // split in step 4); the first consumer's action fills it. A plain
+    // persist is not enough here: the labels' plan holds the components'
+    // cut faces, and a consumer that re-instances a face (the self-join
+    // dedup of the analyzer; Spark compares a LogicalRDD's partitioning
+    // by raw expression id) misses the cache entry and recomputes —
+    // c02's span-scrub face did exactly that. The cut stays pinned for
+    // the caller's consuming action, same policy as components' own
+    // final-round cache; on block loss Spark recomputes from the pair
+    // pipeline (correct, just slower).
     val pairs = Dedup.minhashLshPairs(docsS)
     val (comps0, releaseComponents) = Dedup.componentsWithRelease(docsS, pairs)
-    val comps = comps0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val compsCut = graft.ops.PlanScope.cut(comps0)
+    val comps = compsCut.flat
     val kept = docsS.join(
       Dedup.dedupCorpusByComponents(docsS, comps,
           TextFunctions.tokenCount(col("text")).cast("long"))
@@ -317,24 +320,19 @@ object CurationPipeline {
     // in the c02 job census: the fit job replayed 19 stages the final
     // collect then replayed again). Pin LAZILY: the fit's collect is the
     // first action and populates the cache, the tail reads it — no extra
-    // driver job. Same stage-boundary policy as the span-scrub pin;
+    // driver job. Same stage boundary (PlanScope.cut) as the span scrub;
     // released in the detachBound handover, otherwise the pin rides the
     // returned plan under the caller's cache contract (see below).
-    val scoredIn = clean
-      .withColumn("quality", TextFunctions.qualityScore(col("text")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // fit first (its collect is the action that fills the pin), then FLAT
-    // RE-ROOT the survivor frame for the tail: without this every
-    // post-fit action (the detach collect, a caller's write) re-ANALYZES
-    // the whole dedup + decontamination logical subtree just to have the
-    // CacheManager replace it at physical planning — pure Catalyst walk
-    // time on a >100-node plan, measured as a real slice of c01/c02's
-    // wall. The RDD keeps its lineage (block loss recomputes through the
-    // chain); same discipline as the span-scrub pin above.
-    val fitVals = Sketches.quantileFit(scoredIn, "quality", qualityBreakpoints)
-    val scoredFlat = scoredIn.sparkSession.createDataFrame(
-      scoredIn.rdd, scoredIn.schema)
-    val scored = Sketches.applyQuantileBuckets(scoredFlat, "quality", fitVals)
+    // Both the fit and the tail read the cut's flat face: without it
+    // every post-fit action (the detach collect, a caller's write)
+    // re-ANALYZES the whole dedup + decontamination logical subtree just
+    // to have the CacheManager replace it at physical planning — pure
+    // Catalyst walk time on a >100-node plan, measured as a real slice of
+    // c01/c02's wall.
+    val scoredIn = graft.ops.PlanScope.cut(
+      clean.withColumn("quality", TextFunctions.qualityScore(col("text"))))
+    val fitVals = Sketches.quantileFit(scoredIn.flat, "quality", qualityBreakpoints)
+    val scored = Sketches.applyQuantileBuckets(scoredIn.flat, "quality", fitVals)
     val good = scored.filter(col("bucket") >= minQualityBucket)
 
     // 3b. redact PII — after quality (scored on what a reader saw),
@@ -344,10 +342,12 @@ object CurationPipeline {
       else good
 
     // 4. leakage-safe split on the SAME components the dedup used
-    // comps stays UN-flattened here, deliberately: a LogicalRDD face has
-    // no stats, which demoted the split's comps broadcast to a sort-merge
-    // join (A/B: c02 4.72 -> 5.39 s, c01 3.15 -> 3.58 despite one fewer
-    // broadcast job) — the cached frame's accurate stats are load-bearing
+    // comps is read through its cut face, whose statistics are the plan
+    // estimate from cut time, not the cached size, so this join plans as
+    // a sort-merge join. Against a broadcast of the filled cache (A/B at
+    // sf0.1, 4 cores, 5 reps, two alternating pairs): c01 2.26/2.88 ->
+    // 2.29/2.35 s and 11 -> 9 jobs, c02 3.42/3.89 -> 3.41/3.64 s and
+    // 13 -> 11 jobs.
     val split = Splits.leakageSafeSplit(redacted, comps, splits, salt)
 
     // 5. pack into token-budget chunks per (split, source) shard
@@ -378,14 +378,13 @@ object CurationPipeline {
       graft.ops.Detach.toLocal(packed, cap, caller,
         s"curate detachBound: result exceeds $cap rows — drop detachBound " +
           "and write the returned frame instead") {
-        comps.unpersist(blocking = false)
+        compsCut.release()
         releaseComponents() // the fixpoint's final-round cache (see
                             // componentsWithRelease) — with it, "zero
                             // blocks left registered" holds exactly
         docsIPin.foreach(_.unpersist(blocking = false))
-        docsSPin.foreach(_.unpersist(blocking = false))
-        scoredIn.unpersist(blocking = false)
-        ()
+        docsSCut.foreach(_.release())
+        scoredIn.release()
       }
     }
   }
@@ -687,10 +686,8 @@ object CurationPipeline {
       }
     }
     detachBound.fold(packed) { cap =>
-      // nothing stays in the CacheManager: dedupDeltaWith already
-      // released its candidate pin and its localCheckpoint blocks are
-      // RDD-level, reclaimed by the ContextCleaner once the returned
-      // frame is unreferenced
+      // nothing stays registered: dedupDeltaWith already released its
+      // candidate pin and detached its rejected ids to a LocalRelation
       graft.ops.Detach.toLocal(packed, cap, caller,
         s"curateDelta detachBound: result exceeds $cap rows — drop detachBound " +
           "and write the returned frame instead")(())

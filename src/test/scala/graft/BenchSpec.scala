@@ -13,6 +13,16 @@ class BenchSpec extends SparkTestBase {
   private def triangle = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
   private def timer(census: Boolean = false) = new Bench.Timer(spark, reps = 2, census)
 
+  test("median of an even count averages the two middle values") {
+    assert(Bench.median(Seq(1.0, 3.0)) === 2.0)
+    assert(Bench.median(Seq(4.0, 1.0, 3.0, 2.0)) === 2.5)
+  }
+
+  test("median of an odd count is the middle value") {
+    assert(Bench.median(Seq(5.0, 1.0, 3.0)) === 3.0)
+    assert(Bench.median(Seq(7.0)) === 7.0)
+  }
+
   test("a one-scan query counts exactly one job per rep") {
     val t = timer().measure("scan", () => Tables.orders(spark, sf), "spec")
     assert(t.failed === 0)

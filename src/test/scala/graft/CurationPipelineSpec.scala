@@ -184,6 +184,24 @@ class CurationPipelineSpec extends SparkTestBase {
       "curate's detachBound handover left cached blocks registered")
   }
 
+  test("curateDelta detachBound handover leaves zero persistent blocks") {
+    // the delta face of the test above: a batch with an exact and a near
+    // duplicate (so the rejected-id set is not empty) through the
+    // detachBound handover — nothing of dedupDeltaWith may stay registered
+    val long = (1 to 30).map(i => s"tok$i").mkString(" ")
+    val corpus = Seq((1L, long, "web"), (2L, "other " + long.reverse, "web"))
+      .toDF("doc_id", "text", "source")
+    val batch = Seq((10L, long, "web"), (11L, long + " extra", "web"),
+        (12L, "novel " + (1 to 20).map(i => s"new$i").mkString(" "), "web"))
+      .toDF("doc_id", "text", "source")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val out = CurationPipeline.curateDelta(corpus, batch, evalDocs,
+      qualityBreakValues = Some(Seq(-1L)), redactPii = false, detachBound = Some(1000))
+    assert(out.select("doc_id").distinct().collect().map(_.getLong(0)).toSet === Set(12L))
+    assert(spark.sparkContext.getPersistentRDDs.size === before,
+      "curateDelta's detachBound handover left cached blocks registered")
+  }
+
   test("curate runs the components fixpoint exactly once") {
     // the fixpoint is eager and the pipeline's dominant stage at scale;
     // both consumers (dedup argmax + leakage-safe split) must share ONE

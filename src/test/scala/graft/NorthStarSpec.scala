@@ -199,6 +199,23 @@ class NorthStarSpec extends SparkTestBase {
       s"expected the non-castable diagnostic, got: ${msgs(ex).take(300)}")
   }
 
+  test("dedupDelta fails loudly past its rejected-id cap and keeps no blocks") {
+    // two batch docs are exact duplicates of the corpus: a cap of one
+    // rejected id must fail the call with the cap's message, and the
+    // pinned pair cache must still be released
+    val text = (1 to 30).map(i => s"c$i").mkString(" ")
+    val corpus = docs((1L, text), (2L, text + " tail"))
+    val batch = docs((10L, text), (11L, text + " tail"))
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val ex = intercept[IllegalArgumentException] {
+      Dedup.dedupDeltaWithImpl(corpus, Dedup.corpusDigests(corpus), Dedup.corpusBands(corpus),
+        batch, shingleN = 3, numHashes = 12, rowsPerBand = 3, minJaccardPermille = 800,
+        rejectCap = 1)
+    }
+    assert(ex.getMessage.contains("the batch rejects more than 1 ids"), ex.getMessage)
+    assert(spark.sparkContext.getPersistentRDDs.size === before)
+  }
+
   test("dedupLines drops corpus-hot lines, keeps order, empties fully-boilerplate docs") {
     // "ad" appears 3× corpus-wide (> max 2) → dropped everywhere;
     // "body one/two/three" unique → kept; doc 4 is ALL boilerplate → "".
