@@ -43,6 +43,16 @@ import graft.streaming.LocalCheckpointFileManager
   *     so `create` warns when it gets back a session built without this
   *     value.
   *
+  * The streaming state store is left to the caller. Spark's default
+  * `HDFSBackedStateStoreProvider` keeps every key in executor heap: fine
+  * for test-sized topologies, an OOM source once `latestPerKey` or
+  * `streamingLshNearDup` state grows to hundreds of millions of keys. In
+  * production set `spark.sql.streaming.stateStore.providerClass` to
+  * `org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`
+  * and `spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled`
+  * to `true`: RocksDB spills to local disk (reference analogue: Kafka
+  * Streams' RocksDB state stores, CallsAggregationApp.java:58).
+  *
   * `spark.sql.files.maxPartitionBytes` (default 128 MB) is deliberately
   * untouched: with codegen'd per-row kernels the scan is CPU-balanced at
   * the default split size; lower it only when decode-heavy multimodal
@@ -65,8 +75,7 @@ object GraftSession {
   private val log = LoggerFactory.getLogger(getClass)
 
   def builder(appName: String = "graft", master: Option[String] = None,
-      shufflePartitions: Option[Int] = None,
-      rocksDbState: Boolean = false): SparkSession.Builder = {
+      shufflePartitions: Option[Int] = None): SparkSession.Builder = {
     val b = SparkSession.builder()
       .appName(appName)
       .config("spark.sql.session.timeZone", "UTC")
@@ -75,17 +84,6 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config(CheckpointFileManagerConf, classOf[LocalCheckpointFileManager].getName)
       .config(CodegenCacheConf, CodegenCacheEntries.toString)
-    // Streaming state at scale: the default HDFSBackedStateStoreProvider
-    // keeps every key in executor heap — fine for the test-sized topologies
-    // here, an OOM source once latestPerKey/streamingLshNearDup state grows
-    // to hundreds of millions of keys. RocksDB spills to local disk with
-    // changelog checkpointing, the production setting (reference analogue:
-    // Kafka Streams' RocksDB state stores, CallsAggregationApp.java:58).
-    if (rocksDbState) {
-      b.config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      b.config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    }
     master.foreach(b.master)
     shufflePartitions.foreach(n => b.config("spark.sql.shuffle.partitions", n.toString))
     b

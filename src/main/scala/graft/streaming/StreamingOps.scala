@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
@@ -36,23 +38,17 @@ case class CellVecState(vecs: Seq[(Long, Seq[Float], Long)], maxTsMillis: Long)
 case class SemanticHit(doc_a: Long, doc_b: Long, cell: Int, cos_e6: Long)
 
 /** One tagged input row of the streaming as-of join (side 0 = right /
-  * reference stream, 1 = left / probe stream). `ts` is the original
-  * event-time column so watermark metadata survives into the stateful op. */
+  * reference stream, 1 = left / probe stream), and the row it buffers
+  * until the watermark certifies it. `ts` is the original event-time
+  * column so watermark metadata survives into the stateful op. */
 case class AsofInput(key: Long, side: Int, id: Long, ts: java.sql.Timestamp, value: Double)
 
-/** A buffered right row (reference point) in as-of state. `tsUs` is
+/** The as-of floor: the latest certified right row of a key — the value
+  * every later left row matches until a newer right certifies. `tsUs` is
   * event time in MICROseconds — Timestamp.getTime would truncate to
   * millis and the match comparison must run at the full precision the
   * batch operator compares at (the events table is sub-millisecond). */
 case class AsofRight(tsUs: Long, value: Double)
-
-/** A left row waiting for the watermark to certify its as-of lookup. */
-case class AsofPending(id: Long, tsUs: Long, value: Double)
-
-/** Per-key as-of state: reference rows within the active horizon (plus
-  * the single floor row at-or-below the watermark — the latest value any
-  * future left row could still match), and left rows not yet emitted. */
-case class AsofJoinState(rights: Seq[AsofRight], lefts: Seq[AsofPending])
 
 /** Streaming as-of output: the left row plus the matched right value and
   * timestamp (None when no right row at-or-before the left's ts). */
@@ -68,8 +64,6 @@ case class Scd2Run(fromUs: Long, value: String, version: Long)
 /** A buffered row not yet certified by the watermark. */
 case class Scd2Pending(tsUs: Long, seq: Long, value: String)
 
-case class Scd2State(open: Option[Scd2Run], pending: Seq[Scd2Pending])
-
 /** A CLOSED validity interval — append-mode output; never mutates. */
 case class Scd2Closed(key: Long, value: String, valid_from: java.sql.Timestamp,
     valid_to: java.sql.Timestamp, version: Long)
@@ -80,11 +74,6 @@ case class FunnelInput(key: Long, ts: java.sql.Timestamp, seq: Long, etype: Stri
 /** streamingRetention input: one activity event. */
 case class RetentionInput(key: Long, ts: java.sql.Timestamp)
 
-/** Per-key retention state: the cohort day (epoch days; -1 = unset) and
-  * the key's distinct ACTIVE days so far (calendar-bounded, like the
-  * batch operator's per-key set), plus the uncertified buffer. */
-case class RetentionState(cohortDay: Int, seen: Seq[Int], pending: Seq[Long])
-
 /** A first-visit-of-a-day record — append-mode output; a (key, day) pair
   * emits exactly once, so `groupBy(cohort_day, day_offset).count` over
   * the sink IS the retention triangle. */
@@ -93,13 +82,14 @@ case class CohortVisit(key: Long, cohort_day: String, day_offset: Long)
 /** A buffered event not yet certified by the watermark. */
 case class FunnelPending(tsUs: Long, seq: Long, etype: String)
 
-/** Per-key funnel state: the furthest stage reached (O(1)) plus the
-  * uncertified buffer (bounded by the watermark horizon). */
-case class FunnelState(stage: Int, pending: Seq[FunnelPending])
-
 /** A stage ADVANCE — append-mode output; a key's stage only ever grows,
   * so each advance is final the moment it is emitted. */
 case class FunnelAdvance(key: Long, stage: Long, ts: java.sql.Timestamp)
+
+/** Per-key state of an ordered streaming operator (see
+  * `StreamingOps.certifiedReplay`): the operator's fold over every row the
+  * watermark has certified, and the rows it has not certified yet. */
+case class Replay[S, P](fold: S, pending: Seq[P])
 
 /** Structured Streaming counterparts of graft.ops.CoreOps — the engine's
   * re-expression of the reference's *streaming* runtime semantics
@@ -871,6 +861,56 @@ object StreamingOps {
       }
   }
 
+  /** The one per-key loop of the ordered streaming operators
+    * ([[streamingAsofJoin]], [[streamingScd2]], [[streamingFunnel]],
+    * [[streamingRetention]]): an order-sensitive fold is correct under
+    * out-of-order arrival only if it sees rows in event-time order, so
+    * rows wait in state until the watermark certifies them, and certified
+    * rows fold in `Ordering[P]` order. Per call on a key:
+    *   - a timed-out call reads no fresh rows (it has none);
+    *   - each fresh row becomes a pending row (`pend`);
+    *   - a pending row is certified once `tsUs < watermark`. The cutoff is
+    *     STRICT: Spark's lateness cutoff lets a row at exactly ts == wm
+    *     still arrive, and it might sort before a row certified now;
+    *   - certified rows replay in `Ordering[P]` order through `step`, which
+    *     returns the next fold state and at most one output row;
+    *   - the state becomes `Replay(fold, rows still pending)`, and an
+    *     event-time timeout is re-armed at the earliest pending row (at
+    *     least `wm + 1`, as Spark requires) so pending rows flush when the
+    *     watermark passes them even if the key sees no further record.
+    *
+    * A replayed micro-batch starts from the same state version and the
+    * same watermark, so it recomputes the same state and the same output
+    * (the D-Streams contract); StreamingSpec's restart table kills and
+    * restarts every operator on its checkpoint, on both state stores.
+    *
+    * Append mode: every output row is final when emitted. The state row is
+    * `Replay[S, P]` through `Encoders.product`; a checkpoint written by a
+    * build whose per-operator state classes predate `Replay` does not
+    * resume (the state schema differs). */
+  private def certifiedReplay[In, P: TypeTag: Ordering, S: TypeTag, O: Encoder](
+      rows: Dataset[In], key: In => Long, init: S, pend: In => P, tsUs: P => Long)(
+      step: (Long, S, P) => (S, Option[O])): Dataset[O] =
+    rows.groupByKey(key)(Encoders.scalaLong)
+      .flatMapGroupsWithState[Replay[S, P], O](
+        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
+        (k: Long, fresh: Iterator[In], state: GroupState[Replay[S, P]]) =>
+          val st = state.getOption.getOrElse(Replay(init, Seq.empty[P]))
+          val wm = state.getCurrentWatermarkMs()
+          val arrived = if (state.hasTimedOut) Nil else fresh.map(pend).toSeq
+          val (ready, pending) = (st.pending ++ arrived).partition(tsUs(_) < wm * 1000L)
+          var fold = st.fold
+          val out = ready.sorted.flatMap { p =>
+            val (next, o) = step(k, fold, p)
+            fold = next
+            o
+          }
+          state.update(Replay(fold, pending))
+          pending.map(tsUs).minOption.foreach(t =>
+            state.setTimeoutTimestamp(math.max(t / 1000L, wm + 1)))
+          out.iterator
+      }(Encoders.product[Replay[S, P]], implicitly[Encoder[O]])
+
   /** Streaming as-of join — the streaming counterpart of
     * [[graft.operators.AsofJoin]]: every left (probe) row is enriched with
     * the most recent right (reference) row of the same key at or before
@@ -878,20 +918,17 @@ object StreamingOps {
     *
     * Correctness under out-of-order arrival: a left row's answer is only
     * FINAL once no earlier right row can still arrive — i.e. once the
-    * watermark passes the left row's timestamp. So left rows buffer in
-    * state until `watermark >= ts`, then emit (append mode, one row each,
-    * in deterministic (ts, id) order per flush). Right rows buffer in the
-    * same per-key state; everything at-or-below the watermark collapses to
-    * the single FLOOR row — the latest reference value any future left
-    * could still match (as-of lookback is unbounded, so the floor is kept
-    * for the key's lifetime: O(1) state per idle key, the same bound as a
-    * KTable).
+    * watermark passes the left row's timestamp. Both sides are pending
+    * rows of one [[certifiedReplay]], replayed in (ts, side, id) order, so
+    * at an equal ts a right sorts before a left (as-of is at-or-before).
+    * The fold state is the FLOOR: the latest certified right row. A
+    * right moves the floor; a left emits against it (append mode, one row
+    * each). As-of lookback is unbounded, so the floor is kept for the
+    * key's lifetime: O(1) state per idle key, the same bound as a KTable.
     *
     * Shape: both streams are watermarked, tagged, unioned (the batch
-    * operator's union trick), and ONE flatMapGroupsWithState keyed by the
-    * join key holds the buffers; event-time timeouts re-fire flushes when
-    * the watermark advances past pending left rows without new traffic on
-    * the key. Contract as in batch: right unique per (key, ts).
+    * operator's union trick) and keyed by the join key. Contract as in
+    * batch: right unique per (key, ts).
     *
     * The operator runs at the GLOBAL watermark — the minimum across both
     * inputs (Spark's default multipleWatermarkPolicy) — so a stalled
@@ -907,90 +944,39 @@ object StreamingOps {
       .select(col("key"), lit(1).as("side"), col("id"), col("ts"), col("value"))
     val r = right.withWatermark("ts", watermark)
       .select(col("key"), lit(0).as("side"), lit(-1L).as("id"), col("ts"), col("value"))
-    l.unionByName(r).as[AsofInput]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[AsofJoinState, AsofEnriched](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
-        (key: Long, rows: Iterator[AsofInput], state: GroupState[AsofJoinState]) =>
-          val st = state.getOption.getOrElse(AsofJoinState(Nil, Nil))
-          val rs = if (state.hasTimedOut) Array.empty[AsofInput] else rows.toArray
-          val rights = (st.rights ++ rs.filter(_.side == 0)
-              .map(x => AsofRight(tsMicros(x.ts), x.value)))
-            .sortBy(_.tsUs)
-          // Spark's lateness cutoff is STRICT (a row at exactly ts == wm is
-          // not late and may still arrive), so a left row is certified only
-          // once its ts is strictly below the watermark
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val (ready, pending) = (st.lefts ++ rs.filter(_.side == 1)
-              .map(x => AsofPending(x.id, tsMicros(x.ts), x.value)))
-            .partition(_.tsUs < wmUs)
-          val out = ready.sortBy(p => (p.tsUs, p.id)).map { p =>
-            val best = rights.takeWhile(_.tsUs <= p.tsUs).lastOption
-            AsofEnriched(p.id, key, microsTs(p.tsUs), p.value,
-              best.map(_.value), best.map(b => microsTs(b.tsUs)))
-          }
-          // collapse rights strictly below the watermark to the floor row:
-          // every future left (and admissible right) has ts >= wm, so only
-          // the latest sub-watermark right can still win a future lookup
-          val keptRights =
-            rights.takeWhile(_.tsUs < wmUs).lastOption.toSeq ++
-              rights.dropWhile(_.tsUs < wmUs)
-          state.update(AsofJoinState(keptRights, pending))
-          // pending lefts flush when the watermark passes them — re-arm a
-          // timeout so the flush happens even with no new rows on this key
-          // (must be strictly above the current watermark)
-          pending.map(_.tsUs).minOption.foreach(t =>
-            state.setTimeoutTimestamp(math.max(t / 1000L, state.getCurrentWatermarkMs() + 1)))
-          out.iterator
-      }
+    implicit val rightsFirst: Ordering[AsofInput] = Ordering.by(x => (tsMicros(x.ts), x.side, x.id))
+    certifiedReplay(l.unionByName(r).as[AsofInput], (x: AsofInput) => x.key,
+        Option.empty[AsofRight], (x: AsofInput) => x, (x: AsofInput) => tsMicros(x.ts)) {
+      (key, floor, x) =>
+        if (x.side == 0) (Some(AsofRight(tsMicros(x.ts), x.value)), None)
+        else (floor, Some(AsofEnriched(x.id, key, x.ts, x.value,
+          floor.map(_.value), floor.map(f => microsTs(f.tsUs)))))
+    }
   }
 
   /** Streaming SCD2 — the CDC face of [[graft.ops.Temporal.scd2]]: per
     * key, watermark-certified rows replay in (ts, seq) order through the
     * change detector; each value change CLOSES the previous run and emits
     * its finalized validity interval (append mode — a closed interval
-    * never mutates, so downstream consumers can sink it blindly). State
-    * per key: the one open run plus the not-yet-certified row buffer
-    * (bounded by the watermark horizon) — the asof join's discipline.
+    * never mutates, so downstream consumers can sink it blindly). The fold
+    * state is the one open run; the rows wait under [[certifiedReplay]].
     * Expects columns `key: long, ts: timestamp, seq: long, value: string`.
     * StreamingSpec proves closed intervals ≡ the batch operator's closed
     * rows with out-of-order arrivals split across micro-batches. */
   def streamingScd2(events: DataFrame, watermark: String = "1 hour"): Dataset[Scd2Closed] = {
     import events.sparkSession.implicits._
-    events.withWatermark("ts", watermark)
-      .select(col("key"), col("ts"), col("seq"), col("value")).as[Scd2Input]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[Scd2State, Scd2Closed](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
-        (key: Long, rows: Iterator[Scd2Input], state: GroupState[Scd2State]) =>
-          val st = state.getOption.getOrElse(Scd2State(None, Nil))
-          val rs = if (state.hasTimedOut) Array.empty[Scd2Input] else rows.toArray
-          // strict cutoff, as in streamingAsofJoin: a row at ts == wm may
-          // still arrive, so only rows strictly below it are replayed
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val all = st.pending ++ rs.map(x => Scd2Pending(tsMicros(x.ts), x.seq, x.value))
-          val (ready, pending) = all.partition(_.tsUs < wmUs)
-          var open = st.open
-          val out = Seq.newBuilder[Scd2Closed]
-          ready.sortBy(p => (p.tsUs, p.seq)).foreach { p =>
-            open match {
-              case Some(run) if run.value == p.value => // unchanged: run extends
-              case Some(run) =>
-                out += Scd2Closed(key, run.value, microsTs(run.fromUs),
-                  microsTs(p.tsUs), run.version)
-                open = Some(Scd2Run(p.tsUs, p.value, run.version + 1))
-              case None =>
-                open = Some(Scd2Run(p.tsUs, p.value, 1L))
-            }
-          }
-          state.update(Scd2State(open, pending))
-          // re-arm so buffered rows flush when the watermark passes them
-          // even if this key never sees another record
-          pending.map(_.tsUs).minOption.foreach(t =>
-            state.setTimeoutTimestamp(
-              math.max(t / 1000L, state.getCurrentWatermarkMs() + 1)))
-          out.result().iterator
+    implicit val bySeq: Ordering[Scd2Pending] = Ordering.by(p => (p.tsUs, p.seq))
+    certifiedReplay(events.withWatermark("ts", watermark)
+        .select(col("key"), col("ts"), col("seq"), col("value")).as[Scd2Input],
+        (x: Scd2Input) => x.key, Option.empty[Scd2Run],
+        (x: Scd2Input) => Scd2Pending(tsMicros(x.ts), x.seq, x.value), (p: Scd2Pending) => p.tsUs) {
+      (key, open, p) => open match {
+        case Some(run) if run.value == p.value => (open, None) // unchanged: run extends
+        case Some(run) => (Some(Scd2Run(p.tsUs, p.value, run.version + 1)),
+          Some(Scd2Closed(key, run.value, microsTs(run.fromUs), microsTs(p.tsUs), run.version)))
+        case None => (Some(Scd2Run(p.tsUs, p.value, 1L)), None)
       }
+    }
   }
 
   /** Streaming funnel — the live face of
@@ -1001,14 +987,13 @@ object StreamingOps {
     * stage never regresses, so each advance is final on emission; the
     * live "conversions so far" feed a dashboard counts by stage).
     *
-    * State per key: one int (the stage) plus the not-yet-certified
-    * buffer — the [[streamingScd2]] discipline, which is what makes the
-    * greedy fold correct under out-of-order arrival (greedy matching is
-    * order-sensitive; folding uncertified rows early could claim a
-    * match batch replay would order differently). StreamingSpec proves
-    * final stages ≡ the batch operator under multi-batch out-of-order
-    * arrival. Expects columns `key: long, ts: timestamp, seq: long,
-    * etype: string`.
+    * The fold state is one int (the stage); the rows wait under
+    * [[certifiedReplay]], which is what makes the greedy fold correct
+    * under out-of-order arrival (greedy matching is order-sensitive;
+    * folding uncertified rows early could claim a match batch replay
+    * would order differently). StreamingSpec proves final stages ≡ the
+    * batch operator under multi-batch out-of-order arrival. Expects
+    * columns `key: long, ts: timestamp, seq: long, etype: string`.
     */
   def streamingFunnel(events: DataFrame, stages: Seq[String],
       watermark: String = "1 hour"): Dataset[FunnelAdvance] = {
@@ -1016,31 +1001,16 @@ object StreamingOps {
     require(stages.distinct.size == stages.size,
       "streamingFunnel: repeated stage names make the greedy fold ambiguous")
     import events.sparkSession.implicits._
-    events.withWatermark("ts", watermark)
-      .select(col("key"), col("ts"), col("seq"), col("etype")).as[FunnelInput]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[FunnelState, FunnelAdvance](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
-        (key: Long, rows: Iterator[FunnelInput], state: GroupState[FunnelState]) =>
-          val st = state.getOption.getOrElse(FunnelState(0, Nil))
-          val rs = if (state.hasTimedOut) Array.empty[FunnelInput] else rows.toArray
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val all = st.pending ++ rs.map(x => FunnelPending(tsMicros(x.ts), x.seq, x.etype))
-          val (ready, pending) = all.partition(_.tsUs < wmUs)
-          var stage = st.stage
-          val out = Seq.newBuilder[FunnelAdvance]
-          ready.sortBy(p => (p.tsUs, p.seq)).foreach { p =>
-            if (stage < stages.length && p.etype == stages(stage)) {
-              stage += 1
-              out += FunnelAdvance(key, stage.toLong, microsTs(p.tsUs))
-            }
-          }
-          state.update(FunnelState(stage, pending))
-          pending.map(_.tsUs).minOption.foreach(t =>
-            state.setTimeoutTimestamp(
-              math.max(t / 1000L, state.getCurrentWatermarkMs() + 1)))
-          out.result().iterator
-      }
+    implicit val bySeq: Ordering[FunnelPending] = Ordering.by(p => (p.tsUs, p.seq))
+    certifiedReplay(events.withWatermark("ts", watermark)
+        .select(col("key"), col("ts"), col("seq"), col("etype")).as[FunnelInput],
+        (x: FunnelInput) => x.key, 0,
+        (x: FunnelInput) => FunnelPending(tsMicros(x.ts), x.seq, x.etype), (p: FunnelPending) => p.tsUs) {
+      (key, stage, p) =>
+        if (stage < stages.length && p.etype == stages(stage))
+          (stage + 1, Some(FunnelAdvance(key, stage + 1L, microsTs(p.tsUs))))
+        else (stage, None)
+    }
   }
 
   /** Streaming cohort retention — the live face of
@@ -1051,9 +1021,9 @@ object StreamingOps {
     * `groupBy(cohort_day, day_offset).count` over the sink is the live
     * retention triangle — counts only ever grow).
     *
-    * State per key: the cohort day + the distinct active-day set (the
-    * batch operator's calendar-bounded per-key state) + the uncertified
-    * buffer under the [[streamingScd2]] watermark discipline — ordered
+    * The fold state is the cohort day (epoch days; -1 = unset) and the
+    * key's distinct active days (the batch operator's calendar-bounded
+    * per-key set); the rows wait under [[certifiedReplay]] — ordered
     * replay is what makes "first certified day" the true minimum under
     * out-of-order arrival. Expects `key: long, ts: timestamp`. Days are
     * UTC epoch days of the event time.
@@ -1061,36 +1031,17 @@ object StreamingOps {
   def streamingRetention(events: DataFrame,
       watermark: String = "1 hour"): Dataset[CohortVisit] = {
     import events.sparkSession.implicits._
-    events.withWatermark("ts", watermark)
-      .select(col("key"), col("ts")).as[RetentionInput]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[RetentionState, CohortVisit](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
-        (key: Long, rows: Iterator[RetentionInput], state: GroupState[RetentionState]) =>
-          val st = state.getOption.getOrElse(RetentionState(-1, Nil, Nil))
-          val rs = if (state.hasTimedOut) Array.empty[RetentionInput] else rows.toArray
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val all = st.pending ++ rs.map(x => tsMicros(x.ts))
-          val (ready, pending) = all.partition(_ < wmUs)
-          var cohort = st.cohortDay
-          var seen = st.seen
-          val out = Seq.newBuilder[CohortVisit]
-          ready.sorted.foreach { us =>
-            val day = Math.floorDiv(us, 86400000000L).toInt
-            if (cohort < 0) cohort = day
-            if (!seen.contains(day)) {
-              seen = seen :+ day
-              out += CohortVisit(key,
-                java.time.LocalDate.ofEpochDay(cohort.toLong).toString,
-                (day - cohort).toLong)
-            }
-          }
-          state.update(RetentionState(cohort, seen, pending))
-          pending.minOption.foreach(t =>
-            state.setTimeoutTimestamp(
-              math.max(t / 1000L, state.getCurrentWatermarkMs() + 1)))
-          out.result().iterator
-      }
+    certifiedReplay(events.withWatermark("ts", watermark)
+        .select(col("key"), col("ts")).as[RetentionInput],
+        (x: RetentionInput) => x.key, (-1, Seq.empty[Int]),
+        (x: RetentionInput) => tsMicros(x.ts), (us: Long) => us) {
+      case (key, (cohort0, seen), us) =>
+        val day = Math.floorDiv(us, 86400000000L).toInt
+        val cohort = if (cohort0 < 0) day else cohort0
+        if (seen.contains(day)) ((cohort, seen), None)
+        else ((cohort, seen :+ day), Some(CohortVisit(key,
+          java.time.LocalDate.ofEpochDay(cohort.toLong).toString, (day - cohort).toLong)))
+    }
   }
 
   /** Timestamp → event-time microseconds (getTime alone truncates to ms). */

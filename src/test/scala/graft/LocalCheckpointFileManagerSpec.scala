@@ -225,12 +225,7 @@ class LocalCheckpointFileManagerSpec extends SparkTestBase {
     val src = Files.createTempDirectory("ck-restart-src").toString
     val ck = Files.createTempDirectory("ck-restart")
     val latest = scala.collection.concurrent.TrieMap[(String, String), Row]()
-    val stateConfs =
-      if (!rocksDb) Seq.empty
-      else Seq(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+    val stateConfs = if (rocksDb) RocksDbState else Nil
     // Each chunk is appended as one parquet file and drained before the
     // next. The calls span 10 hours in random order, inside the 24-hour
     // watermark, so none is late and most (caller, hour) windows take rows

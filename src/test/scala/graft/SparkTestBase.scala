@@ -22,6 +22,13 @@ trait SparkTestBase extends AnyFunSuite {
     }
   }
 
+  /** The production state store, RocksDB with changelog checkpointing, as
+    * the confs that select it (pass to [[withSessionConf]]). */
+  val RocksDbState: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+
   /** Jobs dispatched by `f` on this thread, counted by the timing
     * harness's job-group mechanism ([[Bench.jobsDuring]]). */
   def jobsDuring[T](f: => T): (T, Int) = {

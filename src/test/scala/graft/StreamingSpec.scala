@@ -3,11 +3,11 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
-import graft.streaming.{CallsStreamPipeline, KafkaIO, RetentionInput, StreamingOps}
+import graft.streaming.{AsofInput, CallsStreamPipeline, KafkaIO, RetentionInput, StreamingOps}
 import org.apache.spark.sql.types._
 
 case class CallEvent(ts: Timestamp, user_id: Long, value: Long)
@@ -735,10 +735,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("stateful ops run on the RocksDB state store provider (production state path)") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withSessionConf(RocksDbState: _*) {
       val in = MemoryStream[CustUpsert](spark)
       val latest = StreamingOps.latestPerKey[CustUpsert, Long](
         in.toDS(), _.phone, _.offset)
@@ -756,66 +753,318 @@ class StreamingSpec extends SparkTestBase {
         .groupBy("phone").agg(max_by(col("doc"), col("offset")).as("doc"))
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
       assert(last === Map(600L -> "new", 700L -> "x"))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
-  /** The KTable face restarted on its checkpoint: three micro-batches of
-    * upserts, stop, restart the same topology on the same checkpoint, two
-    * more. Every upsert has a unique `ord` and they arrive shuffled, so
-    * after the restart many upserts must lose to an offset only the
-    * restored state remembers. */
-  private def latestPerKeyRestart(stateConfs: (String, String)*): Unit = {
+  /** One row of the restart table: a stateful streaming operator over a
+    * parquet file source of `T` rows, its input as arrival chunks (one
+    * trigger each), and what its sink must end with.
+    *
+    * @param input    the chunks, built inside the test (some read tables)
+    * @param flush    rows appended to the last chunk to push the watermark
+    *                 past every real row; no reference sees them
+    * @param operator the operator over the source, projected to the
+    *                 columns the reference is compared on
+    * @param finish   every batch's rows in batchId order → the final output
+    * @param expected the batch operator over the same rows; None compares
+    *                 with an uninterrupted run over the same chunks
+    * @param stateDecided (rows before the stop, rows after, expected
+    *                 output) → how many expected rows only state restored
+    *                 across the stop can produce
+    */
+  private case class RestartCase[T](op: String, reference: String, mode: OutputMode,
+      input: () => Seq[Seq[T]], flush: Seq[T], operator: Dataset[T] => DataFrame,
+      finish: Seq[Row] => Seq[Row], expected: Option[Seq[T] => Seq[Row]],
+      stateDecided: (Seq[T], Seq[T], Seq[Row]) => Int)(implicit val enc: Encoder[T])
+
+  private final class InjectedFailure(batchId: Long)
+      extends RuntimeException(s"injected sink failure in batch $batchId")
+
+  private val RestartChunks = 9
+  private val StopAfter = 3 // chunks in the run that ends with a clean stop
+  private val MinStateDecided = 10
+  private val HourUs = 3600L * 1000000L
+  private val DayUs = 24 * HourUs
+  private val T0 = Timestamp.valueOf("2024-01-01 00:00:00")
+  private val FlushKey = 999L
+  private val FlushTs = Timestamp.valueOf("2024-03-01 00:00:00")
+
+  /** `T0` plus `us` microseconds. */
+  private def tsAt(us: Long): Timestamp = {
+    val t = new Timestamp(T0.getTime + us / 1000L)
+    t.setNanos(t.getNanos + (us % 1000L).toInt * 1000)
+    t
+  }
+
+  /** A microsecond-precise event time in [T0, T0 + span). */
+  private def anyTs(rnd: scala.util.Random, spanUs: Long): Timestamp =
+    tsAt((rnd.nextDouble() * spanUs).toLong)
+
+  /** Splits `rows` into `RestartChunks` arrival chunks: a row at event time
+    * t arrives at t + U[0, lag) and chunk i holds the arrivals in
+    * [i·w, (i+1)·w), w = span / RestartChunks (the last chunk takes the
+    * stragglers), shuffled. Rows come out of event-time order within a
+    * chunk and across neighbours, yet none is late under a watermark delay
+    * ≥ lag: every row of an earlier chunk happened before i·w. */
+  private def byArrival[T](rnd: scala.util.Random, rows: Seq[T], spanUs: Long, lagUs: Long)(
+      tsOf: T => Timestamp): Seq[Seq[T]] = {
+    val w = spanUs / RestartChunks
+    val chunkOf = rows.map { r =>
+      val us = (tsOf(r).getTime - T0.getTime) * 1000L + tsOf(r).getNanos / 1000 % 1000
+      math.min(RestartChunks - 1, ((us + (rnd.nextDouble() * lagUs).toLong) / w).toInt) -> r
+    }
+    (0 until RestartChunks).map(i => rnd.shuffle(chunkOf.collect { case (`i`, r) => r }))
+  }
+
+  private val FunnelSteps = Seq("view", "click", "purchase")
+
+  private def funnelStagesOf(rows: Seq[FunnelFix]): Seq[Row] =
+    graft.ops.Temporal.funnelStages(rows.toDF(), "key", "ts", "seq", "etype", FunnelSteps)
+      .filter($"stage" > 0L).collect().toSeq
+
+  /** 30 families of 4 near-copies of a random 16-dim vector; vec_id
+    * m·30 + f, so the k-means init (vec_id < nCells) takes four families. */
+  private lazy val semEmb = {
+    val rnd = new scala.util.Random(59)
+    (0 until 30).flatMap { f =>
+      val base = Seq.fill(16)(rnd.nextGaussian())
+      (0 until 4).map(m => ((m * 30 + f).toLong,
+        base.map(x => (x + 0.1 * rnd.nextGaussian()).toFloat)))
+    }.toDF("vec_id", "embedding")
+  }
+  private lazy val semCentroids = graft.operators.Similarity.buildIvf(semEmb, nCells = 4).centroids
+  private val SemMinCos = 300000L
+
+  private def restartTable: Seq[RestartCase[_]] = Seq(
+    RestartCase[CustUpsert]("latestPerKey", "batch latestByKey", OutputMode.Update(),
+      input = () => {
+        val rnd = new scala.util.Random(17)
+        rnd.shuffle((0 until 600).map(i =>
+          CustUpsert(rnd.nextInt(40).toLong, s"doc-$i", i.toLong))).grouped(67).toSeq
+      },
+      flush = Nil,
+      operator = in => StreamingOps.latestPerKey[CustUpsert, Long](in, _.phone, _.offset).toDF(),
+      finish = rows => rows.groupBy(_.getLong(0)).values.map(_.last).toSeq,
+      expected = Some(rows => graft.ops.CoreOps.latestByKey(rows.toDF(), Seq($"phone"), Seq($"offset"))
+        .select("phone", "doc", "offset").collect().toSeq),
+      // upserts after the stop that lose to an offset only restored state holds
+      stateDecided = (pre, post, _) => {
+        val preMax = pre.groupMapReduce(_.phone)(_.offset)(math.max)
+        post.count(u => preMax.get(u.phone).exists(_ > u.offset))
+      }),
+    RestartCase[CallEvent]("streamingDedup", "the first record per key", OutputMode.Append(),
+      input = () => {
+        val rnd = new scala.util.Random(23)
+        byArrival(rnd, (0 until 240).map(i =>
+          CallEvent(anyTs(rnd, 18 * HourUs), rnd.nextInt(40).toLong, i.toLong)),
+          18 * HourUs, 2 * HourUs)(_.ts).map(_.distinctBy(_.user_id))
+      },
+      flush = Nil,
+      operator = in => StreamingOps.streamingDedup(in.toDF(), "ts", Seq("user_id"), "3 days"),
+      finish = identity,
+      expected = Some(rows => rows.distinctBy(_.user_id).toDF().collect().toSeq),
+      // duplicates after the stop of a key only restored state has seen
+      stateDecided = (pre, post, _) => {
+        val seen = pre.map(_.user_id).toSet
+        post.count(e => seen(e.user_id))
+      }),
+    RestartCase[AsofInput]("streamingAsofJoin", "batch AsofJoin.asofJoin", OutputMode.Append(),
+      input = () => {
+        val rnd = new scala.util.Random(31)
+        byArrival(rnd, (0 until 480).map { i =>
+          val (key, t) = (1L + rnd.nextInt(6), anyTs(rnd, 18 * HourUs))
+          if (i % 8 == 0) AsofInput(key, 0, -1L, t, i.toDouble) else AsofInput(key, 1, i.toLong, t, i.toDouble)
+        }, 18 * HourUs, 2 * HourUs)(_.ts)
+      },
+      flush = Seq(AsofInput(FlushKey, 0, -1L, FlushTs, 0.0), AsofInput(FlushKey, 1, -2L, FlushTs, 0.0)),
+      operator = in => StreamingOps.streamingAsofJoin(
+          in.filter($"side" === 1).select("key", "id", "ts", "value"),
+          in.filter($"side" === 0).select("key", "ts", "value"), watermark = "2 hours")
+        .select("id", "key", "asof_value", "asof_ts"),
+      finish = identity,
+      expected = Some(rows => graft.operators.AsofJoin.asofJoin(
+          rows.filter(_.side == 1).map(x => (x.key, x.id, x.ts, x.value)).toDF("key", "id", "ts", "value"),
+          rows.filter(_.side == 0).map(x => (x.key, x.ts, x.value)).toDF("key", "rts", "rv"),
+          Seq("key"), "ts", "rts", Seq("rv"))
+        .select("id", "key", "asof_rv", "asof_ts").collect().toSeq),
+      // lefts after the stop matched to a right from before it
+      stateDecided = (pre, post, want) => {
+        val preRights = pre.filter(_.side == 0).map(x => (x.key, x.ts)).toSet
+        val postLefts = post.filter(_.side == 1).map(_.id).toSet
+        want.count(r => postLefts(r.getLong(0)) && !r.isNullAt(3) &&
+          preRights((r.getLong(1), r.getTimestamp(3))))
+      }),
+    RestartCase[Scd2Fix]("streamingScd2", "batch Temporal.scd2", OutputMode.Append(),
+      input = () => {
+        val rnd = new scala.util.Random(37)
+        byArrival(rnd, (0 until 300).map(i => Scd2Fix(1L + rnd.nextInt(20),
+          anyTs(rnd, 18 * HourUs), i.toLong, Seq("a", "b", "c")(rnd.nextInt(3)))),
+          18 * HourUs, 2 * HourUs)(_.ts)
+      },
+      flush = Seq(Scd2Fix(FlushKey, FlushTs, -1L, "z")),
+      operator = in => StreamingOps.streamingScd2(in.toDF(), watermark = "2 hours").toDF(),
+      finish = identity,
+      expected = Some(rows => graft.ops.Temporal.scd2(rows.toDF(), Seq("key"), "ts", Seq("seq"), Seq("value"))
+        .filter($"valid_to".isNotNull)
+        .select("key", "value", "valid_from", "valid_to", "version").collect().toSeq),
+      // intervals opened before the stop and closed after it
+      stateDecided = (pre, post, want) => {
+        val (opened, closed) = (pre.map(x => (x.key, x.ts)).toSet, post.map(x => (x.key, x.ts)).toSet)
+        want.count(r => opened((r.getLong(0), r.getTimestamp(2))) &&
+          closed((r.getLong(0), r.getTimestamp(3))))
+      }),
+    RestartCase[FunnelFix]("streamingFunnel", "batch Temporal.funnelStages", OutputMode.Append(),
+      input = () => {
+        val rnd = new scala.util.Random(41)
+        byArrival(rnd, (0 until 800).map(i => FunnelFix(1L + rnd.nextInt(100),
+          anyTs(rnd, 18 * HourUs), i.toLong, (FunnelSteps :+ "error")(rnd.nextInt(4)))),
+          18 * HourUs, 2 * HourUs)(_.ts)
+      },
+      flush = Seq(FunnelFix(FlushKey, FlushTs, -1L, "flush")),
+      operator = in => StreamingOps.streamingFunnel(in.toDF(), FunnelSteps, watermark = "2 hours").toDF(),
+      finish = rows => rows.groupBy(_.getLong(0))
+        .map { case (k, rs) => Row(k, rs.map(_.getLong(1)).max) }.toSeq,
+      expected = Some(funnelStagesOf),
+      // final stages that neither side of the stop reaches on its own
+      stateDecided = (pre, post, want) => {
+        val alone = (funnelStagesOf(pre) ++ funnelStagesOf(post)).toSet
+        want.count(r => !alone(r))
+      }),
+    RestartCase[RetentionInput]("streamingRetention", "batch Temporal.cohortRetention",
+      OutputMode.Append(),
+      input = () => {
+        val rnd = new scala.util.Random(43)
+        byArrival(rnd, Seq.fill(240)(RetentionInput(1L + rnd.nextInt(30), anyTs(rnd, 12 * DayUs))),
+          12 * DayUs, 3 * DayUs)(_.ts)
+      },
+      flush = Seq(RetentionInput(FlushKey, FlushTs)),
+      operator = in => StreamingOps.streamingRetention(in.toDF(), watermark = "3 days").toDF(),
+      finish = rows => rows.groupBy(r => (r.getString(1), r.getLong(2)))
+        .map { case ((cohort, offset), rs) => Row(cohort, offset, rs.size.toLong) }.toSeq,
+      expected = Some(rows => graft.ops.Temporal.cohortRetention(rows.toDF(), "key", "ts").collect().toSeq),
+      // first visits after the stop to a day past a cohort fixed before it
+      stateDecided = (pre, post, _) => {
+        def day(r: RetentionInput) = r.ts.getTime / 86400000L
+        val preDays = pre.groupMap(_.key)(day)
+        post.count(r => preDays.get(r.key).exists(ds => ds.min < day(r) && !ds.contains(day(r))))
+      }),
+    RestartCase[StreamVecFixture]("streamingSemanticNearDup", "batch Similarity.semanticNearDupPairs",
+      OutputMode.Append(),
+      input = () => {
+        val rnd = new scala.util.Random(47)
+        byArrival(rnd, semEmb.collect().toSeq.map(r =>
+          StreamVecFixture(r.getLong(0), r.getSeq[Float](1), anyTs(rnd, 18 * HourUs))),
+          18 * HourUs, 2 * HourUs)(_.ts)
+      },
+      flush = Nil,
+      operator = in => StreamingOps.streamingSemanticNearDup(
+        in.toDF(), semCentroids, minCosE6 = SemMinCos, tsCol = "ts", watermark = "3 days").toDF(),
+      finish = identity,
+      expected = Some(_ => graft.operators.Similarity
+        .semanticNearDupPairs(semEmb, nCells = 4, minCosE6 = SemMinCos).collect().toSeq),
+      // pairs across the stop
+      stateDecided = (pre, _, want) => {
+        val before = pre.map(_.vec_id).toSet
+        want.count(r => before(r.getLong(0)) != before(r.getLong(1)))
+      }),
+    RestartCase[StreamDocFixture]("streamingLshNearDup", "an uninterrupted run", OutputMode.Append(),
+      input = () => {
+        val rnd = new scala.util.Random(53)
+        val vocab = (0 until 400).map(i => s"w$i")
+        val ids = rnd.shuffle((0L until 96L).toList).iterator
+        // 24 families of 4 near-copies (one word swapped), each within ±1 h
+        val docs = (0 until 24).flatMap { _ =>
+          val base = Seq.fill(30)(vocab(rnd.nextInt(vocab.size)))
+          val center = HourUs + (rnd.nextDouble() * 16 * HourUs).toLong
+          Seq.fill(4)(StreamDocFixture(ids.next(),
+            base.updated(rnd.nextInt(30), vocab(rnd.nextInt(vocab.size))).mkString(" "),
+            tsAt(center + ((rnd.nextDouble() * 2 - 1) * HourUs).toLong)))
+        }
+        byArrival(rnd, docs, 18 * HourUs, 2 * HourUs)(_.ts)
+      },
+      flush = Nil,
+      operator = in => StreamingOps.streamingLshNearDup(in.toDF(), tsCol = "ts", watermark = "2 hours").toDF(),
+      finish = identity,
+      expected = None,
+      // hits between a doc before the stop and one after it
+      stateDecided = (pre, _, want) => {
+        val before = pre.map(_.doc_id).toSet
+        want.count(r => before(r.getLong(0)) != before(r.getLong(1)))
+      }))
+
+  /** Runs `c` three times on one checkpoint: a clean stop after
+    * `StopAfter` chunks; a run of two chunks whose sink throws after
+    * collecting the second one's batch, on its first delivery; and a
+    * restart that finishes the input. The sink overwrites by batchId.
+    * Each run must resume where the checkpoint left off, the failed batch
+    * must come back under its id and recompute to the same rows, and the
+    * final output must equal the reference. */
+  private def restartCase[T](c: RestartCase[T], stateConfs: Seq[(String, String)]): Unit = {
     import scala.jdk.CollectionConverters._
-    val rnd = new scala.util.Random(17)
-    val all = rnd.shuffle((0 until 600).map(i =>
-      CustUpsert(rnd.nextInt(40).toLong, s"doc-$i", i.toLong)))
-    val (first, second) = all.grouped(120).toSeq.splitAt(3)
-    val firstMax = first.flatten.groupMapReduce(_.phone)(_.offset)(math.max)
-    assert(second.flatten.count(u => firstMax.get(u.phone).exists(_ > u.offset)) > 50,
-      "too few post-restart upserts lose to a pre-restart offset")
-    val src = Files.createTempDirectory("ck-kt-restart-src").toString
-    val ck = Files.createTempDirectory("ck-kt-restart").toString
-    val table = scala.collection.concurrent.TrieMap[Long, CustUpsert]()
-    // each chunk lands as one parquet file and is drained before the next
-    def run(part: Seq[Seq[CustUpsert]]): Seq[Long] = withSessionConf(stateConfs: _*) {
-      val ids = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-      val in = spark.readStream.schema(spark.emptyDataset[CustUpsert].schema).parquet(src)
-      val latest = StreamingOps.latestPerKey[CustUpsert, Long](
-        in.as[CustUpsert], _.phone, _.offset)
-      val q = StreamingOps.foreachBatchSink(latest.toDF(), ck, OutputMode.Update()) { (batch, id) =>
-        ids.add(id)
-        batch.as[CustUpsert].collect().foreach(u => table(u.phone) = u)
-      }.start()
-      try part.foreach { c =>
-        c.toDS().coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-      } finally q.stop()
-      ids.asScala.toSeq
+    implicit val enc: Encoder[T] = c.enc
+    val chunks = c.input()
+    assert(chunks.length === RestartChunks && chunks.forall(_.nonEmpty))
+    val streamed = chunks.init :+ (chunks.last ++ c.flush)
+    val schema = spark.createDataset(chunks.head).schema
+    def bag(rows: Seq[Row]) = rows.groupMapReduce(identity)(_ => 1)(_ + _)
+    def injected(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(_.isInstanceOf[InjectedFailure])
+    /** One checkpoint and its source directory; the sink keeps each
+      * batchId's rows, a re-delivery overwriting the first. */
+    class Lineage {
+      private val src = Files.createTempDirectory("restart-src").toString
+      private val ck = Files.createTempDirectory("restart-ck").toString
+      private val byBatch = scala.collection.concurrent.TrieMap[Long, Seq[Row]]()
+      /** Streams `part`, one parquet file per trigger, each drained before
+        * the next; returns every (batchId, rows) delivered. */
+      def run(part: Seq[Seq[T]], failLast: Boolean = false): Seq[(Long, Seq[Row])] =
+        withSessionConf(stateConfs: _*) {
+          val delivered = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Row])]()
+          val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+          val in = spark.readStream.schema(schema).parquet(src).as[T]
+          val q = StreamingOps.foreachBatchSink(c.operator(in), ck, c.mode) { (batch, id) =>
+            val rows = batch.collect().toSeq
+            byBatch(id) = rows
+            delivered.add(id -> rows)
+            if (armed.getAndSet(false)) throw new InjectedFailure(id)
+          }.start()
+          try part.zipWithIndex.foreach { case (chunk, i) =>
+            armed.set(failLast && i == part.length - 1)
+            spark.createDataset(chunk).coalesce(1).write.mode("append").parquet(src)
+            q.processAllAvailable()
+          } catch {
+            case e: org.apache.spark.sql.streaming.StreamingQueryException if failLast && injected(e) =>
+          } finally q.stop()
+          delivered.asScala.toSeq
+        }
+      def output: Seq[Row] = c.finish(byBatch.toSeq.sortBy(_._1).flatMap(_._2))
     }
-    val before = run(first)
-    val after = run(second)
-    // the second run resumed the checkpoint instead of starting over
-    assert(before.nonEmpty && after.nonEmpty && after.min > before.max)
-    val batch = graft.ops.CoreOps.latestByKey(all.toDF(), Seq($"phone"), Seq($"offset"))
-      .as[CustUpsert].collect().map(u => u.phone -> u).toMap
-    assert(table.toMap === batch)
+    val restarted = new Lineage
+    val stopped = restarted.run(streamed.take(StopAfter)).map(_._1)
+    val failed = restarted.run(streamed.slice(StopAfter, StopAfter + 2), failLast = true)
+    val resumed = restarted.run(streamed.drop(StopAfter + 2))
+    // each run resumed the checkpoint instead of starting over
+    assert(stopped.nonEmpty && failed.map(_._1).min > stopped.max)
+    // the failed batch came back under its id and recomputed the same rows
+    val (failedId, failedRows) = failed.last
+    assert(resumed.head._1 === failedId && bag(resumed.head._2) === bag(failedRows))
+    assert(resumed.map(_._1).max > failedId)
+    val want = c.expected match {
+      case Some(reference) => reference(chunks.flatten)
+      case None =>
+        val uninterrupted = new Lineage
+        uninterrupted.run(streamed)
+        uninterrupted.output
+    }
+    val (pre, post) = chunks.splitAt(StopAfter)
+    assert(c.stateDecided(pre.flatten, post.flatten, want) >= MinStateDecided,
+      s"${c.op}: too few expected rows depend on state restored across the stop")
+    assert(bag(restarted.output) === bag(want))
   }
 
-  test("latestPerKey restarts on its checkpoint (HDFS-backed state) ≡ batch latestByKey") {
-    latestPerKeyRestart()
-  }
-
-  test("latestPerKey restarts on its checkpoint (RocksDB, changelog checkpointing) ≡ batch latestByKey") {
-    latestPerKeyRestart(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
-  }
+  for (c <- restartTable; (store, confs) <- Seq(
+      "HDFS-backed state" -> Nil, "RocksDB, changelog checkpointing" -> RocksDbState))
+    test(s"${c.op} restarts on its checkpoint ($store) ≡ ${c.reference}") { restartCase(c, confs) }
 
   test("corrupt payloads decode to null and are skipped, not fatal (S8 policy)") {
     // reference: LogAndContinueExceptionHandler (CallsAggregationApp.java:34,100)
@@ -884,10 +1133,7 @@ class StreamingSpec extends SparkTestBase {
     // multi-batch run on the production state provider: the TopKByScore
     // TypedImperativeAggregate buffer must serialize/merge through
     // RocksDB and still rank the union of both batches correctly
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withSessionConf(RocksDbState: _*) {
       val t0 = Timestamp.valueOf("2024-03-01 10:05:00")
       // batch 1 holds the eventual #2 and #3; batch 2 delivers the #1,
       // so the final top-3 only exists if state merged across batches
@@ -915,11 +1161,6 @@ class StreamingSpec extends SparkTestBase {
       val merged = Set((1L, 14L, 90.0), (2L, 11L, 70.0), (3L, 12L, 60.0))
       assert(merged.subsetOf(rows), s"merged ranking missing from emissions: $rows")
       assert(rows.contains((1L, 11L, 70.0)), s"batch-1 interim ranking missing: $rows")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -927,10 +1168,7 @@ class StreamingSpec extends SparkTestBase {
     // multi-batch run on the production state provider: the
     // QuantileHistogram buffer must serialize/merge through RocksDB and
     // still equal the batch answer over the union of both batches
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withSessionConf(RocksDbState: _*) {
       val t0 = Timestamp.valueOf("2024-03-01 10:05:00")
       val batch1 = (1 to 40).map(i => RawCall(t0, i.toLong, (i % 7).toDouble))
       val batch2 = (1 to 25).map(i => RawCall(t0, 100 + i.toLong, (i % 5 + 3).toDouble))
@@ -956,11 +1194,6 @@ class StreamingSpec extends SparkTestBase {
       def pick(p: Int) = sorted((p.toLong * (all.size - 1) / 1000L).toInt)
       assert(last.getLong(2) === all.size.toLong)
       assert((last.getLong(0), last.getLong(1)) === ((pick(500), pick(900))))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1165,6 +1398,41 @@ class StreamingSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1),
         Option(r.get(2)), Option(r.get(3)))).toSet
     assert(rows === batch)
+  }
+
+  test("streaming as-of join: a left at ts == watermark waits; an equal-ts right matches it") {
+    // both sides ride one tagged source, so each micro-batch holds exactly
+    // the rows added together and the watermark lands where planned
+    val in = MemoryStream[AsofInput](spark)
+    val out = StreamingOps.streamingAsofJoin(
+      in.toDF().filter($"side" === 1).select("key", "id", "ts", "value"),
+      in.toDF().filter($"side" === 0).select("key", "ts", "value"))
+    val q = out.writeStream
+      .format("memory").queryName("asof_cutoff").outputMode("append")
+      .option("checkpointLocation", Files.createTempDirectory("ck-asof-cutoff").toString)
+      .start()
+    def left(key: Long, id: Long, hhmm: String) = AsofInput(key, 1, id, ts(hhmm), 0.0)
+    def right(key: Long, hhmm: String, v: Double) = AsofInput(key, 0, -1L, ts(hhmm), v)
+    def emitted = spark.table("asof_cutoff").select($"id", $"asof_value")
+      .collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
+    try {
+      in.addData(right(1L, "09:30", 0.5), left(1L, 1L, "10:00"), right(1L, "10:00", 1.0))
+      q.processAllAvailable()
+      // both sides reach 11:00: the watermark is now exactly 10:00
+      in.addData(left(2L, 2L, "11:00"), right(2L, "11:00", 2.0))
+      q.processAllAvailable()
+      // a fresh row on key 1 at watermark 10:00: the 10:00 left is not
+      // certified (a right at 10:00 may still arrive), so nothing emits
+      in.addData(left(1L, 3L, "10:30"))
+      q.processAllAvailable()
+      assert(emitted === Map.empty)
+      // the watermark passes 10:00 (and 11:00)
+      in.addData(left(2L, 4L, "12:30"), right(2L, "12:30", 3.0))
+      q.processAllAvailable()
+    } finally q.stop()
+    // as-of is at-or-before: the 10:00 right, not the 09:30 one, answers
+    // the 10:00 left (at an equal ts a right replays before a left)
+    assert(emitted === Map(1L -> Some(1.0), 3L -> Some(1.0), 2L -> Some(2.0)))
   }
 
   test("bloomAntiJoin runs unchanged on a stream against a static blocklist") {
