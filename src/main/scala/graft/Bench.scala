@@ -109,9 +109,11 @@ object Bench {
   /** Jobs dispatched by `f` on this thread (and the broadcast and subquery
     * threads that inherit its local properties): `f` runs under a fresh
     * job group, and a closing marker job in that group proves every earlier
-    * event of the group has been delivered (the listener bus is ordered). */
-  def jobsDuring[T](sc: SparkContext)(f: => T): (T, Census) = {
-    val group = s"graft-jobs-${java.util.UUID.randomUUID()}"
+    * event of the group has been delivered (the listener bus is ordered).
+    * To count a streaming query's micro-batches, pass its run id as
+    * `group`: Spark runs every job of a run under that group. */
+  def jobsDuring[T](sc: SparkContext, group: String = s"graft-jobs-${java.util.UUID.randomUUID()}")(
+      f: => T): (T, Census) = {
     val jobs = new java.util.concurrent.ConcurrentSkipListMap[Int, String]()
     val stages = new java.util.concurrent.ConcurrentSkipListMap[Int, String]()
     val groupStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
@@ -164,9 +166,13 @@ object Bench {
   private def jobLine(j: SparkListenerJobStart, execFrame: Option[String]): String = {
     val stages = j.stageInfos.sortBy(_.stageId)
     // the result stage (last) carries the action's call site; a broadcast
-    // build's does not, so name the execution that planned it, or else the
-    // job's other stages
-    val frame = stages.lastOption.flatMap(s => graftFrame(s.details)).getOrElse {
+    // build's does not (Spark tags its job `broadcast exchange (runId …)`;
+    // its call site is the exchange pool's, or in a stream the query's
+    // `start`), so name the execution that planned it, or else the job's
+    // other stages
+    val build = Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+      .exists(_.split(',').exists(_.startsWith("broadcast exchange")))
+    val frame = stages.lastOption.filterNot(_ => build).flatMap(s => graftFrame(s.details)).getOrElse {
       val planners = execFrame.map(Seq(_))
         .getOrElse(stages.flatMap(s => graftFrame(s.details)).distinct.take(2))
       planners.mkString(s"$AnyStageFrames ", " | ", "")

@@ -3,26 +3,40 @@ package graft
 import org.apache.spark.sql.{GraftRegistryShim, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import org.apache.spark.sql.types.IntegerType
 
 import graft.expressions._
+import graft.streaming.StaticBroadcastReuse
 
-/** SQL surface of the engine's custom expressions.
+/** SQL surface of the engine's custom expressions, and its one physical
+  * rule.
   *
-  * Two wiring paths, same function set:
+  * Two wiring paths for the function set:
   *   - `spark.sql.extensions=graft.GraftExtensions` at session build time
-  *     (the standard library-extension hook), or
+  *     (the standard library-extension hook; `GraftSession.builder` sets
+  *     it), or
   *   - `GraftExtensions.register(spark)` on a live session.
   *
   * After either, `spark.sql("SELECT graft_word_shingles(text, 3) ...")`
   * plans the same codegen'd expressions the Scala API uses — the SQL and
   * DataFrame surfaces cannot drift.
+  *
+  * Only the build-time path carries the physical rule
+  * [[graft.streaming.StaticBroadcastReuse]] (a stream-static broadcast
+  * built once per query run): Spark builds a session's physical rules once,
+  * with the session, so `register` cannot add it to a live one.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
+    ext.injectColumnar(s => new ColumnarRule {
+      override def postColumnarTransitions: Rule[SparkPlan] = StaticBroadcastReuse(s)
+    })
+  }
 }
 
 object GraftExtensions {

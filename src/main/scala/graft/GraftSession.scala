@@ -16,6 +16,14 @@ import graft.streaming.LocalCheckpointFileManager
   *     and formatted timestamps deterministic across clusters.
   *   - graft SQL functions registered (GraftExtensions), so spark.sql and
   *     the Column API expose the same surface.
+  *   - `spark.sql.extensions` = [[GraftExtensions]] ([[ExtensionsConf]]),
+  *     which also injects `graft.streaming.StaticBroadcastReuse`: a
+  *     stream-static join builds and broadcasts its static side once per
+  *     query run instead of once per micro-batch. On the calls stream that
+  *     removes one job, its 1-task stage and the driver-side relation build
+  *     from every trigger. Batch plans are untouched. The key is a static
+  *     conf read when a session is built, so `create` warns when it gets
+  *     back a session built without it.
   *   - streaming checkpoints on a local disk written through `java.nio`
   *     (`graft.streaming.LocalCheckpointFileManager`): Spark's default
   *     manager writes them through Hadoop's `RawLocalFileSystem`, which
@@ -64,6 +72,10 @@ object GraftSession {
     * class from; `builder` sets it to `LocalCheckpointFileManager`. */
   val CheckpointFileManagerConf = "spark.sql.streaming.checkpointFileManagerClass"
 
+  /** The static conf Spark reads session extensions from; `builder` sets
+    * it to [[GraftExtensions]]. */
+  val ExtensionsConf = "spark.sql.extensions"
+
   /** The static conf that sizes Spark's generated-class cache; `builder`
     * sets it to [[CodegenCacheEntries]]. */
   val CodegenCacheConf = "spark.sql.codegen.cache.maxEntries"
@@ -84,6 +96,7 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config(CheckpointFileManagerConf, classOf[LocalCheckpointFileManager].getName)
       .config(CodegenCacheConf, CodegenCacheEntries.toString)
+      .config(ExtensionsConf, classOf[GraftExtensions].getName)
     master.foreach(b.master)
     shufflePartitions.foreach(n => b.config("spark.sql.shuffle.partitions", n.toString))
     b
@@ -97,6 +110,10 @@ object GraftSession {
     if (s.conf.get(CodegenCacheConf) != CodegenCacheEntries.toString)
       log.warn(s"$CodegenCacheConf is ${s.conf.get(CodegenCacheConf)} on the existing session, " +
         s"not graft's $CodegenCacheEntries: generated classes recompile once the cache fills")
+    if (!s.conf.getOption(ExtensionsConf).exists(_.split(',').map(_.trim)
+        .contains(classOf[GraftExtensions].getName)))
+      log.warn(s"$ExtensionsConf on the existing session does not name ${classOf[GraftExtensions].getName}: " +
+        "a stream-static join rebuilds its broadcast on every micro-batch")
     GraftExtensions.register(s)
     s
   }

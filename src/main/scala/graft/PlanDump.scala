@@ -50,16 +50,17 @@ object PlanDump {
 
   /** The streaming calls query has a physical plan only once a micro-batch
     * ran: the `events` table goes through `CallsStreamPipeline.aggregate`
-    * and `enriched` (against `customer`) as one micro-batch, and the
-    * formatted plan of that batch's execution is returned. */
+    * and `enriched` (against `customer`) as two micro-batches, half the
+    * events each, and the formatted plan each batch executed is returned. The second shows what a steady trigger plans (the customer
+    * broadcast of a run is built once, `graft.streaming.StaticBroadcastReuse`). */
   private def callsStreamPlan(spark: org.apache.spark.sql.SparkSession, sfDir: String): String = {
     import spark.implicits._
     import graft.streaming.{CallsStreamPipeline, StreamingOps}
     val in = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(java.sql.Timestamp, Long, Double)](spark)
-    in.addData(Tables.events(spark, sfDir)
+    val events = Tables.events(spark, sfDir)
       .select($"ts", $"user_id", $"value".cast("double"))
-      .as[(java.sql.Timestamp, Long, Double)].collect().toSeq)
+      .as[(java.sql.Timestamp, Long, Double)].collect().toSeq
     val enriched = CallsStreamPipeline.enriched(
       CallsStreamPipeline.aggregate(in.toDF().toDF("ts", "user_id", "value")),
       Tables.customer(spark, sfDir),
@@ -68,11 +69,17 @@ object PlanDump {
         java.nio.file.Files.createTempDirectory("plandump-ck").toString,
         org.apache.spark.sql.streaming.OutputMode.Update()) { (b, _) => b.collect(); () }
       .start()
-    try {
+    try events.grouped((events.length + 1) / 2).zipWithIndex.map { case (half, i) =>
+      in.addData(half)
       q.processAllAvailable()
-      q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
-        .streamingQuery.lastExecution
-        .explainString(org.apache.spark.sql.execution.FormattedMode)
-    } finally q.stop()
+      // the plan the batch executed: `explainString` of a streaming
+      // execution would plan the query again, on this thread
+      val out = new StringBuilder(s"== micro-batch $i ==\n== Physical Plan ==\n")
+      org.apache.spark.sql.execution.ExplainUtils.processPlan(
+        q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+          .streamingQuery.lastExecution.executedPlan, (s: String) => { out.append(s); () })
+      out.toString
+    }.mkString("\n")
+    finally q.stop()
   }
 }

@@ -30,8 +30,13 @@ object CallsStreamPipeline {
       watermark: String = "24 hours"): DataFrame =
     tumblingAgg(calls.withWatermark(tsCol, watermark), col(tsCol), col(caller), col(duration))
 
-  /** [[graft.pipelines.CallsPipeline.enrich]] on the aggregated stream; the
-    * static customer side is re-resolved per micro-batch. */
+  /** [[graft.pipelines.CallsPipeline.enrich]] on the aggregated stream.
+    * The static customer side is a snapshot: each micro-batch plans it
+    * again, and on a session with [[graft.GraftExtensions]] (every
+    * `GraftSession`) [[StaticBroadcastReuse]] hands each batch the
+    * broadcast the query run built in its first batch, so a trigger runs
+    * one job, not two. It is rebuilt only if the snapshot's file listing
+    * changes. */
   def enriched(
       aggregated: DataFrame,
       customers: DataFrame,

@@ -392,11 +392,13 @@ object StreamingOps {
     require(nDocs > 0, "streamingBm25: empty index")
     // same IEEE value as the batch tail's sum_dl.cast(double)/n_docs
     val avgdl = sumDl.toDouble / nDocs
-    // persisted: the static side of a stream-static join is re-resolved
-    // and RE-EXECUTED every micro-batch, so unpinned this full-postings
-    // aggregation would rerun per trigger just to rederive constant df
-    // values. The cache lives as long as the serving stream — the same
-    // serving-artifact lifetime as the index itself.
+    // persisted: each micro-batch plans the static side of a stream-static
+    // join again, and StaticBroadcastReuse builds it once per run only
+    // when it is broadcast and reads files or local rows, so unpinned this
+    // full-postings aggregation could still rerun per trigger just to
+    // rederive constant df values (a sort-merge join, or an index over a
+    // cached frame). The cache lives as long as the serving stream — the
+    // same serving-artifact lifetime as the index itself.
     val dfByTerm = index.postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val contrib = queries
@@ -1101,7 +1103,10 @@ object StreamingOps {
       .withWatermark(tsCol, watermark)
       .select(col("doc_id"), col(tsCol).as("__ts"),
         explode(graft.expressions.TextExpressions.shingleHashes(col("text"), shingleN)).as("sh"))
-    sh.join(evalIndex, "sh") // stream-static inner join, index re-resolved per micro-batch
+    // stream-static inner join: each micro-batch plans the index again; a
+    // broadcast of it is built once per run (StaticBroadcastReuse) when
+    // the index reads files or local rows
+    sh.join(evalIndex, "sh")
       // idempotency level (the streamingBm25 pattern): a re-delivered doc
       // event re-joins every one of its shingles, and a plain count would
       // double inter_cnt (containment could read > 1000‰) — collapsing to

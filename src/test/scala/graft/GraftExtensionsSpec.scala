@@ -173,6 +173,7 @@ class GraftExtensionsSpec extends SparkTestBase {
     assert(gs.conf.get(GraftSession.CheckpointFileManagerConf) ===
       classOf[graft.streaming.LocalCheckpointFileManager].getName)
     assert(gs.conf.get(GraftSession.CodegenCacheConf) === GraftSession.CodegenCacheEntries.toString)
+    assert(gs.conf.get(GraftSession.ExtensionsConf) === classOf[GraftExtensions].getName)
     assert(gs.sql("SELECT graft_hash60('x') AS h").collect().head.getLong(0) > 0L)
   }
 }

@@ -44,22 +44,7 @@ class LocalCheckpointFileManagerSpec extends SparkTestBase {
   private val ManagerConf = GraftSession.CheckpointFileManagerConf
   private val SparkDefaultManager = classOf[FileContextBasedCheckpointFileManager].getName
 
-  /** A calls table and a customer table in the layout `graft.Tables`
-    * reads: 1,000 calls of 15 callers over 10 hours, and customers for 12
-    * of the callers, so the enrichment also null-defaults misses. */
-  private lazy val tables: String = {
-    val d = Files.createTempDirectory("calls-tables").toString
-    val rnd = new scala.util.Random(7)
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    Seq.fill(1000)(RawCall(new java.sql.Timestamp(t0 + rnd.nextLong(10L * 3600 * 1000)),
-        1L + rnd.nextInt(15), rnd.nextInt(32000) / 100.0))
-      .toDS().coalesce(1).write.parquet(s"$d/events.parquet")
-    (1L to 12L).map(k => (k, s"Customer#$k", (k % 5).toInt, k * 10.5,
-        Seq("AUTOMOBILE", "BUILDING", "MACHINERY")((k % 3).toInt)))
-      .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
-      .coalesce(1).write.parquet(s"$d/customer.parquet")
-    d
-  }
+  private lazy val tables: String = callsTables(seed = 7)
 
   private def dirPath(d: NioPath) = new Path(d.toUri)
   private def graftManager(d: NioPath): CheckpointFileManager =

@@ -36,6 +36,32 @@ trait SparkTestBase extends AnyFunSuite {
     (out, census.jobs.size)
   }
 
+  /** Customer rows for `keys` in the `customer` table's layout. */
+  def customerRows(keys: Seq[Long]): org.apache.spark.sql.DataFrame = {
+    val s = spark
+    import s.implicits._
+    keys.map(k => (k, s"Customer#$k", (k % 5).toInt, k * 10.5,
+        Seq("AUTOMOBILE", "BUILDING", "MACHINERY")((k % 3).toInt)))
+      .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment").coalesce(1)
+  }
+
+  /** A calls table and a customer table in the layout `graft.Tables`
+    * reads, in a new directory: 1,000 calls of 15 callers over 10 hours,
+    * drawn from `seed`, and customers for 12 of the callers, so the
+    * enrichment also null-defaults misses. */
+  def callsTables(seed: Int): String = {
+    val s = spark
+    import s.implicits._
+    val d = java.nio.file.Files.createTempDirectory("calls-tables").toString
+    val rnd = new scala.util.Random(seed)
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    Seq.fill(1000)(RawCall(new java.sql.Timestamp(t0 + rnd.nextLong(10L * 3600 * 1000)),
+        1L + rnd.nextInt(15), rnd.nextInt(32000) / 100.0))
+      .toDS().coalesce(1).write.parquet(s"$d/events.parquet")
+    customerRows(1L to 12L).write.parquet(s"$d/customer.parquet")
+    d
+  }
+
   /** `df` plans under the session's AQE and reads a cached frame: the
     * physical plan is an `AdaptiveSparkPlan` over `InMemoryTableScan`. */
   def readsCacheAdaptively(df: org.apache.spark.sql.DataFrame): Boolean =
@@ -56,10 +82,12 @@ object SparkTestBase {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // the checkpoint manager and codegen cache every GraftSession runs on
+      // the checkpoint manager, codegen cache and extensions every
+      // GraftSession runs on
       .config(GraftSession.CheckpointFileManagerConf,
         classOf[graft.streaming.LocalCheckpointFileManager].getName)
       .config(GraftSession.CodegenCacheConf, GraftSession.CodegenCacheEntries.toString)
+      .config(GraftSession.ExtensionsConf, classOf[GraftExtensions].getName)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()

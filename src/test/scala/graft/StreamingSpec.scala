@@ -835,6 +835,28 @@ class StreamingSpec extends SparkTestBase {
   private lazy val semCentroids = graft.operators.Similarity.buildIvf(semEmb, nCells = 4).centroids
   private val SemMinCos = 300000L
 
+  /** Eight benchmark docs of 12 words; a train doc embeds one whole
+    * (containment 1000‰) or its first 9 words (700‰) between random
+    * words, or is all random words. The vocabulary is large enough that
+    * random words share no shingle with the benchmark. */
+  private val ContamVocab = (0 until 2000).map(i => s"v$i")
+  private lazy val contamEval: Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(61)
+    (0 until 8).map(e => (100L + e, Seq.fill(12)(ContamVocab(rnd.nextInt(2000))).mkString(" ")))
+  }
+  private lazy val contamIndex =
+    graft.operators.Dedup.evalShingleIndex(contamEval.toDF("doc_id", "text"))
+
+  /** A 60-doc corpus over 30 words, so each query term matches about 14
+    * docs and a query fills its top 5. */
+  private val Bm25Vocab = (0 until 30).map(i => s"t$i")
+  private lazy val bm25Index = {
+    val rnd = new scala.util.Random(67)
+    graft.operators.TextSearch.buildTextIndex((0 until 60).map(d =>
+        (d.toLong, Seq.fill(8)(Bm25Vocab(rnd.nextInt(30))).mkString(" "))).toDF("doc_id", "text"),
+      "doc_id", "text")
+  }
+
   private def restartTable: Seq[RestartCase[_]] = Seq(
     RestartCase[CustUpsert]("latestPerKey", "batch latestByKey", OutputMode.Update(),
       input = () => {
@@ -990,6 +1012,62 @@ class StreamingSpec extends SparkTestBase {
       stateDecided = (pre, _, want) => {
         val before = pre.map(_.doc_id).toSet
         want.count(r => before(r.getLong(0)) != before(r.getLong(1)))
+      }),
+    RestartCase[StreamDocFixture]("streamingContamination", "batch Dedup.contaminationPairs",
+      OutputMode.Append(),
+      input = () => {
+        val rnd = new scala.util.Random(71)
+        def words(n: Int) = Seq.fill(n)(ContamVocab(rnd.nextInt(2000)))
+        byArrival(rnd, (0 until 600).map { i =>
+          val (_, bench) = contamEval(rnd.nextInt(contamEval.size))
+          val leak = rnd.nextInt(3) match {
+            case 0 => bench.split(' ').toSeq
+            case 1 => bench.split(' ').toSeq.take(9)
+            case _ => Nil
+          }
+          StreamDocFixture(i.toLong, (words(5) ++ leak ++ words(5)).mkString(" "),
+            anyTs(rnd, 18 * HourUs))
+        }, 18 * HourUs, 2 * HourUs)(_.ts)
+      },
+      flush = Seq(StreamDocFixture(FlushKey, "sentinel", FlushTs)),
+      operator = in => StreamingOps.streamingContamination(in.toDF(), contamIndex,
+          watermark = "2 hours", minPermille = 500)
+        .select("doc_id", "eval_id", "inter_cnt", "containment_permille"),
+      finish = identity,
+      expected = Some(rows => graft.operators.Dedup.contaminationPairs(
+          rows.map(d => (d.doc_id, d.text)).toDF("doc_id", "text"),
+          contamEval.toDF("doc_id", "text"), minPermille = 500)
+        .select("train_id", "eval_id", "inter_cnt", "containment_permille").collect().toSeq),
+      // flagged docs from before the stop whose hour the watermark had
+      // not yet closed at the stop
+      stateDecided = (pre, _, want) => {
+        val open = pre.map(_.ts.getTime).max - 2 * 3600 * 1000L
+        val pending = pre.filter(_.ts.getTime > open).map(_.doc_id).toSet
+        want.count(r => pending(r.getLong(0)))
+      }),
+    RestartCase[QueryEvent]("streamingBm25", "batch TextSearch.bm25TopKWith", OutputMode.Append(),
+      input = () => {
+        val rnd = new scala.util.Random(73)
+        // 120 queries of 3 distinct terms, each term its own event at the
+        // query's time, so a query's terms can arrive in different chunks
+        byArrival(rnd, (0 until 120).flatMap { q =>
+          val t = anyTs(rnd, 18 * HourUs)
+          rnd.shuffle(Bm25Vocab).take(3).map(QueryEvent(t, q.toLong, _))
+        }, 18 * HourUs, 2 * HourUs)(_.ts)
+      },
+      flush = Seq(QueryEvent(FlushTs, FlushKey, "unindexed")),
+      operator = in => StreamingOps.streamingBm25(in.toDF(), "ts", "query_id", "text",
+          bm25Index, k = 5, watermark = "2 hours")
+        .select("query_id", "rank", "doc_id", "score_e6"),
+      finish = identity,
+      expected = Some(rows => graft.operators.TextSearch.bm25TopKWith(bm25Index,
+          rows.groupBy(_.query_id).map { case (q, es) => q -> es.map(_.text).mkString(" ") }.toSeq,
+          k = 5)
+        .select("query_id", "rank", "doc_id", "score_e6").collect().toSeq),
+      // leaderboards of queries whose terms arrived on both sides of the stop
+      stateDecided = (pre, post, want) => {
+        val split = pre.map(_.query_id).toSet intersect post.map(_.query_id).toSet
+        want.count(r => split(r.getLong(0)))
       }))
 
   /** Runs `c` three times on one checkpoint: a clean stop after
