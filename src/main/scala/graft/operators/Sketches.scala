@@ -191,6 +191,24 @@ object Sketches {
       .agg(picks.head, picks.tail: _*)
   }
 
+  /** [[exactQuantiles]] as ONE bounded [[graft.expressions
+    * .QuantileHistogram]] aggregate of `value` cast to long: columns `by`
+    * (the caller names them), one per named permille, then `n_rows`. One
+    * stateful stage, not two, so it also runs under `window()` or
+    * `session_window()` on a stream: q30, and over `withWatermark`
+    * `StreamingOps.windowedQuantilesStream` and `sessionQuantilesStream`.
+    *
+    * @param quantiles output column name -> permille, as in exactQuantiles
+    */
+  def histogramQuantiles(df: DataFrame, value: Column, quantiles: Seq[(String, Int)],
+      by: Column*): DataFrame = {
+    val agg = df.groupBy(by: _*).agg(
+      graft.expressions.QuantileHistogram.quantiles(value.cast("long"), quantiles.map(_._2)).as("__q"))
+    agg.select(agg.columns.toSeq.init.map(col) ++ quantiles.zipWithIndex.map { case ((nm, _), i) =>
+      col("__q.qs").getItem(i).as(nm)
+    } :+ col("__q.n_rows").as("n_rows"): _*)
+  }
+
   /** KMV sketch aggregate over a pre-hashed column: `struct<kk, hk>` of the
     * k smallest distinct hashes. See [[graft.expressions.KmvSketch]]. */
   def kmv(hash: Column, k: Int): Column = KmvSketch.kmv(hash, k)

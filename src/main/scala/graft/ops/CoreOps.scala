@@ -71,6 +71,16 @@ object CoreOps {
         floor(col("total_duracion_origen") / col("calls_count")).cast("long"))
   }
 
+  /** Row count and exact `cents` sum of `value` per group: columns `by`
+    * (the caller names them — `window(...).as("w")`, `session_window(...)`,
+    * a key), then `n_events` and `sum_cents`. The hopping (q27), session
+    * (q16) and per-user (q48) aggregates, and over `withWatermark` their
+    * streaming faces (`StreamingOps.hoppingAggStream`, `sessionAggStream`).
+    * An empty `by` is one global row. */
+  def countCents(events: DataFrame, value: Column, by: Column*): DataFrame =
+    events.groupBy(by: _*)
+      .agg(count(lit(1)).as("n_events"), sum(RelationalOps.cents(value)).as("sum_cents"))
+
   /** KTable semantics: latest value per key.
     *
     * Reference: `builder.table(topic)` (CallsEnrichedApp.java:58) — a

@@ -207,20 +207,26 @@ object ScaleOps {
     * then ONE global aggregate over the per-key counts whose state is
     * O(distinct counts) — no window, no sort, nothing driver-side but
     * the single output row. Null keys count as a key (they hash to one
-    * reducer like any other value — the usual skew culprit). */
-  def skewReport(df: DataFrame, keyCol: String): DataFrame = {
-    val counts = df.groupBy(col(keyCol)).agg(count(lit(1)).as("__cnt"))
+    * reducer like any other value — the usual skew culprit).
+    *
+    * With `by` (caller-named columns, e.g. `window(ts, "1 hour").as("window")`)
+    * there is one report per group, led by the `by` columns; over
+    * `withWatermark` that is `StreamingOps.windowedSkewStream`. */
+  def skewReport(df: DataFrame, keyCol: String, by: Column*): DataFrame = {
+    val counts = df.groupBy(by :+ col(keyCol): _*).agg(count(lit(1)).as("__cnt"))
+    val groups = counts.columns.toSeq.take(by.length).map(col)
     counts
+      .groupBy(groups: _*)
       .agg(
         count(lit(1)).as("n_keys"),
         sum(col("__cnt")).as("n_rows"),
         max(col("__cnt")).as("max_rows_per_key"),
         graft.expressions.QuantileHistogram.quantiles(col("__cnt"), Seq(500, 990)).as("__q"))
-      .select(col("n_keys"), col("n_rows"), col("max_rows_per_key"),
+      .select(groups ++ Seq(col("n_keys"), col("n_rows"), col("max_rows_per_key"),
         element_at(col("__q.qs"), 1).as("p50_rows_per_key"),
         element_at(col("__q.qs"), 2).as("p99_rows_per_key"),
         expr("CAST((1000 * max_rows_per_key * n_keys) DIV n_rows AS BIGINT)")
-          .as("skew_permille"))
+          .as("skew_permille")): _*)
   }
 
   /** Incremental aggregate maintenance (the IVM move): merge a NEW

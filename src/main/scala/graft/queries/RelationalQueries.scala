@@ -64,9 +64,8 @@ object RelationalQueries {
       // Session (gap-based) windows — the windowing kind Kafka Streams has
       // as SessionWindows but the reference never uses. 2h inactivity gap
       // per user; one shuffle on user_id, sessions merged within partition.
-      Tables.events(s, d)
-        .groupBy(session_window(col("ts"), "2 hours").as("w"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"), sum(cents(col("value"))).as("sum_cents"))
+      graft.ops.CoreOps.countCents(Tables.events(s, d), col("value"),
+          session_window(col("ts"), "2 hours").as("w"), col("user_id"))
         .select(
           col("user_id"),
           date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
@@ -147,9 +146,8 @@ object RelationalQueries {
       // present in the DSL but unused by the reference (SURVEY.md §2.6).
       // 1-hour windows every 30 minutes: each event lands in 2 windows;
       // Spark's window() expands rows then aggregates in one shuffle.
-      Tables.events(s, d)
-        .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"), sum(cents(col("value"))).as("sum_cents"))
+      graft.ops.CoreOps.countCents(Tables.events(s, d), col("value"),
+          window(col("ts"), "1 hour", "30 minutes").as("w"), col("user_id"))
         .select(
           date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
           col("user_id"), col("n_events"), col("sum_cents"))
@@ -272,13 +270,7 @@ object RelationalQueries {
         "p75_cents" -> 750, "p95_cents" -> 950)
       val li = Tables.lineitem(s, d)
         .select(col("l_returnflag").as("flag"), cents(col("l_extendedprice")).as("cents"))
-      li.groupBy(col("flag"))
-        .agg(graft.expressions.QuantileHistogram.quantiles(
-          col("cents"), names.map(_._2)).as("__q"))
-        .select(col("flag") +:
-          names.zipWithIndex.map { case ((nm, _), i) =>
-            col("__q.qs").getItem(i).as(nm)
-          } :+ col("__q.n_rows").as("n_rows"): _*)
+      graft.operators.Sketches.histogramQuantiles(li, col("cents"), names, col("flag"))
     }),
     "q29_distinct_sketch" -> ((s, d) => {
       // KMV distinct-count sketch vs the exact count, side by side. The
@@ -796,9 +788,7 @@ object RelationalQueries {
       // events are never rescanned; the join touches key-cardinality
       // state only. Oracle = the full recompute it must equal.
       val ev = Tables.events(s, d)
-      def aggOf(df: org.apache.spark.sql.DataFrame) =
-        df.groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n_events"), sum(cents(col("value"))).as("sum_cents"))
+      def aggOf(df: DataFrame) = graft.ops.CoreOps.countCents(df, col("value"), col("user_id"))
       graft.ops.ScaleOps.mergeAggregates(
         aggOf(ev.filter(col("ts") < lit("2024-01-20"))),
         aggOf(ev.filter(col("ts") >= lit("2024-01-20"))),

@@ -107,9 +107,12 @@ case class Replay[S, P](fold: S, pending: Seq[P])
   *     stream-static join which only sees periodic snapshots.
   *
   * A face that IS a batch operator is not written here a second time: it
-  * runs per record over a watermarked frame (`CallsStreamPipeline.aggregate`
-  * is `CoreOps.tumblingAgg` over `withWatermark`) or per batch inside
-  * [[foreachBatchSink]].
+  * runs per record over a watermarked frame or per batch inside
+  * [[foreachBatchSink]]. A windowed face calls its batch operator over
+  * `withWatermark` (`CallsStreamPipeline.aggregate` is
+  * `CoreOps.tumblingAgg`; each face below names its own), and Spark drops
+  * `withWatermark` over a batch frame, so the face applied to a batch
+  * frame is its batch operator.
   *
   * Scale: streaming state lives in the executor state stores partitioned by
   * the grouping key (`StateStoreSaveExec` / `FlatMapGroupsWithStateExec`),
@@ -129,13 +132,18 @@ object StreamingOps {
       iv, java.util.concurrent.TimeUnit.MILLISECONDS, 31)
   }
 
+  /** `df` with its leading `window` struct replaced by the window's start,
+    * named `name`. */
+  private def startOf(df: DataFrame, name: String): DataFrame =
+    df.select(col("window.start").as(name) +: df.columns.toSeq.tail.map(col): _*)
+
   /** Watermarked HOPPING-window aggregate — the streaming form of the
     * batch q27 (Kafka Streams `TimeWindows.of(width).advanceBy(slide)`,
     * SURVEY.md §2.6): each event lands in width/slide overlapping windows;
     * Spark's `window(ts, width, slide)` enumerates them at the scan, so
     * the aggregate itself is the same partial-then-final shape as the
     * tumbling form, with state per (window, key) evicted at the
-    * watermark. */
+    * watermark. [[graft.ops.CoreOps.countCents]] by (window, key). */
   def hoppingAggStream(
       events: DataFrame,
       tsCol: String,
@@ -144,18 +152,15 @@ object StreamingOps {
       width: String = "1 hour",
       slide: String = "30 minutes",
       watermark: String = "24 hours"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), width, slide).as("window"), key.as("user_id"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        sum(round(value * 100).cast("long")).as("sum_cents"))
+    graft.ops.CoreOps.countCents(events.withWatermark(tsCol, watermark), value,
+      window(col(tsCol), width, slide).as("window"), key.as("user_id"))
 
   /** Watermarked SESSION-window aggregate — the streaming form of the
     * batch q16 (Kafka Streams `SessionWindows.with(gap)`): windows grow
     * with activity and close after `gap` of silence per key. Spark's
     * `session_window` merges overlapping per-event sessions in the state
-    * store, evicting a session once the watermark passes its close. */
+    * store, evicting a session once the watermark passes its close.
+    * [[graft.ops.CoreOps.countCents]] by (session, key). */
   def sessionAggStream(
       events: DataFrame,
       tsCol: String,
@@ -163,12 +168,8 @@ object StreamingOps {
       value: Column,
       gap: String = "2 hours",
       watermark: String = "24 hours"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(session_window(col(tsCol), gap).as("window"), key.as("user_id"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        sum(round(value * 100).cast("long")).as("sum_cents"))
+    graft.ops.CoreOps.countCents(events.withWatermark(tsCol, watermark), value,
+      session_window(col(tsCol), gap).as("window"), key.as("user_id"))
 
   /** Watermarked windowed KMV distinct sketch over a stream — streaming
     * form of q29: per event-time window, the k smallest distinct hashes
@@ -251,32 +252,17 @@ object StreamingOps {
       keyCol: String,
       windowWidth: String = "1 hour",
       watermark: String = "24 hours"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowWidth).as("window"), col(keyCol))
-      .agg(count(lit(1)).as("__cnt"))
-      .groupBy(col("window"))
-      .agg(
-        count(lit(1)).as("n_keys"),
-        sum(col("__cnt")).as("n_rows"),
-        max(col("__cnt")).as("max_rows_per_key"),
-        graft.expressions.QuantileHistogram.quantiles(col("__cnt"), Seq(500, 990)).as("__q"))
-      .select(col("window.start").as("window_start"),
-        col("n_keys"), col("n_rows"), col("max_rows_per_key"),
-        element_at(col("__q.qs"), 1).as("p50_rows_per_key"),
-        element_at(col("__q.qs"), 2).as("p99_rows_per_key"),
-        expr("CAST((1000 * max_rows_per_key * n_keys) DIV n_rows AS BIGINT)")
-          .as("skew_permille"))
+    startOf(graft.ops.ScaleOps.skewReport(events.withWatermark(tsCol, watermark), keyCol,
+      window(col(tsCol), windowWidth).as("window")), "window_start")
 
   /** Watermarked windowed EXACT quantiles over a stream — streaming form
-    * of q28, via [[graft.expressions.QuantileHistogram]] (the batch
-    * histogram+window plan is two stateful stages, one too many for a
-    * streaming query; the single bounded aggregate composes with
-    * `window()` for free). Same quantile definition as
-    * `Sketches.exactQuantiles`; state per window is bounded by the
-    * distinct-value domain, not the row count.
+    * of q28/q30: [[graft.operators.Sketches.histogramQuantiles]] by
+    * window, one bounded aggregate whose state per window is bounded by
+    * the distinct-value domain, not the row count.
     *
     * @param quantiles output column name -> permille, as in exactQuantiles
+    * @param slide     below `width`: hopping windows, each event landing in
+    *                  width/slide of them, as in [[hoppingAggStream]]
     */
   def windowedQuantilesStream(
       events: DataFrame,
@@ -286,20 +272,9 @@ object StreamingOps {
       width: String = "1 hour",
       watermark: String = "24 hours",
       slide: Option[String] = None): DataFrame = {
-    val agg = graft.expressions.QuantileHistogram.quantiles(
-      value.cast("long"), quantiles.map(_._2)).as("__q")
-    val outCols = col("window.start").as("window_start") +:
-      (quantiles.zipWithIndex.map { case ((nm, _), i) =>
-        col("__q.qs").getItem(i).as(nm)
-      } :+ col("__q.n_rows").as("n_rows"))
-    // slide < width ⇒ hopping windows: each event lands in width/slide
-    // overlapping windows, enumerated at the scan like hoppingAggStream
     val w = slide.fold(window(col(tsCol), width))(s => window(col(tsCol), width, s))
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(w.as("window"))
-      .agg(agg)
-      .select(outCols: _*)
+    startOf(graft.operators.Sketches.histogramQuantiles(
+      events.withWatermark(tsCol, watermark), value, quantiles, w.as("window")), "window_start")
   }
 
   /** Watermarked windowed top-k leaderboard: the k best (score, id) rows
@@ -444,7 +419,9 @@ object StreamingOps {
     * [[graft.expressions.QuantileHistogram]] state merges when sessions
     * merge (its `merge` is the additive histogram union, exactly what
     * session coalescing needs). Completes the sketch × window-kind
-    * matrix: tumbling (windowedQuantilesStream), and session here.
+    * matrix: tumbling and hopping ([[windowedQuantilesStream]], whose
+    * `slide` makes the windows hop), and session here.
+    * [[graft.operators.Sketches.histogramQuantiles]] by (session, key).
     *
     * Append mode only (like [[sessionAggStream]]): Spark finalizes a
     * session once the watermark passes its close — the
@@ -458,19 +435,10 @@ object StreamingOps {
       value: Column,
       quantiles: Seq[(String, Int)],
       gap: String = "2 hours",
-      watermark: String = "24 hours"): DataFrame = {
-    val agg = graft.expressions.QuantileHistogram.quantiles(
-      value.cast("long"), quantiles.map(_._2)).as("__q")
-    val outCols = Seq(col("window.start").as("session_start"), col("user_id")) ++
-      (quantiles.zipWithIndex.map { case ((nm, _), i) =>
-        col("__q.qs").getItem(i).as(nm)
-      } :+ col("__q.n_rows").as("n_rows"))
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(session_window(col(tsCol), gap).as("window"), key.as("user_id"))
-      .agg(agg)
-      .select(outCols: _*)
-  }
+      watermark: String = "24 hours"): DataFrame =
+    startOf(graft.operators.Sketches.histogramQuantiles(
+      events.withWatermark(tsCol, watermark), value, quantiles,
+      session_window(col(tsCol), gap).as("window"), key.as("user_id")), "session_start")
 
   /** KTable semantics on a changelog stream: keep the latest value per key,
     * emit the new latest on every change (reference: `builder.table(topic)`,

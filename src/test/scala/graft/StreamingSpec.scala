@@ -857,6 +857,44 @@ class StreamingSpec extends SparkTestBase {
       "doc_id", "text")
   }
 
+  /** 960 events over 12 h from 6 users, values 0–99, arriving up to 4 h
+    * after their event time: every window before the stop (hour 4) can get
+    * rows on both sides of it. The windowed rows read them under a 4-hour
+    * watermark, so none is late. */
+  private def windowEvents(seed: Int): Seq[Seq[CallEvent]] = {
+    val rnd = new scala.util.Random(seed)
+    byArrival(rnd, Seq.fill(960)(CallEvent(anyTs(rnd, 12 * HourUs), 1L + rnd.nextInt(6),
+      rnd.nextInt(100).toLong)), 12 * HourUs, 4 * HourUs)(_.ts)
+  }
+
+  /** A restart row for a face whose batch operator is the face itself over a
+    * batch frame (Spark drops `withWatermark` there), in append mode. The
+    * guard counts the expected rows that neither the rows before the stop
+    * nor the rows after it produce alone: a window, session or join pair
+    * whose output needs state restored across the stop. */
+  private def faceRow[T: Encoder](op: String, reference: String, input: () => Seq[Seq[T]],
+      flush: Seq[T])(face: DataFrame => DataFrame): RestartCase[T] = {
+    def batch(rows: Seq[T]) = face(spark.createDataset(rows).toDF()).collect().toSeq
+    RestartCase[T](op, reference, OutputMode.Append(), input, flush, in => face(in.toDF()),
+      finish = identity, expected = Some(batch),
+      stateDecided = (pre, post, want) => {
+        val alone = (batch(pre) ++ batch(post)).toSet
+        want.count(r => !alone(r))
+      })
+  }
+
+  /** [[faceRow]] over [[windowEvents]]; a flush event at `FlushTs` closes
+    * every window and session of the real rows. */
+  private def windowedRow(op: String, reference: String, seed: Int)(
+      face: DataFrame => DataFrame): RestartCase[CallEvent] =
+    faceRow[CallEvent](op, reference, () => windowEvents(seed),
+      Seq(CallEvent(FlushTs, FlushKey, 0L)))(face)
+
+  private val WindowWm = "4 hours"
+  private val WindowQs = Seq("p50" -> 500, "p90" -> 900)
+  private def valueHash =
+    shiftright(graft.functions.TextFunctions.hash60($"value".cast("string")), 12)
+
   private def restartTable: Seq[RestartCase[_]] = Seq(
     RestartCase[CustUpsert]("latestPerKey", "batch latestByKey", OutputMode.Update(),
       input = () => {
@@ -1068,7 +1106,41 @@ class StreamingSpec extends SparkTestBase {
       stateDecided = (pre, post, want) => {
         val split = pre.map(_.query_id).toSet intersect post.map(_.query_id).toSet
         want.count(r => split(r.getLong(0)))
-      }))
+      }),
+    windowedRow("hoppingAggStream", "batch CoreOps.countCents by hopping window", 79)(
+      StreamingOps.hoppingAggStream(_, "ts", $"user_id", $"value", "1 hour", "30 minutes", WindowWm)),
+    windowedRow("sessionAggStream", "batch CoreOps.countCents by session", 83)(
+      StreamingOps.sessionAggStream(_, "ts", $"user_id", $"value", "10 minutes", WindowWm)),
+    windowedRow("windowedDistinctSketchStream", "batch Sketches.kmv per window", 89)(
+      StreamingOps.windowedDistinctSketchStream(_, "ts", valueHash, k = 8, bits = 48,
+        "10 minutes", WindowWm)),
+    windowedRow("windowedCmsStream", "batch Sketches.cms per window", 97)(
+      StreamingOps.windowedCmsStream(_, "ts", $"value".cast("string"), depth = 3, width = 16,
+        "10 minutes", WindowWm)),
+    windowedRow("windowedHllStream", "batch Sketches.hll per window", 101)(
+      StreamingOps.windowedHllStream(_, "ts", valueHash, p = 7, "10 minutes", WindowWm)),
+    windowedRow("windowedSkewStream", "batch ScaleOps.skewReport per window", 103)(
+      StreamingOps.windowedSkewStream(_, "ts", "user_id", "10 minutes", WindowWm)),
+    windowedRow("windowedQuantilesStream", "batch Sketches.histogramQuantiles per hopping window", 107)(
+      StreamingOps.windowedQuantilesStream(_, "ts", $"value", WindowQs, "20 minutes", WindowWm,
+        slide = Some("10 minutes"))),
+    windowedRow("windowedTopKStream", "batch TopKByScore per window", 109)(
+      StreamingOps.windowedTopKStream(_, "ts", $"value".cast("double"), $"user_id", k = 3,
+        "10 minutes", WindowWm)),
+    windowedRow("sessionQuantilesStream", "batch Sketches.histogramQuantiles by session", 113)(
+      StreamingOps.sessionQuantilesStream(_, "ts", $"user_id", $"value", WindowQs, "10 minutes",
+        WindowWm)),
+    // both sides from one source, split by side: 1 = left, 0 = right
+    faceRow[AsofInput]("intervalJoin", "the batch join within the bound", () => {
+        val rnd = new scala.util.Random(127)
+        byArrival(rnd, (0 until 720).map(i => AsofInput(1L + rnd.nextInt(6), i % 2, i.toLong,
+          anyTs(rnd, 12 * HourUs), 0.0)), 12 * HourUs, 4 * HourUs)(_.ts)
+      }, flush = Nil) { in =>
+      def side(s: Int, p: String) = in.filter($"side" === s)
+        .select($"key".as(s"${p}_key"), $"id".as(s"${p}_id"), $"ts".as(s"${p}_ts"))
+      StreamingOps.intervalJoin(side(1, "l"), side(0, "r"), "l_key", "r_key", "l_ts", "r_ts",
+        "10 minutes", WindowWm).select("l_id", "r_id")
+    })
 
   /** Runs `c` three times on one checkpoint: a clean stop after
     * `StopAfter` chunks; a run of two chunks whose sink throws after
@@ -1143,6 +1215,19 @@ class StreamingSpec extends SparkTestBase {
   for (c <- restartTable; (store, confs) <- Seq(
       "HDFS-backed state" -> Nil, "RocksDB, changelog checkpointing" -> RocksDbState))
     test(s"${c.op} restarts on its checkpoint ($store) ≡ ${c.reference}") { restartCase(c, confs) }
+
+  test("every public StreamingOps method has a restart row or runs no state of its own") {
+    // the sinks run a batch operator per micro-batch over state the caller
+    // keeps; streamingBm25WithRelease is the query of the streamingBm25 row
+    val noRestartRow = Set("foreachBatchSink", "linkGraphSink", "hybridSearchSink",
+      "streamingBm25WithRelease")
+    val methods = StreamingOps.getClass.getDeclaredMethods.toSeq
+      .filter(m => java.lang.reflect.Modifier.isPublic(m.getModifiers) && !m.getName.contains('$'))
+      .map(_.getName).toSet
+    val rows = restartTable.map(_.op).toSet
+    assert(methods -- rows -- noRestartRow === Set.empty, "public methods with no restart row")
+    assert(rows ++ noRestartRow -- methods === Set.empty, "names of no public method")
+  }
 
   test("corrupt payloads decode to null and are skipped, not fatal (S8 policy)") {
     // reference: LogAndContinueExceptionHandler (CallsAggregationApp.java:34,100)
