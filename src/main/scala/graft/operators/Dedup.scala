@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.expressions.TextExpressions
 import graft.functions.TextFunctions._
 
@@ -325,29 +326,47 @@ object Dedup {
 
   /** Connected components over near-dup pairs: every doc labeled with the
     * minimum doc_id reachable through the pair graph (its canonical
-    * representative; singletons label themselves).
+    * representative; singletons label themselves). The rows are every
+    * pair-graph vertex once (a vertex absent from `docs` included) plus
+    * every doc that is not a vertex (duplicate doc_ids included).
     *
-    * Hash-min label propagation: labels start as own ids; each round every
-    * node takes the min of its label and its neighbors' labels; converges
-    * in O(graph diameter) rounds — near-dup graphs are shallow (clusters of
-    * copies), so 3-5 rounds typical. Each round is one equi-join + one
-    * groupBy, both partitioned by node id; a per-round lineage cut keeps
-    * round N's plan from replaying rounds 1..N-1. The driver only ever
-    * sees a converged/changed counter, never the data.
+    * Two paths, picked from the size the call observes in its own fetch:
+    * the pair graph is cut (run once, persisted) and at most
+    * [[MaxDriverEdges]]` + 1` of its rows are fetched in one job.
     *
-    * `reliableCheckpoint = true` switches the per-round lineage cut from
-    * cached persists to reliable `checkpoint` files (requires
-    * `sparkContext.setCheckpointDir` on durable storage). Cached blocks
-    * recompute from the previous round on loss — fine locally, compounding
-    * on a 1000-executor cluster where some loss per hour is the baseline;
-    * flip this on for production runs.
+    *  - Driver path, when the fetch holds at most [[MaxDriverEdges]]
+    *    pairs (served and delta batches, d0x at board scale): union-find
+    *    over primitive arrays on the driver. The labels come back as a
+    *    plan-free LocalRelation, unioned with the docs outside the graph
+    *    (an anti-join against it). Exact at any component diameter, so
+    *    `maxRounds` and `reliableCheckpoint` do not apply; no cache
+    *    outlives the call.
+    *  - Distributed path, above the cap (corpus-scale graphs), or when
+    *    the ids are not integral or a pair holds a null: hash-min label
+    *    propagation. Labels start as own ids; each round every node takes
+    *    the min of its label and its neighbors' labels; converges in
+    *    O(graph diameter) rounds — near-dup graphs are shallow (clusters
+    *    of copies), so 3-5 rounds typical. Each round is one equi-join +
+    *    one groupBy, both partitioned by node id; a per-round lineage cut
+    *    keeps round N's plan from replaying rounds 1..N-1. The driver
+    *    only ever sees a changed counter, never the data. A chain longer
+    *    than `maxRounds` fails loudly ("did not converge").
     *
-    * Scope note: the returned frame is a LAZY plan (final-round labels ∪
-    * singleton anti-join) bound to the fixpoint's static scope clone —
-    * its own consumption plans statically, which is right for the
-    * |pairs|-sized label frame. A caller composing it into a further
-    * corpus-scale adaptive plan should re-root it on its own session
-    * first: `PlanScope.cut(PlanScope.rebind(df, spark))` (both in
+    * `reliableCheckpoint = true` switches the distributed path's
+    * per-round lineage cut from cached persists to reliable `checkpoint`
+    * files (requires `sparkContext.setCheckpointDir` on durable storage).
+    * Cached blocks recompute from the previous round on loss — fine
+    * locally, compounding on a 1000-executor cluster where some loss per
+    * hour is the baseline; flip this on for production runs.
+    *
+    * Scope note: the returned frame is a LAZY plan (labels ∪ singleton
+    * anti-join) bound to the call's static scope clone — its own
+    * consumption plans statically, which is right for the |pairs|-sized
+    * label frame. On the distributed path it reads the final round's
+    * cache, which stays pinned for the caller's consuming action (use
+    * [[componentsWithRelease]] to drop it). A caller composing it into a
+    * further corpus-scale adaptive plan should re-root it on its own
+    * session first: `PlanScope.cut(PlanScope.rebind(df, spark))` (both in
     * [[graft.ops.PlanScope]]), plan from the cut's `flat` and call its
     * `release()` after the consuming action
     * ([[graft.pipelines.CurationPipeline]] cuts it the same way, inside
@@ -360,31 +379,107 @@ object Dedup {
       reliableCheckpoint: Boolean = false): DataFrame =
     componentsWithRelease(docs0, pairs0, maxRounds, reliableCheckpoint)._1
 
-  /** [[components]] plus an explicit RELEASE HOOK for the final-round
-    * label cache the returned plan reads. The public contract leaves
-    * that cache pinned for the caller's consuming action (releasing it
-    * pre-return would recompute the whole fixpoint on first
-    * consumption); a composed pipeline that ends in a bounded handover
-    * (CurationPipeline's `detachBound`) instead calls the hook once its
-    * own materialization is done, so "zero blocks left registered"
-    * holds exactly. Idempotent; a no-op on the reliable-checkpoint path
-    * (files, not cache blocks). */
+  /** Most pair rows [[components]] settles on the driver. The fetch holds
+    * the pairs as rows (two longs each) and the labels ride back in the
+    * plan as a LocalRelation, one row per vertex (at most twice the
+    * pairs), serialized into every task that scans it: 2^16 pairs is a
+    * few MB of driver heap and plan. Graphs above it are corpus-scale and
+    * run the distributed fixpoint, whose fixed cost (a cut per round and
+    * a convergence count) is small next to theirs. */
+  private[graft] val MaxDriverEdges = 1 << 16
+
+  /** [[components]] plus an explicit RELEASE HOOK for the cache the
+    * returned plan reads. On the distributed path that is the final
+    * round's label cache: the public contract leaves it pinned for the
+    * caller's consuming action (releasing it pre-return would recompute
+    * the whole fixpoint on first consumption); a composed pipeline that
+    * ends in a bounded handover (CurationPipeline's `detachBound`)
+    * instead calls the hook once its own materialization is done, so
+    * "zero blocks left registered" holds exactly. Idempotent; a no-op on
+    * the driver path (nothing cached) and on the reliable-checkpoint path
+    * (files, not cache blocks). `driverCap` rides as a parameter so the
+    * specs can force the distributed path (0) on a tiny fixture; every
+    * caller passes [[MaxDriverEdges]]. */
   private[graft] def componentsWithRelease(
       docs0: DataFrame,
       pairs0: DataFrame,
       maxRounds: Int = 20,
-      reliableCheckpoint: Boolean = false): (DataFrame, () => Unit) = {
+      reliableCheckpoint: Boolean = false,
+      driverCap: Int = MaxDriverEdges): (DataFrame, () => Unit) = {
     componentsRuns.incrementAndGet()
     // Fixpoint loop = known shape re-executed per round (PlanScope
     // rationale, same as the Graphs loops): AQE re-planning buys no
     // information round-over-round and charges a driver job per exchange
-    // per round. The scope is a conf-ISOLATED pooled session clone —
-    // concurrent queries on the caller's session keep AQE while the
-    // fixpoint runs; the returned frame plans statically downstream
-    // (the clone's conf is immutable).
-    graft.ops.PlanScope.isolatedStatic(docs0.sparkSession) { scoped =>
+    // per round — and the bounded fetch under AQE would pay one job per
+    // exchange of the pair plan. The scope is a conf-ISOLATED pooled
+    // session clone — concurrent queries on the caller's session keep
+    // AQE while this runs; the returned frame plans statically downstream
+    // (the clone's conf is immutable). initialNumPartitions: the fetch is
+    // a `limit(cap + 1)` collect, which starts at full width so it is ONE
+    // job (the same confs as curate's scope, so inside curate this runs
+    // in curate's own clone).
+    graft.ops.PlanScope.isolated(docs0.sparkSession,
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.limit.initialNumPartitions" -> "100000") { scoped =>
     val docs = graft.ops.PlanScope.rebind(docs0, scoped)
-    val pairs = graft.ops.PlanScope.rebind(pairs0, scoped)
+    // The pair plan is the expensive part and both paths read it: cut it
+    // first, so the fetch fills its blocks and the fixpoint's edges read
+    // them — the pair stages run once whichever path is taken.
+    val pairsCut = graft.ops.PlanScope.cut(
+      graft.ops.PlanScope.rebind(pairs0, scoped).select(col("doc_a"), col("doc_b")))
+    // both edge directions from ONE pass over pairs; the struct array
+    // also fixes the id type both paths label with
+    val edges = pairsCut.flat
+      .select(explode(array(
+        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
+        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+    val idType = edges.schema("src").dataType
+    // min over a non-integral id, or a null endpoint: the fixpoint only
+    val settled = idType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        Some(pairsCut.flat.select(col("doc_a").cast(LongType), col("doc_b").cast(LongType))
+            .limit(driverCap + 1).collect())
+          .filter(rows => rows.length <= driverCap &&
+            !rows.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+      case _ => None
+    }
+    settled match {
+      case Some(rows) =>
+        pairsCut.release()
+        (settleOnDriver(docs, rows, idType), () => ())
+      case None =>
+        fixpoint(docs, edges, pairsCut, maxRounds, reliableCheckpoint)
+    }
+    }
+  }
+
+  /** The driver path of [[componentsWithRelease]]: union-find labels as a
+    * LocalRelation of `idType` ids, unioned with the docs outside them. */
+  private def settleOnDriver(docs: DataFrame, pairs: Array[Row],
+      idType: DataType): DataFrame = {
+    val (ids, comps) = minLabels(pairs)
+    val labels = docs.sparkSession.createDataFrame(
+        java.util.Arrays.asList(ids.indices.map(i => Row(ids(i), comps(i))): _*),
+        StructType(Seq(StructField("doc_id", LongType, nullable = false),
+          StructField("component", LongType, nullable = false))))
+      .select(col("doc_id").cast(idType), col("component").cast(idType))
+    // the exact size estimate of a LocalRelation would pick a broadcast
+    // anti-join, a build job of its own per call under a static scope:
+    // pinned to sort-merge, as dedupDeltaWith's rejected-id anti-join
+    val singletons = docs.select(col("doc_id"))
+      .join(labels.select(col("doc_id")).hint("merge"), Seq("doc_id"), "left_anti")
+      .select(col("doc_id"), col("doc_id").as("component"))
+    labels.union(singletons)
+  }
+
+  /** The distributed path of [[componentsWithRelease]]: hash-min label
+    * propagation over `edges` (both directions of the cut pairs), then
+    * the singletons anti-join. Returns the frame and the final round's
+    * release hook; the pair cut is released here. */
+  private def fixpoint(docs: DataFrame, edges: DataFrame,
+      pairsCut: graft.ops.PlanScope.Cut, maxRounds: Int,
+      reliableCheckpoint: Boolean): (DataFrame, () => Unit) = {
     // One stage boundary per round: the local path takes a PlanScope.cut
     // (a lazy persist plus a flat one-leaf face), not an eager
     // checkpoint, so the per-round convergence count is the ONLY
@@ -400,20 +495,13 @@ object Dedup {
     def cut(df: DataFrame): (DataFrame, () => Unit) =
       if (reliableCheckpoint) (df.checkpoint(true), () => ())
       else { val c = graft.ops.PlanScope.cut(df); (c.flat, c.release) }
-    // hash edges by dst (the per-round join key) before checkpointing, at the session's shuffle
-    // partitioning — the caller sized that for the corpus; a small pair
-    // graph just runs light tasks per round (cheaper than the per-round
-    // AQE coalesce jobs the old adaptive layout paid)
-    // both edge directions from ONE pass over pairs: a union of two
-    // projections would execute the (expensive) pair-generation subtree
-    // twice — the branches differ, so no exchange reuse saves it
-    val edges = pairs
-      .select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .repartition(col("dst")) // the per-round join key
-    val (edgesChk, releaseEdges) = cut(edges)
+    // hash edges by dst (the per-round join key) before checkpointing, at
+    // the session's shuffle partitioning — the caller sized that for the
+    // corpus; a small pair graph just runs light tasks per round (cheaper
+    // than the per-round AQE coalesce jobs the old adaptive layout paid)
+    val (edgesChk, releaseEdgeCut) = cut(edges.repartition(col("dst")))
+    // the pair cut feeds only the edge cut; both go together
+    val releaseEdges = () => { releaseEdgeCut(); pairsCut.release() }
     // propagate only over the pair graph's vertices — in a dedup corpus the
     // vast majority of docs are singletons and never need a round trip.
     // Initial labels fuse round 1: each vertex starts at min(self, direct
@@ -451,9 +539,9 @@ object Dedup {
     // labeling from a cut-off one) — fail loudly with the remedy instead
     if (!converged) {
       // release the pinned blocks BEFORE the loud diagnostic: a long-lived
-      // session recovering from this throw must not keep the dead edge
-      // cache and final-round labels resident (reliable checkpoints are
-      // managed by the checkpoint dir, nothing to unpersist)
+      // session recovering from this throw must not keep the dead pair and
+      // edge caches and final-round labels resident (reliable checkpoints
+      // are managed by the checkpoint dir, nothing to unpersist)
       releaseEdges()
       releasePrev()
       throw new IllegalArgumentException(
@@ -461,10 +549,10 @@ object Dedup {
           "the pair graph has a min-label chain longer than the round budget; raise " +
           "maxRounds (rounds scale with component diameter, not corpus size)")
     }
-    // the edge set is dead after convergence (every propagation round is
-    // materialized); only the FINAL round's cache stays pinned for the
-    // caller's consuming action — losing it recomputes from the pair
-    // pipeline, which is correct, just slower
+    // the pair and edge sets are dead after convergence (every
+    // propagation round is materialized); only the FINAL round's cache
+    // stays pinned for the caller's consuming action — losing it
+    // recomputes from the pair pipeline, which is correct, just slower
     releaseEdges()
     // the final labels carry exactly the pair-graph vertex set (each round
     // preserves all label rows), so singletons anti-join against it
@@ -472,7 +560,45 @@ object Dedup {
       .join(labels.select(col("doc_id")), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("doc_id").as("component"))
     (labels.union(singletons), releasePrev)
+  }
+
+  /** Union-find over the fetched `(doc_a, doc_b)` pairs, all non-null:
+    * returns the sorted distinct vertex ids and each one's component
+    * label, the minimum id in its component. Vertices are indexed in id
+    * order and a union always hangs the larger root under the smaller, so
+    * every root is its set's minimum index, i.e. its minimum id — the
+    * label the fixpoint converges to. */
+  private def minLabels(pairs: Array[Row]): (Array[Long], Array[Long]) = {
+    val ends = new Array[Long](2 * pairs.length)
+    var i = 0
+    while (i < pairs.length) {
+      ends(2 * i) = pairs(i).getLong(0)
+      ends(2 * i + 1) = pairs(i).getLong(1)
+      i += 1
     }
+    val sorted = ends.clone()
+    java.util.Arrays.sort(sorted)
+    var n = 0
+    i = 0
+    while (i < sorted.length) {
+      if (n == 0 || sorted(n - 1) != sorted(i)) { sorted(n) = sorted(i); n += 1 }
+      i += 1
+    }
+    val ids = java.util.Arrays.copyOf(sorted, n)
+    val parent = Array.tabulate(n)(identity)
+    def find(v: Int): Int = {
+      var x = v
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    i = 0
+    while (i < ends.length) {
+      val ra = find(java.util.Arrays.binarySearch(ids, ends(i)))
+      val rb = find(java.util.Arrays.binarySearch(ids, ends(i + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      i += 2
+    }
+    (ids, Array.tabulate(n)(v => ids(find(v))))
   }
 
   /** End-to-end near-dedup: keep only each component's canonical document

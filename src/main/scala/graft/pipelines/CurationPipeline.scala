@@ -245,19 +245,21 @@ object CurationPipeline {
     val docsS = docsSCut.fold(docsL)(_.flat)
 
     // 1. dedup: keep the longest doc of every near-dup component.
-    // components() is EAGER (its convergence counts run the fixpoint at
-    // call time) and is the single most expensive stage at corpus scale —
-    // so it runs exactly ONCE here, and the labels are a stage boundary
-    // (PlanScope.cut) shared by both consumers (the dedup argmax and the
-    // split in step 4); the first consumer's action fills it. A plain
-    // persist is not enough here: the labels' plan holds the components'
-    // cut faces, and a consumer that re-instances a face (the self-join
-    // dedup of the analyzer; Spark compares a LogicalRDD's partitioning
-    // by raw expression id) misses the cache entry and recomputes —
-    // c02's span-scrub face did exactly that. The cut stays pinned for
-    // the caller's consuming action, same policy as components' own
-    // final-round cache; on block loss Spark recomputes from the pair
-    // pipeline (correct, just slower).
+    // components() is EAGER (its pair fetch, and above the driver cap its
+    // convergence counts, run at call time) and is the single most
+    // expensive stage at corpus scale — so it runs exactly ONCE here, and
+    // the labels are a stage boundary (PlanScope.cut) shared by both
+    // consumers (the dedup argmax and the split in step 4); the first
+    // consumer's action fills it. A plain persist is not enough here: on
+    // the distributed path the labels' plan holds the fixpoint's cut
+    // faces (and docsS may be the span scrub's), and a consumer that
+    // re-instances a face (the self-join dedup of the analyzer; Spark
+    // compares a LogicalRDD's partitioning by raw expression id) misses
+    // the cache entry and recomputes — c02's span-scrub face did exactly
+    // that. The cut stays pinned for the caller's consuming action; so
+    // does the fixpoint's final-round cache on the distributed path (the
+    // driver path returns a LocalRelation and caches nothing). On block
+    // loss Spark recomputes from the pair pipeline (correct, just slower).
     val pairs = Dedup.minhashLshPairs(docsS)
     val (comps0, releaseComponents) = Dedup.componentsWithRelease(docsS, pairs)
     val compsCut = graft.ops.PlanScope.cut(comps0)

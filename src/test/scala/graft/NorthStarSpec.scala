@@ -749,7 +749,10 @@ class NorthStarSpec extends SparkTestBase {
     spark.sparkContext.setCheckpointDir(ckDir)
     val docs = Seq(1L, 2L, 3L, 5L, 8L, 9L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
     val pairs = Seq((1L, 2L), (2L, 3L), (8L, 9L)).toDF("doc_a", "doc_b")
-    val got = graft.operators.Dedup.components(docs, pairs, reliableCheckpoint = true)
+    // driverCap = 0 forces the distributed fixpoint, the only path that
+    // checkpoints: three pairs are far under the driver-path cap
+    val got = graft.operators.Dedup.componentsWithRelease(docs, pairs,
+        reliableCheckpoint = true, driverCap = 0)._1
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 8L -> 8L, 9L -> 8L))
     // the fault-tolerant path really wrote reliable checkpoint files

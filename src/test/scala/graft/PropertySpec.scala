@@ -340,7 +340,10 @@ class PropertySpec extends SparkTestBase {
     val n = 26
     val docs = (1 to n).map(i => (i.toLong, s"d$i")).toDF("doc_id", "text")
     val pairs = (1 until n).map(i => (i.toLong, (i + 1).toLong)).toDF("doc_a", "doc_b")
-    val got = graft.operators.Dedup.components(docs, pairs, maxRounds = 40)
+    // driverCap = 0 forces the distributed fixpoint: a 25-pair chain is
+    // far under the driver-path cap, which would settle it in one fetch
+    val got = graft.operators.Dedup.componentsWithRelease(docs, pairs, maxRounds = 40,
+        driverCap = 0)._1
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === (1 to n).map(i => i.toLong -> 1L).toMap)
     // a round budget SMALLER than the chain diameter must fail loudly:
@@ -352,11 +355,117 @@ class PropertySpec extends SparkTestBase {
     // the diagnostic must not accumulate dead fixpoint caches
     val pinnedBefore = spark.sparkContext.getPersistentRDDs.size
     val ex = intercept[IllegalArgumentException] {
-      graft.operators.Dedup.components(docs, pairs, maxRounds = 3).count()
+      graft.operators.Dedup.componentsWithRelease(docs, pairs, maxRounds = 3,
+        driverCap = 0)._1.count()
     }
     assert(ex.getMessage.contains("did not converge"))
     assert(spark.sparkContext.getPersistentRDDs.size === pinnedBefore,
       "non-convergence throw leaked pinned blocks")
+  }
+
+  /** Near-dup component labels by BFS: every pair vertex once with the
+    * min id of its component, then every doc that is not a vertex. */
+  private def refComponents(docs: Seq[Long], pairs: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+    val adj = pairs.flatMap { case (a, b) => Seq(a -> b, b -> a) }.groupMap(_._1)(_._2)
+    val verts = adj.keySet
+    def reach(v: Long): Set[Long] = {
+      var seen = Set(v)
+      var frontier = Seq(v)
+      while (frontier.nonEmpty) {
+        frontier = frontier.flatMap(adj(_)).distinct.filterNot(seen)
+        seen ++= frontier
+      }
+      seen
+    }
+    (verts.toSeq.map(v => v -> reach(v).min) ++
+      docs.filterNot(verts).map(d => d -> d)).sorted
+  }
+
+  // ids 1-30 for docs (duplicates likely), 1-34 for pair ends, so a pair
+  // can name a vertex absent from docs; repeated, reversed and self pairs
+  // all arise
+  private val nearDupGraphGen: Gen[(List[Long], List[(Long, Long)])] = for {
+    nDocs <- Gen.choose(1, 25)
+    docs <- Gen.listOfN(nDocs, Gen.choose(1L, 30L))
+    nPairs <- Gen.choose(1, 30)
+    pairs <- Gen.listOfN(nPairs, Gen.zip(Gen.choose(1L, 34L), Gen.choose(1L, 34L)))
+  } yield (docs, pairs)
+
+  test("components: the driver path equals the fixpoint path on seeded random graphs") {
+    import graft.operators.Dedup
+    def usesFixpoint(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collectLeaves()
+        .exists(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+    // the driver path (maxRounds = 3 bounds only the fixpoint) and the
+    // fixpoint, forced by a cap below the pair count, against the BFS
+    // reference
+    def check(docs: Seq[Long], pairs: Seq[(Long, Long)],
+        cap: Int = Dedup.MaxDriverEdges, fixCap: Int = 0): Unit = {
+      val d = docs.map(i => (i, s"d$i")).toDF("doc_id", "text")
+      val p = pairs.toDF("doc_a", "doc_b")
+      val (onDriver, _) = Dedup.componentsWithRelease(d, p, maxRounds = 3, driverCap = cap)
+      assert(!usesFixpoint(onDriver), s"driver path not taken at cap $cap")
+      val expected = refComponents(docs, pairs)
+      assert(rowsOf(onDriver) === expected, s"driver path on $docs / $pairs")
+      if (pairs.nonEmpty) {
+        val (fixed, release) = Dedup.componentsWithRelease(d, p, maxRounds = 60,
+          driverCap = fixCap)
+        assert(usesFixpoint(fixed), s"fixpoint not taken at cap $fixCap")
+        try assert(rowsOf(fixed) === expected, s"fixpoint on $docs / $pairs")
+        finally release()
+      }
+    }
+    forSamples(nearDupGraphGen, 6) { case (docs, pairs) =>
+      check(docs, pairs)
+    }
+    // a graph at the cap settles on the driver; one pair over, it does not
+    forSamples(nearDupGraphGen, 2) { case (docs, pairs) =>
+      check(docs, pairs, cap = pairs.length, fixCap = pairs.length - 1)
+    }
+    // a 12-hop chain, pairs reversed: longer than the driver call's
+    // maxRounds = 3, which bounds only the fixpoint
+    check((1L to 13L), (1L to 12L).map(i => (i + 1, i)))
+    // duplicate, reversed and self pairs
+    check(Seq(1L, 2L, 3L, 4L), Seq((1L, 2L), (2L, 1L), (1L, 2L), (3L, 3L), (4L, 2L)))
+    // pair vertices absent from docs, duplicate doc_ids, singletons
+    check(Seq(1L, 1L, 2L, 5L, 5L, 6L), Seq((7L, 8L), (8L, 1L), (2L, 9L)))
+    // no pairs: every doc labels itself, duplicates included (the
+    // fixpoint is not reached here: an empty fetch is within any cap)
+    check(Seq(3L, 1L, 3L), Seq.empty)
+  }
+
+  test("components: the driver path leaves no cached blocks behind") {
+    val docs = (1L to 8L).map(i => (i, s"d$i")).toDF("doc_id", "text")
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("doc_a", "doc_b")
+    def registered() = spark.sparkContext.getPersistentRDDs.size
+    val before = registered()
+    val (out, release) = graft.operators.Dedup.componentsWithRelease(docs, pairs)
+    assert(registered() === before, "the pair cut outlived the driver path")
+    assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L, 6L -> 5L, 7L -> 7L, 8L -> 8L))
+    release()
+    assert(registered() === before)
+  }
+
+  test("components: the pair plan runs once on either path") {
+    // the fetch reads the pair cut, and above the cap the fixpoint's edges
+    // read the same cut: a second evaluation of the (LSH) pair plan would
+    // count every pair row twice
+    val docs = (1L to 6L).map(i => (i, s"d$i")).toDF("doc_id", "text")
+    val evaluated = spark.sparkContext.longAccumulator("pair rows evaluated")
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("doc_a", "doc_b")
+      .map { r => evaluated.add(1); (r.getLong(0), r.getLong(1)) }
+      .toDF("doc_a", "doc_b")
+    for (cap <- Seq(graft.operators.Dedup.MaxDriverEdges, 0)) {
+      evaluated.reset()
+      val (out, release) = graft.operators.Dedup.componentsWithRelease(docs, pairs,
+        driverCap = cap)
+      assert(out.collect().length === 6)
+      release()
+      assert(evaluated.value === 3L, s"pair rows evaluated at driverCap $cap")
+    }
   }
 
   test("simhashPairs rejects out-of-range maxHamming instead of degenerating") {
