@@ -332,17 +332,19 @@ object Dedup {
     *
     * Two paths, picked from the size the call observes in its own fetch:
     * the pair graph is cut (run once, persisted) and at most
-    * [[MaxDriverEdges]]` + 1` of its rows are fetched in one job.
+    * [[MaxDriverEdges]]` + 1` of its rows are fetched in one job
+    * (`graft.ops.Detach.fetchAtMost`).
     *
     *  - Driver path, when the fetch holds at most [[MaxDriverEdges]]
-    *    pairs (served and delta batches, d0x at board scale): union-find
-    *    over primitive arrays on the driver. The labels come back as a
-    *    plan-free LocalRelation, unioned with the docs outside the graph
-    *    (an anti-join against it). Exact at any component diameter, so
+    *    pairs (d06, d07 and d13 at sf0.01, whose LSH pair graph has 28
+    *    pairs; `curate` on a small corpus): union-find over primitive
+    *    arrays on the driver. The labels come back as a plan-free
+    *    LocalRelation, unioned with the docs outside the graph (an
+    *    anti-join against it). Exact at any component diameter, so
     *    `maxRounds` and `reliableCheckpoint` do not apply; no cache
     *    outlives the call.
-    *  - Distributed path, above the cap (corpus-scale graphs), or when
-    *    the ids are not integral or a pair holds a null: hash-min label
+    *  - Distributed path, above the cap, or when the ids are not
+    *    integral or a pair holds a null: hash-min label
     *    propagation. Labels start as own ids; each round every node takes
     *    the min of its label and its neighbors' labels; converges in
     *    O(graph diameter) rounds — near-dup graphs are shallow (clusters
@@ -360,9 +362,11 @@ object Dedup {
     * hour is the baseline; flip this on for production runs.
     *
     * Scope note: the returned frame is a LAZY plan (labels ∪ singleton
-    * anti-join) bound to the call's static scope clone — its own
-    * consumption plans statically, which is right for the |pairs|-sized
-    * label frame. On the distributed path it reads the final round's
+    * anti-join) bound to the call's static (AQE-off) scope clone — its
+    * own consumption plans statically, which is right for the
+    * |pairs|-sized label frame. Only the fetch runs where a limit-collect
+    * starts at full width, so a take/show over the result still grows
+    * from one partition. On the distributed path it reads the final round's
     * cache, which stays pinned for the caller's consuming action (use
     * [[componentsWithRelease]] to drop it). A caller composing it into a
     * further corpus-scale adaptive plan should re-root it on its own
@@ -379,14 +383,18 @@ object Dedup {
       reliableCheckpoint: Boolean = false): DataFrame =
     componentsWithRelease(docs0, pairs0, maxRounds, reliableCheckpoint)._1
 
-  /** Most pair rows [[components]] settles on the driver. The fetch holds
-    * the pairs as rows (two longs each) and the labels ride back in the
-    * plan as a LocalRelation, one row per vertex (at most twice the
-    * pairs), serialized into every task that scans it: 2^16 pairs is a
-    * few MB of driver heap and plan. Graphs above it are corpus-scale and
-    * run the distributed fixpoint, whose fixed cost (a cut per round and
-    * a convergence count) is small next to theirs. */
-  private[graft] val MaxDriverEdges = 1 << 16
+  /** Most pair rows [[components]] settles on the driver: the largest
+    * power of two at which the driver path still measured faster than
+    * the fixpoint. `graft.ComponentsCurve` (test tree; 4-core VM, local
+    * mode, 4-doc clique clusters, medians of 7, four runs; raw output in
+    * `plans/pr17/components_curve.txt`): the driver path won at 32,766
+    * pairs by 61–142 ms in 4 of 4 runs, lost at 65,532 in 3 of 4 and
+    * lost at 131,070 by 160–273 ms in 4 of 4. Its cost grows with the
+    * graph (the fetched rows, the union-find, a label LocalRelation
+    * carried in the plan), where the fixpoint's is mostly fixed per
+    * round. Above the cap the call pays the fetch too: one job more than
+    * the fixpoint alone. */
+  private[graft] val MaxDriverEdges = 1 << 15
 
   /** [[components]] plus an explicit RELEASE HOOK for the cache the
     * returned plan reads. On the distributed path that is the final
@@ -410,17 +418,11 @@ object Dedup {
     // Fixpoint loop = known shape re-executed per round (PlanScope
     // rationale, same as the Graphs loops): AQE re-planning buys no
     // information round-over-round and charges a driver job per exchange
-    // per round — and the bounded fetch under AQE would pay one job per
-    // exchange of the pair plan. The scope is a conf-ISOLATED pooled
-    // session clone — concurrent queries on the caller's session keep
-    // AQE while this runs; the returned frame plans statically downstream
-    // (the clone's conf is immutable). initialNumPartitions: the fetch is
-    // a `limit(cap + 1)` collect, which starts at full width so it is ONE
-    // job (the same confs as curate's scope, so inside curate this runs
-    // in curate's own clone).
-    graft.ops.PlanScope.isolated(docs0.sparkSession,
-        "spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.limit.initialNumPartitions" -> "100000") { scoped =>
+    // per round. The scope is a conf-ISOLATED pooled session clone —
+    // concurrent queries on the caller's session keep AQE while this
+    // runs; the returned frame plans statically downstream (the clone's
+    // conf is immutable).
+    graft.ops.PlanScope.isolatedStatic(docs0.sparkSession) { scoped =>
     val docs = graft.ops.PlanScope.rebind(docs0, scoped)
     // The pair plan is the expensive part and both paths read it: cut it
     // first, so the fetch fills its blocks and the fixpoint's edges read
@@ -435,21 +437,28 @@ object Dedup {
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
     val idType = edges.schema("src").dataType
-    // min over a non-integral id, or a null endpoint: the fixpoint only
-    val settled = idType match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        Some(pairsCut.flat.select(col("doc_a").cast(LongType), col("doc_b").cast(LongType))
-            .limit(driverCap + 1).collect())
-          .filter(rows => rows.length <= driverCap &&
-            !rows.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-      case _ => None
-    }
+    // min over a non-integral id, or a null endpoint: the fixpoint only.
+    // Only the fetch starts its limit-collect at full width (ONE job;
+    // curate's confs, so inside curate it runs in curate's scope). A
+    // failed fetch drops the cut.
+    val settled =
+      try idType match {
+        case ByteType | ShortType | IntegerType | LongType =>
+          graft.ops.PlanScope.isolated(docs0.sparkSession,
+              "spark.sql.adaptive.enabled" -> "false",
+              "spark.sql.limit.initialNumPartitions" -> "100000") { fetchScope =>
+            graft.ops.Detach.fetchAtMost(graft.ops.PlanScope.rebind(pairsCut.flat
+                .select(col("doc_a").cast(LongType), col("doc_b").cast(LongType)), fetchScope),
+              driverCap)
+          }.filter(!_.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+        case _ => None
+      } catch { case e: Throwable => pairsCut.release(); throw e }
     settled match {
       case Some(rows) =>
         pairsCut.release()
         (settleOnDriver(docs, rows, idType), () => ())
       case None =>
-        fixpoint(docs, edges, pairsCut, maxRounds, reliableCheckpoint)
+        fixpoint(docs, edges, pairsCut.release, maxRounds, reliableCheckpoint)
     }
     }
   }
@@ -476,9 +485,10 @@ object Dedup {
   /** The distributed path of [[componentsWithRelease]]: hash-min label
     * propagation over `edges` (both directions of the cut pairs), then
     * the singletons anti-join. Returns the frame and the final round's
-    * release hook; the pair cut is released here. */
+    * release hook; `releasePairs` (idempotent) drops the pair cut once
+    * the first round has filled the edge cut from it. */
   private def fixpoint(docs: DataFrame, edges: DataFrame,
-      pairsCut: graft.ops.PlanScope.Cut, maxRounds: Int,
+      releasePairs: () => Unit, maxRounds: Int,
       reliableCheckpoint: Boolean): (DataFrame, () => Unit) = {
     // One stage boundary per round: the local path takes a PlanScope.cut
     // (a lazy persist plus a flat one-leaf face), not an eager
@@ -499,9 +509,9 @@ object Dedup {
     // the session's shuffle partitioning — the caller sized that for the
     // corpus; a small pair graph just runs light tasks per round (cheaper
     // than the per-round AQE coalesce jobs the old adaptive layout paid)
-    val (edgesChk, releaseEdgeCut) = cut(edges.repartition(col("dst")))
-    // the pair cut feeds only the edge cut; both go together
-    val releaseEdges = () => { releaseEdgeCut(); pairsCut.release() }
+    val (edgesChk, releaseEdges) =
+      try cut(edges.repartition(col("dst")))
+      catch { case e: Throwable => releasePairs(); throw e }
     // propagate only over the pair graph's vertices — in a dedup corpus the
     // vast majority of docs are singletons and never need a round trip.
     // Initial labels fuse round 1: each vertex starts at min(self, direct
@@ -527,8 +537,12 @@ object Dedup {
       // one action per round: counting the changed rows materializes the
       // whole round into the cache/checkpoint and decides convergence
       converged = next.filter(col("__changed")).count() == 0L
-      // the previous round's cache is dead once this round is materialized
+      // the previous round's cache is dead once this round is
+      // materialized; the pair cut is dead once round 1 has filled the
+      // edge cut, its only reader (a lost edge block recomputes from the
+      // pair plan: correct, just slower)
       releasePrev()
+      releasePairs()
       releasePrev = releaseNext
       labels = next.drop("__changed")
       round += 1
@@ -542,6 +556,7 @@ object Dedup {
       // session recovering from this throw must not keep the dead pair and
       // edge caches and final-round labels resident (reliable checkpoints
       // are managed by the checkpoint dir, nothing to unpersist)
+      releasePairs()
       releaseEdges()
       releasePrev()
       throw new IllegalArgumentException(
@@ -549,7 +564,7 @@ object Dedup {
           "the pair graph has a min-label chain longer than the round budget; raise " +
           "maxRounds (rounds scale with component diameter, not corpus size)")
     }
-    // the pair and edge sets are dead after convergence (every
+    // the edge set is dead after convergence (every
     // propagation round is materialized); only the FINAL round's cache
     // stays pinned for the caller's consuming action — losing it
     // recomputes from the pair pipeline, which is correct, just slower

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** The bounded detach-to-LocalRelation contract, in ONE place (it was
   * re-implemented inline by curate, curateDelta and Graphs.detachSmall,
@@ -12,7 +12,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    when the incremental limit-collect would pay retry passes;
   *  - fail LOUDLY on overflow — detaching is for results known bounded
   *    (reports, nation-level graphs, test harnesses); silently collecting
-  *    an unbounded corpus to the driver is the bug this guard exists for;
+  *    an unbounded corpus to the driver is the bug this guard exists for.
+  *    A caller with a distributed path for the large case fetches with
+  *    [[fetchAtMost]] instead and takes that path on `None`
+  *    (`graft.operators.Dedup.components`' pair graph);
   *  - run the caller's `release` hook only AFTER the rows are safely on
   *    the driver (releasing first would recompute the lineage on collect);
   *  - rebuild as a plan-free LocalRelation on the CALLER's session, so
@@ -22,9 +25,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Detach {
   def toLocal(df: DataFrame, cap: Int, caller: SparkSession,
       overflowMsg: String)(release: => Unit): DataFrame = {
-    val rows = df.limit(cap + 1).collect()
-    require(rows.length <= cap, overflowMsg)
+    val rows = fetchAtMost(df, cap)
+    require(rows.isDefined, overflowMsg)
     release
-    caller.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+    caller.createDataFrame(java.util.Arrays.asList(rows.get: _*), df.schema)
+  }
+
+  /** The fetch half of [[toLocal]], for a caller that picks its path from
+    * the size instead of failing: the rows when `df` holds at most `cap`
+    * (one pass over `cap + 1`), `None` when it holds more. */
+  def fetchAtMost(df: DataFrame, cap: Int): Option[Array[Row]] = {
+    val rows = df.limit(cap + 1).collect()
+    if (rows.length <= cap) Some(rows) else None
   }
 }

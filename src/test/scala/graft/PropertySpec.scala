@@ -447,6 +447,29 @@ class PropertySpec extends SparkTestBase {
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L, 6L -> 5L, 7L -> 7L, 8L -> 8L))
     release()
     assert(registered() === before)
+    // only the fetch starts its limit-collect at full width: a take over
+    // the returned frame still grows from one partition
+    assert(out.sparkSession.conf.get("spark.sql.limit.initialNumPartitions") ===
+      spark.conf.get("spark.sql.limit.initialNumPartitions"))
+  }
+
+  test("components: a pair plan that fails in the fetch leaves no cached blocks behind") {
+    val docs = (1L to 4L).map(i => (i, s"d$i")).toDF("doc_id", "text")
+    val pairs = Seq((1L, 2L), (3L, 4L)).toDF("doc_a", "doc_b")
+      .map { r =>
+        if (r.getLong(0) == 3L) throw new IllegalStateException("pair plan failed")
+        (r.getLong(0), r.getLong(1))
+      }
+      .toDF("doc_a", "doc_b")
+    def registered() = spark.sparkContext.getPersistentRDDs.size
+    val before = registered()
+    for (cap <- Seq(graft.operators.Dedup.MaxDriverEdges, 0)) {
+      val ex = intercept[org.apache.spark.SparkException] {
+        graft.operators.Dedup.componentsWithRelease(docs, pairs, driverCap = cap)
+      }
+      assert(ex.getMessage.contains("pair plan failed"))
+      assert(registered() === before, s"the pair cut outlived a failed fetch at driverCap $cap")
+    }
   }
 
   test("components: the pair plan runs once on either path") {
